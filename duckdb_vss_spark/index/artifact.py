@@ -31,6 +31,7 @@ import json
 import os
 import shutil
 import time
+import weakref
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -38,6 +39,7 @@ from pyspark.sql import functions as F
 
 from duckdb_vss_spark.functions.distance import distance_for_metric
 from duckdb_vss_spark.index.manifest import write_manifest
+from duckdb_vss_spark.index.tombstones import tombstones_df
 from duckdb_vss_spark.index.hnsw_graph import (
     DEFAULT_EF_CONSTRUCTION,
     DEFAULT_EF_SEARCH,
@@ -61,6 +63,23 @@ _GRAPH_CACHE_MAX = 32
 # join instead of a literal In-filter (planning + pushdown of a
 # many-thousand-literal predicate costs more than the join it saves)
 _MAX_ISIN_CANDIDATES = 512
+# widest driver probe (keys searched × shards) before the executor
+# probe takes over. Measured on 4 cores, top-10 over 4 shards: the
+# driver search costs ~13.6 µs per key on 16k-node shards (0.87 s at
+# 64k keys) and the executor route ~0.7 s more wall and ~3 s more CPU
+# per read. No crossover was observed: the driver won at every point
+# up to 128k keys. 64k is a conservative modelled value, where the
+# search spread over C executor cores would break even:
+# 0.7 s / (13.6 µs · (1 − 1/C)) ≈ 51k–69k keys
+_MAX_DRIVER_PROBE_WORK = 65_536
+# per shard set ((file, mtime) pairs): whether every key is indexed
+# once. Re-adding a deleted id revives its old graph copy, whose vector
+# the table may no longer hold, and a plain re-add indexes an id twice;
+# the driver probe trims shards by graph distance only when neither is
+# present
+_KEYS_UNIQUE: dict[tuple, bool] = {}
+# per loaded graph: its largest vector norm (the ip rounding bound)
+_MAX_NORM: "weakref.WeakKeyDictionary[HNSWGraph, float]" = weakref.WeakKeyDictionary()
 
 # add_batch parallelism floor (r15, VERDICT r14 #4): never split a
 # batch into shards smaller than this many rows — below it, the Spark
@@ -210,6 +229,44 @@ def _plan_small_merge(
     return small, n_new
 
 
+def _keys_unique(files: list[str], graphs: list[HNSWGraph]) -> bool:
+    import numpy as np
+
+    sig = tuple((f, os.path.getmtime(f)) for f in files)
+    hit = _KEYS_UNIQUE.get(sig)
+    if hit is None:
+        keys = np.concatenate([g.keys for g in graphs])
+        hit = bool(np.unique(keys).size == keys.size)
+        if len(_KEYS_UNIQUE) >= _GRAPH_CACHE_MAX:
+            _KEYS_UNIQUE.clear()
+        _KEYS_UNIQUE[sig] = hit
+    return hit
+
+
+def _rank_slack(g: HNSWGraph, qv, d: float) -> float:
+    """Slack for graph distance ``d`` (float32 vectors and query)
+    against the f64 distance Spark recomputes for the same row: 1e-5
+    (≈170 float32 ε) times the term float32 rounding scales with,
+    d + 2√d·(|x| + |q|) for l2sq with |x| ≤ |q| + √d, |x|·|q| for ip
+    and 1 for cosine (unit vectors)."""
+    import math
+
+    import numpy as np
+
+    qn = float(np.linalg.norm(qv))
+    if g.metric == "l2sq":
+        r = math.sqrt(max(d, 0.0))
+        scale = d + 2 * r * (2 * qn + r)
+    elif g.metric == "ip":
+        m = _MAX_NORM.get(g)
+        if m is None:
+            m = _MAX_NORM[g] = float(np.linalg.norm(g.vectors, axis=1).max(initial=0.0))
+        scale = qn * m
+    else:
+        scale = 1.0
+    return 1e-5 * scale
+
+
 def _load_graph(path: str) -> HNSWGraph:
     key = (path, os.path.getmtime(path))
     g = _GRAPH_CACHE.get(key)
@@ -347,23 +404,6 @@ class HnswIndex:
         size()); ``manifest["count"]`` stays the raw indexed total."""
         return int(self.manifest["count"]) - int(self.manifest.get("deleted_count", 0))
 
-    def _tombstones_df(self) -> DataFrame | None:
-        """(id) rows marked deleted, or None when there are none."""
-        name = self.manifest.get("tombstones_dir")
-        if not name or not int(self.manifest.get("deleted_count", 0)):
-            return None
-        return self.spark.read.parquet(os.path.join(self.path, name))
-
-    def _tombstone_ids(self) -> "frozenset[int]":
-        """Driver-side set for the in-task merges — bounded by the
-        maintenance contract (tombstones accumulate only between
-        compactions; a huge delete set is the signal to compact)."""
-        t = self._tombstones_df()
-        if t is None:
-            return frozenset()
-        id_col = self.manifest["id_col"]
-        return frozenset(int(r[0]) for r in t.select(id_col).collect())
-
     def _parts_df(self, files: list[str] | None = None) -> DataFrame:
         if files is None:
             files = [p["file"] for p in self.manifest["partitions"]]
@@ -371,44 +411,54 @@ class HnswIndex:
             len(files)
         )
 
-    def _driver_probe_ids(self, q, take: int, ef: int) -> list[int] | None:
-        """Candidate ids from a DRIVER-side shard probe, or None when
-        the artifact is too big (or unreadable from here) and the
-        distributed probe must run. Gate: estimated in-memory graph
-        bytes (count · dims · 4 B vectors, ×4 margin for links/levels)
-        under ``spark.vss.driver_probe_max_bytes`` (default 256 MB —
-        the same cost class as a large broadcast; a 100 TB-scale
-        artifact fails the gate and keeps the executor-side probe).
-        Graphs land in the same mtime-keyed LRU the executors use, so
-        repeated queries pay file reads once."""
+    def _driver_probe_ids(self, q, take: int, ef: int, keep: int) -> list[int] | None:
+        """LIVE candidate ids from a DRIVER-side shard probe, or None
+        when the distributed probe must run: the artifact is too big
+        (estimated graph bytes, count · dims · 4 B ×4 for links/levels,
+        over ``spark.vss.driver_probe_max_bytes``, default 256 MB — the
+        broadcast cost class), the probe wider than
+        ``_MAX_DRIVER_PROBE_WORK``, or the graphs or tombstones
+        unreadable from here. Graphs land in the mtime-keyed LRU the
+        executors use, so repeated queries pay file reads once.
+
+        Each shard is searched for ``take`` keys exactly as the executor
+        probe does and tombstoned keys are dropped. When every key is
+        indexed once, a key's graph distance is the distance Spark
+        recomputes up to float32 rounding, so the shard's first ``keep``
+        live keys (``keep`` ≥ k) plus every key within rounding of the
+        last kept distance hold each candidate that can reach the top-k
+        (ORDER BY breaks ties by id, not graph order). Otherwise every
+        live key is kept, as the executor probe does."""
         import numpy as np
 
-        try:
-            budget = int(
-                self.spark.conf.get(
-                    "spark.vss.driver_probe_max_bytes", str(256 << 20)
-                )
-            )
-        except Exception:  # noqa: BLE001 — conf surface moved
-            budget = 256 << 20
+        from duckdb_vss_spark.index.pq import _driver_probe_budget
+
+        budget = _driver_probe_budget(self.spark)
         est = int(self.manifest.get("count", 0)) * int(self.dims) * 4 * 4
         if budget <= 0 or est <= 0 or est > budget:
             return None
-        # heavy over-fetch (tombstone-laden artifacts widen take by the
-        # dead count): per-shard search cost scales with ef≥take, and a
-        # sequential driver loop loses to parallel executor probes well
-        # before the In-filter bound is reached — keep those distributed
-        if int(take) * max(1, len(self.manifest.get("partitions", []))) > (
-            _MAX_ISIN_CANDIDATES
-        ):
+        files = [p["file"] for p in self.manifest["partitions"]]
+        if take * max(1, len(files)) > _MAX_DRIVER_PROBE_WORK:
+            return None
+        dead = self._tombstone_ids_local_meta()
+        if dead is None:
             return None
         try:
             qv = np.asarray(q, dtype=np.float32)
+            graphs = [_load_graph(f) for f in files]
+            if keep < take and not _keys_unique(files, graphs):
+                keep = take
             out: list[int] = []
-            for p in self.manifest["partitions"]:
-                g = _load_graph(p["file"])
-                keys, _ = g.search(qv, take, max(ef, take))
-                out.extend(int(x) for x in keys)
+            for g in graphs:
+                keys, dists = g.search(qv, take, max(ef, take))
+                live = [(int(x), float(d)) for x, d in zip(keys, dists) if int(x) not in dead]
+                cut = min(keep, len(live))
+                if 0 < cut < len(live):
+                    last = live[cut - 1][1]
+                    bound = last + 2 * _rank_slack(g, qv, last)
+                    while cut < len(live) and live[cut][1] <= bound:
+                        cut += 1
+                out.extend(x for x, _ in live[:cut])
             return out
         except Exception:  # noqa: BLE001 — remote FS/corrupt: distributed path
             return None
@@ -494,9 +544,13 @@ class HnswIndex:
         else:
             take = kk
         # mark-deletes (r13): over-fetch by the tombstone count so the
-        # post-filter anti-join still leaves k live candidates
-        dead = int(self.manifest.get("deleted_count", 0))
-        take += dead
+        # post-filter anti-join still leaves k live candidates. The
+        # driver probe keeps each shard's first kk live keys instead
+        # (plus rounding ties), which hold every candidate the top-k can
+        # use; a prefilter's WHERE may reject any of them, so there it
+        # keeps them all
+        take += int(self.manifest.get("deleted_count", 0))
+        keep = take if prefilter_overfetch is not None else kk
 
         # r16 (guide §1): the graph probe is microseconds of sequential
         # work (ef·log n hops per shard) — scheduling a distributed
@@ -504,21 +558,17 @@ class HnswIndex:
         # against 4 ms of actual search (measured, 1-shard sf0.1). The
         # reference always probes in-process (hnsw_index_scan.cpp); we
         # do the same whenever the ARTIFACT is gate-small (driver LRU
-        # holds the graphs, same cost class as holding a broadcast),
-        # and keep the distributed probe as the scale path. Only the
-        # candidate GENERATION moves — the payload fetch, distance
-        # recompute and top-k merge stay in Spark either way.
-        cand_ids = self._driver_probe_ids(q, take, ef)
-        dead = self._tombstone_ids_local_meta() if cand_ids is not None else None
-        live = (
-            [int(x) for x in cand_ids if x not in dead]
-            if cand_ids is not None and dead is not None
-            else None
-        )
+        # holds the graphs, same cost class as holding a broadcast)
+        # and the probe's work is under the measured crossover
+        # (_MAX_DRIVER_PROBE_WORK), and keep the distributed probe as
+        # the scale path. Only the candidate GENERATION moves — the
+        # payload fetch, distance recompute and top-k merge stay in
+        # Spark either way.
+        cand_ids = self._driver_probe_ids(q, take, ef, keep)
         if (
-            live is not None
-            and len(live) <= _MAX_ISIN_CANDIDATES
-            and len(set(live)) == len(live)
+            cand_ids is not None
+            and len(cand_ids) <= _MAX_ISIN_CANDIDATES
+            and len(set(cand_ids)) == len(cand_ids)
         ):
             # fully driver-resolved candidates: the fetch becomes ONE
             # literal In-filter pushed into the base scan (PushedFilters
@@ -528,19 +578,16 @@ class HnswIndex:
             # index copies (reference re-insert-after-delete appends),
             # and that multiplicity must reach the result — the join
             # path below preserves it, an In-filter would collapse it.
-            # And only when the list is SMALL: a tombstone-heavy
-            # artifact over-fetches take+dead candidates per shard, and
-            # a many-thousand-literal In predicate costs more to plan
-            # and push than the broadcast join it replaces (measured:
-            # the ×8 tombstoned search regressed 0.9 s → 8.8 s on a
-            # 12,880-literal filter before this bound)
-            matched = df.where(F.col(id_col).isin(live))
+            # And only when the list is SMALL: a many-thousand-literal
+            # In predicate costs more to plan and push than the
+            # broadcast join it replaces (measured: the ×8 tombstoned
+            # search regressed 0.9 s → 8.8 s on a 12,880-literal filter
+            # before this bound)
+            matched = df.where(F.col(id_col).isin(cand_ids))
         else:
-            if live is not None:
-                cand_ids = live  # probe + local tombstones, dup ids
             if cand_ids is not None:
-                # probe ran locally but tombstones are unreadable from
-                # here: literal candidates + the Spark-side anti-join
+                # driver-resolved live ids, duplicated or past the
+                # In-filter bound: literal rows
                 cand = self.spark.createDataFrame(
                     [(int(x),) for x in cand_ids], f"{id_col} long"
                 )
@@ -559,17 +606,15 @@ class HnswIndex:
                 cand = self._parts_df().mapInPandas(
                     search_part, schema=f"{id_col} long"
                 )
-            # live is not None ⇒ tombstones were already subtracted
-            # driver-side; only the fully-Spark routes anti-join here
-            tomb = self._tombstones_df() if live is None else None
-            if tomb is not None:
-                cand = cand.join(
-                    F.broadcast(
-                        tomb.select(F.col(self.manifest["id_col"]).alias(id_col))
-                    ),
-                    id_col,
-                    "left_anti",
-                )
+                tomb = tombstones_df(self)
+                if tomb is not None:
+                    cand = cand.join(
+                        F.broadcast(
+                            tomb.select(F.col(self.manifest["id_col"]).alias(id_col))
+                        ),
+                        id_col,
+                        "left_anti",
+                    )
             # candidate ids are take·P rows — tiny; broadcast-join back
             matched = df.join(F.broadcast(cand), on=id_col, how="inner")
         dist_fn = distance_for_metric(self.metric)
@@ -687,7 +732,7 @@ class HnswIndex:
             .where(F.col(query_vec_col).isNotNull())
             .mapInPandas(search_queries, schema=f"{query_id_col} long, {id_col} long")
         )
-        tomb = self._tombstones_df()
+        tomb = tombstones_df(self)
         if tomb is not None:
             cand = cand.join(F.broadcast(tomb.select(id_col)), id_col, "left_anti")
         dist_fn = distance_for_metric(self.metric)
@@ -981,7 +1026,7 @@ class HnswIndex:
             # atomic manifest commit as the shard merge
             import uuid as _uuid
 
-            remaining = self._tombstones_df().select(id_col).join(
+            remaining = tombstones_df(self).select(id_col).join(
                 src.select(id_col).distinct(), id_col, "left_anti"
             )
             tname = f"tombstones-{_uuid.uuid4().hex[:12]}"
@@ -1113,7 +1158,7 @@ class HnswIndex:
         # keys.distinct() + union.distinct() paid three shuffles for
         # one dedup's worth of semantics
         present = ids_df.join(self.keys_df(), id_col, "left_semi")
-        old = self._tombstones_df()
+        old = tombstones_df(self)
         merged_ids = (
             present if old is None else old.select(id_col).unionByName(present)
         ).distinct()
@@ -1299,7 +1344,7 @@ class HnswIndex:
         try:
             vec_dir = os.path.join(stage, "vecs")
             live = self.vectors_df()
-            tomb = self._tombstones_df()
+            tomb = tombstones_df(self)
             if tomb is not None:
                 # compaction physically drops mark-deleted rows (the
                 # reference's delete-reclaim contract); the rebuild's

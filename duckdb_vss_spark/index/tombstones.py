@@ -83,8 +83,7 @@ def tombstones_df(index) -> DataFrame | None:
 def dead_id_array(index) -> np.ndarray | None:
     """Sorted int64 ids for the executor-side query-stream masks —
     bounded by the maintenance contract (accumulate only between
-    compactions), same shape HnswIndex._tombstone_ids rides to its
-    workers."""
+    compactions)."""
     t = tombstones_df(index)
     if t is None:
         return None

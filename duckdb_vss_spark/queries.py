@@ -2350,7 +2350,10 @@ def q_reference_slt(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins each file's exact assertion count and its documented
     tie-order deviation count (2 total across 188 assertions). Any
     assertion failing, any file erroring, or any count drifting fails
-    this row against the literal-VALUES oracle."""
+    this row against the literal-VALUES oracle. The scripts come from a
+    checkout of the reference extension: without one this row raises
+    FileNotFoundError, the Tier-1 oracle sweep skips it, and the SLT
+    parity claim above cannot be checked."""
     import sys as _sys
     import tempfile as _tempfile
 

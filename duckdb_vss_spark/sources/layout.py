@@ -350,8 +350,10 @@ def parquet_dir_rows(path: str) -> int:
     """Exact row count of a just-written local parquet dir from its
     footers — driver-side metadata only, no Spark job (guide §1/§5: a
     write-then-count round-trip re-scans what the writer just knew).
-    Returns -1 when any part file's footer is unreadable or the dir is
-    not local; callers fall back to a Spark count."""
+    Returns -1 when any part file's footer is unreadable, the dir is
+    not local, or it is not flat (a subdirectory or a non-parquet data
+    file, which a Spark read would also scan); callers fall back to a
+    Spark count."""
     import os
 
     try:
@@ -359,9 +361,12 @@ def parquet_dir_rows(path: str) -> int:
 
         total = 0
         for name in os.listdir(path):
-            if not name.endswith(".parquet"):
-                continue
-            total += _pq.ParquetFile(os.path.join(path, name)).metadata.num_rows
+            if name.startswith(("_", ".")):
+                continue  # _SUCCESS, .crc: hidden from Spark's reader too
+            full = os.path.join(path, name)
+            if not name.endswith(".parquet") or os.path.isdir(full):
+                return -1
+            total += _pq.ParquetFile(full).metadata.num_rows
         return total
     except OSError:
         return -1

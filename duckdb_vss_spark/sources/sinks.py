@@ -344,6 +344,15 @@ def insert_into(df: DataFrame, path: str) -> None:
                 ix.manifest = clear_pending(ix.path, ix.manifest)
 
 
+def _table_rows(spark: SparkSession, path: str) -> int:
+    """Rows of the parquet table at ``path``: from its footers when it
+    is a flat local dir (no Spark job), else a Spark count."""
+    from duckdb_vss_spark.sources.layout import parquet_dir_rows
+
+    n = parquet_dir_rows(path)
+    return n if n >= 0 else spark.read.parquet(path).count()
+
+
 def delete_where(spark: SparkSession, path: str, predicate: Column) -> int:
     """DELETE FROM t WHERE p: rewrite surviving rows, atomically swap.
 
@@ -367,7 +376,7 @@ def delete_where(spark: SparkSession, path: str, predicate: Column) -> int:
     replay contract is unchanged.
     """
     df = spark.read.parquet(path)
-    total = df.count()
+    total = _table_rows(spark, path)
     surviving = df.where(~predicate | predicate.isNull())
     hooked = bound_indexes(path)
     staged = None
@@ -388,7 +397,7 @@ def delete_where(spark: SparkSession, path: str, predicate: Column) -> int:
         )
     tmp = path.rstrip("/") + ".__rewrite__"
     surviving.write.mode("overwrite").parquet(tmp)
-    kept = spark.read.parquet(tmp).count()
+    kept = _table_rows(spark, tmp)
     import shutil
 
     # keep a recovery copy through the swap (review r13: a crash

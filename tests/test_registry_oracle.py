@@ -15,6 +15,7 @@ import duckdb
 import pytest
 
 sys.path.insert(0, "/root/repo/tools")
+import slt  # noqa: E402
 from check_correctness import rows_of  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
@@ -43,6 +44,11 @@ def oracle_con():
 
 @pytest.mark.parametrize("name,fn,oracle", _extra_items(), ids=lambda p: p if isinstance(p, str) else "")
 def test_extra_query_matches_oracle(spark, oracle_con, name, fn, oracle):
+    if name == "q_reference_slt" and slt.missing_reference_scripts():
+        pytest.skip(
+            "q_reference_slt replays the reference extension's test/sql/** "
+            "scripts, and no checkout of them is present"
+        )
     spdf = fn(spark, SF).toPandas()
     if oracle is None:
         pytest.skip(f"{name}: no oracle (rows-only surface)")

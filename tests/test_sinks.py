@@ -47,6 +47,17 @@ def test_delete_where(spark, tmp_path):
     assert got.count() == 90 and got.agg(F.max("id")).first()[0] == 89
 
 
+def test_delete_where_counts_partitioned_table(spark, tmp_path):
+    # row counts come from parquet footers only for a flat dir; a
+    # partitioned table's part files sit in subdirs, so it is counted
+    # by Spark instead
+    p = str(tmp_path / "t6")
+    df = spark.range(100).withColumn("g", (F.col("id") % 4).cast("int"))
+    save_table(df, p, partition_by=["g"])
+    assert delete_where(spark, p, F.col("id") >= 90) == 10
+    assert read_table(spark, p).count() == 90
+
+
 def test_delete_where_null_predicate_keeps_row(spark, tmp_path):
     # DELETE ... WHERE p: rows where p is NULL are NOT deleted (SQL
     # three-valued logic — only TRUE deletes)

@@ -456,18 +456,35 @@ RECLAIM_SCALE_SUBS = [
 ]
 
 
-def run_reference_test(spark, name: str, test_dir: str, deviations=None, subs=None):
-    """Run one reference script by name; returns the runner (assertion
-    count in ``.n_ok``, recorded deviations in ``.deviated``)."""
-    candidates = [
+def _script_candidates(name: str) -> list[str]:
+    return [
         os.path.join("/root/reference/test/sql", sub, name + ext)
         for sub in ("hnsw", "slow")
         for ext in (".test", ".test_slow")
     ]
-    path = next((p for p in candidates if os.path.exists(p)), None)
+
+
+def reference_script(name: str) -> str | None:
+    """Path of the reference extension's script ``name``, or None when
+    its checkout (test/sql/**) does not hold it."""
+    return next((p for p in _script_candidates(name) if os.path.exists(p)), None)
+
+
+def missing_reference_scripts() -> list[str]:
+    """The replayed scripts (REFERENCE_FILES and RECLAIM_FILE) absent
+    here; all of them when there is no reference checkout."""
+    names = sorted([*REFERENCE_FILES, RECLAIM_FILE[0]])
+    return [n for n in names if reference_script(n) is None]
+
+
+def run_reference_test(spark, name: str, test_dir: str, deviations=None, subs=None):
+    """Run one reference script by name; returns the runner (assertion
+    count in ``.n_ok``, recorded deviations in ``.deviated``)."""
+    path = reference_script(name)
     if path is None:
         raise FileNotFoundError(
-            f"unknown reference script {name!r}: none of {candidates} exist"
+            f"unknown reference script {name!r}: none of "
+            f"{_script_candidates(name)} exist"
         )
     r = SltRunner(spark, test_dir, deviations=deviations)
     r.run_file(path, subs=subs)
