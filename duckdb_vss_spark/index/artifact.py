@@ -15,6 +15,7 @@ Layout on disk (any shared filesystem at cluster scale):
 
     <path>/manifest.json          metric, dims, params, per-partition stats
     <path>/parts/part-NNNNN.pkl   serialized HNSWGraph per partition
+    <path>/parts/part-NNNNN.keys.parquet   the shard's keys (keys_df)
 
 Search merges per-partition top-k exactly (union of partition results →
 global top-k), so recall is ≥ a single monolithic graph with the same
@@ -46,7 +47,7 @@ from duckdb_vss_spark.index.hnsw_graph import (
     DEFAULT_M,
     HNSWGraph,
 )
-from duckdb_vss_spark.session import check_persistence_enabled, get_ef_search
+from duckdb_vss_spark.session import arrow_frame, check_persistence_enabled, get_ef_search
 
 __all__ = ["create_hnsw_index", "load_index", "drop_index", "HnswIndex", "index_info"]
 
@@ -88,11 +89,20 @@ _MAX_NORM: "weakref.WeakKeyDictionary[HNSWGraph, float]" = weakref.WeakKeyDictio
 _MIN_BATCH_SHARD_ROWS = 2_048
 
 
+def _keys_file(graph_file: str) -> str:
+    return graph_file[: -len(".pkl")] + ".keys.parquet"
+
+
 def _shard_stats(params: dict, parts_dir: str, pid: int, keys, vecs) -> dict:
-    """Build ONE graph shard file and return its manifest partition row
-    (levels_stats JSON-encoded for the mapInPandas schema). Shared by
-    add_batch's local and distributed builders and merge_small_shards
-    (r16 — one builder, not three copies)."""
+    """Build ONE graph shard file plus its keys sidecar (one int64
+    ``key`` column: the graph's keys, revived duplicates included) and
+    return its manifest partition row. Every shard writer goes through
+    here: create_hnsw_index, add_batch and merge_small_shards, each on
+    the driver or in a distributed task. Both files land before the
+    manifest commits, so a crash leaves only orphans."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     if vecs.shape[1] != params["dims"]:
         raise ValueError(
             f"HNSW index keys must be of type FLOAT[{params['dims']}]"
@@ -104,14 +114,50 @@ def _shard_stats(params: dict, parts_dir: str, pid: int, keys, vecs) -> dict:
     file = os.path.join(parts_dir, f"part-{pid:05d}.pkl")
     with open(file, "wb") as f:
         f.write(g.to_bytes())
+    pq.write_table(pa.table({"key": pa.array(g.keys, pa.int64())}), _keys_file(file))
     return {
         "pid": pid,
         "file": file,
         "count": len(keys),
         "max_level": g.max_level,
         "memory": g.approx_memory_bytes(),
-        "levels_stats": json.dumps(g.level_stats()),
+        "levels_stats": g.level_stats(),
     }
+
+
+def _build_shards(
+    src: DataFrame,
+    local_rows: list | None,
+    id_col: str,
+    vec_col: str,
+    params: dict,
+    parts_dir: str,
+    num_partitions: int,
+    pid_base: int,
+) -> list[dict]:
+    """Manifest partition rows for ``num_partitions`` new shards from
+    pid ``pid_base``: a driver-side round-robin over ``local_rows`` when
+    the caller collected the source (graph membership differs from the
+    distributed split; membership is not part of the index contract),
+    else one distributed task per shard over ``src``."""
+    import numpy as np
+
+    if local_rows is None:
+        return _build_parts_distributed(
+            src, id_col, vec_col, params, parts_dir, num_partitions, pid_base
+        )
+    total = len(local_rows)
+    if not total:
+        return []
+    keys_all = np.fromiter((r[0] for r in local_rows), dtype=np.int64, count=total)
+    vecs_all = np.stack([np.asarray(r[1], dtype=np.float32) for r in local_rows])
+    shards = []
+    for i in range(min(num_partitions, total)):
+        sel = np.arange(i, total, num_partitions)
+        shards.append(
+            _shard_stats(params, parts_dir, pid_base + i, keys_all[sel], vecs_all[sel])
+        )
+    return shards
 
 
 def _build_parts_distributed(
@@ -148,6 +194,7 @@ def _build_parts_distributed(
             params, parts_dir, pid,
             np.concatenate(keys_acc), np.concatenate(vec_acc),
         )
+        row["levels_stats"] = json.dumps(row["levels_stats"])
         yield pd.DataFrame({k: [v] for k, v in row.items()})
 
     stats = src.repartition(num_partitions).mapInPandas(
@@ -407,9 +454,7 @@ class HnswIndex:
     def _parts_df(self, files: list[str] | None = None) -> DataFrame:
         if files is None:
             files = [p["file"] for p in self.manifest["partitions"]]
-        return self.spark.createDataFrame([(f,) for f in files], "file string").repartition(
-            len(files)
-        )
+        return arrow_frame(self.spark, {"file": files}, "file string").repartition(len(files))
 
     def _driver_probe_ids(self, q, take: int, ef: int, keep: int) -> list[int] | None:
         """LIVE candidate ids from a DRIVER-side shard probe, or None
@@ -588,9 +633,7 @@ class HnswIndex:
             if cand_ids is not None:
                 # driver-resolved live ids, duplicated or past the
                 # In-filter bound: literal rows
-                cand = self.spark.createDataFrame(
-                    [(int(x),) for x in cand_ids], f"{id_col} long"
-                )
+                cand = arrow_frame(self.spark, {id_col: cand_ids}, f"{id_col} long")
             else:
 
                 def search_part(
@@ -925,9 +968,6 @@ class HnswIndex:
         data): batch shards build partition-parallel with the same
         64k-vector ceiling as the bulk build, and search cost stays
         O(right-sized shards) instead of O(epochs)."""
-        import numpy as np
-        import pandas as pd
-
         man = self.manifest
         id_col, vec_col = man["id_col"], man["vec_col"]
         params = dict(
@@ -982,32 +1022,9 @@ class HnswIndex:
             src = self.spark.createDataFrame(local_rows, src.schema)
             local_rows = None
 
-        if local_rows is not None:
-            stats = []
-            if total:
-                keys_all = np.fromiter(
-                    (r[0] for r in local_rows), dtype=np.int64, count=total
-                )
-                vecs_all = np.stack(
-                    [np.asarray(r[1], dtype=np.float32) for r in local_rows]
-                )
-                for i in range(num_partitions):
-                    sel = np.arange(i, total, num_partitions)
-                    if sel.size:
-                        stats.append(
-                            _shard_stats(
-                                params, parts_dir, pid_base + i,
-                                keys_all[sel], vecs_all[sel],
-                            )
-                        )
-            new_parts = [
-                {**r, "levels_stats": json.loads(r["levels_stats"])}
-                for r in sorted(stats, key=lambda r: r["pid"])
-            ]
-        else:
-            new_parts = _build_parts_distributed(
-                src, id_col, vec_col, params, parts_dir, num_partitions, pid_base
-            )
+        new_parts = _build_shards(
+            src, local_rows, id_col, vec_col, params, parts_dir, num_partitions, pid_base
+        )
         merged = dict(man)
         merged["partitions"] = list(man["partitions"]) + new_parts
         merged["count"] = int(man["count"] + sum(p["count"] for p in new_parts))
@@ -1101,18 +1118,31 @@ class HnswIndex:
         return self
 
     def keys_df(self) -> DataFrame:
-        """The indexed ids, reconstructed from the shards (executor-side
-        like ``vectors_df`` but keys only — skinny rows)."""
+        """The indexed ids, revived duplicates included: a JVM column
+        scan of the shards' keys sidecars, with no Python and no
+        shuffle. Shards written before the sidecars existed load their
+        graphs in a mapInPandas pass, for those files only."""
         import pandas as pd
 
         id_col = self.manifest["id_col"]
+        files = [p["file"] for p in self.manifest["partitions"]]
+        legacy = [f for f in files if not os.path.exists(_keys_file(f))]
+        sidecars = [_keys_file(f) for f in files if f not in legacy]
+        out = None
+        if sidecars:
+            out = self.spark.read.schema("key long").parquet(*sidecars).select(
+                F.col("key").alias(id_col)
+            )
+        if legacy:
 
-        def load_keys(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for file in pdf["file"]:
-                    yield pd.DataFrame({id_col: _load_graph(file).keys})
+            def load_keys(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+                for pdf in batches:
+                    for file in pdf["file"]:
+                        yield pd.DataFrame({id_col: _load_graph(file).keys})
 
-        return self._parts_df().mapInPandas(load_keys, schema=f"{id_col} long")
+            old = self._parts_df(legacy).mapInPandas(load_keys, schema=f"{id_col} long")
+            out = old if out is None else out.unionByName(old)
+        return out if out is not None else arrow_frame(self.spark, {id_col: []}, f"{id_col} long")
 
     def delete_batch(
         self, ids, manifest_extra: dict | None = None
@@ -1125,10 +1155,10 @@ class HnswIndex:
         over-fetches by the tombstone count and filters them from the
         candidates, ``count``/``info()`` report live rows, and
         ``compact()``/``compact_from_shards()`` physically drop them.
-        Cost: the tombstone write is O(|ids| + |tombstones|), plus one
-        keys-only pass over the (worker-LRU-cached) shard graphs for
-        the membership check — the same cost class as a single query;
-        no shard is rewritten here.
+        Cost: the tombstone write is O(|ids| + |tombstones|), plus a
+        membership semi-join against ``keys_df``, a column scan of the
+        shards' keys sidecars that loads no graph and starts no Python
+        worker; no shard is rewritten here.
 
         ``ids``: a DataFrame carrying the index's id column (extra
         columns ignored) or a plain iterable of ints. Ids absent from
@@ -1147,8 +1177,8 @@ class HnswIndex:
             col = id_col if id_col in ids.columns else ids.columns[0]
             ids_df = ids.select(F.col(col).cast("long").alias(id_col))
         else:
-            ids_df = self.spark.createDataFrame(
-                [(int(x),) for x in ids], f"{id_col} long"
+            ids_df = arrow_frame(
+                self.spark, {id_col: [int(x) for x in ids]}, f"{id_col} long"
             )
         ids_df = ids_df.where(F.col(id_col).isNotNull())
         # only mark ids the index actually holds (count semantics).
@@ -1306,12 +1336,13 @@ class HnswIndex:
         )
         write_manifest(self.path, merged, indent=1)
         self.manifest = merged
-        for p in small:
+        for f in [p["file"] for p in small] + [_keys_file(p["file"]) for p in small]:
             try:
-                os.remove(p["file"])
+                os.remove(f)
             except OSError:
-                pass  # best-effort: an orphaned pkl is dead weight, not
-                # a correctness hazard (the manifest no longer lists it)
+                pass  # best-effort: an orphaned shard file is dead
+                # weight, not a correctness hazard (the manifest no
+                # longer lists it)
         return self
 
     def compact_from_shards(
@@ -1401,9 +1432,6 @@ def create_hnsw_index(
     work (measured r10; DuckDB's CREATE INDEX is in-process always).
     Unknown-size sources (non-file, remote FS) and anything larger take
     the distributed path."""
-    import numpy as np
-    import pandas as pd
-
     m0 = m0 if m0 is not None else 2 * m
     _validate_options(metric, ef_construction, ef_search, m, m0)
     check_persistence_enabled(spark)
@@ -1469,77 +1497,12 @@ def create_hnsw_index(
             total, int(spark.conf.get("spark.sql.shuffle.partitions"))
         )
     params = dict(metric=metric, m=m, m0=m0, ef_construction=ef_construction, dims=dims)
-
-    def _graph_stats(pid: int, keys: "np.ndarray", vecs: "np.ndarray") -> dict:
-        """Build one partition's graph (same params/seed on either
-        path) and persist it; returns its manifest stats row."""
-        if vecs.shape[1] != params["dims"]:
-            raise ValueError(f"HNSW index keys must be of type FLOAT[{params['dims']}]")
-        g = HNSWGraph(
-            params["dims"],
-            params["metric"],
-            params["m"],
-            params["m0"],
-            params["ef_construction"],
-            seed=42 + pid,
-        ).build(keys, vecs)
-        file = os.path.join(parts_dir, f"part-{pid:05d}.pkl")
-        with open(file, "wb") as f:
-            f.write(g.to_bytes())
-        return {
-            "pid": pid,
-            "file": file,
-            "count": len(keys),
-            "max_level": g.max_level,
-            "memory": g.approx_memory_bytes(),
-            "levels_stats": json.dumps(g.level_stats()),
-        }
-
-    if local_rows is not None:
-        # in-process build: round-robin the collected rows over the
-        # same partition count (graph membership differs from the
-        # distributed hash split — membership is not part of the index
-        # contract, every split is a valid HNSW layout)
-        stats = []
-        if total:
-            keys_all = np.fromiter(
-                (r[0] for r in local_rows), dtype=np.int64, count=total
-            )
-            vecs_all = np.stack(
-                [np.asarray(r[1], dtype=np.float32) for r in local_rows]
-            )
-            for pid in range(num_partitions):
-                sel = np.arange(pid, total, num_partitions)
-                if sel.size:
-                    stats.append(_graph_stats(pid, keys_all[sel], vecs_all[sel]))
-        return _commit_manifest(
-            spark, path, name, vec_col, id_col, metric, dims,
-            m, m0, ef_construction, ef_search, num_partitions, stats,
-        )
-
-    src = src.repartition(num_partitions)
-
-    def build_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        keys_acc, vec_acc = [], []
-        for pdf in batches:
-            if len(pdf):
-                keys_acc.append(pdf[id_col].to_numpy(dtype=np.int64))
-                vec_acc.append(np.stack([np.asarray(v, dtype=np.float32) for v in pdf[vec_col]]))
-        if not keys_acc:
-            return
-        row = _graph_stats(pid, np.concatenate(keys_acc), np.concatenate(vec_acc))
-        yield pd.DataFrame({k: [v] for k, v in row.items()})
-
-    stats = src.mapInPandas(
-        build_part,
-        schema="pid int, file string, count long, max_level int, memory long, levels_stats string",
-    ).collect()
+    parts = _build_shards(
+        src, local_rows, id_col, vec_col, params, parts_dir, num_partitions, 0
+    )
     return _commit_manifest(
         spark, path, name, vec_col, id_col, metric, dims,
-        m, m0, ef_construction, ef_search, num_partitions, stats,
+        m, m0, ef_construction, ef_search, num_partitions, parts,
     )
 
 
@@ -1556,11 +1519,10 @@ def _commit_manifest(
     ef_construction: int,
     ef_search: int,
     num_partitions: int,
-    stats,
+    parts: list[dict],
 ) -> HnswIndex:
-    """Assemble and ATOMICALLY commit the manifest from per-partition
-    stats rows (dicts from the driver-local build or Rows from the
-    distributed collect); the index "exists" once the file appears."""
+    """Assemble and ATOMICALLY commit the manifest from the manifest
+    partition rows; the index "exists" once the file appears."""
     manifest = {
         "index_name": name,
         "table_name": "",
@@ -1570,21 +1532,11 @@ def _commit_manifest(
         "dimensions": dims,
         "params": dict(m=m, m0=m0, ef_construction=ef_construction, ef_search=ef_search),
         "num_partitions": num_partitions,
-        "count": int(sum(r["count"] for r in stats)),
-        "capacity": int(sum(r["count"] for r in stats)),
-        "approx_memory_usage": int(sum(r["memory"] for r in stats)),
+        "count": int(sum(r["count"] for r in parts)),
+        "capacity": int(sum(r["count"] for r in parts)),
+        "approx_memory_usage": int(sum(r["memory"] for r in parts)),
         "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        "partitions": [
-            {
-                "pid": r["pid"],
-                "file": r["file"],
-                "count": r["count"],
-                "max_level": r["max_level"],
-                "memory": r["memory"],
-                "levels_stats": json.loads(r["levels_stats"]),
-            }
-            for r in sorted(stats, key=lambda r: r["pid"])
-        ],
+        "partitions": parts,
     }
     write_manifest(path, manifest, indent=1)
     return HnswIndex(spark, path, manifest)

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from duckdb_vss_spark.index.manifest import write_manifest
+from duckdb_vss_spark.session import arrow_frame
 
 __all__ = [
     "UNREADABLE",
@@ -327,8 +328,9 @@ def mark_delete(
     are no-ops (DML DELETE semantics). Cost: the tombstone write is
     O(|ids| + |tombstones|), plus ONE id-column index scan for the
     membership check — the same cost class as a single query over the
-    artifact (column-pruned parquet for the quantized families;
-    worker-LRU-cached graphs for HNSW). No data file is rewritten.
+    artifact (column-pruned parquet: the codes/sigs/lists for the
+    quantized families, the shards' keys sidecars for HNSW). No data
+    file is rewritten.
 
     ``epoch_lt`` (r14, VERDICT r13 #4) bounds the kill to rows
     appended BEFORE that epoch: the upsert hook tombstones
@@ -344,8 +346,8 @@ def mark_delete(
         col = id_col if id_col in ids.columns else ids.columns[0]
         ids_df = ids.select(F.col(col).cast("long").alias(id_col))
     else:
-        ids_df = index.spark.createDataFrame(
-            [(int(x),) for x in ids], f"{id_col} long"
+        ids_df = arrow_frame(
+            index.spark, {id_col: [int(x) for x in ids]}, f"{id_col} long"
         )
     # r16 (guide §2.4): no distinct on either semi-join side — set
     # membership needs none, and the groupBy(id) merge below is the

@@ -35,6 +35,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_vss_spark.session import arrow_frame
+
 __all__ = [
     "rewrite_operators", "canonicalize_cosine", "match_topk",
     "pushable_where", "VssPlanner", "UnroutableIndexError",
@@ -858,10 +860,21 @@ class VssPlanner:
             self.spark.catalog.refreshByPath(rec["path"])
         except Exception:  # noqa: BLE001 — cache refresh is best-effort
             pass
-        df = self.spark.read.parquet(rec["path"])
+        df = self._read_table(rec)
         if rec.get("auto_rowid"):
             df = df.drop("__rowid")
         df.createOrReplaceTempView(rec["name"])
+
+    def _read_table(self, rec: dict) -> DataFrame:
+        """The parquet scan of a path table. Its schema is inferred (a
+        footer job) once per table record and kept on the in-memory
+        record, not in catalog.json; a replaced record (CREATE OR
+        REPLACE, DROP, re-register) infers again. DML keeps the schema
+        (INSERT and UPDATE cast to it), and the temp view already pins
+        it between refreshes."""
+        if "schema" not in rec:
+            rec["schema"] = self.spark.read.parquet(rec["path"]).schema
+        return self.spark.read.schema(rec["schema"]).parquet(rec["path"])
 
     def _seeded_random_rewrite(self, text: str) -> str:
         """After ``SELECT setseed(x)``, each textual ``random()`` in a
@@ -967,7 +980,7 @@ class VssPlanner:
         may be keyed on), else the session view."""
         rec = self._tables.get(table.lower())
         if rec is not None:
-            return self.spark.read.parquet(rec["path"])
+            return self._read_table(rec)
         return self.spark.table(table)
 
     def _index_for(self, match: TopKMatch):
@@ -1093,7 +1106,10 @@ class VssPlanner:
     _INT_OPTS = {"m": 2, "m0": 2, "ef_construction": 1, "ef_search": 1}
 
     def _empty_result(self) -> DataFrame:
-        return self.spark.createDataFrame([], "result string")
+        return arrow_frame(self.spark, {"result": []}, "result string")
+
+    def _count_result(self, n: int) -> DataFrame:
+        return arrow_frame(self.spark, {"Count": [int(n)]}, "Count bigint")
 
     def _storage_roots(self) -> list[str]:
         """The directories whose on-disk bytes ARE this planner's
@@ -1753,7 +1769,7 @@ class VssPlanner:
             rec = self._tables.get(tname.lower())
             if rec is None:
                 return None
-            target = self.spark.read.parquet(rec["path"])
+            target = self._read_table(rec)
             # seeded random() resolves BEFORE the generic translation
             # maps random() -> rand()
             rest = self._seeded_random_rewrite(rest)
@@ -1829,7 +1845,7 @@ class VssPlanner:
             if pred:
                 text = self._translate_dml_exprs(pred).strip().rstrip(";").strip()
                 text = self._coerce_array_literals(
-                    text, self.spark.read.parquet(rec["path"]).schema
+                    text, self._read_table(rec).schema
                 )
                 predicate = F.expr(text)
             else:
@@ -1837,14 +1853,14 @@ class VssPlanner:
             n = sinks.delete_where(self.spark, rec["path"], predicate)
             self._refresh_table(rec["name"])
             self.last_plan = "DELETE"
-            return self.spark.createDataFrame([(int(n),)], "Count bigint")
+            return self._count_result(n)
         m = self._UPDATE_STMT.match(sql)
         if m:
             tname, set_clause, pred = m.groups()
             rec = self._tables.get(tname.lower())
             if rec is None:
                 return None
-            schema = self.spark.read.parquet(rec["path"]).schema
+            schema = self._read_table(rec).schema
             assignments: dict = {}
             for part in self._split_top_level(set_clause):
                 if not part.strip():
@@ -1867,7 +1883,7 @@ class VssPlanner:
             )
             self._refresh_table(rec["name"])
             self.last_plan = "UPDATE"
-            return self.spark.createDataFrame([(int(n),)], "Count bigint")
+            return self._count_result(n)
         return None
 
     _PRAGMA_OPTIMIZER = re.compile(

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Engine conf keys (session-settable, read at search time like the
 # reference's hnsw_ef_search: src/hnsw/hnsw_index.cpp:288-299).
@@ -21,15 +21,38 @@ CONF_ENABLE_PERSISTENCE = "spark.vss.enable_experimental_persistence"
 DEFAULT_EF_SEARCH = 64  # usearch default expansion_search (index.hpp:1107)
 
 
+def _host_memory_bytes() -> int:
+    """Physical memory, or the cgroup limit when that is lower."""
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            mem = min(mem, int(raw))
+    return mem
+
+
 def get_spark(app_name: str = "duckdb_vss_spark", cpus: int | None = None) -> SparkSession:
-    """Build (or get) a SparkSession with engine defaults.
+    """Build (or get) a SparkSession with engine defaults, sized from the
+    host: ``local[N]`` over the cores in the scheduler affinity mask and
+    a driver heap of 60 % of physical or cgroup memory, whichever is
+    lower. ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM`` override
+    either. Python workers import this package from its parent
+    directory, whatever their working directory.
 
     On a real cluster, drop ``master`` and let spark-submit decide; the
     rest of the conf is scale-appropriate as-is (AQE handles runtime
     coalescing and skew joins at any data size).
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+    heap = os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", f"{max(1024, _host_memory_bytes() * 6 // 10 >> 20)}m"
+    )
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -51,7 +74,8 @@ def get_spark(app_name: str = "duckdb_vss_spark", cpus: int | None = None) -> Sp
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", heap)
+        .config("spark.executorEnv.PYTHONPATH", pkg_parent)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # one BLAS thread per python worker: the scheduler already runs
@@ -66,6 +90,20 @@ def get_spark(app_name: str = "duckdb_vss_spark", cpus: int | None = None) -> Sp
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def arrow_frame(spark: SparkSession, columns: dict, schema: str) -> DataFrame:
+    """A driver-built frame (``columns`` maps each field of the DDL
+    ``schema`` to its values) as a local relation built from a pyarrow
+    table: collecting it runs no Spark job and starts no Python worker,
+    where a Python-list ``createDataFrame`` is a pickled RDD whose
+    first action does both."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
+    return spark.createDataFrame(pa.Table.from_pydict(columns, schema=arrow_schema), schema)
 
 
 def set_interactive(spark: SparkSession, on: bool = True) -> None:

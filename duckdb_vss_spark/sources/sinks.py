@@ -353,6 +353,17 @@ def _table_rows(spark: SparkSession, path: str) -> int:
     return n if n >= 0 else spark.read.parquet(path).count()
 
 
+def _staged_ids(frame: DataFrame, id_cols: list[str]) -> DataFrame:
+    """Index ids of ``frame`` as longs, the type every family's
+    delete_batch reads them as: a staged copy then reads back with the
+    schema of ``_ids_schema``, with no inference job."""
+    return frame.select(*[F.col(c).cast("long").alias(c) for c in id_cols])
+
+
+def _ids_schema(id_cols: list[str]) -> str:
+    return ", ".join(f"`{c}` long" for c in id_cols)
+
+
 def delete_where(spark: SparkSession, path: str, predicate: Column) -> int:
     """DELETE FROM t WHERE p: rewrite surviving rows, atomically swap.
 
@@ -384,7 +395,7 @@ def delete_where(spark: SparkSession, path: str, predicate: Column) -> int:
     if hooked:
         id_cols = sorted({ix.manifest["id_col"] for ix in hooked})
         staged = path.rstrip("/") + ".__deleted_ids__"
-        df.where(predicate).select(*id_cols).write.mode("overwrite").parquet(
+        _staged_ids(df.where(predicate), id_cols).write.mode("overwrite").parquet(
             staged
         )
         toks = _journal_pending(
@@ -412,7 +423,7 @@ def delete_where(spark: SparkSession, path: str, predicate: Column) -> int:
     if hooked:
         from duckdb_vss_spark.index.manifest import clear_pending
 
-        dead = spark.read.parquet(staged)
+        dead = spark.read.schema(_ids_schema(id_cols)).parquet(staged)
         for ix in hooked:
             with _locked_fresh(ix):
                 ix.delete_batch(
@@ -467,7 +478,7 @@ def update_where(
                 "use merge_upsert (or unbind the index) for id rewrites"
             )
         staged = path.rstrip("/") + ".__updated_ids__"
-        matched.select(*id_cols).distinct().write.mode("overwrite").parquet(
+        _staged_ids(matched, id_cols).distinct().write.mode("overwrite").parquet(
             staged
         )
         # journaled as a merge intent: resolve_pending_dml's merge
@@ -508,7 +519,7 @@ def update_where(
         from duckdb_vss_spark.index.manifest import clear_pending
 
         fresh = spark.read.parquet(path)
-        ids = spark.read.parquet(staged)
+        ids = spark.read.schema(_ids_schema(id_cols)).parquet(staged)
         for ix in hooked:
             with _locked_fresh(ix):
                 id_col = ix.manifest["id_col"]
@@ -580,19 +591,21 @@ def merge_upsert(
         # the caller's ``updates`` may derive from the target itself,
         # so its keys are STAGED before the swap deletes the old files
         staged_keys = path.rstrip("/") + ".__upsert_keys__"
-        updates.select(*key_cols).distinct().write.mode("overwrite").parquet(
-            staged_keys
-        )
+        keys_frame = updates.select(*key_cols).distinct()
+        keys_frame.write.mode("overwrite").parquet(staged_keys)
         # ... and so are the OLD rows' index ids for the matched keys
         # (ADVICE r13: when an update changes the id column's value,
         # tombstoning the post-merge ids would leave the old id live)
         id_cols = sorted({ix.manifest["id_col"] for ix in hooked})
         staged_old = path.rstrip("/") + ".__upsert_old_ids__"
-        target.join(
-            F.broadcast(updates.select(*key_cols).distinct()),
-            key_cols,
-            "left_semi",
-        ).select(*id_cols).write.mode("overwrite").parquet(staged_old)
+        _staged_ids(
+            target.join(
+                F.broadcast(updates.select(*key_cols).distinct()),
+                key_cols,
+                "left_semi",
+            ),
+            id_cols,
+        ).write.mode("overwrite").parquet(staged_old)
         toks = _journal_pending(
             hooked,
             {
@@ -628,8 +641,8 @@ def merge_upsert(
         from duckdb_vss_spark.index.manifest import clear_pending
 
         fresh = spark.read.parquet(path)
-        keys = spark.read.parquet(staged_keys)
-        old_ids = spark.read.parquet(staged_old)
+        keys = spark.read.schema(keys_frame.schema).parquet(staged_keys)
+        old_ids = spark.read.schema(_ids_schema(id_cols)).parquet(staged_old)
         for ix in hooked:
             with _locked_fresh(ix):
                 id_col = ix.manifest["id_col"]
@@ -692,7 +705,7 @@ def resolve_pending_dml(spark: SparkSession, index_path: str) -> str:
     if op == "delete_where":
         staged = rec.get("ids")
         if staged and os.path.isdir(staged):
-            dead = spark.read.parquet(staged).select(id_col)
+            dead = spark.read.schema(_ids_schema([id_col])).parquet(staged)
             if table and os.path.isdir(table):
                 # the swap may never have committed: ids still present
                 # in the table stay live

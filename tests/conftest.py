@@ -1,17 +1,33 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest lives in, ahead of any installed copy
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 @pytest.fixture(scope="session")
 def spark():
     from duckdb_vss_spark import get_spark
 
-    s = get_spark("tests", cpus=8)
+    s = get_spark("tests")
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn)`` → ``(fn(), Spark jobs fn ran)``, read from the
+    status tracker (jobs outside any job group, as the tests run)."""
+    st = spark.sparkContext.statusTracker()
+
+    def run(fn):
+        before = set(st.getJobIdsForGroup())
+        out = fn()
+        return out, len(set(st.getJobIdsForGroup()) - before)
+
+    return run
 
 
 @pytest.fixture(scope="session")

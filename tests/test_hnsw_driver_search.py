@@ -103,16 +103,14 @@ def test_tombstoned_topk_bit_identical_and_driver_routed(spark, base, vecs, heav
     assert "MapInPandas" not in _plan(d)
 
 
-def test_tombstoned_topk_is_one_job_without_python(spark, base, vecs, heavy):
+def test_tombstoned_topk_is_one_job_without_python(base, vecs, heavy, count_jobs):
     """Structural pin: a tombstoned top-10 plans no Python map node and
     its collect runs one Spark job (the literal In-filter fetch)."""
     df = heavy.knn_search(base, _query(vecs, 5), 10)
     plan = _plan(df)
     assert "MapInPandas" not in plan and "Python" not in plan, plan
-    st = spark.sparkContext.statusTracker()
-    before = set(st.getJobIdsForGroup())
-    assert len(df.collect()) == 10
-    n_jobs = len(set(st.getJobIdsForGroup()) - before)
+    rows, n_jobs = count_jobs(df.collect)
+    assert len(rows) == 10
     assert n_jobs == 1, f"tombstoned top-10 ran {n_jobs} jobs"
 
 
@@ -136,7 +134,8 @@ def test_post_filter_bit_identical(spark, base, vecs, heavy):
 def test_prefilter_overfetch_bit_identical(spark, base, vecs, tmp_path):
     """A prefilter's WHERE may reject any over-fetched key, so the
     driver keeps every live key it searched: with few tombstones they
-    fit the In-filter, with many they are fetched as literal rows."""
+    fit the In-filter, with many they are fetched as literal rows,
+    built through Arrow as a local relation (no Python RDD scan)."""
     light = _index(spark, base, tmp_path / "light", 97)
     heavy = _index(spark, base, tmp_path / "heavy", 7)
     for ix, join in ((light, False), (heavy, True)):
@@ -152,6 +151,7 @@ def test_prefilter_overfetch_bit_identical(spark, base, vecs, tmp_path):
         plan = _plan(d)
         assert "MapInPandas" not in plan
         assert ("BroadcastHashJoin" in plan) == join, plan
+        assert "ExistingRDD" not in plan, plan
 
 
 def test_revived_ids_keep_both_copies(spark, base, vecs, heavy):

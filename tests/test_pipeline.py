@@ -815,7 +815,7 @@ def test_dedup_clusters_contraction_differential(spark):
     assert got == {1: 1, 2: 1}
 
 
-def test_dedup_clusters_job_floor(spark):
+def test_dedup_clusters_job_floor(spark, count_jobs):
     """r17 (guide §2.4): a dense round runs 3 actions (composed-map
     checkpoint whose emptiness probe doubles as convergence check +
     moved-probe + relabeled-graph checkpoint) — the r16 loop paid 5
@@ -831,10 +831,8 @@ def test_dedup_clusters_job_floor(spark):
         [(i, j) for i in range(6) for j in range(i + 1, 6)],
         "id_a long, id_b long",
     )
-    st = spark.sparkContext.statusTracker()
-    before = set(st.getJobIdsForGroup())
-    got = {r["id"]: r["cluster_id"] for r in dedup_clusters(clique).collect()}
-    n_jobs = len(set(st.getJobIdsForGroup()) - before)
+    rows, n_jobs = count_jobs(lambda: dedup_clusters(clique).collect())
+    got = {r["id"]: r["cluster_id"] for r in rows}
     assert got == {i: 0 for i in range(6)}
     assert n_jobs <= 18, f"dedup_clusters(clique) ran {n_jobs} jobs (budget 18)"
 
