@@ -11,12 +11,13 @@ thin adapter.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from duckdb_vss_spark import queries as _q  # noqa: E402
 import duckdb_vss_spark.queries_pipeline  # noqa: E402,F401  (registers pipeline queries)

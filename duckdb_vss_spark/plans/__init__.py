@@ -2,9 +2,6 @@ from duckdb_vss_spark.plans.rewrite import (  # noqa: F401
     VssPlanner,
     canonicalize_cosine,
     match_lateral,
-    match_minby,
-    match_topk,
-    pushable_where,
     rewrite_operators,
 )
 from duckdb_vss_spark.plans.catalyst import (  # noqa: F401

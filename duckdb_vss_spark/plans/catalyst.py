@@ -7,12 +7,13 @@ it fires on ANY SQL. Spark's equivalent injection point
 (``spark.sql.extensions``) takes a JVM rule class — but our index scan
 is a Python physical operator (mapInPandas over graph partitions), and
 a JVM Catalyst rule cannot call back into Python kernels. So this
-module makes the same move one level down the stack than the old regex
-front-end and one level up from a JVM rule: it pattern-matches the
-REAL Catalyst ANALYZED plan (via py4j), after the actual parser and
-analyzer have resolved aliases, casts, star-expansion, view inlining
-and scoping — regex never sees any of that — and is installed as a
-``SparkSession.sql`` hook (``install_sql_extension``), so *plain*
+module makes the same move one level up from a JVM rule: it
+pattern-matches the REAL Catalyst ANALYZED plan (via py4j), after the
+actual parser and analyzer have resolved aliases, casts,
+star-expansion, view inlining and scoping. It is the only TopN route:
+``VssPlanner.sql`` (DuckDB dialect, after its text translation),
+``VssPlanner.optimize`` (DataFrame API) and the ``SparkSession.sql``
+hook (``install_sql_extension``) all reach it, so *plain*
 ``spark.sql("SELECT … ORDER BY array_distance(vec, …) LIMIT k")`` uses
 the index with no VssPlanner-specific call site.
 
@@ -20,13 +21,14 @@ Matched shape (mirroring hnsw_optimize_scan.cpp:29-141 — the
 reference's matcher is equally literal: single ascending order key,
 constant query vector, plain scan):
 
-    GlobalLimit(k)
-      LocalLimit(k)
-        [Project]                      -- ORDER BY on unselected expr
-          Sort([dist_fn(vec_col, CONST) ASC], global)
-            [Project]*  [Filter]*      -- lineage-checked passthroughs
-              SubqueryAlias(registered table)
-                View | relation
+    [Project]                          -- DataFrame .limit(k).select()
+      GlobalLimit(k)
+        LocalLimit(k)
+          [Project]                    -- ORDER BY on unselected expr
+            Sort([dist_fn(vec_col, CONST) ASC], global)
+              [Project]*  [Filter]*    -- lineage-checked passthroughs
+                SubqueryAlias(registered table)
+                  View | relation
 
 Everything else falls through to normal execution — narrowness is the
 design, exactly as in the reference. Filters between Sort and the
@@ -37,12 +39,12 @@ under-return; hnsw_optimize_scan.cpp:161-191).
 
 from __future__ import annotations
 
-import re
+import functools
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from duckdb_vss_spark.plans.rewrite import _METRIC_FOR_FN, pushable_where
+from duckdb_vss_spark.plans.rewrite import _METRIC_FOR_FN
 
 __all__ = ["PlanTopK", "match_topk_plan", "install_sql_extension", "uninstall_sql_extension"]
 
@@ -61,7 +63,9 @@ _RELATION_CLASSES = frozenset(
 
 
 def _cls(p) -> str:
-    return p.getClass().getSimpleName()
+    # a tree node's class name in one py4j round trip (getClass() then
+    # getSimpleName() takes two, plus one to free the Class proxy)
+    return p.nodeName()
 
 
 def _seq(s) -> list:
@@ -69,15 +73,17 @@ def _seq(s) -> list:
 
 
 def _child(p):
-    return p.children().apply(0)
+    """The child of a unary plan node or expression."""
+    return p.child()
 
 
 @dataclass
 class PlanTopK:
-    """A plan-level match: table/vec/metric/vector/k plus the original
-    projection (as SQL strings, re-evaluated over the aliased hits —
-    the reference recomputes the distance in the surviving projection
-    too, SURVEY §3-B.4) and any pull-up filters (qualified SQL)."""
+    """A plan-level match: table/vec/metric/vector/k plus any pull-up
+    filters (qualified SQL) and the plan's projections (SQL strings,
+    bottom-up, each re-evaluated over the aliased hits in turn — the
+    reference recomputes the distance in the surviving projection too,
+    SURVEY §3-B.4). No projection means the table's own columns."""
 
     table: str
     vec_col: str
@@ -85,105 +91,96 @@ class PlanTopK:
     metric: str
     query_vec: list[float]
     k: int
-    project_exprs: list[str] | None
     filters: list[str] = field(default_factory=list)
-    # DataFrame-API builds put a Project ABOVE the limit
-    # (.limit(k).select(...)); its exprs apply AFTER project_exprs
-    outer_exprs: list[str] | None = None
+    projections: list[list[str]] = field(default_factory=list)
 
 
-def _strip_casts(s: str) -> str:
-    """``CAST(x AS T)`` → ``x`` (innermost-first), drop backticks and
-    table qualifiers — normalization for the pushable-predicate gate
-    only (the filter applied to the hits keeps the original SQL). The
-    type pattern stops at the cast's own closing paren (word chars plus
-    ONE optional precision group like DECIMAL(12,2)) — a paren-greedy
-    class would eat the enclosing expression's parens."""
-    s = s.replace("`", "")
-    while True:
-        new = re.sub(
-            r"CAST\(([^()]*) AS [A-Za-z0-9_<> ]+(?:\([0-9, ]*\))?\)",
-            r"\1",
-            s,
-            flags=re.IGNORECASE,
+def _bare(e):
+    """``e`` with any Cast wrappers peeled off."""
+    while _cls(e) == "Cast":
+        e = _child(e)
+    return e
+
+
+_COMPARISONS = frozenset(
+    {"EqualTo", "LessThan", "LessThanOrEqual", "GreaterThan", "GreaterThanOrEqual"}
+)
+
+
+def _pushable(cond) -> bool:
+    """True iff the resolved filter ``cond`` is a conjunction of
+    scan-pushable predicates: a column (casts allowed) compared with a
+    literal, ``IS [NOT] NULL``, ``[NOT] IN (literals)``, ``[NOT]
+    BETWEEN`` literals, and ``<>`` (``Not(EqualTo)``). These are the
+    filters a parquet scan would accept as pushed filters, so applying
+    them ABOVE the index scan (filter pull-up, may under-return) is the
+    reference's documented behavior (hnsw_optimize_scan.cpp:58-84,
+    161-191); anything else — OR, LIKE, expressions, subqueries, other
+    negations — blocks the rewrite."""
+    c = _cls(cond)
+    if c == "And":
+        return _pushable(cond.left()) and _pushable(cond.right())
+    negated = c == "Not"
+    if negated:
+        cond = _child(cond)
+        c = _cls(cond)
+    if c == "In":
+        return _cls(_bare(cond.value())) == "AttributeReference" and all(
+            _cls(_bare(x)) == "Literal" for x in _seq(cond.list())
         )
-        if new == s:
-            break
-        s = new
-    return re.sub(r"\b[A-Za-z_][A-Za-z0-9_]*\.", "", s)
+    if c == "Between":
+        return (
+            _cls(_bare(cond.input())) == "AttributeReference"
+            and _cls(_bare(cond.lower())) == "Literal"
+            and _cls(_bare(cond.upper())) == "Literal"
+        )
+    if c == "EqualTo" or (c in _COMPARISONS and not negated):
+        sides = {_cls(_bare(cond.left())), _cls(_bare(cond.right()))}
+        return sides == {"AttributeReference", "Literal"}
+    if c in ("IsNull", "IsNotNull") and not negated:
+        return _cls(_bare(_child(cond))) == "AttributeReference"
+    return False
 
 
-def _split_conjuncts(s: str) -> list[str] | None:
-    """Split on AND at paren depth 0; None if any OR at depth 0 (the
-    pull-up gate rejects disjunctions outright)."""
-    parts: list[str] = []
-    depth = 0
-    buf: list[str] = []
-    tokens = re.split(r"(\(|\)|\bAND\b|\bOR\b)", s, flags=re.IGNORECASE)
-    for t in tokens:
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0 and t.strip().upper() == "AND":
-            parts.append("".join(buf))
-            buf = []
-            continue
-        elif depth == 0 and t.strip().upper() == "OR":
-            return None
-        buf.append(t)
-    parts.append("".join(buf))
-    return parts
-
-
-def _unwrap(s: str) -> str:
-    """Strip balanced wrapping parens: ``((a = 1))`` → ``a = 1``."""
-    s = s.strip()
-    while s.startswith("(") and s.endswith(")"):
-        depth = 0
-        for i, ch in enumerate(s):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and i != len(s) - 1:
-                    return s  # parens don't wrap the whole string
-        s = s[1:-1].strip()
-    return s
-
-
-def _pushable_cond(cond_sql: str) -> bool:
-    """The plan-level twin of rewrite.pushable_where: Catalyst's
-    ``condition().sql()`` wraps every node in parens and inserts CASTs
-    (``(a.x <= CAST(2 AS BIGINT))``), which the text gate never sees
-    from user SQL — normalize (strip casts/backticks/qualifiers, split
-    conjuncts paren-aware, unwrap each) and run the same per-conjunct
-    gate."""
-    s = _strip_casts(cond_sql)
-    parts = _split_conjuncts(_unwrap(s))
-    if parts is None:
-        return False
-    return all(pushable_where(_unwrap(p)) for p in parts)
+@functools.lru_cache(maxsize=None)
+def _jvm_classes(jvm):
+    """The JVM handles the vector evaluation needs, resolved once per
+    gateway: each dotted-path lookup is a py4j round trip per segment."""
+    ex = jvm.org.apache.spark.sql.catalyst.expressions
+    types = jvm.org.apache.spark.sql.types.DataTypes
+    return (
+        ex.Cast,
+        ex.EvalMode,
+        jvm.org.apache.spark.sql.internal.SQLConf,
+        types.DoubleType,
+        types.createArrayType(types.DoubleType, True),
+        jvm.scala.Option.empty(),
+    )
 
 
 def _eval_vector(spark: SparkSession, expr) -> list[float] | None:
-    """Evaluate a foldable array expression to a float list — one
-    zero-row-scan driver query over the expression's own SQL, which
-    sidesteps py4j round-trips through Catalyst internal array/decimal
-    representations."""
+    """Evaluate a foldable array expression to a float list on the
+    driver, with no query and no Spark job: the expression is cast to
+    ``array<double>`` and evaluated in the JVM, and the values cross
+    py4j as one ``mkString`` (Java's shortest round-trip rendering, so
+    each double parses back bit-exact). Casts to an array type are
+    peeled off first, so the values stay those of the statement's text:
+    the query vector of ``[…]::FLOAT[n]`` and ``cast(array(…) as
+    array<float>)`` is the double value of each element as written, not
+    its float32 rounding. None on a null vector or element."""
     try:
-        raw = getattr(spark, "_vss_sql_original", None) or spark.sql
-        row = raw(f"SELECT CAST({expr.sql()} AS ARRAY<DOUBLE>) AS v").first()
-        vec = row[0]
-        if vec is None:
+        while _cls(expr) == "Cast" and expr.dataType().typeName() == "array":
+            expr = _child(expr)
+        cast, eval_mode, sql_conf, dbl, dbl_array, no_tz = _jvm_classes(spark._jvm)
+        value = cast(
+            expr, dbl_array, no_tz, eval_mode.fromSQLConf(sql_conf.get())
+        ).eval(None)
+        if value is None:
             return None
-        return [float(x) for x in vec]
-    except Exception:  # noqa: BLE001 — any surprise → no rewrite
+        text = value.toSeq(dbl).mkString(",")
+        return [float(x) for x in text.split(",")] if text else []
+    except Exception:  # noqa: BLE001 — any surprise (incl. a null element) → no rewrite
         return None
-
-
-def _child_expr(e):
-    return e.children().apply(0)
 
 
 def _dist_call(key):
@@ -198,7 +195,7 @@ def _dist_call(key):
         ch = _seq(key.children())
         left = ch[0] if len(ch) == 2 else None
         while left is not None and _cls(left) == "Cast":  # analyzer wraps
-            left = _child_expr(left)                       # 1.0 to double
+            left = _child(left)                       # 1.0 to double
         if (
             left is not None
             and _cls(left) == "Literal"
@@ -237,12 +234,12 @@ def _descend_to_relation(node, attr_id: int, attr_name: str):
     lineage-checking the vector attribute (a Project may pass it
     through or alias-rename another plain column to it; a COMPUTED
     expression under its exprId aborts the match). Returns
-    (table_name, final_attr_name, filter_sqls) or (None, None, [])."""
-    filters: list[str] = []
+    (table_name, final_attr_name, filter_conditions) or (None, None, [])."""
+    filters: list = []
     while True:
         c = _cls(node)
         if c == "Filter":
-            filters.append(node.condition().sql())
+            filters.append(node.condition())
             node = _child(node)
         elif c == "Project":
             nxt_id, nxt_name = None, None
@@ -279,9 +276,9 @@ def match_topk_plan(
         # DataFrame builds commonly project ABOVE the limit
         # (.limit(k).select("id")); projecting k rows commutes with
         # taking them, so accept one plain Project at the root
-        outer_project = None
+        projects = []
         if _cls(p) == "Project":
-            outer_project = p
+            projects.append(p)
             p = _child(p)
         if _cls(p) != "GlobalLimit":
             return None
@@ -290,9 +287,8 @@ def match_topk_plan(
         if _cls(p) != "LocalLimit":
             return None
         p = _child(p)
-        top_project = None
         if _cls(p) == "Project":
-            top_project = p
+            projects.append(p)
             p = _child(p)
         if _cls(p) != "Sort":
             return None
@@ -311,8 +307,10 @@ def match_topk_plan(
             return None
         key = so.child()
         below = _child(p)
-        if top_project is None and _cls(below) == "Project":
-            top_project = below
+        if _cls(below) == "Project":
+            # the select list's computed items live here; a Project
+            # above the Sort only picks the selected columns from it
+            projects.append(below)
         if _cls(key) == "AttributeReference":
             key, below = _alias_target(below, key.exprId().id())
             if key is None:
@@ -328,41 +326,37 @@ def match_topk_plan(
                 return None
         if not qlit.foldable():
             return None
-        table, vname, filters = _descend_to_relation(
+        table, vname, conds = _descend_to_relation(
             below, vec.exprId().id(), vec.name()
         )
         if table is None:
             return None
         if (table.lower(), vname.lower()) not in registered:
             return None
-        for f in filters:
-            if not _pushable_cond(f):
-                return None
+        if not all(_pushable(c) for c in conds):
+            return None
         qvec = _eval_vector(spark, qlit)
         if qvec is None:
             return None
-        proj = None
-        if top_project is not None:
+
+        def render(e) -> str:
             # an alias of the SAME distance expression reuses the hits'
             # already-computed `dist` column instead of re-evaluating
             # the SQL-registered UDF: the scan's distance is the JVM
             # sequential fold the oracle parity is pinned to, while the
             # registered pandas UDF sums via einsum — last-ulp apart
-            proj = []
-            for e in _seq(top_project.projectList()):
-                is_dist_alias = False
-                try:
-                    is_dist_alias = _cls(e) == "Alias" and e.child().semanticEquals(key)
-                except Exception:  # noqa: BLE001
-                    pass
-                proj.append(
-                    f"`dist` AS `{e.name()}`" if is_dist_alias else e.sql()
-                )
-        outer = None
-        if outer_project is not None:
-            # rendered over the ALREADY-projected hits, where the inner
-            # projection's output names (incl. any dist alias) exist
-            outer = [e.sql() for e in _seq(outer_project.projectList())]
+            if _cls(e) == "Alias" and e.child().semanticEquals(key):
+                return f"`dist` AS `{e.name()}`"
+            return e.sql()
+
+        projections = []
+        for pr in reversed(projects):
+            items = _seq(pr.projectList())
+            if pr is not projects[0] and all(
+                _cls(e) == "AttributeReference" for e in items
+            ):
+                continue  # a pass-through: the hits hold these columns
+            projections.append([render(e) for e in items])
         return PlanTopK(
             table=table,
             vec_col=vname,
@@ -370,19 +364,19 @@ def match_topk_plan(
             metric=_METRIC_FOR_FN[fn],
             query_vec=qvec,
             k=k,
-            project_exprs=proj,
-            filters=filters,
-            outer_exprs=outer,
+            filters=[c.sql() for c in conds],
+            projections=projections,
         )
     except Exception:  # noqa: BLE001 — unknown plan/py4j surface → no rewrite
         return None
 
 
 def install_sql_extension(planner) -> None:
-    """Hook ``spark.sql`` so EVERY statement runs through the planner
-    (plan-level TopN match first, regex forms as fallback, untouched
-    execution otherwise). Idempotent; ``uninstall_sql_extension``
-    restores the original binding."""
+    """Hook ``spark.sql`` so EVERY statement runs through the planner:
+    a statement Spark analyzes goes to the plan-level TopN match (and
+    runs untouched if it does not match); one Spark cannot parse or
+    analyze goes to the planner's DuckDB-dialect front-end. Idempotent;
+    ``uninstall_sql_extension`` restores the original binding."""
     spark = planner.spark
     if getattr(spark, "_vss_sql_original", None) is not None:
         return

@@ -14,17 +14,20 @@ exact logical-plan shapes and swap in index operations
 Catalyst supplies the general optimizations the reference delegates to
 DuckDB core (constant folding, pushdown, pruning), but it cannot know
 about our external index artifacts — and Python cannot inject JVM
-Catalyst rules. So the Spark-first equivalent is the same move the
-reference makes, one level up: a *narrow, conservative* SQL front-end
-that recognizes exactly the rewritable statement shapes and routes them
-to the indexed operators, falling back to ``spark.sql`` untouched for
-everything else. The reference's own matchers are equally literal (they
-require a constant query vector, a plain seq_scan, a single ascending
-order key — hnsw_optimize_scan.cpp:39-84); narrowness *is* the design.
+Catalyst rules. So the TopN rule matches the ANALYZED Catalyst plan
+from Python instead (plans/catalyst.py ``match_topk_plan``) and is the
+one route every ``ORDER BY distance LIMIT k`` takes: ``VssPlanner.sql``,
+the hooked ``spark.sql`` and ``VssPlanner.optimize`` alike. Like the
+reference's matchers it is narrow on purpose (a constant query vector,
+a plain scan, a single ascending order key — hnsw_optimize_scan.cpp:
+39-84); everything else runs untouched.
 
-Also translates the reference's operator aliases ``<->`` ``<=>`` ``<#>``
-(hnsw_index.cpp:636-643) into function calls so reference SQL runs
-unchanged on Spark, which has no such operators.
+This module is the DuckDB-dialect front-end around that rule: it
+translates the reference's operator aliases ``<->`` ``<=>`` ``<#>``
+(hnsw_index.cpp:636-643), ``[…]::FLOAT[n]`` literals and DuckDB
+function names into SQL Spark parses, and it serves the statement
+forms Spark cannot analyze at all — k-ary ``min_by``, lateral top-k
+joins, the index DDL and the table DML — as text rewrites.
 """
 
 from __future__ import annotations
@@ -38,8 +41,7 @@ from pyspark.sql import functions as F
 from duckdb_vss_spark.session import arrow_frame
 
 __all__ = [
-    "rewrite_operators", "canonicalize_cosine", "match_topk",
-    "pushable_where", "VssPlanner", "UnroutableIndexError",
+    "rewrite_operators", "canonicalize_cosine", "VssPlanner", "UnroutableIndexError",
 ]
 
 
@@ -213,7 +215,7 @@ def translate_duckdb_functions(sql: str) -> str:
     return out
 
 
-# -- TopN -> index scan (hnsw_optimize_scan.cpp) ---------------------------
+# -- distance functions -> index metrics (hnsw_optimize_scan.cpp) ---------
 
 _METRIC_FOR_FN = {
     "array_distance": "l2sq",
@@ -222,49 +224,10 @@ _METRIC_FOR_FN = {
     "array_negative_inner_product": "ip",
 }
 
-_TOPK_SQL = re.compile(
-    r"""^\s*
-    SELECT\s+(?P<cols>.+?)\s+
-    FROM\s+(?P<table>[A-Za-z_][A-Za-z0-9_.]*)\s+
-    (?:WHERE\s+(?P<where>.+?)\s+)?
-    ORDER\s+BY\s+
-        (?P<fn>array_distance|array_distance_sq|array_cosine_distance|array_negative_inner_product)
-        \s*\(\s*(?P<vcol>(?:[A-Za-z_][A-Za-z0-9_]*\.)?[A-Za-z_][A-Za-z0-9_]*)\s*,\s*(?P<qvec>.+?)\s*\)
-        (?:\s+ASC)?\s+
-    LIMIT\s+(?P<k>\d+)\s*;?\s*$""",
-    re.IGNORECASE | re.VERBOSE | re.DOTALL,
-)
-
 _ARRAY_LIT = re.compile(
     r"^(?:cast\s*\(\s*)?array\s*\(\s*(?P<vals>[-+0-9eE.,\s]+)\)\s*(?:as\s+array<\s*(?:float|double)\s*>\s*\))?$",
     re.IGNORECASE,
 )
-
-# -- pushable-predicate gate for the WHERE route ---------------------------
-#
-# The reference only pulls up filters DuckDB already pushed into the scan
-# as table_filters — simple column-vs-constant shapes; any residual
-# LogicalFilter BLOCKS the TopN→index rewrite entirely, preserving exact
-# filter-first semantics (hnsw_optimize_scan.cpp:58-84). Mirror that: the
-# index post-filter route accepts only conjunctions of the shapes below;
-# anything else (OR, LIKE, expressions, subqueries) falls back to
-# SEQ_SCAN instead of silently under-returning.
-
-_IDENT = r"[A-Za-z_][A-Za-z0-9_.]*"
-_CONST = r"(?:'[^']*'|-?\d+(?:\.\d+)?(?:[eE][-+]?\d+)?|TRUE|FALSE|(?:DATE|TIMESTAMP)\s+'[^']*')"
-_CMP = r"(?:=|==|!=|<>|<=|>=|<|>)"
-_SIMPLE_PRED = re.compile(
-    rf"""^\s*(?:
-        {_IDENT}\s*{_CMP}\s*{_CONST}
-      | {_CONST}\s*{_CMP}\s*{_IDENT}
-      | {_IDENT}\s+IS\s+(?:NOT\s+)?NULL
-      | {_IDENT}\s+(?:NOT\s+)?IN\s*\(\s*{_CONST}(?:\s*,\s*{_CONST})*\s*\)
-    )\s*$""",
-    re.IGNORECASE | re.VERBOSE,
-)
-_BETWEEN_LHS = re.compile(rf"^\s*{_IDENT}\s+(?:NOT\s+)?BETWEEN\s+{_CONST}\s*$", re.IGNORECASE)
-_CONST_ONLY = re.compile(rf"^\s*{_CONST}\s*$", re.IGNORECASE)
-
 
 _ARRAY_CALL = re.compile(r"\barray\s*\(", re.IGNORECASE)
 _FLOAT_CAST_TAIL = re.compile(r"\s*::\s*FLOAT\s*\[\s*\d*\s*\]", re.IGNORECASE)
@@ -306,136 +269,7 @@ def _rewrite_array_call_casts(text: str) -> str:
             i = m.end()
 
 
-def pushable_where(where: str) -> bool:
-    """True iff ``where`` is a conjunction of scan-pushable filters:
-    column-vs-constant comparison, IS [NOT] NULL, [NOT] IN(consts),
-    [NOT] BETWEEN consts. These are exactly the predicates a parquet
-    scan would accept as pushed filters, so applying them ABOVE the
-    index scan (filter pull-up, may under-return) matches the
-    reference's documented behavior; everything else blocks the
-    rewrite."""
-    s = re.sub(r"'(?:[^']|'')*'", "'S'", where)  # neutralize string literals
-    if re.search(r"\bOR\b|\bLIKE\b|\bCASE\b|\bSELECT\b|\bNOT\s*\(|\|\|", s, re.IGNORECASE):
-        return False
-    parts = re.split(r"\bAND\b", s, flags=re.IGNORECASE)
-    i = 0
-    while i < len(parts):
-        p = parts[i]
-        if _BETWEEN_LHS.match(p):
-            # BETWEEN's own AND was split off — the next part must be
-            # the upper-bound constant
-            if i + 1 >= len(parts) or not _CONST_ONLY.match(parts[i + 1]):
-                return False
-            i += 2
-            continue
-        if not _SIMPLE_PRED.match(p):
-            return False
-        i += 1
-    return True
-
-# the alias-ordered projection form every reference plan test uses:
-#   SELECT [...,] dist_fn(vec, CONST) AS x [, ...] FROM t ORDER BY x LIMIT k
-# (hnsw_result.test:16-26, hnsw_metrics.test:22-38, hnsw_projection.test)
-_QVEC_PAT = r"(?:cast\s*\(\s*array\s*\([^()]*\)\s+as\s+array<\s*(?:float|double)\s*>\s*\)|array\s*\([^()]*\))"
-_TOPK_ALIAS_SQL = re.compile(
-    rf"""^\s*
-    SELECT\s+(?P<pre>.*?)
-        (?P<fn>array_distance|array_distance_sq|array_cosine_distance|array_negative_inner_product)
-        \s*\(\s*(?P<vcol>(?:[A-Za-z_][A-Za-z0-9_]*\.)?[A-Za-z_][A-Za-z0-9_]*)\s*,\s*(?P<qvec>{_QVEC_PAT})\s*\)
-        \s+AS\s+(?P<alias>[A-Za-z_][A-Za-z0-9_]*)
-        (?P<post>.*?)\s+
-    FROM\s+(?P<table>[A-Za-z_][A-Za-z0-9_.]*)\s+
-    (?:WHERE\s+(?P<where>.+?)\s+)?
-    ORDER\s+BY\s+(?P=alias)(?:\s+ASC)?\s+
-    LIMIT\s+(?P<k>\d+)\s*;?\s*$""",
-    re.IGNORECASE | re.VERBOSE | re.DOTALL,
-)
-
-
-@dataclass
-class TopKMatch:
-    """A rewritable ``SELECT ... FROM t [WHERE pred] ORDER BY
-    dist_fn(col, CONST) LIMIT k``. A WHERE clause routes to the index
-    with the reference's filter pull-up semantics: search k first,
-    filter after, may under-return (hnsw_optimize_scan.cpp:161-191)."""
-
-    cols: str
-    table: str
-    fn: str
-    metric: str
-    vec_col: str
-    query_vec: list[float]
-    k: int
-    where: str | None = None
-
-
-def match_topk(sql: str) -> TopKMatch | None:
-    """Recognize the reference's entry-point-B statement shape, after
-    operator/cosine canonicalization. Conservative on purpose: a single
-    table, a constant query vector, one ascending order key — the same
-    requirements as hnsw_optimize_scan.cpp:39-84 (which relies on core
-    constant folding having produced a VALUE_CONSTANT; here the literal
-    is in the text). Matches both order forms: ORDER BY dist_fn(...)
-    directly, and the aliased projection ``dist_fn(...) AS x ... ORDER
-    BY x`` that the reference's own tests use. Returns None on any
-    deviation."""
-    canon = canonicalize_cosine(rewrite_operators(sql))
-    m = _TOPK_SQL.match(canon)
-    cols = None
-    if m:
-        cols = m["cols"].strip()
-    else:
-        m = _TOPK_ALIAS_SQL.match(canon)
-        if not m:
-            return None
-        # the select list's fn call is served by the scan's dist column
-        cols = f"{m['pre']}dist AS {m['alias']}{m['post']}".strip()
-    lit = _ARRAY_LIT.match(m["qvec"].strip())
-    if not lit:
-        return None
-    try:
-        qv = [float(x) for x in lit["vals"].split(",")]
-    except ValueError:
-        return None
-    fn = m["fn"].lower()
-    # qualified ref (t.vec): must name the scanned table, then binds to
-    # the bare column — any other qualifier is not this table's scan
-    vcol = m["vcol"]
-    if "." in vcol:
-        qual, vcol = vcol.rsplit(".", 1)
-        if qual.lower() != m["table"].rsplit(".", 1)[-1].lower():
-            return None
-    where = m["where"].strip() if m["where"] else None
-    if where is not None and not pushable_where(where):
-        # residual (non-pushable) filter blocks the rewrite entirely —
-        # exact filter-first semantics via SEQ_SCAN, like the reference
-        return None
-    return TopKMatch(
-        cols=cols,
-        table=m["table"],
-        fn=fn,
-        metric=_METRIC_FOR_FN[fn],
-        vec_col=vcol,
-        query_vec=qv,
-        k=int(m["k"]),
-        where=where,
-    )
-
-
 # -- k-ary min_by -> ordered list over index scan (hnsw_optimize_topk.cpp) -
-
-_MINBY_SQL = re.compile(
-    r"""^\s*
-    SELECT\s+(?P<agg>min_by|max_by)\s*\(\s*
-        (?P<val>[A-Za-z_][A-Za-z0-9_]*)\s*,\s*
-        (?P<fn>array_distance|array_distance_sq|array_cosine_distance|array_negative_inner_product
-         |array_cosine_similarity|array_inner_product)
-        \s*\(\s*(?P<vcol>[A-Za-z_][A-Za-z0-9_]*)\s*,\s*(?P<qvec>.+?)\s*\)\s*,\s*
-        (?P<k>\d+)\s*\)
-        (?:\s+AS\s+(?P<alias>[A-Za-z_][A-Za-z0-9_]*))?\s+
-    FROM\s+(?P<table>[A-Za-z_][A-Za-z0-9_.]*)\s*;?\s*$""",
-    re.IGNORECASE | re.VERBOSE | re.DOTALL,
-)
 
 # max_by pairs with *similarity* scores (keep the k largest), exactly
 # like the reference's macros choose max_by for cosine/ip scoring
@@ -448,8 +282,8 @@ _SIM_METRIC_FOR_FN = {
 
 @dataclass
 class MinByMatch:
-    """``SELECT min_by(col, dist_fn(vec, CONST), k) FROM t`` (or
-    ``max_by(col, sim_fn(vec, CONST), k)``) — the k-ary aggregate form
+    """``min_by(col, dist_fn(vec, CONST), k)`` (or ``max_by(col,
+    sim_fn(vec, CONST), k)``) over one table — the k-ary aggregate form
     (hnsw_optimize_topk.cpp:64-219). k must satisfy 0 < k < 2048 like
     the reference (:162-165)."""
 
@@ -460,36 +294,7 @@ class MinByMatch:
     vec_col: str
     query_vec: list[float]
     k: int
-    alias: str
     descending: bool = False  # True for max_by (rank by score DESC)
-
-
-def match_minby(sql: str) -> MinByMatch | None:
-    m = _MINBY_SQL.match(canonicalize_cosine(rewrite_operators(sql)))
-    if not m:
-        return None
-    k = int(m["k"])
-    if not 0 < k < 2048:  # hnsw_optimize_topk.cpp:162-165
-        return None
-    lit = _ARRAY_LIT.match(m["qvec"].strip())
-    if not lit:
-        return None
-    fn = m["fn"].lower()
-    descending = m["agg"].lower() == "max_by"
-    metric = (_SIM_METRIC_FOR_FN if descending else _METRIC_FOR_FN).get(fn)
-    if metric is None:  # min_by over a similarity (or max_by over a
-        return None     # distance) is not a top-k-nearest shape
-    return MinByMatch(
-        value_col=m["val"],
-        table=m["table"],
-        fn=fn,
-        metric=metric,
-        vec_col=m["vcol"],
-        query_vec=[float(x) for x in lit["vals"].split(",")],
-        k=k,
-        alias=m["alias"] or m["agg"].lower(),
-        descending=descending,
-    )
 
 
 _MINBY_FNS = (
@@ -499,15 +304,18 @@ _MINBY_FNS = (
 
 
 def match_minby_nested(sql: str):
-    """A k-ary min_by/max_by call NESTED inside a larger single-table
-    aggregate select (``SELECT list_sum(flatten(min_by(vec, dist, 3)))
-    BETWEEN 44 AND 50 FROM t1`` — hnsw_topk.test:21): the reference's
-    rule matches the AGGREGATE FUNCTION node wherever it sits
-    (hnsw_optimize_topk.cpp:64-219), while the regex fast path above
-    only catches the bare statement form. Returns
-    ``(MinByMatch, select_list, call_start, call_end)`` — the caller
-    computes the ordered list and re-evaluates the select list with
-    the call replaced by it — or None."""
+    """A k-ary min_by/max_by call anywhere in a single-table aggregate
+    select: the bare statement (``SELECT min_by(id, dist, 4) AS nbrs
+    FROM t``) or nested in a larger expression (``SELECT
+    list_sum(flatten(min_by(vec, dist, 3))) BETWEEN 44 AND 50 FROM t1``
+    — hnsw_topk.test:21); the reference's rule matches the AGGREGATE
+    FUNCTION node wherever it sits (hnsw_optimize_topk.cpp:64-219).
+    Spark's own min_by is 2-ary and rejects a third argument during
+    analysis (WRONG_NUM_ARGS), so this form cannot reach the plan
+    matcher and stays a text rewrite. Returns ``(MinByMatch,
+    select_list, call_start, call_end)`` — the caller computes the
+    ordered list and re-evaluates the select list with the call
+    replaced by it — or None."""
     s = canonicalize_cosine(rewrite_operators(sql))
     m = re.match(
         r"^\s*SELECT\s+(.+?)\s+FROM\s+([A-Za-z_][\w.]*)\s*;?\s*$",
@@ -566,7 +374,6 @@ def match_minby_nested(sql: str):
         vec_col=vcol,
         query_vec=[float(x) for x in lit["vals"].split(",")],
         k=k,
-        alias="__vss_x",
         descending=descending,
     )
     return mb, select_list, call.start(), i
@@ -983,11 +790,11 @@ class VssPlanner:
             return self._read_table(rec)
         return self.spark.table(table)
 
-    def _index_for(self, match: TopKMatch):
+    def _index_for(self, table: str, vec_col: str, metric: str, dims: int):
         # metric must agree and dims must match the literal, like the
         # matcher's index checks (hnsw_optimize_scan.cpp:103-141)
-        for idx in self._indexes.get((match.table.lower(), match.vec_col.lower()), []):
-            if idx.metric == match.metric and idx.dims == len(match.query_vec):
+        for idx in self._indexes.get((table.lower(), vec_col.lower()), []):
+            if idx.metric == metric and idx.dims == dims:
                 return idx
         return None
 
@@ -2256,49 +2063,16 @@ class VssPlanner:
             return self._raw_sql(
                 translate_duckdb_functions(rewrite_operators(sql))
             )
-        match = match_topk(sql)
-        idx = self._index_for(match) if match else None
-        if match and idx is not None:
-            try:
-                self._set_marker(idx)
-                hits = self._index_hits(
-                    idx, match.table, match.query_vec, match.k,
-                    match.where, vec_col=match.vec_col,
-                )
-                # reproject to the requested select list; the distance column
-                # is recomputed by the projection like the reference (§3-B.4)
-                hits.createOrReplaceTempView("__vss_topk__")
-                cols = match.cols
-                if cols == "*":
-                    return hits.drop("dist")
-                try:
-                    return self._raw_sql(f"SELECT {cols} FROM __vss_topk__")
-                except Exception:
-                    # a select list the temp-view reprojection cannot
-                    # resolve (e.g. table-qualified refs, "items.id")
-                    # must not break a statement that runs fine
-                    # un-indexed — seq-scan it (review r13)
-                    self.last_plan = "SEQ_SCAN"
-                    return self._raw_sql(
-                        canonicalize_cosine(rewrite_operators(sql))
-                    )
-            except UnroutableIndexError:
-                # a registered index that cannot serve this statement
-                # (routed table lacks the manifest's id column) must not
-                # break a previously-valid statement — seq-scan it
-                self.last_plan = "SEQ_SCAN"
-                return self._raw_sql(canonicalize_cosine(rewrite_operators(sql)))
-
-        mb = match_minby(sql)
-        if mb is not None:
-            return self._run_minby(mb)
-
         nested = match_minby_nested(sql)
         if nested is not None:
-            mb2, select_list, a, b = nested
-            lst = self._run_minby(mb2)  # one row, column __vss_x
+            mb, select_list, a, b = nested
+            lst = self._run_minby(mb)  # one row, column __vss_x
             lst.createOrReplaceTempView("__vss_minby_outer__")
             new_select = select_list[:a] + "__vss_x" + select_list[b:]
+            if not (select_list[:a] + select_list[b:]).strip():
+                # an unaliased bare call names its column after the
+                # aggregate, not after the internal __vss_x
+                new_select += " AS max_by" if mb.descending else " AS min_by"
             return self._raw_sql(
                 translate_duckdb_functions(
                     f"SELECT {new_select} FROM __vss_minby_outer__"
@@ -2325,11 +2099,13 @@ class VssPlanner:
             # / GROUP BY / subquery — the reference's slow suite)
             return self._run_lateral_extract(region)
 
-        # no regex form matched: parse through the REAL Catalyst
-        # analyzer and pattern-match the analyzed plan — the engine-level
-        # TopN rule (plans/catalyst.py) that makes alias scoping, casts,
-        # star expansion and view inlining the analyzer's problem, not a
-        # regex's. SEQ_SCAN fallback executes the parsed plan untouched.
+        # every other SELECT, TopN included: parse through the REAL
+        # Catalyst analyzer and pattern-match the analyzed plan — the
+        # engine-level TopN rule (plans/catalyst.py), the same one the
+        # hooked spark.sql and optimize() take, which makes alias
+        # scoping, casts, star expansion and view inlining the
+        # analyzer's problem. SEQ_SCAN fallback executes the parsed
+        # plan untouched.
         self.last_plan = "SEQ_SCAN"
         df = self._raw_sql(
             translate_duckdb_functions(
@@ -2353,9 +2129,7 @@ class VssPlanner:
         )
         if m is None:
             return None
-        idx = self._index_for(
-            TopKMatch("*", m.table, m.fn, m.metric, m.vec_col, m.query_vec, m.k)
-        )
+        idx = self._index_for(m.table, m.vec_col, m.metric, len(m.query_vec))
         if idx is None:
             return None
         # The matched filters/projections are Catalyst ``.sql()``
@@ -2371,18 +2145,14 @@ class VssPlanner:
             ).alias(m.table)
             for f in m.filters:
                 hits = hits.where(F.expr(f))
-            if m.project_exprs:
-                hits = hits.selectExpr(*m.project_exprs).alias(m.table)
-            elif m.outer_exprs is None:
-                # select-star: reproduce the ORIGINAL output column order
-                # (the index scan's internal order differs)
+            if not m.projections:
+                # no projection: reproduce the ORIGINAL output column
+                # order (the index scan's internal order differs)
                 return hits.select(*df.columns)
-            else:
-                hits = hits.drop("dist").alias(m.table)
-            if m.outer_exprs is not None:
-                # DataFrame-API .limit(k).select(...) — applied above the
-                # k rows, exactly where the original plan had it
-                hits = hits.selectExpr(*m.outer_exprs)
+            for i, exprs in enumerate(m.projections):
+                if i:  # the previous projection's qualified names
+                    hits = hits.alias(m.table)
+                hits = hits.selectExpr(*exprs)
             return hits
         except Exception:  # noqa: BLE001 — non-round-trippable rendering
             self.last_plan = prev_plan
@@ -2416,9 +2186,7 @@ class VssPlanner:
     #    are ours: index scan when available, sort-slice idiom otherwise) --
 
     def _run_minby(self, mb: MinByMatch) -> DataFrame:
-        idx = self._index_for(
-            TopKMatch("", mb.table, mb.fn, mb.metric, mb.vec_col, mb.query_vec, mb.k)
-        )
+        idx = self._index_for(mb.table, mb.vec_col, mb.metric, len(mb.query_vec))
         from duckdb_vss_spark.functions import distance as D
 
         score_fn = getattr(D, mb.fn)
@@ -2454,7 +2222,7 @@ class VssPlanner:
             F.transform(
                 F.array_sort(F.collect_list(F.struct(F.col("dist"), F.col(mb.value_col)))),
                 lambda s: s[mb.value_col],
-            ).alias(mb.alias)
+            ).alias("__vss_x")
         )
 
     # -- lateral top-k join -> index join ---------------------------------

@@ -144,7 +144,7 @@ _EXTRA_ORACLES: dict[str, str] = {}
 #      family-wide in tests/test_delete_quantized.py).
 #   2. The 45 rows last driver-verified in r11, minus three displaced:
 #      q_sql_maxby_topk loses its seat to the routing family (same
-#      match_minby code path as q_sql_minby_topk with descending=True),
+#      min_by matcher as q_sql_minby_topk with descending=True),
 #      q_knn_inner_product loses its to q_hnsw_delete_batch (the
 #      brute-distance family keeps q_knn_cosine/q_knn_classify), and
 #      q_simhash_pairs loses its to q_pq_delete_batch (same
@@ -1396,8 +1396,8 @@ def q_hnsw_knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         qv = _query_vec(spark, sf_dir, 17)
         lit = ",".join(repr(x) for x in qv)
         df = planner.sql(
-            f"SELECT vec_id, label, dist FROM embeddings WHERE label < 3 "
-            f"ORDER BY embedding <-> [{lit}]::FLOAT[{len(qv)}] LIMIT 10"
+            f"SELECT vec_id, label, embedding <-> [{lit}]::FLOAT[{len(qv)}] AS dist "
+            f"FROM embeddings WHERE label < 3 ORDER BY dist LIMIT 10"
         )
         assert planner.last_plan == "HNSW_INDEX_SCAN", planner.last_plan
         return df
@@ -1437,8 +1437,8 @@ def q_hnsw_knn_filtered_empty(spark: SparkSession, sf_dir: str) -> DataFrame:
         qv = _query_vec(spark, sf_dir, 23)
         lit = ",".join(repr(x) for x in qv)
         df = planner.sql(
-            f"SELECT vec_id, label, dist FROM embeddings WHERE label = 3 "
-            f"ORDER BY embedding <-> [{lit}]::FLOAT[{len(qv)}] LIMIT 10"
+            f"SELECT vec_id, label, embedding <-> [{lit}]::FLOAT[{len(qv)}] AS dist "
+            f"FROM embeddings WHERE label = 3 ORDER BY dist LIMIT 10"
         )
         assert planner.last_plan == "HNSW_INDEX_SCAN", planner.last_plan
         return df
@@ -1526,7 +1526,7 @@ def q_sql_metric_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same column (l2sq + cosine); ``array_cosine_distance(...) AS x
     ... ORDER BY x`` must route to the COSINE index. ef ≫ k keeps the
     ANN result exact at oracle scale."""
-    from duckdb_vss_spark.plans import VssPlanner, match_topk
+    from duckdb_vss_spark.plans import VssPlanner
 
     idx_l2 = _get_index(spark, sf_dir)
     idx_cos = _get_cosine_index(spark, sf_dir)
@@ -1545,9 +1545,7 @@ def q_sql_metric_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         assert planner.last_plan == "HNSW_INDEX_SCAN", planner.last_plan
         # routed to the cosine index specifically (metric match)
-        assert planner._index_for(match_topk(
-            f"SELECT vec_id FROM embeddings ORDER BY array_cosine_distance(embedding, array({lit})) LIMIT 6"
-        )) is idx_cos
+        assert planner._index_for("embeddings", "embedding", "cosine", len(qv)) is idx_cos
         return df
     finally:
         spark.conf.unset("spark.vss.ef_search")
@@ -2154,8 +2152,8 @@ def q_sql_topk_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         qv = _query_vec(spark, sf_dir, 21)
         lit = ",".join(repr(x) for x in qv)
         df = planner.sql(
-            f"SELECT vec_id, dist FROM embeddings "
-            f"ORDER BY embedding <-> [{lit}]::FLOAT[{len(qv)}] LIMIT 8"
+            f"SELECT vec_id, embedding <-> [{lit}]::FLOAT[{len(qv)}] AS dist "
+            f"FROM embeddings ORDER BY dist LIMIT 8"
         )
         assert planner.last_plan == "HNSW_INDEX_SCAN", planner.last_plan
         return df
@@ -2203,8 +2201,8 @@ def q_sql_ddl_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         qv = _query_vec(spark, sf_dir, 29)
         lit = ",".join(repr(x) for x in qv)
         df = planner.sql(
-            f"SELECT vec_id, dist FROM embeddings "
-            f"ORDER BY embedding <-> [{lit}]::FLOAT[{len(qv)}] LIMIT 8"
+            f"SELECT vec_id, embedding <-> [{lit}]::FLOAT[{len(qv)}] AS dist "
+            f"FROM embeddings ORDER BY dist LIMIT 8"
         )
         assert planner.last_plan == "HNSW_INDEX_SCAN", planner.last_plan
         rows = [(int(r["vec_id"]), float(r["dist"])) for r in df.collect()]
@@ -2289,8 +2287,8 @@ def q_sql_dml_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_tbl = planner.sql("SELECT count(*) AS c FROM emb_dml").first()["c"]
         assert n_info == n_tbl == n_orig, (n_info, n_tbl, n_orig)
         df = planner.sql(
-            f"SELECT vec_id, dist FROM emb_dml "
-            f"ORDER BY embedding <-> [{lit}]::FLOAT[{d}] LIMIT 8"
+            f"SELECT vec_id, embedding <-> [{lit}]::FLOAT[{d}] AS dist "
+            f"FROM emb_dml ORDER BY dist LIMIT 8"
         )
         assert planner.last_plan == "HNSW_INDEX_SCAN", planner.last_plan
         rows = [(int(r["vec_id"]), float(r["dist"])) for r in df.collect()]
@@ -2357,8 +2355,13 @@ def q_reference_slt(spark: SparkSession, sf_dir: str) -> DataFrame:
     import sys as _sys
     import tempfile as _tempfile
 
-    if "/root/repo/tools" not in _sys.path:
-        _sys.path.insert(0, "/root/repo/tools")
+    import os as _os
+
+    tools = _os.path.join(
+        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))), "tools"
+    )
+    if tools not in _sys.path:
+        _sys.path.insert(0, tools)
     import slt as _slt
 
     runs = [
@@ -2434,8 +2437,8 @@ def q_sql_update_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).first()["Count"]
         assert n == 1 and planner.last_plan == "UPDATE", (n, planner.last_plan)
         hit = planner.sql(
-            f"SELECT vec_id, dist FROM emb_upd "
-            f"ORDER BY embedding <-> [{plit}]::FLOAT[{d}] LIMIT 1"
+            f"SELECT vec_id, embedding <-> [{plit}]::FLOAT[{d}] AS dist "
+            f"FROM emb_upd ORDER BY dist LIMIT 1"
         ).first()
         assert planner.last_plan == "HNSW_INDEX_SCAN", planner.last_plan
         assert hit["vec_id"] == 41 and hit["dist"] == 0.0, tuple(hit)
@@ -2447,8 +2450,8 @@ def q_sql_update_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         qv = _query_vec(spark, sf_dir, 37)
         qlit = ",".join(repr(x) for x in qv)
         df = planner.sql(
-            f"SELECT vec_id, dist FROM emb_upd "
-            f"ORDER BY embedding <-> [{qlit}]::FLOAT[{d}] LIMIT 8"
+            f"SELECT vec_id, embedding <-> [{qlit}]::FLOAT[{d}] AS dist "
+            f"FROM emb_upd ORDER BY dist LIMIT 8"
         )
         assert planner.last_plan == "HNSW_INDEX_SCAN", planner.last_plan
         rows = [(int(r["vec_id"]), float(r["dist"])) for r in df.collect()]
@@ -2603,7 +2606,7 @@ def q_sql_maxby_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-ary max_by over a *similarity* score — the form the reference's
     macros emit for cosine/ip metrics (hnsw_index_macros.cpp:24-29,
     ``ELSE max_by(tbl, tbl.score, k)``). The planner recognizes it and
-    ranks by similarity descending (plans/rewrite.py match_minby with
+    ranks by similarity descending (plans/rewrite.py match_minby_nested with
     descending=True); ties break by the value column in both engines."""
     from duckdb_vss_spark.plans import VssPlanner
 

@@ -12,12 +12,14 @@ caused the r6 red row.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+sys.path.insert(0, os.path.join(_ROOT, "tools"))
 
 from check_correctness import canon, rows_of  # noqa: E402
 

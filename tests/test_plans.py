@@ -4,6 +4,7 @@ TopN -> index-scan routing (reference: hnsw_rewrite.test, hnsw_basic.test)."""
 import re
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from duckdb_vss_spark.index import create_hnsw_index, drop_index
@@ -12,10 +13,10 @@ from duckdb_vss_spark.plans import (
     VssPlanner,
     canonicalize_cosine,
     match_lateral,
-    match_minby,
-    match_topk,
+    match_topk_plan,
     rewrite_operators,
 )
+from duckdb_vss_spark.plans.rewrite import match_minby_nested, translate_duckdb_functions
 
 
 def test_operator_rewrite():
@@ -66,23 +67,54 @@ def test_cosine_canonicalization():
     )
 
 
-def test_match_topk_shapes():
-    m = match_topk(
-        "SELECT id FROM items ORDER BY array_distance(vec, array(1.0, 2.0, 3.0)) LIMIT 5"
+@pytest.fixture(scope="module")
+def shape_views(spark):
+    """Empty views the plan-level matcher tests analyze against: the
+    plan matcher needs resolved statements, and it checks table and
+    column names only, never an index."""
+    VssPlanner(spark)  # registers the distance functions
+    schema = (
+        "id long, vec array<float>, v array<float>, other_col array<float>, "
+        "x int, y int, label int, name string, d date, a int, b string, c int"
     )
-    assert m and m.table == "items" and m.k == 5 and m.metric == "l2sq"
+    for name in ("sh_items", "sh_t", "sh_a", "sh_b"):
+        spark.createDataFrame([], schema).createOrReplaceTempView(name)
+    yield {("sh_items", "vec"), ("sh_t", "v"), ("sh_a", "v")}
+    for name in ("sh_items", "sh_t", "sh_a", "sh_b"):
+        spark.catalog.dropTempView(name)
+
+
+def _plan_match(spark, sql, registered):
+    """``match_topk_plan`` over the analyzed plan of a DuckDB-dialect
+    statement, translated the way ``VssPlanner.sql`` translates it."""
+    raw = getattr(spark, "_vss_sql_original", None) or spark.sql
+    df = raw(translate_duckdb_functions(canonicalize_cosine(rewrite_operators(sql))))
+    return match_topk_plan(spark, df._jdf.queryExecution().analyzed(), registered)
+
+
+def test_match_topk_shapes(spark, shape_views):
+    def match(sql):
+        return _plan_match(spark, sql, shape_views)
+
+    m = match(
+        "SELECT id FROM sh_items ORDER BY array_distance(vec, array(1.0, 2.0, 3.0)) LIMIT 5"
+    )
+    assert m and m.table == "sh_items" and m.k == 5 and m.metric == "l2sq"
     assert m.query_vec == [1.0, 2.0, 3.0]
     # operator-alias + cast form matches too
-    m2 = match_topk("SELECT id FROM items ORDER BY vec <=> [0.1,0.2]::FLOAT[2] LIMIT 3")
+    m2 = match("SELECT id FROM sh_items ORDER BY vec <=> [0.1,0.2]::FLOAT[2] LIMIT 3")
     assert m2 and m2.metric == "cosine" and m2.query_vec == [0.1, 0.2]
     # deviations must NOT match (conservative, hnsw_optimize_scan.cpp:39-84)
-    assert match_topk("SELECT id FROM a JOIN b ON a.x=b.x ORDER BY array_distance(v, array(1.0)) LIMIT 5") is None
-    assert match_topk("SELECT id FROM t ORDER BY array_distance(v, other_col) LIMIT 5") is None
-    assert match_topk("SELECT id FROM t ORDER BY array_distance(v, array(1.0)) DESC LIMIT 5") is None
-    # WHERE now matches, carrying the predicate for the filter pull-up
+    assert match(
+        "SELECT sh_a.id FROM sh_a JOIN sh_b ON sh_a.x=sh_b.x "
+        "ORDER BY array_distance(sh_a.v, array(1.0)) LIMIT 5"
+    ) is None
+    assert match("SELECT id FROM sh_t ORDER BY array_distance(v, other_col) LIMIT 5") is None
+    assert match("SELECT id FROM sh_t ORDER BY array_distance(v, array(1.0)) DESC LIMIT 5") is None
+    # WHERE matches, carrying the predicate for the filter pull-up
     # (search k first, filter after — hnsw_optimize_scan.cpp:161-191)
-    mw = match_topk("SELECT id FROM t WHERE x > 1 ORDER BY array_distance(v, array(1.0)) LIMIT 5")
-    assert mw is not None and mw.where == "x > 1"
+    mw = match("SELECT id FROM sh_t WHERE x > 1 ORDER BY array_distance(v, array(1.0)) LIMIT 5")
+    assert mw is not None and len(mw.filters) == 1 and "sh_t.x > 1" in mw.filters[0]
 
 
 @pytest.fixture(scope="module")
@@ -133,21 +165,49 @@ def test_planner_fallback_runs_reference_sql(spark, grid, planner_with_index):
     assert [r["id"] for r in rows] == [0, 1]
 
 
-def test_match_topk_alias_order_form(spark):
+def test_query_vector_is_the_literal_as_written(spark, shape_views):
+    """The matcher evaluates the query vector on the driver; each value
+    is bit-identical to Spark's own ``CAST(array(…) AS ARRAY<DOUBLE>)``
+    of the literal, for the ``::FLOAT[n]``, ``array(…)`` and ``cast(…
+    as array<float>)`` spellings alike (no float32 rounding)."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    vals = [np.format_float_positional(x, unique=True) for x in rng.standard_normal(62).astype(np.float32)]
+    vals += ["0.1", "-12345.678901234567890123"]
+    lit = ", ".join(vals)
+    raw = getattr(spark, "_vss_sql_original", None) or spark.sql
+    want = raw(f"SELECT CAST(array({lit}) AS ARRAY<DOUBLE>) AS v").first()["v"]
+    for q in (f"[{lit}]::FLOAT[64]", f"array({lit})", f"cast(array({lit}) as array<float>)"):
+        m = _plan_match(
+            spark, f"SELECT id FROM sh_items ORDER BY array_distance(vec, {q}) LIMIT 3", shape_views
+        )
+        assert [x.hex() for x in m.query_vec] == [x.hex() for x in want], q
+
+
+def test_match_topk_alias_order_form(spark, shape_views):
     # the reference's own plan tests all use the aliased projection form
-    # (hnsw_result.test:16-26): SELECT dist_fn(...) AS x ... ORDER BY x
-    m = match_topk(
-        "SELECT array_distance(vec, [1,2,3]::FLOAT[3]) as x FROM t1 ORDER BY x LIMIT 3"
+    # (hnsw_result.test:16-26): SELECT dist_fn(...) AS x ... ORDER BY x;
+    # the aliased call is served by the scan's dist column
+    m = _plan_match(
+        spark,
+        "SELECT array_distance(vec, [1,2,3]::FLOAT[3]) as x FROM sh_items ORDER BY x LIMIT 3",
+        shape_views,
     )
-    assert m and m.k == 3 and m.metric == "l2sq" and m.cols == "dist AS x"
-    m2 = match_topk(
-        "SELECT id, array_cosine_distance(vec, array(1.0, 0.0)) AS d FROM t ORDER BY d LIMIT 2"
+    assert m and m.k == 3 and m.metric == "l2sq" and m.projections == [["`dist` AS `x`"]]
+    m2 = _plan_match(
+        spark,
+        "SELECT id, array_cosine_distance(vec, array(1.0, 0.0)) AS d FROM sh_items "
+        "ORDER BY d LIMIT 2",
+        shape_views,
     )
-    assert m2 and m2.metric == "cosine" and m2.cols == "id, dist AS d"
+    assert m2 and m2.metric == "cosine" and m2.projections == [["sh_items.id", "`dist` AS `d`"]]
     # ordering by a DIFFERENT alias must not match
     assert (
-        match_topk(
-            "SELECT array_distance(vec, array(1.0)) AS x, y FROM t ORDER BY y LIMIT 3"
+        _plan_match(
+            spark,
+            "SELECT array_distance(vec, array(1.0)) AS x, y FROM sh_items ORDER BY y LIMIT 3",
+            shape_views,
         )
         is None
     )
@@ -178,9 +238,12 @@ def test_planner_metric_routes_to_matching_index(spark, grid, tmp_path_factory):
                 f"SELECT {fn}(vec, [1,2,3]::FLOAT[3]) as x FROM grid_metrics ORDER BY x LIMIT 3"
             )
             assert p.last_plan == "HNSW_INDEX_SCAN", (fn, p.last_plan)
-            routed = p._index_for(match_topk(
-                f"SELECT id FROM grid_metrics ORDER BY {fn}(vec, array(1.0,2.0,3.0)) LIMIT 3"
-            ))
+            m = _plan_match(
+                spark,
+                f"SELECT id FROM grid_metrics ORDER BY {fn}(vec, array(1.0,2.0,3.0)) LIMIT 3",
+                set(p._indexes),
+            )
+            routed = p._index_for(m.table, m.vec_col, m.metric, len(m.query_vec))
             assert routed is paths[metric][1]
             assert df.count() == 3
     finally:
@@ -208,28 +271,29 @@ def test_planner_where_post_filter(spark, grid, planner_with_index):
 
 
 def test_match_minby():
-    m = match_minby(
+    m, select_list, a, b = match_minby_nested(
         "SELECT min_by(id, array_distance(vec, array(1.0, 2.0, 3.0)), 4) AS nbrs FROM items"
     )
-    assert m and m.k == 4 and m.value_col == "id" and m.alias == "nbrs"
+    assert m.k == 4 and m.value_col == "id" and m.table == "items"
+    assert select_list[:a] == "" and select_list[b:].strip() == "AS nbrs"
     # k bound 0 < k < 2048 (hnsw_optimize_topk.cpp:162-165)
-    assert match_minby("SELECT min_by(id, array_distance(v, array(1.0)), 0) FROM t") is None
-    assert match_minby("SELECT min_by(id, array_distance(v, array(1.0)), 5000) FROM t") is None
+    assert match_minby_nested("SELECT min_by(id, array_distance(v, array(1.0)), 0) FROM t") is None
+    assert match_minby_nested("SELECT min_by(id, array_distance(v, array(1.0)), 5000) FROM t") is None
 
 
 def test_match_maxby():
     # max_by over a similarity — the macro form for cosine/ip metrics
     # (hnsw_index_macros.cpp:24-29)
-    m = match_minby(
+    m = match_minby_nested(
         "SELECT max_by(id, array_cosine_similarity(vec, array(1.0, 0.0)), 4) AS nbrs FROM items"
-    )
-    assert m and m.descending and m.metric == "cosine" and m.k == 4
-    m2 = match_minby("SELECT max_by(id, array_inner_product(v, array(1.0)), 2) FROM t")
-    assert m2 and m2.descending and m2.metric == "ip"
+    )[0]
+    assert m.descending and m.metric == "cosine" and m.k == 4
+    m2 = match_minby_nested("SELECT max_by(id, array_inner_product(v, array(1.0)), 2) FROM t")[0]
+    assert m2.descending and m2.metric == "ip"
     # mismatched pairings are not a nearest-k shape: max_by of a distance,
     # min_by of a similarity
-    assert match_minby("SELECT max_by(id, array_distance(v, array(1.0)), 2) FROM t") is None
-    assert match_minby("SELECT min_by(id, array_cosine_similarity(v, array(1.0)), 2) FROM t") is None
+    assert match_minby_nested("SELECT max_by(id, array_distance(v, array(1.0)), 2) FROM t") is None
+    assert match_minby_nested("SELECT min_by(id, array_cosine_similarity(v, array(1.0)), 2) FROM t") is None
 
 
 def test_planner_maxby_brute(spark, grid, planner_with_index):
@@ -367,11 +431,17 @@ def test_native_lateral_sql_fallback(spark, grid, planner_with_index):
     assert ids == want
 
 
-def test_pushable_where_gate():
+def test_pushable_where_gate(spark, shape_views):
     """Only scan-pushable conjunctions ride the index post-filter route
     (hnsw_optimize_scan.cpp:58-84: a residual filter BLOCKS the
     rewrite); everything else must fall through to SEQ_SCAN."""
-    from duckdb_vss_spark.plans import pushable_where
+
+    def match(where):
+        return _plan_match(
+            spark,
+            f"SELECT id FROM sh_t WHERE {where} ORDER BY array_distance(v, array(1.0)) LIMIT 5",
+            shape_views,
+        )
 
     for ok in (
         "x > 1",
@@ -384,33 +454,22 @@ def test_pushable_where_gate():
         "x BETWEEN 1 AND 15 AND y = 2",
         "d >= DATE '1996-01-01' AND d < DATE '1997-01-01'",
         "a = 1 AND b <> 'z' AND c IS NULL",
+        "x NOT BETWEEN 1 AND 3",
+        "name != 'q' AND CAST(x AS BIGINT) > 2",
     ):
-        assert pushable_where(ok), ok
+        m = match(ok)
+        assert m is not None and len(m.filters) == 1, ok
     for bad in (
         "x > 1 OR y > 2",
         "name LIKE 'a%'",
         "x + 1 > 2",
         "lower(name) = 'a'",
-        "x IN (SELECT id FROM t)",
+        "x IN (SELECT id FROM sh_t)",
         "NOT (x > 1)",
         "x > y",
         "CASE WHEN x > 1 THEN 1 ELSE 0 END = 1",
     ):
-        assert not pushable_where(bad), bad
-    # non-pushable WHERE blocks the TopN match entirely
-    assert (
-        match_topk(
-            "SELECT id FROM t WHERE name LIKE 'a%' "
-            "ORDER BY array_distance(v, array(1.0)) LIMIT 5"
-        )
-        is None
-    )
-    # pushable WHERE still matches and carries the predicate
-    m = match_topk(
-        "SELECT id FROM t WHERE x > 1 AND y BETWEEN 1 AND 3 "
-        "ORDER BY array_distance(v, array(1.0)) LIMIT 5"
-    )
-    assert m is not None and m.where == "x > 1 AND y BETWEEN 1 AND 3"
+        assert match(bad) is None, bad
 
 
 def test_planner_nonpushable_where_filters_first(spark, grid, planner_with_index):
@@ -428,19 +487,22 @@ def test_planner_nonpushable_where_filters_first(spark, grid, planner_with_index
     assert all(str(r["id"]).startswith("4") for r in rows)
 
 
-def test_match_topk_qualified_column(spark, grid, planner_with_index):
+def test_match_topk_qualified_column(spark, grid, planner_with_index, shape_views):
     """t.vec qualified refs rewrite when the qualifier names the scanned
     table; foreign qualifiers don't match."""
-    m = match_topk(
-        "SELECT id FROM items ORDER BY items.vec <-> [1.0,2.0,3.0]::FLOAT[3] LIMIT 5"
+    m = _plan_match(
+        spark,
+        "SELECT id FROM sh_items ORDER BY sh_items.vec <-> [1.0,2.0,3.0]::FLOAT[3] LIMIT 5",
+        shape_views,
     )
-    assert m is not None and m.vec_col == "vec" and m.table == "items"
-    assert (
-        match_topk(
-            "SELECT id FROM items ORDER BY other.vec <-> [1.0,2.0,3.0]::FLOAT[3] LIMIT 5"
+    assert m is not None and m.vec_col == "vec" and m.table == "sh_items"
+    # a foreign qualifier does not resolve: the analyzer rejects it
+    with pytest.raises(AnalysisException):
+        _plan_match(
+            spark,
+            "SELECT id FROM sh_items ORDER BY other.vec <-> [1.0,2.0,3.0]::FLOAT[3] LIMIT 5",
+            shape_views,
         )
-        is None
-    )
     # end-to-end: the qualified form routes to the registered index
     p = planner_with_index
     df = p.sql(

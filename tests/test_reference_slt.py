@@ -26,7 +26,9 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+)
 
 import slt  # noqa: E402
 

@@ -9,12 +9,15 @@ same row-count + columns + order-insensitive exact-value compare the
 driver applies (ADVICE r4: extras' checks must be enforced, not
 best-effort)."""
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+)
 import slt  # noqa: E402
 from check_correctness import rows_of  # noqa: E402
 
