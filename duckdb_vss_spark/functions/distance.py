@@ -25,7 +25,11 @@ src/hnsw/hnsw_index.cpp:437-440). Mismatched array sizes → runtime
 error, matching DuckDB's array-kernel binder/runtime error — on BOTH
 entry paths (the native Column expressions guard sizes before the fold;
 zip_with alone would NULL-pad the shorter side and silently yield
-NULL/NaN, and the SQL-registered pandas UDFs raise the same message).
+NULL/NaN, and the SQL-registered UDFs raise the same message).
+
+``functions/kernels.py`` replays these trees in numpy bit for bit; it is
+the kernel behind the SQL-registered functions and every driver-side
+exact rerank.
 """
 
 from __future__ import annotations
@@ -137,16 +141,18 @@ def array_cosine_similarity(a, b) -> Column:
     na = F.sqrt(_fold_sum(F.transform(ac, lambda x: x * x)))
     nb = F.sqrt(_fold_sum(F.transform(bc, lambda x: x * x)))
     denom = na * nb
-    # DuckDB pins zero-norm (and NaN-poisoned) pairs to -1.0 — verified
-    # against the oracle: array_cosine_similarity([0,0], v) = -1.0, and
-    # so is the all-NaN case. The bare division CRASHED here instead
-    # (review r15: Spark 4 defaults to ANSI mode, which this session
-    # keeps, so 0/0 is DIVIDE_BY_ZERO, not NULL) — one zero vector in a
-    # corpus killed every cosine query. CASE WHEN evaluates lazily per
-    # row, so the guarded branch never divides by zero under ANSI.
-    sim = F.when(
-        F.isnan(denom) | (denom == F.lit(0.0)), F.lit(-1.0)
-    ).otherwise(dot / denom)
+    # DuckDB pins zero-norm, NaN-poisoned and ±inf-element pairs to -1.0
+    # — verified against the oracle: array_cosine_similarity([0,0], v),
+    # the all-NaN case and ([inf,0], [1,0]) (inf/inf) are all -1.0. The
+    # bare division CRASHED here instead (review r15: Spark 4 defaults to
+    # ANSI mode, which this session keeps, so 0/0 is DIVIDE_BY_ZERO, not
+    # NULL) — one zero vector in a corpus killed every cosine query. CASE
+    # WHEN evaluates lazily per row, so the guarded branch never divides
+    # by zero under ANSI; nanvl pins every NaN quotient (a NaN
+    # denominator, or inf/inf after the zero guard) and keeps NULL.
+    sim = F.when(denom == F.lit(0.0), F.lit(-1.0)).otherwise(
+        F.nanvl(dot / denom, F.lit(-1.0))
+    )
     return _pair_guard(ac, bc, sim, "array_cosine_similarity")
 
 
@@ -212,125 +218,46 @@ def register_sql_functions(spark: SparkSession) -> None:
 
     The DataFrame-API forms above are the canonical (JVM-native) path;
     these registrations exist so SQL text using the reference's function
-    names runs unchanged. They are ARROW-native UDFs (pyspark 4's
-    ``arrow_udf``: pa.Array → pa.Array) with PER-FUNCTION numpy kernels
-    — one einsum per call, not the r6-r15 all-six-metrics batch — and,
-    critically, explicit NaN passthrough (VERDICT r15 #2): the old
-    pandas-UDF registration could not return NaN at all, because the
-    serializer's ``from_pandas`` masking treats NaN as the NA sentinel
-    and silently turned genuine NaN RESULTS (NaN-element inputs) into
-    NULL on the SQL path while the native Column path returned NaN.
-    Building the result as ``pa.array(values, mask=null_mask)`` keeps
-    NaN a VALUE and NULL a mask bit, so both entry paths now agree on
-    every input — pinned by the NaN/zero-norm differential test across
-    all six functions. SQL UDFs (CREATE FUNCTION … RETURN <expr>) would
-    be fully JVM-side but are rejected in Sort
-    ([UNSUPPORTED_SQL_UDF_USAGE]) — and ``ORDER BY array_distance(…)
-    LIMIT k`` is exactly the reference's hot shape. (``VssPlanner.sql``
-    routes non-rewritten distance calls here, so SQL users do hit this
-    path; rewritten TopN queries never do — the index scan replaces the
-    call.)
+    names runs unchanged. Each is an Arrow-native UDF (pyspark 4's
+    ``arrow_udf``: pa.Array → pa.Array) over ``functions/kernels.py``,
+    the numpy replay of the Column tree above, so both entry paths return
+    the same bits on every input: the same fold order, NULL rows, NaN
+    values, cosine pins and size-mismatch error text. The result is
+    built as ``pa.array(values, mask=null_mask)`` so NaN stays a VALUE
+    and NULL a mask bit (a pandas round trip would turn NaN results into
+    NULL). SQL UDFs (CREATE FUNCTION … RETURN <expr>) would be fully
+    JVM-side but are rejected in Sort ([UNSUPPORTED_SQL_UDF_USAGE]), and
+    ``ORDER BY array_distance(…) LIMIT k`` is exactly the reference's
+    hot shape. (``VssPlanner.sql`` routes non-rewritten distance calls
+    here; rewritten TopN queries never reach them, the index scan
+    replaces the call.)
     """
     import numpy as np
     import pyarrow as pa
     from pyspark.sql.functions import arrow_udf
     from pyspark.sql.types import DoubleType
 
-    def _cos_sim(dot, na, nb):
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sim = dot / (na * nb)
-        # zero-norm / NaN-poisoned pairs pin to -1.0 like DuckDB and
-        # the native Column path above (review r15)
-        return np.where(np.isfinite(sim), sim, -1.0)
+    from duckdb_vss_spark.functions import kernels
 
-    # name → (guard name in the mismatch error, (A, B) → values). The
-    # guard names mirror the NATIVE path exactly: array_distance routes
-    # through array_distance_sq's guard there, negative_inner_product
-    # through array_inner_product's, cosine_distance through
-    # array_cosine_similarity's — the error text is part of the parity.
-    kernels = {
-        "array_distance": (
-            "array_distance_sq",
-            lambda A, B: np.sqrt(
-                np.einsum("ij,ij->i", A - B, A - B)
-            ),
-        ),
-        "array_distance_sq": (
-            "array_distance_sq",
-            lambda A, B: np.einsum("ij,ij->i", A - B, A - B),
-        ),
-        "array_inner_product": (
-            "array_inner_product",
-            lambda A, B: np.einsum("ij,ij->i", A, B),
-        ),
-        "array_negative_inner_product": (
-            "array_inner_product",
-            lambda A, B: -np.einsum("ij,ij->i", A, B),
-        ),
-        "array_cosine_similarity": (
-            "array_cosine_similarity",
-            lambda A, B: _cos_sim(
-                np.einsum("ij,ij->i", A, B),
-                np.sqrt(np.einsum("ij,ij->i", A, A)),
-                np.sqrt(np.einsum("ij,ij->i", B, B)),
-            ),
-        ),
-        "array_cosine_distance": (
-            "array_cosine_similarity",
-            lambda A, B: 1.0
-            - _cos_sim(
-                np.einsum("ij,ij->i", A, B),
-                np.sqrt(np.einsum("ij,ij->i", A, A)),
-                np.sqrt(np.einsum("ij,ij->i", B, B)),
-            ),
-        ),
-    }
-
-    def _wrap(name, guard_name, kernel):
+    def _wrap(name):
         def inner(a, b):  # (pa.Array, pa.Array) -> pa.Array
-            n = len(a)
             null_mask = (
                 a.is_null().to_numpy(zero_copy_only=False)
                 | b.is_null().to_numpy(zero_copy_only=False)
             )
-            out = np.zeros(n, dtype=np.float64)
-            valid = ~null_mask
-            if valid.any():
-                idx = np.flatnonzero(valid)
+            out = np.zeros(len(a), dtype=np.float64)
+            idx = np.flatnonzero(~null_mask)
+            if len(idx):
                 # materialize only the valid rows (review r16: a full
                 # to_pylist paid per-row Python conversion for every
                 # NULL row of a null-heavy batch just to skip it)
-                sel_a = a.take(pa.array(idx)).to_pylist()
-                sel_b = b.take(pa.array(idx)).to_pylist()
-                xa = [np.asarray(v, dtype=np.float64) for v in sel_a]
-                xb = [np.asarray(v, dtype=np.float64) for v in sel_b]
-                la = np.array([v.shape[0] for v in xa])
-                lb = np.array([v.shape[0] for v in xb])
-                if (la != lb).any():
-                    # Match the reference: array kernels error on size
-                    # mismatch (duckdb raises a binder/runtime error),
-                    # rather than silently yielding NaN.
-                    i = int(np.flatnonzero(la != lb)[0])
-                    raise ValueError(
-                        f"{guard_name}: array size mismatch ({la[i]} vs"
-                        f" {lb[i]}); both arguments must have the same"
-                        " number of elements"
-                    )
-                if len(set(la.tolist())) == 1:
-                    out[idx] = kernel(np.stack(xa), np.stack(xb))
-                else:
-                    # ragged batch (mixed dims) — vectorize per dim group
-                    for d in np.unique(la):
-                        sel = la == d
-                        A = np.stack([xa[i] for i in np.flatnonzero(sel)])
-                        B = np.stack([xb[i] for i in np.flatnonzero(sel)])
-                        out[idx[sel]] = kernel(A, B)
-            # mask carries NULL; NaN stays a float64 VALUE in `out`
+                take = pa.array(idx)
+                out[idx] = kernels.evaluate_rows(
+                    name, a.take(take).to_pylist(), b.take(take).to_pylist()
+                )[0]
             return pa.array(out, type=pa.float64(), mask=null_mask)
 
         return inner
 
-    for name, (guard_name, kernel) in kernels.items():
-        spark.udf.register(
-            name, arrow_udf(_wrap(name, guard_name, kernel), DoubleType())
-        )
+    for name in kernels.FUNCTIONS:
+        spark.udf.register(name, arrow_udf(_wrap(name), DoubleType()))

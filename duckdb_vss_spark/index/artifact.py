@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from duckdb_vss_spark.functions.distance import distance_for_metric
+from duckdb_vss_spark.index.base import _driver_probe_budget, mtime_lru
 from duckdb_vss_spark.index.manifest import write_manifest
 from duckdb_vss_spark.index.tombstones import tombstones_df
 from duckdb_vss_spark.index.hnsw_graph import (
@@ -51,14 +52,12 @@ from duckdb_vss_spark.session import arrow_frame, check_persistence_enabled, get
 
 __all__ = ["create_hnsw_index", "load_index", "drop_index", "HnswIndex", "index_info"]
 
-# executor-process graph cache (file path + mtime → HNSWGraph); in local
-# mode this is one process, on a cluster one per executor python worker.
-# LRU-bounded: the executor-side knn_join iterates a query partition over
-# EVERY graph file, so an unbounded cache would eventually pin all P
-# graphs in every python worker — the bound keeps per-worker residency at
-# ≤ _GRAPH_CACHE_MAX graphs (≈50 MB each at the 64k-vector ceiling)
-# while still amortizing repeat loads across tasks.
-_GRAPH_CACHE: dict[tuple[str, float], HNSWGraph] = {}
+# bound of the executor-process graph LRU (``_load_graph``): the
+# executor-side knn_join iterates a query partition over EVERY graph
+# file, so an unbounded cache would eventually pin all P graphs in every
+# python worker — the bound keeps per-worker residency at ≤ 32 graphs
+# (≈50 MB each at the 64k-vector ceiling) while still amortizing repeat
+# loads across tasks
 _GRAPH_CACHE_MAX = 32
 # driver-probe candidate lists above this size fetch via a broadcast
 # join instead of a literal In-filter (planning + pushdown of a
@@ -314,22 +313,12 @@ def _rank_slack(g: HNSWGraph, qv, d: float) -> float:
     return 1e-5 * scale
 
 
+@mtime_lru(_GRAPH_CACHE_MAX)
 def _load_graph(path: str) -> HNSWGraph:
-    key = (path, os.path.getmtime(path))
-    g = _GRAPH_CACHE.get(key)
-    if g is None:
-        for k in [k for k in _GRAPH_CACHE if k[0] == path]:
-            del _GRAPH_CACHE[k]
-        with open(path, "rb") as f:
-            g = HNSWGraph.from_bytes(f.read())
-        while len(_GRAPH_CACHE) >= _GRAPH_CACHE_MAX:
-            _GRAPH_CACHE.pop(next(iter(_GRAPH_CACHE)))
-        _GRAPH_CACHE[key] = g
-    else:
-        # move-to-end = LRU recency (dicts preserve insertion order)
-        del _GRAPH_CACHE[key]
-        _GRAPH_CACHE[key] = g
-    return g
+    """One shard graph, through the executor-process (path, mtime) LRU —
+    in local mode one process, on a cluster one per python worker."""
+    with open(path, "rb") as f:
+        return HNSWGraph.from_bytes(f.read())
 
 
 def _search_query_stream(
@@ -475,8 +464,6 @@ class HnswIndex:
         (ORDER BY breaks ties by id, not graph order). Otherwise every
         live key is kept, as the executor probe does."""
         import numpy as np
-
-        from duckdb_vss_spark.index.pq import _driver_probe_budget
 
         budget = _driver_probe_budget(self.spark)
         est = int(self.manifest.get("count", 0)) * int(self.dims) * 4 * 4
@@ -730,7 +717,7 @@ class HnswIndex:
         """ANN lateral join, executor-side (VERDICT r5 #1): map over the
         *queries* DataFrame — each task loads the artifact's partition
         graphs straight from the shared filesystem (amortized per python
-        worker by the LRU ``_GRAPH_CACHE``) and searches every graph for
+        worker by the ``_load_graph`` LRU) and searches every graph for
         its slice of queries (ExecuteMultiScan shape, hnsw_index.cpp:
         353-367). Candidates (P·k ids per query) then window-merge and
         late-materialize payloads. Emits 1-indexed ``rn`` like the

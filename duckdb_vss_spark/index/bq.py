@@ -43,8 +43,17 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from duckdb_vss_spark.index.manifest import write_manifest
 from duckdb_vss_spark.functions.distance import distance_for_metric
+from duckdb_vss_spark.index.base import (
+    QuantizedIndex,
+    _fresh_dir,
+    _id_vec,
+    _list_parquet_files,
+    _now,
+    _shortlist_frame,
+    mtime_lru,
+)
+from duckdb_vss_spark.index.manifest import write_manifest
 
 __all__ = [
     "binary_signature",
@@ -568,7 +577,7 @@ def bq_signature_sql(vec_expr: str, dims: int) -> list[str]:
 # --------------------------------------------------------------------------
 
 
-class BqIndex:
+class BqIndex(QuantizedIndex):
     """Handle over a built BQ artifact (manifest + signatures parquet).
 
     Completes the index-family symmetry (HNSW/PQ/IVF/IVFADC/SQ all have
@@ -579,39 +588,8 @@ class BqIndex:
     the same plan-shape-gated, fingerprint-validated machinery as PQ's
     (pq._source_manifest_fields / pq._manifest_source)."""
 
-    # the upsert hook may version-kill (id, epoch<bound) instead of
-    # delete+compact+re-append (r14, VERDICT r13 #4)
-    supports_versioned_delete = True
-
-    def __init__(self, spark, path: str, manifest: dict):
-        self.spark = spark
-        self.path = path
-        self.manifest = manifest
-
-    @property
-    def metric(self) -> str:
-        return self.manifest["metric"]
-
-    @property
-    def dims(self) -> int:
-        return self.manifest["dimensions"]
-
-    @property
-    def count(self) -> int:
-        """LIVE rows (indexed minus tombstoned, r13 delete_batch);
-        ``manifest["count"]`` stays the raw indexed total."""
-        from duckdb_vss_spark.index import tombstones as _tomb
-
-        return _tomb.live_count(self.manifest)
-
-    def _sigs_df(self) -> DataFrame:
-        import os
-
-        from duckdb_vss_spark.index import tombstones as _tomb
-
-        return _tomb.filter_dead(
-            self, self.spark.read.parquet(os.path.join(self.path, "sigs"))
-        )
+    data_dir = "sigs"
+    label = "BQ"
 
     def default_rescore(self, k: int) -> int:
         """margin · calibrated-fraction · CURRENT count, clamped to
@@ -640,9 +618,7 @@ class BqIndex:
 
         man = self.manifest
         id_col = man["id_col"]
-        q = [float(x) for x in query_vec]
-        if len(q) != self.dims:
-            raise ValueError(f"BQ index keys must be of type FLOAT[{self.dims}]")
+        q = [float(x) for x in self._check_dims(query_vec)]
         take = self.default_rescore(k) if rescore is None else int(rescore)
         pairs = None
         if man.get("scoring", "hamming") == "asym":
@@ -663,21 +639,7 @@ class BqIndex:
             # the distributed scan below (the 100 TB path)
             pairs = _driver_asym_shortlist(self, q, xs, nshort)
             if pairs is not None:
-                import pandas as _pd
-
-                short = self.spark.createDataFrame(
-                    _pd.DataFrame(
-                        {
-                            id_col: np.asarray(
-                                [i for i, _s in pairs], dtype=np.int64
-                            ),
-                            "hamming": np.asarray(
-                                [s for _i, s in pairs], dtype=np.float64
-                            ),
-                        }
-                    ),
-                    schema=f"{id_col} long, hamming double",
-                )
+                short = _shortlist_frame(self.spark, pairs, id_col, "hamming")
             else:
                 dot = _signed_dot_packed("sig", xs, self.dims)
                 sc = asym_score(dot, F.col("vnc"), q, man, F.col("vfull"))
@@ -685,7 +647,7 @@ class BqIndex:
                 # join below is branch-agnostic (rescore=0 callers get
                 # the raw asym score in this column)
                 short = (
-                    self._sigs_df()
+                    self._data_df()
                     .select(id_col, sc.alias("hamming"))
                     .orderBy(F.col("hamming").asc_nulls_last(), F.col(id_col))
                     .limit(nshort)
@@ -698,21 +660,7 @@ class BqIndex:
             # distributed scan below (the 100 TB path)
             pairs = _driver_hamming_shortlist(self, q, nshort)
             if pairs is not None:
-                import pandas as _pd
-
-                short = self.spark.createDataFrame(
-                    _pd.DataFrame(
-                        {
-                            id_col: np.asarray(
-                                [i for i, _h in pairs], dtype=np.int64
-                            ),
-                            "hamming": np.asarray(
-                                [h for _i, h in pairs], dtype=np.int32
-                            ),
-                        }
-                    ),
-                    schema=f"{id_col} long, hamming int",
-                )
+                short = _shortlist_frame(self.spark, pairs, id_col, "hamming", "int")
             else:
                 qsig = [
                     sum(
@@ -725,7 +673,7 @@ class BqIndex:
                 qcol = F.array(*[F.lit(x).cast("bigint") for x in qsig])
                 hd = hamming_distance(F.col("sig"), qcol)
                 short = (
-                    self._sigs_df()
+                    self._data_df()
                     .select(id_col, hd.alias("hamming"))
                     .orderBy(F.col("hamming").asc_nulls_last(), F.col(id_col))
                     .limit(nshort)
@@ -786,7 +734,7 @@ class BqIndex:
         (integer Hamming for ``scoring='hamming'`` artifacts, the
         asymmetric estimator for ``'asym'``)."""
         from duckdb_vss_spark.index import tombstones as _tomb
-        from duckdb_vss_spark.index.pq import _list_parquet_files, _manifest_source
+        from duckdb_vss_spark.index.pq import _manifest_source
 
         man = self.manifest
         id_col = man["id_col"]
@@ -859,27 +807,14 @@ class BqIndex:
         rule. Empty batch: no-op (ADVICE r12, family-consistent).
         Crash window: commits via staged_append — after a crash inside
         the rename→manifest window, rebuild."""
-        import json as _json
-        import os
-        import time as _time
-
-        from duckdb_vss_spark.index.ivf import _batch_count_and_dims
         from duckdb_vss_spark.index.manifest import staged_append
         from duckdb_vss_spark.index.pq import _merge_source_fields
 
-        man = self.manifest
-        id_col, vec_col = man["id_col"], man["vec_col"]
-        src = df.select(
-            F.col(id_col).cast("long").alias(id_col), F.col(vec_col).alias(vec_col)
-        ).where(F.col(vec_col).isNotNull())
-        n, dims = _batch_count_and_dims(src, vec_col)
+        src, n = self._batch(df)
         if n == 0:
             return self
-        if dims != man["dimensions"]:
-            raise ValueError(
-                f"BQ index keys must be of type FLOAT[{man['dimensions']}] "
-                f"(batch has FLOAT[{dims}])"
-            )
+        man = self.manifest
+        id_col, vec_col, dims = man["id_col"], man["vec_col"], self.dims
         if man.get("scoring", "hamming") == "asym":
             # frozen center/ρ, like PQ's frozen codebooks — a batch from
             # a shifted distribution degrades the estimator gradually;
@@ -896,247 +831,107 @@ class BqIndex:
                 id_col, binary_signature(vec_col, dims).alias("sig")
             )
         moved = staged_append(batch_cols, os.path.join(self.path, "sigs"))
-        from duckdb_vss_spark.index.manifest import record_epoch
-
-        merged = dict(man)
-        record_epoch(merged, moved)
-        merged["count"] = int(man["count"] + n)
-        merged.pop("source_fingerprint", None)
-        merged.update(_merge_source_fields(man, df, "BqIndex"))
-        merged["updated_at"] = _time.strftime("%Y-%m-%dT%H:%M:%SZ", _time.gmtime())
-        if manifest_extra:
-            # e.g. streaming replay stamps — ride the SAME atomic commit
-            merged.update(manifest_extra)
-        from duckdb_vss_spark.index import tombstones as _tomb
-
-        old_tomb = _tomb.revive(self, src.select(id_col), merged)
-        write_manifest(self.path, merged)
-        self.manifest = merged
-        if old_tomb:
-            import shutil as _shutil
-
-            _shutil.rmtree(os.path.join(self.path, old_tomb), ignore_errors=True)
-        return self
-
-    def delete_batch(
-        self, ids, manifest_extra: dict | None = None,
-        epoch_lt: int | None = None,
-    ) -> "BqIndex":
-        """Offline mark-delete (r13 — the BQ face of the delete_batch
-        family; see index/tombstones.py for the shared contract,
-        reference src/hnsw/hnsw_index.cpp:466-482): tombstone the ids,
-        O(|ids|), no signature rewrite. The shortlist scan (both
-        scorings) and the SQL planner route filter the tombstones;
-        ``count`` reports live rows; ``add_batch`` of a tombstoned id
-        revives it; ``compact()`` reclaims physically. The calibrated
-        default shortlist keeps scaling off the RAW indexed count —
-        conservative (never smaller than the live-count target)."""
-        from duckdb_vss_spark.index import tombstones as _tomb
-
-        return _tomb.mark_delete(
-            self, ids, self._sigs_df(), manifest_extra, epoch_lt=epoch_lt
+        return self._commit_append(
+            src, moved, n, manifest_extra,
+            source_fields=_merge_source_fields(man, df, "BqIndex"),
         )
 
-    def compact(self) -> "BqIndex":
-        """Physically drop tombstoned signatures and re-pack the
-        accumulated add_batch part files (the reference's
-        compaction-after-DML contract, hnsw_index_pragmas.cpp:154-190).
-        Self-contained — no source DataFrame needed."""
-        from duckdb_vss_spark.index import tombstones as _tomb
 
-        out = _tomb.compact_data(self, "sigs")
-        if out is None:
-            return self  # nothing to reclaim or coalesce (review r13)
-        _tomb.finish_compact(self, new_count=out.count())
-        return self
-
-
-# worker-LRU cache of decoded signature files for the multi-query
-# stream (the BQ twin of pq._CODES_CACHE): (ids asc, ±1 sign matrix,
-# centered norms, full norms)
 def _driver_hamming_shortlist(index, q, take: int):
-    """(id, hamming) top-``take`` computed ON the driver for
-    gate-small PLAIN-hamming artifacts (r16 — the BQ face of
-    pq._driver_adc_shortlist; guide §1), or None when the artifact is
-    too big / unreadable / asym-scored / the shortlist too wide —
-    those keep the distributed scan bit-for-bit. Hamming scores are
+    """(id, hamming) top-``take`` on the driver for gate-small
+    PLAIN-hamming artifacts (r16; the walk in
+    ``QuantizedIndex._driver_shortlist``), or None for the distributed
+    scan — always for asym-scored artifacts. Hamming scores are
     INTEGERS, so identity with the JVM ``hamming_distance`` column is
-    exact arithmetic (no float-association risk), and ties break on
-    (hamming, id) exactly like the cluster ORDER BY; the asym
-    estimator stays on its SQL float path (replaying that expression
-    tree's association order is the risk the plain path avoids).
-    Pinned by tests/test_quantized_driver_search."""
-    from duckdb_vss_spark.index import tombstones as _tomb
-    from duckdb_vss_spark.index.pq import (
-        _MAX_DRIVER_SHORTLIST,
-        _driver_probe_budget,
-        _list_parquet_files,
-    )
-
+    exact arithmetic (no float-association risk). Pinned by
+    tests/test_quantized_driver_search."""
     man = index.manifest
     if man.get("scoring", "hamming") == "asym":
         return None
-    dims = int(man["dimensions"])
-    budget = _driver_probe_budget(index.spark)
-    # decoded ±1 sign matrix dominates driver memory: one byte per dim
-    est = int(man.get("count", 0)) * (dims + 16) * 2
-    if budget <= 0 or est <= 0 or est > budget:
-        return None
-    if int(take) > _MAX_DRIVER_SHORTLIST:
-        return None
-    dead = _tomb.dead_mask_payload_local(index)
-    if dead is _tomb.UNREADABLE:
-        return None
-    id_col = man["id_col"]
+    id_col, dims = man["id_col"], index.dims
     # the same sign convention the query packing uses: bit set iff > 0
     qsigns = np.where(np.asarray(q, dtype=np.float64) > 0, 1, -1).astype(np.int8)
-    try:
-        files = _list_parquet_files(os.path.join(index.path, "sigs"))
-        parts = []
-        for file in files:
-            ids, signs, _vn, _vf = _load_sigs(file, id_col, dims, False)
-            d = _tomb.applicable_dead(dead, file)
-            if d is not None:
-                keep = ~np.isin(ids, d)
-                ids, signs = ids[keep], signs[keep]
-            if len(ids):
-                parts.append(
-                    (ids, (signs != qsigns[None, :]).sum(axis=1, dtype=np.int64))
-                )
-    except Exception:  # noqa: BLE001 — remote FS/corrupt: distributed path
-        return None
-    if not parts:
-        return []
-    ids = np.concatenate([p[0] for p in parts])
-    h = np.concatenate([p[1] for p in parts])
-    order = np.lexsort((ids, h))[: int(take)]
-    return [(int(ids[i]), int(h[i])) for i in order]
+    # the decoded ±1 sign matrix dominates driver memory: a byte per dim
+    return index._driver_shortlist(
+        take, dims + 16, lambda f: _load_sigs(f, id_col, dims, False),
+        lambda _lid, signs, _vn, _vf: (signs != qsigns[None, :]).sum(axis=1, dtype=np.int64),
+    )
 
 
 def _driver_asym_shortlist(index, q, xs, take: int):
-    """(id, score) asym top-``take`` computed ON the driver for
-    gate-small asym-scored artifacts (r16, second session), or None
-    when the artifact is too big / unreadable / the shortlist too
-    wide. Unlike the hamming path this replays FLOAT arithmetic, so it
+    """(id, score) asym top-``take`` on the driver for gate-small
+    asym-scored artifacts (r16, second session; the walk in
+    ``QuantizedIndex._driver_shortlist``), or None for the distributed
+    scan. Unlike the hamming path this replays FLOAT arithmetic, so it
     follows the `_write_sigs_local` discipline: every operation
     reproduces the generated SQL expression tree's exact shape —
 
     - the signed dot is the SQL's left-associated 64-term ``+`` fold of
-      exact ±literal CASE values (a sequential per-dimension vectorized
-      add, NOT a numpy matmul/pairwise sum — `_asym_scores_np`, the
-      calibration kernel, is deliberately NOT reused here because its
-      BLAS dot does not share the SQL fold order);
+      exact ±literal CASE values, started FROM t0 (no 0.0 seed, so not
+      functions/kernels.py's fold): a sequential per-dimension
+      vectorized add, NOT a numpy matmul/pairwise sum —
+      `_asym_scores_np`, the calibration kernel, is deliberately NOT
+      reused here because its BLAS dot does not share the SQL fold
+      order;
     - the score composes in the Column tree's association order
       ((vnc*vnc) - ((beta*vnc)*dot) for l2sq, -(vnc*dot) for ip,
       (-(cq + (vnc*dot)/r))/vfull for cosine) with the same
       driver-computed constants.
 
     Bit-identity pinned per metric by tests/test_quantized_driver_search."""
-    from duckdb_vss_spark.index import tombstones as _tomb
-    from duckdb_vss_spark.index.pq import (
-        _MAX_DRIVER_SHORTLIST,
-        _driver_probe_budget,
-        _list_parquet_files,
-    )
-
     man = index.manifest
-    dims = int(man["dimensions"])
-    budget = _driver_probe_budget(index.spark)
-    est = int(man.get("count", 0)) * (dims + 16) * 2
-    if budget <= 0 or est <= 0 or est > budget:
-        return None
-    if int(take) > _MAX_DRIVER_SHORTLIST:
-        return None
-    dead = _tomb.dead_mask_payload_local(index)
-    if dead is _tomb.UNREADABLE:
-        return None
-    id_col = man["id_col"]
-    metric = man["metric"]
+    id_col, dims, metric = man["id_col"], index.dims, index.metric
     rho = float(man["asym_rho"])
     beta = 2.0 / (rho * float(np.sqrt(dims)))
-    xs = [float(x) for x in xs]
-    try:
-        files = _list_parquet_files(os.path.join(index.path, "sigs"))
-        parts = []
-        for file in files:
-            ids, signs, vn, vf = _load_sigs(file, id_col, dims, True)
-            d = _tomb.applicable_dead(dead, file)
-            if d is not None:
-                keep = ~np.isin(ids, d)
-                ids, signs = ids[keep], signs[keep]
-                vn = vn[keep]
-                vf = vf[keep] if vf is not None else None
-            if not len(ids):
-                continue
-            bits = signs > 0
-            # the SQL fold: t0 + t1 + ... left-associated, each term an
-            # exact ±xs[b] literal — start FROM t0 (no 0.0 seed)
-            dot = np.where(bits[:, 0], xs[0], -xs[0])
-            for b in range(1, dims):
-                dot = dot + np.where(bits[:, b], xs[b], -xs[b])
-            if metric == "l2sq":
-                sc = vn * vn - (beta * vn) * dot
-            elif metric == "ip":
-                sc = -(vn * dot)
-            else:  # cosine — same constant expressions as asym_score
-                cq = float(
-                    np.dot(
-                        np.asarray(man["asym_center"], dtype=np.float64),
-                        np.asarray([float(x) for x in q], dtype=np.float64),
-                    )
-                )
-                r = rho * float(np.sqrt(dims))
-                sc = (-(cq + (vn * dot) / r)) / vf
-            parts.append((ids, sc))
-    except Exception:  # noqa: BLE001 — remote FS/corrupt: distributed path
-        return None
-    if not parts:
-        return []
-    ids = np.concatenate([p[0] for p in parts])
-    sc = np.concatenate([p[1] for p in parts])
-    order = np.lexsort((ids, sc))[: int(take)]
-    return [(int(ids[i]), float(sc[i])) for i in order]
-
-
-_SIGS_CACHE: dict = {}
-_SIGS_CACHE_MAX = 8
-
-
-def _load_sigs(file: str, id_col: str, dims: int, asym: bool):
-    import os as _os
-
-    key = (file, _os.path.getmtime(file))
-    hit = _SIGS_CACHE.get(key)
-    if hit is None:
-        import pyarrow.parquet as papq
-
-        for k in [k for k in _SIGS_CACHE if k[0] == file]:
-            del _SIGS_CACHE[k]
-        cols = [id_col, "sig"] + (["vnc", "vfull"] if asym else [])
-        t = papq.read_table(file, columns=cols)
-        ids = np.asarray(t[id_col].to_pylist(), dtype=np.int64)
-        words = np.asarray(t["sig"].to_pylist(), dtype=np.int64)
-        n = len(ids)
-        signs = np.empty((n, dims), dtype=np.int8)
-        for b in range(dims):
-            w, off = divmod(b, _BITS)
-            signs[:, b] = (((words[:, w] >> off) & 1) * 2 - 1).astype(np.int8)
-        vn = np.asarray(t["vnc"].to_pylist(), dtype=np.float64) if asym else None
-        vf = np.asarray(t["vfull"].to_pylist(), dtype=np.float64) if asym else None
-        order = np.argsort(ids, kind="stable")
-        hit = (
-            ids[order],
-            signs[order],
-            vn[order] if vn is not None else None,
-            vf[order] if vf is not None else None,
+    r = rho * float(np.sqrt(dims))
+    cq = float(
+        np.dot(
+            np.asarray(man["asym_center"], dtype=np.float64),
+            np.asarray([float(x) for x in q], dtype=np.float64),
         )
-        while len(_SIGS_CACHE) >= _SIGS_CACHE_MAX:
-            _SIGS_CACHE.pop(next(iter(_SIGS_CACHE)))
-        _SIGS_CACHE[key] = hit
-    else:
-        del _SIGS_CACHE[key]
-        _SIGS_CACHE[key] = hit
-    return hit
+    )
+    xs = [float(x) for x in xs]
+
+    def score(_lid, signs, vn, vf):
+        bits = signs > 0
+        dot = np.where(bits[:, 0], xs[0], -xs[0])
+        for b in range(1, dims):
+            dot = dot + np.where(bits[:, b], xs[b], -xs[b])
+        if metric == "l2sq":
+            return vn * vn - (beta * vn) * dot
+        if metric == "ip":
+            return -(vn * dot)
+        return (-(cq + (vn * dot) / r)) / vf  # cosine: as asym_score
+
+    return index._driver_shortlist(
+        take, dims + 16, lambda f: _load_sigs(f, id_col, dims, True), score
+    )
+
+
+# worker-LRU cache of decoded signature files for the multi-query
+# stream and the driver shortlists (the BQ twin of pq._load_codes):
+# (ids asc, ±1 sign matrix, centered norms, full norms)
+@mtime_lru(8)
+def _load_sigs(file: str, id_col: str, dims: int, asym: bool):
+    import pyarrow.parquet as papq
+
+    cols = [id_col, "sig"] + (["vnc", "vfull"] if asym else [])
+    t = papq.read_table(file, columns=cols)
+    ids = np.asarray(t[id_col].to_pylist(), dtype=np.int64)
+    words = np.asarray(t["sig"].to_pylist(), dtype=np.int64)
+    signs = np.empty((len(ids), dims), dtype=np.int8)
+    for b in range(dims):
+        w, off = divmod(b, _BITS)
+        signs[:, b] = (((words[:, w] >> off) & 1) * 2 - 1).astype(np.int8)
+    vn = np.asarray(t["vnc"].to_pylist(), dtype=np.float64) if asym else None
+    vf = np.asarray(t["vfull"].to_pylist(), dtype=np.float64) if asym else None
+    order = np.argsort(ids, kind="stable")
+    return (
+        ids[order],
+        signs[order],
+        vn[order] if vn is not None else None,
+        vf[order] if vf is not None else None,
+    )
 
 
 def _bq_query_stream(
@@ -1224,9 +1019,6 @@ def _write_sigs_local(
 
     Returns False when the rows don't look like numeric vectors (the
     caller then falls back to the cluster write)."""
-    import os
-
-    import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as papq
 
@@ -1310,11 +1102,6 @@ def create_bq_index(
     - ``"hamming"`` — the r12 layout: raw sign bits, integer Hamming
       shortlist, exactly SQL-replayable (q_bq_index_knn pins
       bit-parity against the portable signature SQL)."""
-    import json as _json
-    import os
-    import shutil
-    import time as _time
-
     from duckdb_vss_spark.index.pq import _source_manifest_fields
     from duckdb_vss_spark.session import check_persistence_enabled
 
@@ -1323,9 +1110,7 @@ def create_bq_index(
     if scoring not in ("asym", "hamming"):
         raise ValueError("BQ index 'scoring' must be 'asym' or 'hamming'")
     check_persistence_enabled(spark)
-    src = df.select(
-        F.col(id_col).cast("long").alias(id_col), F.col(vec_col).alias(vec_col)
-    ).where(F.col(vec_col).isNotNull())
+    src = _id_vec(df, id_col, vec_col)
 
     # calibration sample: the SAME estimator as calibrate_rescore
     # (_estimate_fraction), but the fraction is persisted instead of
@@ -1354,11 +1139,7 @@ def create_bq_index(
     else:
         frac = _estimate_fraction(mat, metric, k=10, target=target_recall)
 
-    if os.path.exists(path):
-        if not overwrite:
-            raise ValueError(f"index path {path!r} already exists (use overwrite=True)")
-        shutil.rmtree(path)
-    os.makedirs(path)
+    _fresh_dir(path, overwrite)
     sigs_dir = os.path.join(path, "sigs")
 
     # small file-backed sources build the signature table on the driver
@@ -1422,23 +1203,11 @@ def create_bq_index(
         "cal_target_recall": float(target_recall),
         **extra,
         **_source_manifest_fields(df),
-        "created_at": _time.strftime("%Y-%m-%dT%H:%M:%SZ", _time.gmtime()),
+        "created_at": _now(),
     }
     write_manifest(path, manifest)
     return BqIndex(spark, path, manifest)
 
 
-def load_bq_index(spark, path: str) -> BqIndex:
-    import json as _json
-    import os
-
-    with open(os.path.join(path, "manifest.json")) as f:
-        return BqIndex(spark, path, _json.load(f))
-
-
-def drop_bq_index(path: str) -> None:
-    import os
-    import shutil
-
-    if os.path.exists(os.path.join(path, "manifest.json")):
-        shutil.rmtree(path)
+load_bq_index = BqIndex.load
+drop_bq_index = BqIndex.drop

@@ -25,51 +25,34 @@ the write is the only shuffle.
 
 from __future__ import annotations
 
-import json
 import logging
 import math
 import os
-import shutil
-import time
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, IntegerType
+from pyspark.sql.types import IntegerType
 
-from duckdb_vss_spark.index.manifest import write_manifest
+from duckdb_vss_spark.functions import kernels
 from duckdb_vss_spark.functions.distance import distance_for_metric
+from duckdb_vss_spark.index.base import (
+    IvfLists,
+    _fresh_dir,
+    _id_vec,
+    _local_or_count,
+    _norm_rows,
+    _now,
+    _training_sample,
+    centroid_dists,
+    mtime_lru,
+    probe_lists_udf,
+)
+from duckdb_vss_spark.index.manifest import write_manifest
 
 __all__ = ["create_ivf_index", "load_ivf_index", "drop_ivf_index", "IvfIndex"]
 
 _LOG = logging.getLogger(__name__)
-
-
-def _count_and_dims(src: DataFrame, vec_col: str, what: str) -> tuple[int, int]:
-    """Row count and vector width of a NULL-filtered source in ONE
-    aggregate job (the separate count()/first() probes each cost a
-    driver round-trip — ~0.2 s of a small build's wall, r10). Shared
-    by every quantizer build in index/."""
-    row = src.agg(
-        F.count(F.lit(1)).alias("n"), F.first(F.size(vec_col)).alias("d")
-    ).first()
-    total = int(row["n"])
-    if total == 0:
-        raise ValueError(f"cannot build {what} over an empty vector column")
-    return total, int(row["d"])
-
-
-def _batch_count_and_dims(src: DataFrame, vec_col: str) -> tuple[int, int | None]:
-    """add_batch variant of ``_count_and_dims``: an empty (or all-NULL)
-    batch returns ``(0, None)`` so every family's add_batch can no-op —
-    a drained upstream (``corpus_diff`` finding zero new docs) must not
-    throw on some index types while IvfIndex.add_batch treats the same
-    input as a no-op (ADVICE r12)."""
-    row = src.agg(
-        F.count(F.lit(1)).alias("n"), F.first(F.size(vec_col)).alias("d")
-    ).first()
-    n = int(row["n"])
-    return (n, int(row["d"])) if n else (0, None)
 
 
 def _kmeans(sample: np.ndarray, nlist: int, iters: int, seed: int) -> np.ndarray:
@@ -88,12 +71,7 @@ def _kmeans(sample: np.ndarray, nlist: int, iters: int, seed: int) -> np.ndarray
     c = np.stack(cents)
     for _ in range(iters):
         # [n, nlist] distance via |a|²+|c|²-2a·c — O(n·nlist·dims) BLAS
-        dist = (
-            (sample**2).sum(axis=1, keepdims=True)
-            + (c**2).sum(axis=1)
-            - 2.0 * sample @ c.T
-        )
-        assign = dist.argmin(axis=1)
+        assign = centroid_dists(sample, c).argmin(axis=1)
         for j in range(nlist):
             members = sample[assign == j]
             if len(members):
@@ -130,11 +108,7 @@ def _calibrate_nprobe(
         return nlist
     rng = np.random.RandomState(seed)
     qidx = rng.choice(n, size=min(nq, n), replace=False)
-    d2c = (
-        (sample**2).sum(axis=1, keepdims=True)
-        + (centroids**2).sum(axis=1)
-        - 2.0 * sample @ centroids.T
-    )
+    d2c = centroid_dists(sample, centroids)
     assign = d2c.argmin(axis=1)
     kk = min(k, n - 1)
     recall_at = np.zeros(nlist)
@@ -159,25 +133,11 @@ def _calibrate_nprobe(
     return int(ok[0]) + 1 if len(ok) else nlist
 
 
-def _norm_rows(mat: np.ndarray, metric: str) -> np.ndarray:
-    """For the cosine metric, centroid geometry lives on the unit sphere
-    (spherical k-means): L2-normalize rows so L2-argmin ≡ cosine-argmax.
-    l2sq/ip keep raw coordinates (for ip the coarse quantizer is a plain
-    L2 partition of the raw space — exact MIPS routing would need an
-    augmented-dimension transform; scoring is still exact either way)."""
-    if metric != "cosine":
-        return mat
-    return mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
-
-
 def _assign_rows(mat: np.ndarray, centroids: np.ndarray, metric: str) -> np.ndarray:
     """Nearest-centroid assignment of a float64 row matrix — the ONE
     numpy kernel behind both the Arrow UDF and the driver-local build,
     so list membership is bit-identical on either path."""
-    c = centroids.astype(np.float64)
-    c_sq = (c**2).sum(axis=1)
-    mat = _norm_rows(mat, metric)
-    dist = (mat**2).sum(axis=1, keepdims=True) + c_sq - 2.0 * mat @ c.T
+    dist = centroid_dists(_norm_rows(mat, metric), centroids)
     return dist.argmin(axis=1).astype(np.int32)
 
 
@@ -223,53 +183,10 @@ def _fits_broadcast(queries: DataFrame, nprobe: int, budget_bytes: int) -> bool:
     return fits
 
 
-class IvfIndex:
+class IvfIndex(IvfLists):
     """Handle over a built IVF artifact."""
 
-    # the upsert hook may version-kill (id, epoch<bound) instead of
-    # delete+compact+re-append (r14, VERDICT r13 #4)
-    supports_versioned_delete = True
-
-    def __init__(self, spark: SparkSession, path: str, manifest: dict):
-        self.spark = spark
-        self.path = path
-        self.manifest = manifest
-        self._centroids = np.asarray(manifest["centroids"], dtype=np.float64)
-
-    @property
-    def metric(self) -> str:
-        return self.manifest["metric"]
-
-    @property
-    def nlist(self) -> int:
-        return self.manifest["nlist"]
-
-    @property
-    def dims(self) -> int:
-        return self.manifest["dimensions"]
-
-    @property
-    def count(self) -> int:
-        """LIVE rows (indexed minus tombstoned, r13 delete_batch);
-        ``manifest["count"]`` stays the raw indexed total."""
-        from duckdb_vss_spark.index import tombstones as _tomb
-
-        return _tomb.live_count(self.manifest)
-
-    def _lists_df(self) -> DataFrame:
-        from duckdb_vss_spark.index import tombstones as _tomb
-
-        return _tomb.filter_dead(
-            self, self.spark.read.parquet(os.path.join(self.path, "lists"))
-        )
-
-    def _probe_ids(self, query_vec, nprobe: int) -> list[int]:
-        q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
-        if q.shape[0] != self.dims:
-            raise ValueError(f"IVF index keys must be of type FLOAT[{self.dims}]")
-        q = _norm_rows(q[None, :], self.metric)[0]
-        d = ((self._centroids - q) ** 2).sum(axis=1)
-        return [int(i) for i in np.argsort(d, kind="stable")[: int(nprobe)]]
+    label = "IVF"
 
     # -- single-query top-k (entry point B shape) -------------------------
 
@@ -289,23 +206,26 @@ class IvfIndex:
         ``post_filter`` applies ABOVE the top-k selection (the HNSW
         filter pull-up semantics, hnsw_optimize_scan.cpp:161-191) — the
         result may have fewer than k rows."""
-        nprobe = int(nprobe or self.manifest["default_nprobe"])
-        probes = self._probe_ids(query_vec, nprobe)
+        qv, probes = self._probes(query_vec, nprobe)
         q = [float(x) for x in query_vec]
         dist_fn = distance_for_metric(self.metric)
         id_col = self.manifest["id_col"]
         vec_col = self.manifest["vec_col"]
-        base = self._lists_df().where(F.col("list_id").isin(probes))
+        base = self._data_df().where(F.col("list_id").isin(probes))
         # r16 (guide §1): gate-small artifacts resolve the top-k ON the
-        # driver (bit-identical replay of the JVM distance tree) and the
-        # probed scan narrows to ONE literal In-filter fetch of the
-        # winning ids; the SAME dist_fn below recomputes the scores on
+        # driver (functions/kernels.py, the bit-identical replay of the
+        # JVM distance tree) and the probed scan narrows to ONE literal
+        # In-filter fetch of the winning ids; the SAME dist_fn below recomputes the scores on
         # the fetched rows, so the result is the distributed result by
         # construction. Duplicate (re-added) ids are safe here: every
         # physical copy of a fetched id is scanned and re-ranked, and
         # the fetched superset contains every true top-k row. Oversized
         # artifacts keep the full probed scan (the 100 TB path).
-        pairs = _driver_ivf_shortlist(self, q, probes, int(k))
+        dims, metric = self.dims, self.metric
+        pairs = self._driver_shortlist(
+            int(k), dims * 8, lambda f: _load_vecs(f, id_col, vec_col, dims),
+            lambda _lid, xv: kernels.metric_distance(metric, xv, qv), probes,
+        )
         if pairs is not None:
             from duckdb_vss_spark.index.artifact import _MAX_ISIN_CANDIDATES
 
@@ -352,25 +272,7 @@ class IvfIndex:
         nprobe = int(nprobe or self.manifest["default_nprobe"])
         id_col = self.manifest["id_col"]
         vec_col = self.manifest["vec_col"]
-        c = self._centroids
-        c_sq = (c**2).sum(axis=1)
-
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        npr = nprobe
-
-        metric = self.metric
-
-        def _probe(v):
-            mat = np.stack([np.asarray(x, dtype=np.float64) for x in v])
-            mat = _norm_rows(mat, metric)
-            dist = (mat**2).sum(axis=1, keepdims=True) + c_sq - 2.0 * mat @ c.T
-            order = np.argsort(dist, axis=1, kind="stable")[:, :npr]
-            return pd.Series(list(order.astype(np.int32)))
-
-        probe_lists = pandas_udf(_probe, ArrayType(IntegerType()))
-
+        probe_lists = probe_lists_udf(self._centroids, self.metric, nprobe)
         probed = queries.where(F.col(query_vec_col).isNotNull()).withColumn(
             "list_id", F.explode(probe_lists(F.col(query_vec_col)))
         )
@@ -384,7 +286,7 @@ class IvfIndex:
             broadcast_queries = _fits_broadcast(queries, nprobe, broadcast_budget_bytes)
         probed_side = F.broadcast(probed) if broadcast_queries else probed
         scored = (
-            self._lists_df()
+            self._data_df()
             .join(probed_side, on="list_id", how="inner")
             .withColumn(dist_col, dist_fn(F.col(query_vec_col), F.col(vec_col)))
         )
@@ -425,9 +327,7 @@ class IvfIndex:
 
         man = self.manifest
         id_col, vec_col = man["id_col"], man["vec_col"]
-        src = df.select(
-            F.col(id_col).cast("long").alias(id_col), F.col(vec_col).alias(vec_col)
-        ).where(F.col(vec_col).isNotNull())
+        src = _id_vec(df, id_col, vec_col)
         probe = src.select(F.size(vec_col).alias("d")).first()
         if probe is not None and int(probe["d"]) != int(man["dimensions"]):
             raise ValueError(
@@ -457,63 +357,24 @@ class IvfIndex:
         bad = [lid for lid in hist if lid < 0 or lid >= man["nlist"]]
         if bad:  # pragma: no cover — assign argmins over nlist by design
             raise ValueError(f"assignment produced out-of-range list ids: {bad}")
-        from duckdb_vss_spark.index.manifest import record_epoch
-
-        merged = dict(man)
-        record_epoch(merged, new_files)
-        merged["count"] = int(man["count"] + sum(hist.values()))
-        merged["lists"] = [
+        lists = [
             {
                 "list_id": p["list_id"],
                 "count": int(p["count"] + hist.get(int(p["list_id"]), 0)),
             }
             for p in man["lists"]
         ]
-        merged["updated_at"] = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        if manifest_extra:
-            # e.g. streaming replay stamps — ride the SAME atomic commit
-            merged.update(manifest_extra)
-        from duckdb_vss_spark.index import tombstones as _tomb
-
-        old_tomb = _tomb.revive(self, src.select(id_col), merged)
-        write_manifest(self.path, merged)
-        self.manifest = merged
-        if old_tomb:
-            shutil.rmtree(os.path.join(self.path, old_tomb), ignore_errors=True)
-        return self
-
-    def delete_batch(
-        self, ids, manifest_extra: dict | None = None,
-        epoch_lt: int | None = None,
-    ) -> "IvfIndex":
-        """Offline mark-delete (r13 — the IVF face of the delete_batch
-        family; see index/tombstones.py for the shared contract,
-        reference src/hnsw/hnsw_index.cpp:466-482): tombstone the ids,
-        O(|ids|), no list rewrite. Probed scans (knn_search and the
-        knn_join list join) filter the tombstones; ``count`` and
-        ``info()`` report live totals; ``add_batch`` of a tombstoned
-        id revives it. Per-list stats stay RAW until ``compact()``
-        physically reclaims and recounts (the tombstone set is not
-        list-attributed by design — that would cost the assign join
-        this O(|ids|) path avoids)."""
-        from duckdb_vss_spark.index import tombstones as _tomb
-
-        return _tomb.mark_delete(
-            self, ids, self._lists_df(), manifest_extra, epoch_lt=epoch_lt
+        return self._commit_append(
+            src, new_files, sum(hist.values()), manifest_extra, extra={"lists": lists}
         )
 
-    def compact(self) -> "IvfIndex":
-        """Physically drop tombstoned rows and re-pack each inverted
-        list's accumulated add_batch part files into one file (the
-        reference's compaction-after-DML contract,
-        hnsw_index_pragmas.cpp:154-190); per-list manifest stats are
-        recounted from the rewritten files. Self-contained — lists
-        hold the full (id, vec) rows."""
+    def _finish_compact(self, out: DataFrame) -> None:
+        """Per-list stats stay RAW between deletes (the tombstone set is
+        not list-attributed — that would cost the assign join delete's
+        O(|ids|) path avoids); compaction recounts them from the
+        rewritten files."""
         from duckdb_vss_spark.index import tombstones as _tomb
 
-        out = _tomb.compact_data(self, "lists", partition_by="list_id")
-        if out is None:
-            return self  # nothing to reclaim or coalesce (review r13)
         counts = {
             int(r["list_id"]): int(r["n"])
             for r in out.groupBy("list_id").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -525,7 +386,6 @@ class IvfIndex:
         _tomb.finish_compact(
             self, new_count=sum(counts.values()), extra={"lists": lists}
         )
-        return self
 
     def rebuild(self, df: DataFrame) -> "IvfIndex":
         m = self.manifest
@@ -565,147 +425,30 @@ class IvfIndex:
 
 
 # mtime-keyed LRU of decoded list files for repeated single-query
-# searches on gate-small artifacts (the IVF face of bq._SIGS_CACHE)
-_VECS_CACHE: dict = {}
-_VECS_CACHE_MAX = 32
-
-
+# searches on gate-small artifacts (the IVF face of bq._load_sigs)
+@mtime_lru(32)
 def _load_vecs(file: str, id_col: str, vec_col: str, dims: int):
     """(ids, float64 (n, dims) matrix) for one inverted-list data file,
     or None when the stored shape cannot take the driver fold — NULL
     elements, ragged rows, or a non-float element type keep Spark's
     NULL/size-mismatch semantics on the distributed scan."""
-    key = (file, os.path.getmtime(file))
-    hit = _VECS_CACHE.get(key)
-    if hit is None:
-        import pyarrow.parquet as papq
+    import pyarrow.parquet as papq
 
-        for k in [k for k in _VECS_CACHE if k[0] == file]:
-            del _VECS_CACHE[k]
-        t = papq.read_table(file, columns=[id_col, vec_col])
-        ids = np.asarray(t[id_col].to_pylist(), dtype=np.int64)
-        col = t[vec_col].combine_chunks()
-        if col.null_count:
-            return None
-        flat = col.flatten()
-        if flat.null_count or len(flat) != len(ids) * dims:
-            return None
-        vals = flat.to_numpy(zero_copy_only=False)
-        if vals.dtype.kind != "f":
-            return None
-        off = np.asarray(col.offsets)
-        if len(ids) and not bool((np.diff(off) == dims).all()):
-            return None  # uniform total length but ragged rows
-        xv = vals.astype(np.float64, copy=False).reshape(len(ids), dims)
-        hit = (ids, xv)
-        while len(_VECS_CACHE) >= _VECS_CACHE_MAX:
-            _VECS_CACHE.pop(next(iter(_VECS_CACHE)))
-        _VECS_CACHE[key] = hit
-    else:
-        del _VECS_CACHE[key]
-        _VECS_CACHE[key] = hit
-    return hit
-
-
-def _replay_distance(metric: str, xv: np.ndarray, q: np.ndarray) -> np.ndarray:
-    """The JVM distance Column tree (functions/distance.py) replayed in
-    its exact per-element op and association order — the
-    `_write_sigs_local` discipline applied to the native kernels. Every
-    metric is ``cast to double → zip_with/transform terms → 0.0-seeded
-    sequential left fold → metric compose``; the replay is a 0.0-seeded
-    sequential per-dimension vectorized add of the SAME per-element
-    IEEE-double terms (never a BLAS dot / pairwise sum, whose summation
-    order differs), so scores are bit-identical — pinned per metric by
-    tests/test_quantized_driver_search."""
-    n = xv.shape[0]
-    dims = xv.shape[1]
-    if metric == "l2sq":  # array_distance = sqrt(Σseq (x-y)²)
-        acc = np.zeros(n)
-        for b in range(dims):
-            d = xv[:, b] - q[b]
-            acc = acc + d * d
-        return np.sqrt(acc)
-    if metric == "ip":  # array_negative_inner_product = -(Σseq x·y)
-        acc = np.zeros(n)
-        for b in range(dims):
-            acc = acc + xv[:, b] * q[b]
-        return -acc
-    # cosine: 1.0 - sim, sim = dot/(na·nb) with the -1.0 zero/NaN guard
-    dot = np.zeros(n)
-    na = np.zeros(n)
-    for b in range(dims):
-        dot = dot + xv[:, b] * q[b]
-        na = na + xv[:, b] * xv[:, b]
-    na = np.sqrt(na)
-    nb = 0.0
-    for b in range(dims):
-        nb = nb + q[b] * q[b]
-    nb = np.sqrt(nb)
-    denom = na * nb
-    with np.errstate(divide="ignore", invalid="ignore"):
-        sim = np.where(np.isnan(denom) | (denom == 0.0), -1.0, dot / denom)
-    return 1.0 - sim
-
-
-def _driver_ivf_shortlist(index, q, probes, take: int):
-    """(id, dist) top-``take`` over the PROBED lists computed ON the
-    driver for gate-small artifacts (r16 — the IVF face of
-    pq._driver_adc_shortlist; guide §1: the probed scan costs ~300 ms
-    of scheduling against ~1 ms of actual arithmetic at gate size), or
-    None when the artifact is too big for driver state / unreadable /
-    the shortlist too wide — those keep the distributed scan (the
-    100 TB path). Scores replay the JVM expression tree bit-for-bit
-    (``_replay_distance``); ties break on (dist, id) exactly like the
-    cluster ORDER BY."""
-    from duckdb_vss_spark.index import tombstones as _tomb
-    from duckdb_vss_spark.index.pq import (
-        _MAX_DRIVER_SHORTLIST,
-        _driver_probe_budget,
-        _list_parquet_files,
-    )
-
-    man = index.manifest
-    dims = int(man["dimensions"])
-    budget = _driver_probe_budget(index.spark)
-    # float64 row matrix dominates driver memory; gate on the WHOLE
-    # artifact (not the probed fraction) so the fired/not decision is
-    # probe-independent like every other family's
-    est = int(man.get("count", 0)) * dims * 8 * 2
-    if budget <= 0 or est <= 0 or est > budget:
+    t = papq.read_table(file, columns=[id_col, vec_col])
+    ids = np.asarray(t[id_col].to_pylist(), dtype=np.int64)
+    col = t[vec_col].combine_chunks()
+    if col.null_count:
         return None
-    if int(take) > _MAX_DRIVER_SHORTLIST:
+    flat = col.flatten()
+    if flat.null_count or len(flat) != len(ids) * dims:
         return None
-    dead = _tomb.dead_mask_payload_local(index)
-    if dead is _tomb.UNREADABLE:
+    vals = flat.to_numpy(zero_copy_only=False)
+    if vals.dtype.kind != "f":
         return None
-    id_col = man["id_col"]
-    vec_col = man["vec_col"]
-    qv = np.asarray([float(x) for x in q], dtype=np.float64)
-    try:
-        parts = []
-        for p in probes:
-            d = os.path.join(index.path, "lists", f"list_id={int(p)}")
-            if not os.path.isdir(d):
-                continue  # empty list: partitionBy wrote no dir
-            for file in _list_parquet_files(d):
-                loaded = _load_vecs(file, id_col, vec_col, dims)
-                if loaded is None:
-                    return None  # shapes only the JVM fold can score
-                ids, xv = loaded
-                dd = _tomb.applicable_dead(dead, file)
-                if dd is not None:
-                    keep = ~np.isin(ids, dd)
-                    ids, xv = ids[keep], xv[keep]
-                if len(ids):
-                    parts.append((ids, _replay_distance(index.metric, xv, qv)))
-    except Exception:  # noqa: BLE001 — remote FS/corrupt: distributed path
-        return None
-    if not parts:
-        return []
-    ids = np.concatenate([p[0] for p in parts])
-    dist = np.concatenate([p[1] for p in parts])
-    order = np.lexsort((ids, dist))[: int(take)]
-    return [(int(ids[i]), float(dist[i])) for i in order]
+    off = np.asarray(col.offsets)
+    if len(ids) and not bool((np.diff(off) == dims).all()):
+        return None  # uniform total length but ragged rows
+    return ids, vals.astype(np.float64, copy=False).reshape(len(ids), dims)
 
 
 def _write_lists_local(
@@ -779,46 +522,19 @@ def create_ivf_index(
     if metric not in ("l2sq", "cosine", "ip"):
         raise ValueError("IVF index 'metric' must be one of: 'cosine', 'ip', 'l2sq'")
     from duckdb_vss_spark.session import check_persistence_enabled
-    from duckdb_vss_spark.sources.layout import collect_gate_bytes
 
     check_persistence_enabled(spark)
-    src = df.select(
-        F.col(id_col).cast("long").alias(id_col), F.col(vec_col).alias(vec_col)
-    ).where(F.col(vec_col).isNotNull())
-
-    # gate on max(compressed, footer-uncompressed) size: RLE-heavy
-    # columns can decompress far past their on-disk bytes (ADVICE r10)
-    est = collect_gate_bytes(src, bound=driver_build_max_bytes)
-    local_rows = None
-    if 0 <= est <= driver_build_max_bytes:
-        local_rows = src.collect()  # bounded by the gate
-        total = len(local_rows)
-        if total == 0:
-            raise ValueError("cannot build an IVF index over an empty vector column")
-        dims = len(local_rows[0][1])
-    else:
-        total, dims = _count_and_dims(src, vec_col, "an IVF index")
+    src = _id_vec(df, id_col, vec_col)
+    local_rows, total, dims = _local_or_count(
+        src, vec_col, "an IVF index", driver_build_max_bytes
+    )
     if nlist is None:
         nlist = max(2, min(4096, int(math.isqrt(total))))
     nlist = int(min(nlist, total))
-
     # driver-sized seeded sample for centroid training
-    want = nlist * sample_per_list
-    frac = min(1.0, want / total)
-    if local_rows is not None and frac >= 1.0:
-        # the "sample" is the whole (already collected) table — the
-        # exact rows the frac==1.0 branch below would re-collect
-        sample_rows = [(r[1],) for r in local_rows]
-    else:
-        # a frac<1.0 Spark sample is partitioning-dependent; keep the
-        # distributed path so centroids never depend on which branch ran
-        local_rows = None
-        sample_rows = (
-            src.select(vec_col).sample(fraction=frac, seed=seed).limit(want).collect()
-            if frac < 1.0
-            else src.select(vec_col).collect()
-        )
-    sample = np.stack([np.asarray(r[0], dtype=np.float64) for r in sample_rows])
+    sample, local_rows = _training_sample(
+        src, vec_col, local_rows, total, nlist * sample_per_list, seed
+    )
     sample = _norm_rows(sample, metric)
     centroids = _kmeans(sample, nlist, kmeans_iters, seed)
     if default_nprobe is None:
@@ -828,11 +544,7 @@ def create_ivf_index(
             "on the training sample)", default_nprobe, nlist,
         )
 
-    if os.path.exists(path):
-        if not overwrite:
-            raise ValueError(f"index path {path!r} already exists (use overwrite=True)")
-        shutil.rmtree(path)
-    os.makedirs(path)
+    _fresh_dir(path, overwrite)
     lists_dir = os.path.join(path, "lists")
 
     if local_rows is not None:
@@ -865,7 +577,7 @@ def create_ivf_index(
         "default_nprobe": default_nprobe,
         "count": int(sum(counts.values())),
         "centroids": [[float(x) for x in row] for row in centroids],
-        "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        "created_at": _now(),
         "lists": [
             {"list_id": int(lid), "count": int(counts.get(lid, 0))}
             for lid in range(nlist)
@@ -875,11 +587,5 @@ def create_ivf_index(
     return IvfIndex(spark, path, manifest)
 
 
-def load_ivf_index(spark: SparkSession, path: str) -> IvfIndex:
-    with open(os.path.join(path, "manifest.json")) as f:
-        return IvfIndex(spark, path, json.load(f))
-
-
-def drop_ivf_index(path: str) -> None:
-    if os.path.exists(os.path.join(path, "manifest.json")):
-        shutil.rmtree(path)
+load_ivf_index = IvfIndex.load
+drop_ivf_index = IvfIndex.drop

@@ -34,12 +34,9 @@ augmentation changes the geometry; out of scope as in ivf.py's note).
 
 from __future__ import annotations
 
-import json
 import logging
 import math
 import os
-import shutil
-import time
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -51,18 +48,31 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from duckdb_vss_spark.index.manifest import write_manifest
 from duckdb_vss_spark.functions.distance import distance_for_metric
-from duckdb_vss_spark.index.ivf import _calibrate_nprobe, _count_and_dims, _kmeans, _norm_rows
+from duckdb_vss_spark.index.base import (
+    IvfLists,
+    _fresh_dir,
+    _id_vec,
+    _list_parquet_files,
+    _local_or_count,
+    _norm_rows,
+    _now,
+    _shortlist_frame,
+    _training_sample,
+    centroid_dists,
+    coarse_probe,
+)
+from duckdb_vss_spark.index.ivf import _calibrate_nprobe, _kmeans
+from duckdb_vss_spark.index.manifest import write_manifest
 from duckdb_vss_spark.index.pq import (
+    _adc_scores,
     _buffered_query_stream,
     _encode_batch,
     _fetch_candidates,
-    _list_parquet_files,
     _load_codes,
+    _merge_source_fields,
     _merge_topk,
     _resolve_rerank,
-    _shortlist_frame,
     _source_manifest_fields,
     train_pq_codebooks,
 )
@@ -79,7 +89,6 @@ def _assign_encode_udf(centroids: np.ndarray, books: np.ndarray, metric: str):
     from pyspark.sql.functions import pandas_udf
 
     c = centroids.astype(np.float64)
-    c_sq = (c**2).sum(axis=1)
     out_t = StructType(
         [
             StructField("list_id", IntegerType()),
@@ -90,8 +99,7 @@ def _assign_encode_udf(centroids: np.ndarray, books: np.ndarray, metric: str):
     def enc(v):
         mat = np.stack([np.asarray(x, dtype=np.float64) for x in v])
         mat = _norm_rows(mat, metric)
-        dist = (mat**2).sum(axis=1, keepdims=True) + c_sq - 2.0 * mat @ c.T
-        assign = dist.argmin(axis=1)
+        assign = centroid_dists(mat, c).argmin(axis=1)
         resid = mat - c[assign]
         codes = _encode_batch(resid, books)
         return pd.DataFrame(
@@ -139,12 +147,7 @@ def _ivfadc_query_stream(
 
     def score(qids: np.ndarray, qmat: np.ndarray):
         nq = len(qids)
-        cd = (
-            (qmat**2).sum(axis=1, keepdims=True)
-            + (cents**2).sum(axis=1)
-            - 2.0 * qmat @ cents.T
-        )
-        probes = np.argsort(cd, axis=1, kind="stable")[:, :nprobe]  # (nq, nprobe)
+        probes = coarse_probe(cents, qmat, nprobe)  # (nq, nprobe)
         by_list: dict[int, list[int]] = {}
         for qi in range(nq):
             for lid in probes[qi]:
@@ -200,109 +203,19 @@ def _codes_files_by_list(codes_dir: str) -> dict[int, list[str]]:
     return out
 
 
-def _driver_ivfadc_shortlist(index, luts, pos, probes, take: int):
-    """(id, dist) residual-ADC top-``take`` over the probed lists,
-    computed ON the driver (r16 — the IVFADC face of
-    pq._driver_adc_shortlist; guide §1), or None when the artifact is
-    too big / unreadable / the shortlist too wide — those keep the
-    distributed scan bit-for-bit. Genuine list pruning is preserved:
-    only the probed lists' hive dirs are read. Bit-identity is by
-    construction: the same ``_load_codes`` LRU, the same ``mask_dead``
-    epoch resolution, and the same gather+``sum(axis=1)`` expression
-    the pandas UDF runs (pidx is constant per hive file — every row in
-    a ``list_id=N`` file has list_id N); pinned by
-    tests/test_quantized_driver_search."""
-    from duckdb_vss_spark.index import tombstones as _tomb
-    from duckdb_vss_spark.index.pq import (
-        _MAX_DRIVER_SHORTLIST,
-        _driver_probe_budget,
-    )
-
-    man = index.manifest
-    m = int(man["m"])
-    budget = _driver_probe_budget(index.spark)
-    est = int(man.get("count", 0)) * (m + 8) * 2
-    if budget <= 0 or est <= 0 or est > budget:
-        return None
-    if int(take) > _MAX_DRIVER_SHORTLIST:
-        return None
-    dead = _tomb.dead_mask_payload_local(index)
-    if dead is _tomb.UNREADABLE:
-        return None
-    id_col = man["id_col"]
-    try:
-        files_by_list = _codes_files_by_list(os.path.join(index.path, "codes"))
-        parts = []
-        for lid in probes:
-            for file in files_by_list.get(int(lid), ()):
-                ids, codes = _load_codes(file, id_col, m)
-                if dead is not None:
-                    ids, codes = _tomb.mask_dead(ids, codes, dead, file)
-                # the same scalars the UDF's luts[pidx] gather extracts,
-                # without materializing the (n, m, ksub) intermediate —
-                # the gathered (n, m) array is element-identical, so the
-                # per-row sum(axis=1) bits are too; slabbed to bound
-                # peak memory (per-row bits are slab-independent)
-                for lo in range(0, len(ids), 65_536):
-                    arr = codes[lo : lo + 65_536]
-                    if not len(arr):
-                        continue
-                    d = luts[pos[int(lid)], np.arange(m), arr].sum(axis=1)
-                    parts.append((ids[lo : lo + 65_536], d))
-    except Exception:  # noqa: BLE001 — remote FS/corrupt: distributed path
-        return None
-    if not parts:
-        return []
-    ids = np.concatenate([p[0] for p in parts])
-    d = np.concatenate([p[1] for p in parts])
-    order = np.lexsort((ids, d))[: int(take)]
-    return [(int(ids[i]), float(d[i])) for i in order]
-
-
-class IvfPqIndex:
+class IvfPqIndex(IvfLists):
     """Handle over a built IVFADC artifact."""
 
-    # the upsert hook may version-kill (id, epoch<bound) instead of
-    # delete+compact+re-append (r14, VERDICT r13 #4)
-    supports_versioned_delete = True
+    data_dir = "codes"
+    label = "IVFPQ"
 
     def __init__(self, spark: SparkSession, path: str, manifest: dict):
-        self.spark = spark
-        self.path = path
-        self.manifest = manifest
-        self._centroids = np.asarray(manifest["centroids"], dtype=np.float64)
+        super().__init__(spark, path, manifest)
         self._books = np.asarray(manifest["codebooks"], dtype=np.float64)
-
-    @property
-    def metric(self) -> str:
-        return self.manifest["metric"]
-
-    @property
-    def nlist(self) -> int:
-        return self.manifest["nlist"]
 
     @property
     def m(self) -> int:
         return self.manifest["m"]
-
-    @property
-    def dims(self) -> int:
-        return self.manifest["dimensions"]
-
-    @property
-    def count(self) -> int:
-        """LIVE rows (indexed minus tombstoned, r13 delete_batch);
-        ``manifest["count"]`` stays the raw indexed total."""
-        from duckdb_vss_spark.index import tombstones as _tomb
-
-        return _tomb.live_count(self.manifest)
-
-    def _codes_df(self) -> DataFrame:
-        from duckdb_vss_spark.index import tombstones as _tomb
-
-        return _tomb.filter_dead(
-            self, self.spark.read.parquet(os.path.join(self.path, "codes"))
-        )
 
     def knn_search(
         self,
@@ -326,14 +239,9 @@ class IvfPqIndex:
         from pyspark.sql.functions import pandas_udf
         from pyspark.sql.types import DoubleType
 
-        q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
-        if q.shape[0] != self.dims:
-            raise ValueError(f"IVFPQ index keys must be of type FLOAT[{self.dims}]")
+        q, probes = self._probes(query_vec, nprobe)
         rerank, source = _resolve_rerank(self, k, rerank, source, "IvfPqIndex", "0.73")
         qn = _norm_rows(q[None, :], self.metric)[0]
-        nprobe = int(nprobe or self.manifest["default_nprobe"])
-        cd = ((self._centroids - qn) ** 2).sum(axis=1)
-        probes = [int(i) for i in np.argsort(cd, kind="stable")[:nprobe]]
 
         # per-probed-list ADC tables of the query residual; the constant
         # ||q - c||-independent decomposition: d(q, c + r̂) =
@@ -355,7 +263,10 @@ class IvfPqIndex:
         # (bit-identity pinned by tests/test_quantized_driver_search) —
         # the candidate scan stage disappears while list pruning is
         # preserved; oversized artifacts keep the distributed scan
-        pairs = _driver_ivfadc_shortlist(self, luts, pos, probes, take)
+        pairs = self._driver_shortlist(
+            take, m + 8, lambda f: _load_codes(f, id_col, m),
+            lambda lid, codes: _adc_scores(luts[pos[lid]], codes), probes,
+        )
         if pairs is not None:
             cand = _shortlist_frame(self.spark, pairs, id_col, dist_col)
         else:
@@ -374,7 +285,7 @@ class IvfPqIndex:
 
             adc_udf = pandas_udf(adc, DoubleType())
             cand = (
-                self._codes_df()
+                self._data_df()
                 .where(F.col("list_id").isin(probes))
                 .withColumn(dist_col, adc_udf(F.col("list_id"), F.col("pq_code")))
                 .orderBy(F.col(dist_col).asc_nulls_last(), F.col(id_col))
@@ -493,88 +404,27 @@ class IvfPqIndex:
         Empty batch: no-op (ADVICE r12, family-consistent). Crash
         window: commits via staged_append — after a crash inside the
         rename→manifest window, rebuild."""
-        from duckdb_vss_spark.index.ivf import _batch_count_and_dims
         from duckdb_vss_spark.index.manifest import staged_append
-        from duckdb_vss_spark.index.pq import _merge_source_fields
 
-        man = self.manifest
-        id_col, vec_col = man["id_col"], man["vec_col"]
-        src = df.select(
-            F.col(id_col).cast("long").alias(id_col), F.col(vec_col).alias(vec_col)
-        ).where(F.col(vec_col).isNotNull())
-        n, dims = _batch_count_and_dims(src, vec_col)
+        src, n = self._batch(df)
         if n == 0:
             return self
-        if dims != man["dimensions"]:
-            raise ValueError(
-                f"IVFPQ index keys must be of type FLOAT[{man['dimensions']}] "
-                f"(batch has FLOAT[{dims}])"
-            )
-        codes_dir = os.path.join(self.path, "codes")
         enc = _assign_encode_udf(self._centroids, self._books, self.metric)(
-            F.col(vec_col)
+            F.col(self.manifest["vec_col"])
         )
         moved = staged_append(
             src.withColumn("_e", enc).select(
-                id_col,
+                self.manifest["id_col"],
                 F.col("_e.list_id").alias("list_id"),
                 F.col("_e.pq_code").alias("pq_code"),
             ),
-            codes_dir,
+            os.path.join(self.path, "codes"),
             partition_by="list_id",
         )
-        from duckdb_vss_spark.index.manifest import record_epoch
-
-        merged = dict(man)
-        record_epoch(merged, moved)
-        merged["count"] = int(man["count"] + n)
-        merged.pop("source_fingerprint", None)
-        merged.update(_merge_source_fields(man, df, "IvfPqIndex"))
-        merged["updated_at"] = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        if manifest_extra:
-            # e.g. streaming replay stamps — ride the SAME atomic commit
-            merged.update(manifest_extra)
-        from duckdb_vss_spark.index import tombstones as _tomb
-
-        old_tomb = _tomb.revive(self, src.select(id_col), merged)
-        write_manifest(self.path, merged)
-        self.manifest = merged
-        if old_tomb:
-            shutil.rmtree(os.path.join(self.path, old_tomb), ignore_errors=True)
-        return self
-
-    def delete_batch(
-        self, ids, manifest_extra: dict | None = None,
-        epoch_lt: int | None = None,
-    ) -> "IvfPqIndex":
-        """Offline mark-delete (r13 — the IVFADC face of the
-        delete_batch family; see index/tombstones.py for the shared
-        contract, reference src/hnsw/hnsw_index.cpp:466-482):
-        tombstone the ids, O(|ids|), no code rewrite. The probed ADC
-        scan, the executor-side query stream and the SQL planner route
-        filter the tombstones; ``count`` reports live rows;
-        ``add_batch`` of a tombstoned id revives it; ``compact()``
-        reclaims physically."""
-        from duckdb_vss_spark.index import tombstones as _tomb
-
-        return _tomb.mark_delete(
-            self, ids, self._codes_df(), manifest_extra, epoch_lt=epoch_lt
+        return self._commit_append(
+            src, moved, n, manifest_extra,
+            source_fields=_merge_source_fields(self.manifest, df, "IvfPqIndex"),
         )
-
-    def compact(self) -> "IvfPqIndex":
-        """Physically drop tombstoned codes and re-pack each list's
-        accumulated add_batch part files into one file (the
-        reference's compaction-after-DML contract,
-        hnsw_index_pragmas.cpp:154-190). Self-contained — codes hold
-        everything the ADC paths serve from; the auto-rerank source
-        fields are untouched."""
-        from duckdb_vss_spark.index import tombstones as _tomb
-
-        out = _tomb.compact_data(self, "codes", partition_by="list_id")
-        if out is None:
-            return self  # nothing to reclaim or coalesce (review r13)
-        _tomb.finish_compact(self, new_count=out.count())
-        return self
 
 
 def create_ivfpq_index(
@@ -605,45 +455,20 @@ def create_ivfpq_index(
     from duckdb_vss_spark.session import check_persistence_enabled
 
     check_persistence_enabled(spark)
-    src = df.select(
-        F.col(id_col).cast("long").alias(id_col), F.col(vec_col).alias(vec_col)
-    ).where(F.col(vec_col).isNotNull())
+    src = _id_vec(df, id_col, vec_col)
     # driver-local fast path (r10, see create_hnsw_index's twin note):
     # small file-backed source + whole-table training sample → ONE
     # bounded collect serves training, assign+encode (same numpy
     # kernels as the Arrow UDF) and the partitioned codes write
-    from duckdb_vss_spark.sources.layout import collect_gate_bytes
-
-    # gate on max(compressed, footer-uncompressed) size: RLE-heavy
-    # columns can decompress far past their on-disk bytes (ADVICE r10)
-    est = collect_gate_bytes(src, bound=driver_build_max_bytes)
-    local_rows = None
-    if 0 <= est <= driver_build_max_bytes:
-        local_rows = src.collect()
-        total = len(local_rows)
-        if total == 0:
-            raise ValueError("cannot build an IVFPQ index over an empty vector column")
-        dims = len(local_rows[0][1])
-    else:
-        total, dims = _count_and_dims(src, vec_col, "an IVFPQ index")
+    local_rows, total, dims = _local_or_count(
+        src, vec_col, "an IVFPQ index", driver_build_max_bytes
+    )
     if nlist is None:
         nlist = max(2, min(4096, int(math.isqrt(total))))
     nlist = int(min(nlist, total))
-
-    want = max(nlist * sample_per_list, ksub * 4)
-    frac = min(1.0, want / total)
-    if local_rows is not None and frac >= 1.0:
-        sample_mat = np.stack(
-            [np.asarray(r[1], dtype=np.float64) for r in local_rows]
-        )
-    else:
-        local_rows = None  # partial sample is partitioning-dependent
-        rows = (
-            src.select(vec_col).sample(fraction=frac, seed=seed).limit(want).collect()
-            if frac < 1.0
-            else src.select(vec_col).collect()
-        )
-        sample_mat = np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
+    sample_mat, local_rows = _training_sample(
+        src, vec_col, local_rows, total, max(nlist * sample_per_list, ksub * 4), seed
+    )
     sample = _norm_rows(sample_mat, metric)
     centroids = _kmeans(sample, nlist, kmeans_iters, seed)
     if default_nprobe is None:
@@ -658,19 +483,9 @@ def create_ivfpq_index(
             "on the training sample)", default_nprobe, nlist,
         )
     # residual codebooks: quantize what the coarse quantizer leaves over
-    d = (
-        (sample**2).sum(axis=1, keepdims=True)
-        + (centroids**2).sum(axis=1)
-        - 2.0 * sample @ centroids.T
-    )
-    resid = sample - centroids[d.argmin(axis=1)]
-    books = train_pq_codebooks(resid, m, ksub, kmeans_iters, seed)
-
-    if os.path.exists(path):
-        if not overwrite:
-            raise ValueError(f"index path {path!r} already exists (use overwrite=True)")
-        shutil.rmtree(path)
-    os.makedirs(path)
+    assign = centroid_dists(sample, centroids).argmin(axis=1).astype(np.int32)
+    books = train_pq_codebooks(sample - centroids[assign], m, ksub, kmeans_iters, seed)
+    _fresh_dir(path, overwrite)
 
     codes_dir = os.path.join(path, "codes")
     if local_rows is not None:
@@ -679,12 +494,6 @@ def create_ivfpq_index(
 
         # sample IS the normed corpus in collected order; replicate the
         # UDF's assign -> residual -> encode exactly
-        d = (
-            (sample**2).sum(axis=1, keepdims=True)
-            + (centroids**2).sum(axis=1)
-            - 2.0 * sample @ centroids.T
-        )
-        assign = d.argmin(axis=1).astype(np.int32)
         codes = _encode_batch(sample - centroids[assign], books)
         ids = np.fromiter((r[0] for r in local_rows), dtype=np.int64, count=total)
         for lid in np.unique(assign):
@@ -727,17 +536,11 @@ def create_ivfpq_index(
         # gated on the USER's plan shape, not the internal projection
         # (ADVICE r11; see pq._source_manifest_fields)
         **_source_manifest_fields(df),
-        "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        "created_at": _now(),
     }
     write_manifest(path, manifest)
     return IvfPqIndex(spark, path, manifest)
 
 
-def load_ivfpq_index(spark: SparkSession, path: str) -> IvfPqIndex:
-    with open(os.path.join(path, "manifest.json")) as f:
-        return IvfPqIndex(spark, path, json.load(f))
-
-
-def drop_ivfpq_index(path: str) -> None:
-    if os.path.exists(os.path.join(path, "manifest.json")):
-        shutil.rmtree(path)
+load_ivfpq_index = IvfPqIndex.load
+drop_ivfpq_index = IvfPqIndex.drop

@@ -27,66 +27,39 @@ map-only, ``partitionBy(list_id)`` write (the only shuffle).
 
 from __future__ import annotations
 
-import json
 import logging
 import math
 import os
-import shutil
-import time
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from duckdb_vss_spark.index.base import (
+    IvfLists,
+    _count_and_dims,
+    _fresh_dir,
+    _id_vec,
+    _shortlist_frame,
+    _training_sample,
+    mtime_lru,
+    probe_lists_udf,
+)
 
 __all__ = ["IvfSqIndex", "create_ivfsq_index", "load_ivfsq_index", "drop_ivfsq_index"]
 
 _LOG = logging.getLogger(__name__)
 
 
-class IvfSqIndex:
+class IvfSqIndex(IvfLists):
     """Handle over a built IVF×SQ artifact."""
 
-    # the upsert hook may version-kill (id, epoch<bound) instead of
-    # delete+compact+re-append (r14, VERDICT r13 #4)
-    supports_versioned_delete = True
+    label = "IVF-SQ"
 
     def __init__(self, spark: SparkSession, path: str, manifest: dict):
-        self.spark = spark
-        self.path = path
-        self.manifest = manifest
-        self._centroids = np.asarray(manifest["centroids"], dtype=np.float64)
+        super().__init__(spark, path, manifest)
         self._mins = np.asarray(manifest["sq_mins"], dtype=np.float64)
         self._maxs = np.asarray(manifest["sq_maxs"], dtype=np.float64)
-
-    @property
-    def nlist(self) -> int:
-        return self.manifest["nlist"]
-
-    @property
-    def dims(self) -> int:
-        return self.manifest["dimensions"]
-
-    @property
-    def count(self) -> int:
-        """LIVE rows (indexed minus tombstoned, r13 delete_batch);
-        ``manifest["count"]`` stays the raw indexed total."""
-        from duckdb_vss_spark.index import tombstones as _tomb
-
-        return _tomb.live_count(self.manifest)
-
-    def _lists_df(self) -> DataFrame:
-        from duckdb_vss_spark.index import tombstones as _tomb
-
-        return _tomb.filter_dead(
-            self, self.spark.read.parquet(os.path.join(self.path, "lists"))
-        )
-
-    def _probe_ids(self, query_vec, nprobe: int) -> list[int]:
-        q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
-        if q.shape[0] != self.dims:
-            raise ValueError(f"IVF index keys must be of type FLOAT[{self.dims}]")
-        d = ((self._centroids - q) ** 2).sum(axis=1)
-        return [int(i) for i in np.argsort(d, kind="stable")[: int(nprobe)]]
 
     def knn_search(
         self,
@@ -107,8 +80,7 @@ class IvfSqIndex:
         from duckdb_vss_spark.functions.distance import distance_for_metric
         from duckdb_vss_spark.index.sq import sq_reconstruct
 
-        nprobe = int(nprobe or self.manifest["default_nprobe"])
-        probes = self._probe_ids(query_vec, nprobe)
+        qv64, probes = self._probes(query_vec, nprobe)
         q = [float(x) for x in query_vec]
         id_col = self.manifest["id_col"]
         qv = F.from_json(
@@ -122,15 +94,13 @@ class IvfSqIndex:
         # reconstruction+distance tree) — the candidate stage becomes
         # an order-preserving LocalTableScan; oversized artifacts keep
         # the distributed scan (the 100 TB path)
-        pairs = _driver_sq_shortlist(self, q, probes, nshort)
+        pairs = self._driver_sq_shortlist(qv64, probes, nshort)
         if pairs is not None:
-            from duckdb_vss_spark.index.pq import _shortlist_frame
-
             shortlist = _shortlist_frame(self.spark, pairs, id_col, dist_col)
         else:
             recon = sq_reconstruct(F.col("codes"), self._mins, self._maxs)
             shortlist = (
-                self._lists_df()
+                self._data_df()
                 .where(F.col("list_id").isin(probes))
                 .withColumn(dist_col, dist_fn(recon, qv))
                 .orderBy(F.col(dist_col).asc_nulls_last(), F.col(id_col))
@@ -191,29 +161,15 @@ class IvfSqIndex:
         merges. Optional exact re-rank late-materializes the top
         ``rerank`` candidates per query against ``source``."""
         from duckdb_vss_spark.functions.distance import distance_for_metric
-        from duckdb_vss_spark.index.ivf import _fits_broadcast, _norm_rows
+        from duckdb_vss_spark.index.ivf import _fits_broadcast
         from duckdb_vss_spark.index.sq import sq_reconstruct
 
-        import pandas as pd
         from pyspark.sql import Window
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import ArrayType, IntegerType
 
         nprobe = int(nprobe or self.manifest["default_nprobe"])
         id_col = self.manifest["id_col"]
         metric = self.manifest["metric"]
-        c = self._centroids
-        c_sq = (c**2).sum(axis=1)
-        npr = nprobe
-
-        def _probe(v):
-            mat = np.stack([np.asarray(x, dtype=np.float64) for x in v])
-            mat = _norm_rows(mat, metric)
-            dist = (mat**2).sum(axis=1, keepdims=True) + c_sq - 2.0 * mat @ c.T
-            order = np.argsort(dist, axis=1, kind="stable")[:, :npr]
-            return pd.Series(list(order.astype(np.int32)))
-
-        probe_lists = pandas_udf(_probe, ArrayType(IntegerType()))
+        probe_lists = probe_lists_udf(self._centroids, metric, nprobe)
         probed = queries.where(F.col(query_vec_col).isNotNull()).withColumn(
             "list_id", F.explode(probe_lists(F.col(query_vec_col)))
         )
@@ -225,7 +181,7 @@ class IvfSqIndex:
         recon = sq_reconstruct(F.col("codes"), self._mins, self._maxs)
         dist_fn = distance_for_metric(metric)
         scored = (
-            self._lists_df()
+            self._data_df()
             .join(probed_side, on="list_id", how="inner")
             .withColumn(
                 dist_col,
@@ -284,223 +240,74 @@ class IvfSqIndex:
         no-op (ADVICE r12, family-consistent). Crash window: commits
         via staged_append — after a crash inside the rename→manifest
         window, rebuild."""
-        from duckdb_vss_spark.index.ivf import _assign_udf, _batch_count_and_dims
-        from duckdb_vss_spark.index.manifest import staged_append, write_manifest
+        from duckdb_vss_spark.index.ivf import _assign_udf
+        from duckdb_vss_spark.index.manifest import staged_append
         from duckdb_vss_spark.index.sq import sq_encode
 
-        man = self.manifest
-        id_col, vec_col = man["id_col"], man["vec_col"]
-        src = df.select(
-            F.col(id_col).cast("long").alias(id_col), F.col(vec_col).alias(vec_col)
-        ).where(F.col(vec_col).isNotNull())
-        n, dims = _batch_count_and_dims(src, vec_col)
+        src, n = self._batch(df)
         if n == 0:
             return self
-        if dims != man["dimensions"]:
-            raise ValueError(
-                f"IVF-SQ index keys must be of type FLOAT[{man['dimensions']}] "
-                f"(batch has FLOAT[{dims}])"
-            )
+        man = self.manifest
         assign = _assign_udf(self._centroids, man["metric"])
-        encoded = sq_encode(src, vec_col, self._mins, self._maxs).withColumn(
-            "list_id", assign(F.col(vec_col))
+        encoded = sq_encode(src, man["vec_col"], self._mins, self._maxs).withColumn(
+            "list_id", assign(F.col(man["vec_col"]))
         )
         moved = staged_append(
-            encoded.select(id_col, "codes", "list_id"),
+            encoded.select(man["id_col"], "codes", "list_id"),
             os.path.join(self.path, "lists"),
             partition_by="list_id",
         )
-        from duckdb_vss_spark.index.manifest import record_epoch
+        return self._commit_append(src, moved, n, manifest_extra)
 
-        merged = dict(man)
-        record_epoch(merged, moved)
-        merged["count"] = int(man["count"] + n)
-        merged["updated_at"] = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        if manifest_extra:
-            # e.g. streaming replay stamps — ride the SAME atomic commit
-            merged.update(manifest_extra)
-        from duckdb_vss_spark.index import tombstones as _tomb
+    def _driver_sq_shortlist(self, qv: np.ndarray, probes, take: int):
+        """(id, dist) SQ-ADC top-``take`` over the PROBED lists, on the
+        driver (the walk in ``QuantizedIndex._driver_shortlist``), or
+        None for the distributed scan. The codes reconstruct into an f64
+        matrix as ``mn[b] + (code/255.0)·(mx[b]−mn[b])`` — the generated
+        Column tree's per-element ops in its order — and the exact
+        kernel folds ``array_distance`` over it, so scores are
+        bit-identical. l2sq only — the only metric create_ivfsq_index
+        accepts (v1); any other keeps the distributed scan."""
+        from duckdb_vss_spark.functions import kernels
 
-        old_tomb = _tomb.revive(self, src.select(id_col), merged)
-        write_manifest(self.path, merged)
-        self.manifest = merged
-        if old_tomb:
-            shutil.rmtree(os.path.join(self.path, old_tomb), ignore_errors=True)
-        return self
+        if self.metric != "l2sq":
+            return None
+        id_col, dims = self.manifest["id_col"], self.dims
+        mins, span = self._mins, self._maxs - self._mins
 
-    def delete_batch(
-        self, ids, manifest_extra: dict | None = None,
-        epoch_lt: int | None = None,
-    ) -> "IvfSqIndex":
-        """Offline mark-delete (r13 — the IVF×SQ face of the
-        delete_batch family; see index/tombstones.py for the shared
-        contract, reference src/hnsw/hnsw_index.cpp:466-482):
-        tombstone the ids, O(|ids|), no list rewrite. The probed
-        SQ-ADC scan filters the tombstones; ``count`` reports live
-        rows; ``add_batch`` of a tombstoned id revives it;
-        ``compact()`` reclaims physically."""
-        from duckdb_vss_spark.index import tombstones as _tomb
+        def score(_lid, codes):
+            return kernels.metric_distance(
+                "l2sq", mins + (codes.astype(np.float64) / 255.0) * span, qv
+            )
 
-        return _tomb.mark_delete(
-            self, ids, self._lists_df(), manifest_extra, epoch_lt=epoch_lt
+        return self._driver_shortlist(
+            take, dims * 8, lambda f: _load_sq_codes(f, id_col, dims), score, probes
         )
-
-    def compact(self) -> "IvfSqIndex":
-        """Physically drop tombstoned rows and re-pack each list's
-        accumulated add_batch part files into one file (the
-        reference's compaction-after-DML contract,
-        hnsw_index_pragmas.cpp:154-190). Self-contained — the SQ lists
-        hold everything the shortlist scan serves from."""
-        from duckdb_vss_spark.index import tombstones as _tomb
-
-        out = _tomb.compact_data(self, "lists", partition_by="list_id")
-        if out is None:
-            return self  # nothing to reclaim or coalesce (review r13)
-        _tomb.finish_compact(self, new_count=out.count())
-        return self
 
 
 # mtime-keyed LRU of decoded SQ code files for repeated single-query
-# searches on gate-small artifacts (the IVF×SQ face of bq._SIGS_CACHE)
-_SQ_CODES_CACHE: dict = {}
-_SQ_CODES_CACHE_MAX = 32
-
-
+# searches on gate-small artifacts (the IVF×SQ face of bq._load_sigs)
+@mtime_lru(32)
 def _load_sq_codes(file: str, id_col: str, dims: int):
     """(ids, uint8 (n, dims) code matrix) for one inverted-list data
     file, or None when the stored shape cannot take the driver fold —
     NULL elements or ragged rows keep Spark's NULL/size-mismatch
     semantics on the distributed scan."""
-    key = (file, os.path.getmtime(file))
-    hit = _SQ_CODES_CACHE.get(key)
-    if hit is None:
-        import pyarrow.parquet as papq
+    import pyarrow.parquet as papq
 
-        for k in [k for k in _SQ_CODES_CACHE if k[0] == file]:
-            del _SQ_CODES_CACHE[k]
-        t = papq.read_table(file, columns=[id_col, "codes"])
-        ids = np.asarray(t[id_col].to_pylist(), dtype=np.int64)
-        col = t["codes"].combine_chunks()
-        if col.null_count:
-            return None
-        flat = col.flatten()
-        if flat.null_count or len(flat) != len(ids) * dims:
-            return None
-        off = np.asarray(col.offsets)
-        if len(ids) and not bool((np.diff(off) == dims).all()):
-            return None  # uniform total length but ragged rows
-        codes = (
-            flat.to_numpy(zero_copy_only=False)
-            .astype(np.uint8)
-            .reshape(len(ids), dims)
-        )
-        hit = (ids, codes)
-        while len(_SQ_CODES_CACHE) >= _SQ_CODES_CACHE_MAX:
-            _SQ_CODES_CACHE.pop(next(iter(_SQ_CODES_CACHE)))
-        _SQ_CODES_CACHE[key] = hit
-    else:
-        del _SQ_CODES_CACHE[key]
-        _SQ_CODES_CACHE[key] = hit
-    return hit
-
-
-def _replay_sq_distance(
-    metric: str,
-    codes: np.ndarray,
-    mins: np.ndarray,
-    maxs: np.ndarray,
-    q: np.ndarray,
-) -> np.ndarray:
-    """``dist_fn(sq_reconstruct(codes), qv)`` replayed in the generated
-    Column tree's exact per-element op and association order (the
-    ivf._replay_distance discipline with the SQ codec inlined): each
-    dimension reconstructs as ``mn[b] + (code/255.0)·(mx[b]−mn[b])`` —
-    division first, then the scale multiply, then the offset add, all
-    IEEE double — and feeds the same 0.0-seeded sequential left fold.
-    l2sq only — the only metric create_ivfsq_index accepts (v1); any
-    other value returns None and the caller keeps the distributed scan
-    rather than carrying an unexercisable replay branch. Bit-identity
-    pinned by tests/test_quantized_driver_search."""
-    if metric != "l2sq":
+    t = papq.read_table(file, columns=[id_col, "codes"])
+    ids = np.asarray(t[id_col].to_pylist(), dtype=np.int64)
+    col = t["codes"].combine_chunks()
+    if col.null_count:
         return None
-    n = codes.shape[0]
-    dims = codes.shape[1]
-    # array_distance = sqrt(Σseq (recon − q)²)
-    acc = np.zeros(n)
-    for b in range(dims):
-        r = mins[b] + (codes[:, b].astype(np.float64) / 255.0) * (
-            maxs[b] - mins[b]
-        )
-        d = r - q[b]
-        acc = acc + d * d
-    return np.sqrt(acc)
-
-
-def _driver_sq_shortlist(index, q, probes, take: int):
-    """(id, dist) SQ-ADC top-``take`` over the PROBED lists computed ON
-    the driver for gate-small artifacts (r16 — the IVF×SQ face of
-    pq._driver_adc_shortlist), or None when the artifact is too big for
-    driver state / unreadable / the shortlist too wide — those keep the
-    distributed scan (the 100 TB path). Scores replay the generated
-    reconstruction+distance tree bit-for-bit (``_replay_sq_distance``);
-    ties break on (dist, id) exactly like the cluster ORDER BY."""
-    from duckdb_vss_spark.index import tombstones as _tomb
-    from duckdb_vss_spark.index.pq import (
-        _MAX_DRIVER_SHORTLIST,
-        _driver_probe_budget,
-        _list_parquet_files,
-    )
-
-    man = index.manifest
-    if man["metric"] != "l2sq":  # the replay covers v1's only metric
+    flat = col.flatten()
+    if flat.null_count or len(flat) != len(ids) * dims:
         return None
-    dims = int(man["dimensions"])
-    budget = _driver_probe_budget(index.spark)
-    # the per-dim f64 reconstruction temporaries dominate; gate on the
-    # WHOLE artifact so the fired/not decision is probe-independent
-    est = int(man.get("count", 0)) * dims * 8 * 2
-    if budget <= 0 or est <= 0 or est > budget:
-        return None
-    if int(take) > _MAX_DRIVER_SHORTLIST:
-        return None
-    dead = _tomb.dead_mask_payload_local(index)
-    if dead is _tomb.UNREADABLE:
-        return None
-    id_col = man["id_col"]
-    qv = np.asarray([float(x) for x in q], dtype=np.float64)
-    try:
-        parts = []
-        for p in probes:
-            d = os.path.join(index.path, "lists", f"list_id={int(p)}")
-            if not os.path.isdir(d):
-                continue  # empty list: partitionBy wrote no dir
-            for file in _list_parquet_files(d):
-                loaded = _load_sq_codes(file, id_col, dims)
-                if loaded is None:
-                    return None  # shapes only the JVM fold can score
-                ids, codes = loaded
-                dd = _tomb.applicable_dead(dead, file)
-                if dd is not None:
-                    keep = ~np.isin(ids, dd)
-                    ids, codes = ids[keep], codes[keep]
-                if len(ids):
-                    parts.append(
-                        (
-                            ids,
-                            _replay_sq_distance(
-                                man["metric"], codes, index._mins,
-                                index._maxs, qv,
-                            ),
-                        )
-                    )
-    except Exception:  # noqa: BLE001 — remote FS/corrupt: distributed path
-        return None
-    if not parts:
-        return []
-    ids = np.concatenate([p[0] for p in parts])
-    dist = np.concatenate([p[1] for p in parts])
-    order = np.lexsort((ids, dist))[: int(take)]
-    return [(int(ids[i]), float(dist[i])) for i in order]
+    off = np.asarray(col.offsets)
+    if len(ids) and not bool((np.diff(off) == dims).all()):
+        return None  # uniform total length but ragged rows
+    codes = flat.to_numpy(zero_copy_only=False).astype(np.uint8)
+    return ids, codes.reshape(len(ids), dims)
 
 
 def create_ivfsq_index(
@@ -522,31 +329,17 @@ def create_ivfsq_index(
     SQ bounds + map-only encode + partitioned write of (id, codes)."""
     if metric != "l2sq":
         raise ValueError("IVF-SQ v1 supports metric='l2sq' only")
-    from duckdb_vss_spark.index.ivf import _assign_udf, _calibrate_nprobe, _count_and_dims, _kmeans
+    from duckdb_vss_spark.index.ivf import _assign_udf, _calibrate_nprobe, _kmeans
     from duckdb_vss_spark.index.sq import sq_encode, train_sq
     from duckdb_vss_spark.session import check_persistence_enabled
 
     check_persistence_enabled(spark)
-    if os.path.exists(path):
-        if not overwrite:
-            raise ValueError(f"index path {path!r} exists (use overwrite=True)")
-        shutil.rmtree(path)
-    src = df.select(
-        F.col(id_col).cast("long").alias(id_col), F.col(vec_col).alias(vec_col)
-    ).where(F.col(vec_col).isNotNull())
+    src = _id_vec(df, id_col, vec_col)
     total, dims = _count_and_dims(src, vec_col, "an IVF-SQ index")
     if nlist is None:
         nlist = max(2, min(4096, int(math.isqrt(total))))
     nlist = int(min(nlist, total))
-
-    want = nlist * sample_per_list
-    frac = min(1.0, want / total)
-    sample_rows = (
-        src.select(vec_col).sample(fraction=frac, seed=seed).limit(want).collect()
-        if frac < 1.0
-        else src.select(vec_col).collect()
-    )
-    sample = np.stack([np.asarray(r[0], dtype=np.float64) for r in sample_rows])
+    sample, _ = _training_sample(src, vec_col, None, total, nlist * sample_per_list, seed)
     centroids = _kmeans(sample, nlist, kmeans_iters, seed)
     if default_nprobe is None:
         default_nprobe = _calibrate_nprobe(sample, centroids, "l2sq")
@@ -556,6 +349,7 @@ def create_ivfsq_index(
         )
 
     mins, maxs = train_sq(src, vec_col)
+    _fresh_dir(path, overwrite)
     assign = _assign_udf(centroids, "l2sq")
     encoded = sq_encode(src, vec_col, mins, maxs).withColumn(
         "list_id", assign(F.col(vec_col))
@@ -582,10 +376,5 @@ def create_ivfsq_index(
     return IvfSqIndex(spark, path, manifest)
 
 
-def load_ivfsq_index(spark: SparkSession, path: str) -> IvfSqIndex:
-    with open(os.path.join(path, "manifest.json")) as f:
-        return IvfSqIndex(spark, path, json.load(f))
-
-
-def drop_ivfsq_index(path: str) -> None:
-    shutil.rmtree(path, ignore_errors=True)
+load_ivfsq_index = IvfSqIndex.load
+drop_ivfsq_index = IvfSqIndex.drop

@@ -45,8 +45,6 @@ from __future__ import annotations
 import json
 import logging
 import os
-import shutil
-import time
 import warnings
 
 import numpy as np
@@ -54,9 +52,22 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, DoubleType
 
-from duckdb_vss_spark.index.manifest import write_manifest
 from duckdb_vss_spark.functions.distance import distance_for_metric
-from duckdb_vss_spark.index.ivf import _kmeans, _norm_rows
+from duckdb_vss_spark.index.base import (
+    QuantizedIndex,
+    _fresh_dir,
+    _id_vec,
+    _list_parquet_files,
+    _local_or_count,
+    _norm_rows,
+    _now,
+    _shortlist_frame,
+    _training_sample,
+    centroid_dists,
+    mtime_lru,
+)
+from duckdb_vss_spark.index.ivf import _kmeans
+from duckdb_vss_spark.index.manifest import write_manifest
 
 __all__ = ["train_pq_codebooks", "create_pq_index", "load_pq_index", "drop_pq_index", "PqIndex"]
 
@@ -409,9 +420,7 @@ def _encode_batch(mat: np.ndarray, books: np.ndarray) -> np.ndarray:
     codes = np.empty((len(mat), m), dtype=np.uint8)
     for j in range(m):
         sub = mat[:, j * dsub : (j + 1) * dsub]
-        cb = books[j]
-        dist = (sub**2).sum(axis=1, keepdims=True) + (cb**2).sum(axis=1) - 2.0 * sub @ cb.T
-        codes[:, j] = dist.argmin(axis=1).astype(np.uint8)
+        codes[:, j] = centroid_dists(sub, books[j]).argmin(axis=1).astype(np.uint8)
     return codes
 
 
@@ -447,138 +456,40 @@ def _adc_dist_udf(lut: np.ndarray, m: int):
 
     def dist(codes):
         arr = np.frombuffer(b"".join(codes), dtype=np.uint8).reshape(len(codes), m)
-        return pd.Series(lut[np.arange(m), arr].sum(axis=1))
+        return pd.Series(_adc_scores(lut, arr))
 
     return pandas_udf(dist, DoubleType())
 
 
+def _adc_scores(lut: np.ndarray, codes: np.ndarray, slab: int = 65_536) -> np.ndarray:
+    """Σⱼ lut[j, codes[:, j]] per row — the one ADC expression (the
+    pandas UDF, the driver shortlists of PQ and IVFADC). Gathered in
+    ``slab``-row blocks so peak memory stays bounded; a row's sum is
+    the same whatever block it is gathered in."""
+    j = np.arange(codes.shape[1])
+    return np.concatenate(
+        [
+            lut[j, codes[lo : lo + slab]].sum(axis=1)
+            for lo in range(0, max(len(codes), 1), slab)
+        ]
+    )
+
+
 # Worker-side LRU of decoded codes files (the PQ/IVFPQ counterpart of
-# artifact._GRAPH_CACHE): path -> (ids id-ASCENDING int64[n], codes
+# artifact._load_graph): path -> (ids id-ASCENDING int64[n], codes
 # uint8[n, m]). Ascending ids make every stable selection downstream a
 # (dist, id) tie-break. ~33 MB per cached file at 1M rows, m=32.
-_CODES_CACHE: dict[tuple[str, float], tuple[np.ndarray, np.ndarray]] = {}
-_CODES_CACHE_MAX = 8
-
-
+@mtime_lru(8)
 def _load_codes(file: str, id_col: str, m: int) -> tuple[np.ndarray, np.ndarray]:
-    key = (file, os.path.getmtime(file))
-    hit = _CODES_CACHE.get(key)
-    if hit is None:
-        import pyarrow.parquet as papq
+    import pyarrow.parquet as papq
 
-        for k in [k for k in _CODES_CACHE if k[0] == file]:
-            del _CODES_CACHE[k]
-        t = papq.read_table(file, columns=[id_col, "pq_code"])
-        ids = np.asarray(t[id_col].to_pylist(), dtype=np.int64)
-        codes = np.frombuffer(
-            b"".join(t["pq_code"].to_pylist()), dtype=np.uint8
-        ).reshape(len(ids), m)
-        order = np.argsort(ids, kind="stable")
-        hit = (ids[order], codes[order])
-        while len(_CODES_CACHE) >= _CODES_CACHE_MAX:
-            _CODES_CACHE.pop(next(iter(_CODES_CACHE)))
-        _CODES_CACHE[key] = hit
-    else:
-        del _CODES_CACHE[key]
-        _CODES_CACHE[key] = hit
-    return hit
-
-
-def _list_parquet_files(d: str) -> list[str]:
-    return sorted(
-        os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
-    )
-
-
-def _driver_probe_budget(spark) -> int:
-    """``spark.vss.driver_probe_max_bytes`` — the same broadcast-class
-    driver-state budget the HNSW driver probe reads (artifact.py); 0
-    disables every driver-local search path."""
-    try:
-        return int(
-            spark.conf.get("spark.vss.driver_probe_max_bytes", str(256 << 20))
-        )
-    except Exception:  # noqa: BLE001 — conf surface moved
-        return 256 << 20
-
-
-# widest shortlist the driver path materializes as literal rows — a
-# full-corpus rerank on a big artifact keeps the distributed scan
-_MAX_DRIVER_SHORTLIST = 65_536
-
-
-def _driver_adc_shortlist(index, lut, take: int):
-    """(id, dist) ADC top-``take`` computed ON the driver (r16, guide
-    §1: the distributed candidate stage costs ~300 ms of scheduling +
-    codegen against ~1 ms of actual LUT math on a gate-small corpus —
-    the quantized twin of artifact._driver_probe_ids), or None when
-    the artifact is too big for driver state, unreadable from this
-    process, or the shortlist too wide — those keep the distributed
-    scan (the 100 TB path) bit-for-bit.
-
-    Bit-identity with the cluster path is by CONSTRUCTION, not
-    reimplementation: codes load through the same ``_load_codes`` LRU
-    the executors use, the tombstone mask is the same ``mask_dead``
-    (epoch-resolved per file), and the distance is the same
-    ``lut[np.arange(m), codes].sum(axis=1)`` expression the pandas UDF
-    runs — pinned by tests/test_quantized_driver_search."""
-    from duckdb_vss_spark.index import tombstones as _tomb
-
-    man = index.manifest
-    m = int(man["m"])
-    budget = _driver_probe_budget(index.spark)
-    est = int(man.get("count", 0)) * (m + 8) * 2
-    if budget <= 0 or est <= 0 or est > budget:
-        return None
-    if int(take) > _MAX_DRIVER_SHORTLIST:
-        return None
-    dead = _tomb.dead_mask_payload_local(index)
-    if dead is _tomb.UNREADABLE:
-        return None
-    id_col = man["id_col"]
-    try:
-        files = _list_parquet_files(os.path.join(index.path, "codes"))
-        parts = []
-        for file in files:
-            ids, codes = _load_codes(file, id_col, m)
-            if dead is not None:
-                ids, codes = _tomb.mask_dead(ids, codes, dead, file)
-            # slab the gather so peak memory stays bounded; the per-row
-            # expression (and so the result bits) is slab-independent
-            for lo in range(0, len(ids), 65_536):
-                arr = codes[lo : lo + 65_536]
-                parts.append(
-                    (ids[lo : lo + 65_536], lut[np.arange(m), arr].sum(axis=1))
-                )
-    except Exception:  # noqa: BLE001 — remote FS/corrupt: distributed path
-        return None
-    if not parts:
-        return []
-    ids = np.concatenate([p[0] for p in parts])
-    d = np.concatenate([p[1] for p in parts])
-    order = np.lexsort((ids, d))[: int(take)]
-    return [(int(ids[i]), float(d[i])) for i in order]
-
-
-def _shortlist_frame(spark, pairs, id_col: str, dist_col: str) -> DataFrame:
-    """A driver-resolved shortlist as the same two-column frame the
-    distributed candidate scan produces, rows ALREADY in that scan's
-    (dist, id) output order. Built through pandas so the plan is an
-    order-preserving LocalTableScan — collect() needs no distributed
-    job; a plain-list createDataFrame would parallelize into an RDD
-    scan costing ~0.4 s of scheduling per action (measured), which is
-    the very overhead this path removes."""
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {
-                id_col: np.asarray([i for i, _d in pairs], dtype=np.int64),
-                dist_col: np.asarray([d for _i, d in pairs], dtype=np.float64),
-            }
-        ),
-        schema=f"{id_col} long, {dist_col} double",
-    )
+    t = papq.read_table(file, columns=[id_col, "pq_code"])
+    ids = np.asarray(t[id_col].to_pylist(), dtype=np.int64)
+    codes = np.frombuffer(
+        b"".join(t["pq_code"].to_pylist()), dtype=np.uint8
+    ).reshape(len(ids), m)
+    order = np.argsort(ids, kind="stable")
+    return ids[order], codes[order]
 
 
 def _fetch_candidates(source: DataFrame, cand: DataFrame, pairs, id_col: str):
@@ -753,46 +664,20 @@ def _adc_query_stream(
     )
 
 
-class PqIndex:
+class PqIndex(QuantizedIndex):
     """Handle over a built PQ artifact (manifest + codes parquet)."""
 
-    # the upsert hook may version-kill (id, epoch<bound) instead of
-    # delete+compact+re-append (r14, VERDICT r13 #4)
-    supports_versioned_delete = True
+    label = "PQ"
 
     def __init__(self, spark: SparkSession, path: str, manifest: dict):
-        self.spark = spark
-        self.path = path
-        self.manifest = manifest
+        super().__init__(spark, path, manifest)
         self._books = np.asarray(manifest["codebooks"], dtype=np.float64)
 
-    @property
-    def metric(self) -> str:
-        return self.manifest["metric"]
+    _codes_df = QuantizedIndex._data_df
 
     @property
     def m(self) -> int:
         return self.manifest["m"]
-
-    @property
-    def dims(self) -> int:
-        return self.manifest["dimensions"]
-
-    @property
-    def count(self) -> int:
-        """LIVE rows (indexed minus tombstoned) — the reference's
-        post-delete count semantics; ``manifest["count"]`` stays the
-        raw indexed total."""
-        from duckdb_vss_spark.index import tombstones as _tomb
-
-        return _tomb.live_count(self.manifest)
-
-    def _codes_df(self) -> DataFrame:
-        from duckdb_vss_spark.index import tombstones as _tomb
-
-        return _tomb.filter_dead(
-            self, self.spark.read.parquet(os.path.join(self.path, "codes"))
-        )
 
     def decode(self, codes: np.ndarray) -> np.ndarray:
         """(n, m) uint8 → (n, dims) reconstructed centroids (testing and
@@ -824,82 +709,22 @@ class PqIndex:
         window: the batch commits via a staging dir renamed into place
         right before the manifest write (index/manifest.staged_append)
         — after a crash INSIDE that microsecond window, rebuild()."""
-        man = self.manifest
-        id_col, vec_col = man["id_col"], man["vec_col"]
-        src = df.select(
-            F.col(id_col).cast("long").alias(id_col), F.col(vec_col).alias(vec_col)
-        ).where(F.col(vec_col).isNotNull())
-        from duckdb_vss_spark.index.ivf import _batch_count_and_dims
         from duckdb_vss_spark.index.manifest import staged_append
 
-        n, dims = _batch_count_and_dims(src, vec_col)
+        src, n = self._batch(df)
         if n == 0:
             return self
-        if dims != man["dimensions"]:
-            raise ValueError(
-                f"PQ index keys must be of type FLOAT[{man['dimensions']}] "
-                f"(batch has FLOAT[{dims}])"
-            )
-        codes_dir = os.path.join(self.path, "codes")
+        id_col, vec_col = self.manifest["id_col"], self.manifest["vec_col"]
         moved = staged_append(
             src.withColumn(
                 "pq_code", _encode_udf(self._books, self.metric)(F.col(vec_col))
             ).select(id_col, "pq_code"),
-            codes_dir,
+            os.path.join(self.path, "codes"),
         )
-
-        from duckdb_vss_spark.index.manifest import record_epoch
-
-        merged = dict(man)
-        record_epoch(merged, moved)
-        merged["count"] = int(man["count"] + n)
-        merged.pop("source_fingerprint", None)
-        merged.update(_merge_source_fields(man, df, "PqIndex"))
-        merged["updated_at"] = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        if manifest_extra:
-            # e.g. streaming replay stamps — ride the SAME atomic commit
-            merged.update(manifest_extra)
-        from duckdb_vss_spark.index import tombstones as _tomb
-
-        old_tomb = _tomb.revive(self, src.select(id_col), merged)
-        write_manifest(self.path, merged)
-        self.manifest = merged
-        if old_tomb:
-            shutil.rmtree(os.path.join(self.path, old_tomb), ignore_errors=True)
-        return self
-
-    def delete_batch(
-        self, ids, manifest_extra: dict | None = None,
-        epoch_lt: int | None = None,
-    ) -> "PqIndex":
-        """Offline mark-delete (r13 — the PQ face of the delete_batch
-        family; see index/tombstones.py for the shared contract,
-        reference src/hnsw/hnsw_index.cpp:466-482): tombstone the ids,
-        O(|ids|), no code rewrite. The ADC scan, the executor-side
-        query stream and the SQL planner route all filter the
-        tombstones; ``count`` reports live rows; ``add_batch`` of a
-        tombstoned id revives it; ``compact()`` reclaims physically.
-        ``epoch_lt`` bounds the kill to rows appended before that
-        epoch (r14 — the upsert hook's O(batch) version replacement)."""
-        from duckdb_vss_spark.index import tombstones as _tomb
-
-        return _tomb.mark_delete(
-            self, ids, self._codes_df(), manifest_extra, epoch_lt=epoch_lt
+        return self._commit_append(
+            src, moved, n, manifest_extra,
+            source_fields=_merge_source_fields(self.manifest, df, "PqIndex"),
         )
-
-    def compact(self) -> "PqIndex":
-        """Physically drop tombstoned codes and re-pack the accumulated
-        add_batch part files (the reference's compaction-after-DML
-        contract, hnsw_index_pragmas.cpp:154-190). Self-contained —
-        codes hold everything PQ serves from, so no source DataFrame
-        is needed; the auto-rerank source fields are untouched."""
-        from duckdb_vss_spark.index import tombstones as _tomb
-
-        out = _tomb.compact_data(self, "codes")
-        if out is None:
-            return self  # nothing to reclaim or coalesce (review r13)
-        _tomb.finish_compact(self, new_count=out.count())
-        return self
 
     # -- single-query ADC top-k ------------------------------------------
 
@@ -922,19 +747,21 @@ class PqIndex:
         ``source`` or the build-time file-backed source recorded in the
         manifest); ``rerank=0`` forces ADC-only (see _resolve_rerank,
         VERDICT r10 #1)."""
-        q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
-        if q.shape[0] != self.dims:
-            raise ValueError(f"PQ index keys must be of type FLOAT[{self.dims}]")
+        q = self._check_dims(query_vec)
         rerank, source = _resolve_rerank(self, k, rerank, source, "PqIndex", "0.74")
         lut = _adc_lut(q, self._books, self.metric)
         id_col = self.manifest["id_col"]
         take = int(rerank) if rerank else int(k)
         # r16 (guide §1): gate-small artifacts resolve the ADC shortlist
-        # ON the driver with the exact cluster kernels (bit-identity
-        # pinned by tests/test_quantized_driver_search) — the candidate
-        # scan stage disappears; oversized artifacts keep the
+        # ON the driver with the exact cluster kernels (the same codes
+        # LRU and _adc_scores expression the pandas UDF runs) — the
+        # candidate scan stage disappears; oversized artifacts keep the
         # distributed scan below unchanged (the 100 TB path)
-        pairs = _driver_adc_shortlist(self, lut, take)
+        m = self.m
+        pairs = self._driver_shortlist(
+            take, m + 8, lambda f: _load_codes(f, id_col, m),
+            lambda _lid, codes: _adc_scores(lut, codes),
+        )
         if pairs is not None:
             cand = _shortlist_frame(self.spark, pairs, id_col, dist_col)
         else:
@@ -979,7 +806,7 @@ class PqIndex:
         #2): map over the *queries* DataFrame — each task buffers its
         Arrow batches into ≤``queries_per_batch``-query flushes, builds
         the per-flush LUT tensor in the worker, scans the codes parquet
-        straight off the shared filesystem (worker-LRU ``_CODES_CACHE``)
+        straight off the shared filesystem (the ``_load_codes`` worker LRU)
         and keeps tie-safe running top-k heaps (``_adc_query_stream``).
         No driver relay: the query set flows executor-to-executor like
         any DataFrame, so query cardinality is bounded by the cluster,
@@ -1069,51 +896,21 @@ def create_pq_index(
     from duckdb_vss_spark.session import check_persistence_enabled
 
     check_persistence_enabled(spark)
-    src = df.select(
-        F.col(id_col).cast("long").alias(id_col), F.col(vec_col).alias(vec_col)
-    ).where(F.col(vec_col).isNotNull())
-    from duckdb_vss_spark.index.ivf import _count_and_dims
-    from duckdb_vss_spark.sources.layout import collect_gate_bytes
-
+    src = _id_vec(df, id_col, vec_col)
     # driver-local fast path (r10, see create_hnsw_index's twin note):
     # a small file-backed source whose training sample is the whole
     # table builds from ONE bounded collect — training, encode (same
     # _encode_batch kernel as the Arrow UDF) and the codes write all
     # in-process, no Spark jobs at all
-    # gate on max(compressed, footer-uncompressed) size: RLE-heavy
-    # columns can decompress far past their on-disk bytes (ADVICE r10)
-    est = collect_gate_bytes(src, bound=driver_build_max_bytes)
-    local_rows = None
-    if 0 <= est <= driver_build_max_bytes:
-        local_rows = src.collect()
-        total = len(local_rows)
-        if total == 0:
-            raise ValueError("cannot build a PQ index over an empty vector column")
-        dims = len(local_rows[0][1])
-    else:
-        total, dims = _count_and_dims(src, vec_col, "a PQ index")
-
-    frac = min(1.0, sample_rows / total)
-    if local_rows is not None and frac >= 1.0:
-        sample_mat = np.stack(
-            [np.asarray(r[1], dtype=np.float64) for r in local_rows]
-        )
-    else:
-        local_rows = None  # partial sample is partitioning-dependent
-        rows = (
-            src.select(vec_col).sample(fraction=frac, seed=seed).limit(sample_rows).collect()
-            if frac < 1.0
-            else src.select(vec_col).collect()
-        )
-        sample_mat = np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
+    local_rows, total, dims = _local_or_count(
+        src, vec_col, "a PQ index", driver_build_max_bytes
+    )
+    sample_mat, local_rows = _training_sample(
+        src, vec_col, local_rows, total, sample_rows, seed
+    )
     sample = _norm_rows(sample_mat, metric)
     books = train_pq_codebooks(sample, m, ksub, kmeans_iters, seed)
-
-    if os.path.exists(path):
-        if not overwrite:
-            raise ValueError(f"index path {path!r} already exists (use overwrite=True)")
-        shutil.rmtree(path)
-    os.makedirs(path)
+    _fresh_dir(path, overwrite)
 
     codes_dir = os.path.join(path, "codes")
     if local_rows is not None:
@@ -1150,17 +947,11 @@ def create_pq_index(
         # gated on the USER's plan shape, not the internal projection
         # (the id cast we add is reapplied by _manifest_source)
         **_source_manifest_fields(df),
-        "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        "created_at": _now(),
     }
     write_manifest(path, manifest)
     return PqIndex(spark, path, manifest)
 
 
-def load_pq_index(spark: SparkSession, path: str) -> PqIndex:
-    with open(os.path.join(path, "manifest.json")) as f:
-        return PqIndex(spark, path, json.load(f))
-
-
-def drop_pq_index(path: str) -> None:
-    if os.path.exists(os.path.join(path, "manifest.json")):
-        shutil.rmtree(path)
+load_pq_index = PqIndex.load
+drop_pq_index = PqIndex.drop

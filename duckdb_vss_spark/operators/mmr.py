@@ -22,17 +22,15 @@ scan that already did the sublinear work. Execution is one
 pairwise-distance matrix is (n²) floats, and queries parallelize
 across the cluster. Nothing is collected to the driver.
 
-Float discipline (oracle parity): the l2/l2sq pair distances reduce
-via numpy's ≤128-element sequential path (pairwise-summation
-blocksize), matching DuckDB's sequential kernel and the JVM fold
-bit-for-bit; the cosine/ip kernels go through BLAS matvec, whose
-multi-accumulator dot can differ from a sequential fold by a few ulps
-— a greedy argmax between candidates tied within ulps can therefore
-diverge from the unrolled-greedy SQL oracle on those metrics (review
-r15: parity there is exact-in-practice, not guaranteed bit-for-bit).
-The emitted ``dist`` column is passed through from the (JVM-computed)
-input, never recomputed. With λ a dyadic rational (e.g. 0.5) the
-score arithmetic is exact in both engines.
+Float discipline (oracle parity): the pair distances come from
+``functions/kernels.py``, the numpy replay of the SQL-visible distance
+functions' Column tree (same 0.0-seeded sequential fold, same cosine
+−1.0 similarity pin, i.e. distance 2.0, for zero-norm vectors), so every
+pair distance equals the native Column expression of its metric bit for
+bit, on all four metrics (pinned by tests/test_kernels_property.py). The
+emitted ``dist`` column is passed through from the
+(JVM-computed) input, never recomputed. With λ a dyadic rational (e.g.
+0.5) the score arithmetic is exact in both engines.
 """
 
 from __future__ import annotations
@@ -40,36 +38,28 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 
+from duckdb_vss_spark.functions import kernels
+
 __all__ = ["mmr_rerank"]
 
-_METRIC_KERNELS = ("l2", "l2sq", "cosine", "ip")
+# mmr metric → the SQL-visible distance its pair distances replay
+_METRIC_KERNELS = {
+    "l2": "array_distance",
+    "l2sq": "array_distance_sq",
+    "cosine": "array_cosine_distance",
+    "ip": "array_negative_inner_product",
+}
 
 
 def _pair_dists(mat: np.ndarray, metric: str) -> np.ndarray:
     """(n, d) float64 → (n, n) pairwise distances in the metric's
-    SQL-visible form. Row-wise loops keep the per-pair reduction a
-    sequential ≤128-element numpy sum (bit-parity with the SQL fold);
-    n is shortlist-sized, so n² work is trivial."""
-    n = len(mat)
-    out = np.empty((n, n), dtype=np.float64)
-    if metric in ("l2", "l2sq"):
-        for i in range(n):
-            d2 = ((mat - mat[i]) ** 2).sum(axis=1)
-            out[i] = np.sqrt(d2) if metric == "l2" else d2
-    elif metric == "cosine":
-        # 1e-30 floor (the join.py kernels' shared convention): a zero
-        # vector in the shortlist must not emit NaN/inf pair distances
-        # that poison every remaining candidate's diversity term and
-        # degrade selection to id order (review r15)
-        norms = np.maximum(np.sqrt((mat**2).sum(axis=1)), 1e-30)
-        for i in range(n):
-            out[i] = 1.0 - (mat @ mat[i]) / (norms * norms[i])
-    elif metric == "ip":
-        for i in range(n):
-            out[i] = -(mat @ mat[i])
-    else:
-        raise ValueError(f"mmr metric must be one of {_METRIC_KERNELS}")
-    return out
+    SQL-visible form, through the exact-distance kernel; n is
+    shortlist-sized, so the (n, n) fold is trivial."""
+    if metric not in _METRIC_KERNELS:
+        raise ValueError(f"mmr metric must be one of {tuple(_METRIC_KERNELS)}")
+    return kernels.FUNCTIONS[_METRIC_KERNELS[metric]][1](
+        mat[:, None, :], mat[None, :, :]
+    )
 
 
 def _mmr_group(
@@ -122,7 +112,7 @@ def mmr_rerank(
     if k <= 0:
         raise ValueError("k must be a positive integer")
     if metric not in _METRIC_KERNELS:
-        raise ValueError(f"mmr metric must be one of {_METRIC_KERNELS}")
+        raise ValueError(f"mmr metric must be one of {tuple(_METRIC_KERNELS)}")
     import pandas as pd
 
     kk, ll, mm = int(k), float(lam), metric

@@ -682,13 +682,12 @@ def _neardup_pairs_kernel(
 ) -> DataFrame | None:
     """Vectorized exact all-pairs cosine (r17, guide §4.2): the build
     side is collected under a byte gate and broadcast; each probe task
-    scores its Arrow batches against the whole matrix with the
-    fold-order-exact REPLAY of the ``array_cosine_similarity`` Column
-    tree (cast→per-dim sequential 0.0-seeded fold→sqrt→÷ with the
-    -1.0 zero/NaN-denominator pin — the ivf._replay_distance
-    discipline, never a BLAS dot whose summation order differs), so
-    every emitted cos_sim is bit-identical to the crossjoin path the
-    oracle hashes. Replaces ~n² interpreted HOF evaluations (Spark
+    scores its Arrow batches against the whole matrix with
+    ``functions/kernels.py``'s replay of the ``array_cosine_similarity``
+    Column tree (per-dim sequential 0.0-seeded fold→sqrt→÷ with the
+    -1.0 pin, never a BLAS dot whose summation order differs), so every
+    emitted cos_sim is bit-identical to the crossjoin path the oracle
+    hashes. Replaces ~n² interpreted HOF evaluations (Spark
     runs higher-order array lambdas without codegen) with d
     vectorized passes; measured 225 s → sub-second at sf0.1 (2000×64).
 
@@ -737,15 +736,13 @@ def _neardup_pairs_kernel(
     # float64 value — the same per-element widening as the SQL
     # cast(array<float> as array<double>)
     bmat = np.asarray([r[1] for r in rows], dtype=np.float64)
-    nb = np.zeros(len(rows))
-    for i in range(dims):
-        nb = nb + bmat[:, i] * bmat[:, i]
-    nb = np.sqrt(nb)
-    bc = spark.sparkContext.broadcast((ids_b, bmat, nb))
+    bc = spark.sparkContext.broadcast((ids_b, bmat))
     th = float(threshold)
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_r, B, nb_r = bc.value
+        from duckdb_vss_spark.functions import kernels
+
+        ids_r, B = bc.value
         m = len(ids_r)
         # chunk so the (chunk, m) f64 pair matrices stay ~64 MB
         chunk = max(1, (8 << 20) // max(m, 1))
@@ -761,22 +758,10 @@ def _neardup_pairs_kernel(
             for s in range(0, len(ids_a_all), chunk):
                 A = A_all[s : s + chunk]
                 ids_a = ids_a_all[s : s + chunk]
-                dot = np.zeros((len(ids_a), m))
-                na = np.zeros(len(ids_a))
-                for i in range(dims):
-                    dot = dot + A[:, i, None] * B[None, :, i]
-                    na = na + A[:, i] * A[:, i]
-                na = np.sqrt(na)
-                denom = na[:, None] * nb_r[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sim = np.where(
-                        np.isnan(denom) | (denom == 0.0), -1.0, dot / denom
-                    )
-                # Spark orders NaN above every double, so `sim >= th`
-                # is TRUE for NaN similarities (Inf-element vectors)
-                keep = (ids_a[:, None] < ids_r[None, :]) & (
-                    (sim >= th) | np.isnan(sim)
-                )
+                sim = kernels.cosine_similarity(A[:, None, :], B[None, :, :])
+                # no NaN survives the kernel's pin (±inf elements give
+                # -1.0 on both paths), so a plain compare is the filter
+                keep = (ids_a[:, None] < ids_r[None, :]) & (sim >= th)
                 if keep.any():
                     ai, bi = np.nonzero(keep)
                     yield pd.DataFrame(

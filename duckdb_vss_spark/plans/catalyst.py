@@ -163,13 +163,18 @@ def _eval_vector(spark: SparkSession, expr) -> list[float] | None:
     driver, with no query and no Spark job: the expression is cast to
     ``array<double>`` and evaluated in the JVM, and the values cross
     py4j as one ``mkString`` (Java's shortest round-trip rendering, so
-    each double parses back bit-exact). Casts to an array type are
-    peeled off first, so the values stay those of the statement's text:
-    the query vector of ``[…]::FLOAT[n]`` and ``cast(array(…) as
-    array<float>)`` is the double value of each element as written, not
-    its float32 rounding. None on a null vector or element."""
+    each double parses back bit-exact). Other array casts are peeled
+    off first; a cast to ``array<float>`` is kept and evaluated,
+    so the query vector of ``[…]::FLOAT[n]`` and ``cast(array(…) as
+    array<float>)`` is each element's float32 rounding — the value the
+    same statement scores with on SEQ_SCAN, and DuckDB's ``FLOAT[n]``.
+    None on a null vector or element."""
     try:
-        while _cls(expr) == "Cast" and expr.dataType().typeName() == "array":
+        while (
+            _cls(expr) == "Cast"
+            and expr.dataType().typeName() == "array"
+            and expr.dataType().elementType().typeName() != "float"
+        ):
             expr = _child(expr)
         cast, eval_mode, sql_conf, dbl, dbl_array, no_tz = _jvm_classes(spark._jvm)
         value = cast(

@@ -303,7 +303,15 @@ _MINBY_FNS = (
 )
 
 
-def match_minby_nested(sql: str):
+def _translated(sql: str, translated: str | None) -> str:
+    """The operator-rewritten, cosine-canonicalized text of ``sql`` —
+    ``translated`` when the caller already computed it once."""
+    if translated is not None:
+        return translated
+    return canonicalize_cosine(rewrite_operators(sql))
+
+
+def match_minby_nested(sql: str, translated: str | None = None):
     """A k-ary min_by/max_by call anywhere in a single-table aggregate
     select: the bare statement (``SELECT min_by(id, dist, 4) AS nbrs
     FROM t``) or nested in a larger expression (``SELECT
@@ -316,7 +324,7 @@ def match_minby_nested(sql: str):
     select_list, call_start, call_end)`` — the caller computes the
     ordered list and re-evaluates the select list with the call
     replaced by it — or None."""
-    s = canonicalize_cosine(rewrite_operators(sql))
+    s = _translated(sql, translated)
     m = re.match(
         r"^\s*SELECT\s+(.+?)\s+FROM\s+([A-Za-z_][\w.]*)\s*;?\s*$",
         s,
@@ -487,8 +495,8 @@ def _resolve_lateral_parts(
     )
 
 
-def match_lateral(sql: str) -> LateralMatch | None:
-    m = _LATERAL_SQL.match(canonicalize_cosine(rewrite_operators(sql)))
+def match_lateral(sql: str, translated: str | None = None) -> LateralMatch | None:
+    m = _LATERAL_SQL.match(_translated(sql, translated))
     if not m:
         return None
     return _resolve_lateral_parts(
@@ -519,14 +527,14 @@ _LATERAL_TAIL_KEYWORDS = re.compile(
 )
 
 
-def match_lateral_region(sql: str):
+def match_lateral_region(sql: str, translated: str | None = None):
     """A ``FROM t[, alias], LATERAL (...)`` region ANYWHERE in the
     statement (r14 — the reference's slow suite wraps laterals in
     enclosing aggregates and GROUP BYs). Returns
     ``(LateralMatch, region_start, region_end)`` over the
     operator-rewritten text, or None. The caller materializes the
     lateral to a view and splices the view name into the region."""
-    s = canonicalize_cosine(rewrite_operators(sql))
+    s = _translated(sql, translated)
     if _LATERAL_SQL.match(s):
         return None  # the anchored matcher owns the simple form
     m = _LATERAL_REGION.search(s)
@@ -2048,6 +2056,9 @@ class VssPlanner:
             # rewrite to the deterministic stream, or raise loudly on
             # shapes whose draw order the ordinal mapping can't pin
             sql = self._seeded_random_rewrite(sql)
+        # every matcher below reads the same operator-rewritten,
+        # cosine-canonicalized text: translate the statement once
+        text = canonicalize_cosine(rewrite_operators(sql))
         if not self._optimizer_enabled:
             # PRAGMA disable_optimizer: execute UN-rewritten. Operator
             # aliases / DuckDB fn names still translate (parsing —
@@ -2055,7 +2066,7 @@ class VssPlanner:
             # the BRUTE path (Spark cannot run correlated laterals
             # natively), but cosine canonicalization and every index
             # route are off, the reference's disable_optimizer scope.
-            ml = match_lateral(sql)
+            ml = match_lateral(sql, text)
             if ml is not None:
                 self.last_plan = "SEQ_SCAN"
                 return self._run_lateral_brute(ml)
@@ -2063,7 +2074,7 @@ class VssPlanner:
             return self._raw_sql(
                 translate_duckdb_functions(rewrite_operators(sql))
             )
-        nested = match_minby_nested(sql)
+        nested = match_minby_nested(sql, text)
         if nested is not None:
             mb, select_list, a, b = nested
             lst = self._run_minby(mb)  # one row, column __vss_x
@@ -2079,7 +2090,7 @@ class VssPlanner:
                 )
             )
 
-        ml = match_lateral(sql)
+        ml = match_lateral(sql, text)
         if ml is not None:
             # Spark cannot run this SQL natively at all — correlated
             # outer references are unsupported outside WHERE/HAVING
@@ -2093,7 +2104,7 @@ class VssPlanner:
                 return self._run_lateral_indexed(ml, idx)
             return self._run_lateral_brute(ml)
 
-        region = match_lateral_region(sql)
+        region = match_lateral_region(sql, text)
         if region is not None:
             # a lateral INSIDE a larger statement (enclosing aggregate
             # / GROUP BY / subquery — the reference's slow suite)
@@ -2107,11 +2118,7 @@ class VssPlanner:
         # analyzer's problem. SEQ_SCAN fallback executes the parsed
         # plan untouched.
         self.last_plan = "SEQ_SCAN"
-        df = self._raw_sql(
-            translate_duckdb_functions(
-                canonicalize_cosine(rewrite_operators(sql))
-            )
-        )
+        df = self._raw_sql(translate_duckdb_functions(text))
         routed = self.rewrite_plan(df)
         return routed if routed is not None else df
 

@@ -308,3 +308,18 @@ def test_stream_mask_rides_as_broadcast_and_warns(spark, emb, tmp_path):
     # clean artifact: no mask at all
     ix3 = create_pq_index(spark, emb, "embedding", "vec_id", str(tmp_path / "pqd"))
     assert _tomb.dead_id_broadcast(ix3) is None
+
+
+@pytest.mark.parametrize("family", ["pq", "ivf", "ivfpq", "ivfsq", "bq"])
+def test_drop_keeps_a_directory_without_manifest(tmp_path, family):
+    """``drop_*_index`` removes an artifact only where a
+    ``manifest.json`` marks one: a mistyped path to any other directory
+    survives, for every family."""
+    import importlib
+
+    mod = importlib.import_module(f"duckdb_vss_spark.index.{family}")
+    d = tmp_path / "not_an_index"
+    d.mkdir()
+    (d / "data.parquet").write_bytes(b"payload")
+    getattr(mod, f"drop_{family}_index")(str(d))
+    assert (d / "data.parquet").read_bytes() == b"payload"

@@ -243,6 +243,11 @@ def test_cosine_zero_and_nan_vectors_match_duckdb(spark):
         ([1.0, 0.0], [0.0, 0.0]),
         ([float("nan"), 1.0], [1.0, 2.0]),
         ([3.0, 4.0], [6.0, 8.0]),
+        # ±inf elements: dot/denom is inf/inf (or NaN), pinned to -1.0
+        ([float("inf"), 0.0], [1.0, 0.0]),
+        ([float("-inf"), 0.0], [1.0, 0.0]),
+        ([float("inf"), 0.0], [0.0, 1.0]),
+        ([float("inf"), 1.0], [float("inf"), 1.0]),
     ]
     df = spark.createDataFrame(cases, "a array<float>, b array<float>")
     got = [
@@ -253,13 +258,12 @@ def test_cosine_zero_and_nan_vectors_match_duckdb(spark):
         ).collect()
     ]
     con = duckdb.connect()
+    def lit(v):  # 'nan'/'inf'/'-inf' reach duckdb as string casts
+        return "[" + ", ".join(f"'{x!r}'::FLOAT" for x in v) + "]::FLOAT[2]"
+
     for (a, b), (s, d) in zip(cases, got):
-        aa = [0.0 if math.isnan(x) else x for x in a]
-        sql_a = f"{aa}::FLOAT[2]" if not any(math.isnan(x) for x in a) else (
-            "['nan'::FLOAT, 1.0]::FLOAT[2]"
-        )
         want = con.execute(
-            f"SELECT array_cosine_similarity({sql_a}, {b}::FLOAT[2])"
+            f"SELECT array_cosine_similarity({lit(a)}, {lit(b)})"
         ).fetchone()[0]
         assert s == want, (a, b, s, want)
         assert d == 1.0 - want

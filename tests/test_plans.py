@@ -101,9 +101,10 @@ def test_match_topk_shapes(spark, shape_views):
     )
     assert m and m.table == "sh_items" and m.k == 5 and m.metric == "l2sq"
     assert m.query_vec == [1.0, 2.0, 3.0]
-    # operator-alias + cast form matches too
+    # operator-alias + cast form matches too; FLOAT[2] rounds to float32
     m2 = match("SELECT id FROM sh_items ORDER BY vec <=> [0.1,0.2]::FLOAT[2] LIMIT 3")
-    assert m2 and m2.metric == "cosine" and m2.query_vec == [0.1, 0.2]
+    assert m2 and m2.metric == "cosine"
+    assert m2.query_vec == [0.10000000149011612, 0.20000000298023224]
     # deviations must NOT match (conservative, hnsw_optimize_scan.cpp:39-84)
     assert match(
         "SELECT sh_a.id FROM sh_a JOIN sh_b ON sh_a.x=sh_b.x "
@@ -167,9 +168,11 @@ def test_planner_fallback_runs_reference_sql(spark, grid, planner_with_index):
 
 def test_query_vector_is_the_literal_as_written(spark, shape_views):
     """The matcher evaluates the query vector on the driver; each value
-    is bit-identical to Spark's own ``CAST(array(…) AS ARRAY<DOUBLE>)``
-    of the literal, for the ``::FLOAT[n]``, ``array(…)`` and ``cast(…
-    as array<float>)`` spellings alike (no float32 rounding)."""
+    is bit-identical to Spark's own evaluation of the literal:
+    ``CAST(array(…) AS ARRAY<DOUBLE>)`` for the ``array(…)`` spelling,
+    and the float32 rounding (``CAST(… AS ARRAY<FLOAT>)``) for the
+    ``::FLOAT[n]`` and ``cast(… as array<float>)`` spellings — the
+    values the same statement scores with on SEQ_SCAN."""
     import numpy as np
 
     rng = np.random.default_rng(11)
@@ -178,11 +181,19 @@ def test_query_vector_is_the_literal_as_written(spark, shape_views):
     lit = ", ".join(vals)
     raw = getattr(spark, "_vss_sql_original", None) or spark.sql
     want = raw(f"SELECT CAST(array({lit}) AS ARRAY<DOUBLE>) AS v").first()["v"]
-    for q in (f"[{lit}]::FLOAT[64]", f"array({lit})", f"cast(array({lit}) as array<float>)"):
+    want32 = raw(
+        f"SELECT CAST(CAST(array({lit}) AS ARRAY<FLOAT>) AS ARRAY<DOUBLE>) AS v"
+    ).first()["v"]
+    assert want32 != want  # the last two elements are not float32 values
+    for q, w in (
+        (f"[{lit}]::FLOAT[64]", want32),
+        (f"array({lit})", want),
+        (f"cast(array({lit}) as array<float>)", want32),
+    ):
         m = _plan_match(
             spark, f"SELECT id FROM sh_items ORDER BY array_distance(vec, {q}) LIMIT 3", shape_views
         )
-        assert [x.hex() for x in m.query_vec] == [x.hex() for x in want], q
+        assert [x.hex() for x in m.query_vec] == [x.hex() for x in w], q
 
 
 def test_match_topk_alias_order_form(spark, shape_views):

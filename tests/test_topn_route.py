@@ -148,3 +148,41 @@ def test_scan_dist_column_is_not_a_select_item(spark, routed):
         routed.sql(f"SELECT id, dist FROM g ORDER BY vec <-> {Q} LIMIT 3")
     rows = routed.sql(f"SELECT id, vec <-> {Q} AS dist FROM g ORDER BY dist LIMIT 3").collect()
     assert routed.last_plan == INDEX and [r["id"] for r in rows] == TOP[:3]
+
+
+def test_float_literal_rounds_like_seq_scan(spark, tmp_path):
+    """A ``::FLOAT[n]`` or ``cast(… as array<float>)`` query vector is
+    rounded to float32 on the index route, as on SEQ_SCAN (and in
+    DuckDB). The literal is picked so the rounding reorders the two
+    nearest rows: as written (doubles) id 2 is nearer, rounded id 1."""
+    t = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 2.0]), (3, [10.0, 10.0]), (4, [-10.0, 5.0])],
+        "id long, vec array<float>",
+    )
+    t.createOrReplaceTempView("fr")
+    routed = VssPlanner(spark)
+    routed.register_index(
+        "fr", "vec",
+        create_hnsw_index(spark, t, vec_col="vec", id_col="id",
+                          path=str(tmp_path / "fr"), overwrite=True),
+    )
+    seq = VssPlanner(spark)
+    qx, qy = repr(0.5 + 1.6 * 2**-24), repr(1.0 + 0.9 * 2**-24)
+    cases = [
+        (f"[{qx}, {qy}]::FLOAT[2]", [1, 2]),
+        (f"cast(array({qx}, {qy}) as array<float>)", [1, 2]),
+        (f"array({qx}, {qy})", [2, 1]),
+    ]
+    try:
+        for lit, order in cases:
+            sql = f"SELECT id, array_distance(vec, {lit}) AS d FROM fr ORDER BY d LIMIT 2"
+            got = routed.sql(sql).collect()
+            assert routed.last_plan == INDEX, lit
+            want = seq.sql(sql).collect()
+            assert seq.last_plan == SEQ, lit
+            assert [r["id"] for r in got] == order, lit
+            assert [(r["id"], r["d"].hex()) for r in got] == [
+                (r["id"], r["d"].hex()) for r in want
+            ], lit
+    finally:
+        spark.catalog.dropTempView("fr")
