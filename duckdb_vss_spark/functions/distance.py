@@ -252,9 +252,9 @@ def register_sql_functions(spark: SparkSession) -> None:
                 # to_pylist paid per-row Python conversion for every
                 # NULL row of a null-heavy batch just to skip it)
                 take = pa.array(idx)
-                out[idx] = kernels.evaluate_rows(
+                out[idx], null_mask[idx] = kernels.evaluate_rows(
                     name, a.take(take).to_pylist(), b.take(take).to_pylist()
-                )[0]
+                )
             return pa.array(out, type=pa.float64(), mask=null_mask)
 
         return inner

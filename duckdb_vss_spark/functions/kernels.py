@@ -107,9 +107,11 @@ def metric_distance(metric: str, a, b) -> np.ndarray:
 def evaluate_rows(name: str, a_rows, b_rows) -> tuple[np.ndarray, np.ndarray]:
     """Row-wise SQL semantics of function ``name`` over two equal-length
     sequences of vectors: a NULL (None) vector on either side gives a
-    NULL row, a size mismatch raises the Column tree's error text, and
-    every other row is the kernel value (NaN stays a value). Returns
-    ``(values, null_mask)``; values under the mask are 0.0."""
+    NULL row, a size mismatch raises the Column tree's error text, a
+    NULL element on either side then gives a NULL row (the Column
+    tree's fold propagates it), and every other row is the kernel value
+    (NaN stays a value). Returns ``(values, null_mask)``; values under
+    the mask are 0.0."""
     guard, fn = FUNCTIONS[name]
     n = len(a_rows)
     null = np.fromiter(
@@ -132,5 +134,11 @@ def evaluate_rows(name: str, a_rows, b_rows) -> tuple[np.ndarray, np.ndarray]:
         )
     for d in np.unique(la):  # one stacked pass per vector width
         sel = np.flatnonzero(la == d)
-        out[idx[sel]] = fn(np.stack([xa[i] for i in sel]), np.stack([xb[i] for i in sel]))
+        a, b = np.stack([xa[i] for i in sel]), np.stack([xb[i] for i in sel])
+        out[idx[sel]] = fn(a, b)
+        # None became NaN in the float cast: only rows holding a NaN can
+        # hold a NULL element
+        for i in idx[sel[np.isnan(a).any(axis=-1) | np.isnan(b).any(axis=-1)]]:
+            if None in a_rows[i] or None in b_rows[i]:
+                null[i], out[i] = True, 0.0
     return out, null

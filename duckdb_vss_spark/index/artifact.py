@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from duckdb_vss_spark.functions.distance import distance_for_metric
-from duckdb_vss_spark.index.base import _driver_probe_budget, mtime_lru
+from duckdb_vss_spark.index.base import _MAX_ISIN_CANDIDATES, _driver_probe_budget, mtime_lru
 from duckdb_vss_spark.index.manifest import write_manifest
 from duckdb_vss_spark.index.tombstones import tombstones_df
 from duckdb_vss_spark.index.hnsw_graph import (
@@ -59,10 +59,6 @@ __all__ = ["create_hnsw_index", "load_index", "drop_index", "HnswIndex", "index_
 # (≈50 MB each at the 64k-vector ceiling) while still amortizing repeat
 # loads across tasks
 _GRAPH_CACHE_MAX = 32
-# driver-probe candidate lists above this size fetch via a broadcast
-# join instead of a literal In-filter (planning + pushdown of a
-# many-thousand-literal predicate costs more than the join it saves)
-_MAX_ISIN_CANDIDATES = 512
 # widest driver probe (keys searched × shards) before the executor
 # probe takes over. Measured on 4 cores, top-10 over 4 shards: the
 # driver search costs ~13.6 µs per key on 16k-node shards (0.87 s at

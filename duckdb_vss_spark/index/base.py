@@ -20,26 +20,42 @@ and gets the rest from here.
 - **One handle base** (``QuantizedIndex``): manifest fields, the
   tombstone-filtered data frame, ``delete_batch``, ``compact``, the
   add_batch commit, ``load`` and ``drop``.
+- **One query path**: the re-rank source decision
+  (``_resolve_rerank`` over the fingerprinted build-time source), one
+  executor top-k stream (``_query_stream``) behind every quantized
+  ``knn_join`` (``QuantizedIndex._stream_join``), one IVF probe join
+  (``IvfLists._probe_join``), and one exact re-rank step in each form:
+  single query (``_rerank_one``) and batched (``_rerank_join``).
 """
 
 from __future__ import annotations
 
 import functools
 import json
+import logging
 import os
 import shutil
 import time
+import warnings
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from duckdb_vss_spark.functions.distance import distance_for_metric
 from duckdb_vss_spark.index import tombstones as _tomb
 from duckdb_vss_spark.index.manifest import record_epoch, write_manifest
+from duckdb_vss_spark.sources.layout import _local_path
+
+_LOG = logging.getLogger(__name__)
 
 # widest shortlist the driver path materializes as literal rows — a
 # full-corpus rerank on a big artifact keeps the distributed scan
 _MAX_DRIVER_SHORTLIST = 65_536
+# driver-resolved candidate id sets above this size fetch via a
+# broadcast join instead of a literal In-filter (planning + pushdown of
+# a many-thousand-literal predicate costs more than the join it saves)
+_MAX_ISIN_CANDIDATES = 512
 
 
 def _driver_probe_budget(spark) -> int:
@@ -243,6 +259,504 @@ def _now() -> str:
     return time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
 
 
+# --------------------------------------------------------------------------
+# The exact re-rank source: the build-time file-backed vectors, recorded
+# in the manifest and fingerprint-validated before every use
+# --------------------------------------------------------------------------
+
+# fingerprints (manifest-identity strings) whose footer row counts have
+# already been re-validated this session — stat() still runs per call
+_FP_ROWS_VALIDATED: set[str] = set()
+
+
+def _fingerprint_ok(manifest: dict) -> bool:
+    """Validate the build-time source fingerprint before trusting the
+    recorded files for exact re-rank (ADVICE r11: files overwritten at
+    the same paths would otherwise be 'exactly' re-ranked against
+    vectors that were never indexed). size+mtime_ns are stat'd on
+    every call (cheap); the footer row count once per fingerprint."""
+    fp = manifest.get("source_fingerprint")
+    if not fp or not fp.get("files"):
+        return False
+    for f, (size, mtime_ns) in fp["files"].items():
+        try:
+            st = os.stat(_local_path(f))
+        except OSError:
+            return False
+        if int(st.st_size) != int(size) or int(st.st_mtime_ns) != int(mtime_ns):
+            return False
+    want_rows = fp.get("num_rows")
+    if want_rows is not None:
+        key = json.dumps(fp, sort_keys=True)
+        if key not in _FP_ROWS_VALIDATED:
+            try:
+                import pyarrow.parquet as papq
+
+                rows = sum(
+                    papq.ParquetFile(_local_path(f)).metadata.num_rows
+                    for f in fp["files"]
+                )
+            except Exception:  # noqa: BLE001 — footer unreadable
+                return False
+            if rows != int(want_rows):
+                return False
+            _FP_ROWS_VALIDATED.add(key)
+    return True
+
+
+class LegacyManifestError(ValueError):
+    """The manifest records ``source_files`` but predates the
+    ``source_fingerprint`` schema (pre-r12 artifact). Serving it would
+    silently degrade the auto-rerank default to ADC-only recall (~0.74
+    at m=8) — the exact silent-wrong-default class the fingerprint
+    hardening exists to close (VERDICT r12 #1). Rebuild the index (or
+    re-create it over the same files to re-fingerprint)."""
+
+
+def _manifest_source(spark: SparkSession, manifest: dict) -> DataFrame | None:
+    """Reload the ORIGINAL vectors from the file-backed source recorded
+    in the manifest at build time (``source_files``), projected to the
+    minimal (id, vec) shape the exact re-rank needs. Returns None when
+    the index was built from a non-file source or the fingerprint
+    recorded at build time no longer matches (ADVICE r11) — callers
+    fall back to shortlist-only scoring with a one-time warning. A
+    manifest with ``source_files`` but NO fingerprint at all is a
+    pre-r12 legacy artifact and raises instead (VERDICT r12 #1): 'the
+    files changed under me' is runtime drift worth a warned fallback,
+    but 'built by code that could not prove its source' must not
+    silently serve below the >=0.9-recall default contract."""
+    files = manifest.get("source_files") or []
+    if not files:
+        return None
+    if "source_fingerprint" not in manifest:
+        raise LegacyManifestError(
+            "index manifest records source_files but no source_fingerprint "
+            "— a pre-r12 legacy artifact whose auto-rerank default would "
+            "silently degrade to ADC-only recall; rebuild the index."
+        )
+    if not _fingerprint_ok(manifest):
+        return None
+    id_col, vec_col = manifest["id_col"], manifest["vec_col"]
+    try:
+        src = spark.read.parquet(*files)
+        if id_col not in src.columns or vec_col not in src.columns:
+            return None
+        return _id_vec(src, id_col, vec_col)
+    except Exception:  # noqa: BLE001 — moved/deleted source files
+        return None
+
+
+def _input_files(df: DataFrame) -> list[str]:
+    """The file paths under ``df``'s scans (empty for non-file plans) —
+    recorded in index manifests so knn defaults can late-materialize
+    exact re-rank against the original vectors without the caller
+    re-supplying them.
+
+    ``inputFiles()`` goes blind the moment the source is ``.cache()``d
+    (the optimized plan's leaf becomes InMemoryRelation), so the
+    fallback walks each cached leaf's cachedPlan down to its
+    FileSourceScanExec — a cached scan is still a file-backed scan."""
+    try:
+        files = list(df.inputFiles())
+    except Exception:  # noqa: BLE001 — non-file plan
+        return []
+    if files:
+        return files
+    try:
+        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        it = leaves.iterator()
+        while it.hasNext():
+            leaf = it.next()
+            if leaf.getClass().getSimpleName() != "InMemoryRelation":
+                continue
+            inner = leaf.cacheBuilder().cachedPlan().collectLeaves().iterator()
+            while inner.hasNext():
+                scan = inner.next()
+                try:
+                    files.extend(scan.relation().location().inputFiles())
+                except Exception:  # noqa: BLE001 — non-file exec leaf
+                    pass
+    except Exception:  # noqa: BLE001 — py4j surface moved
+        return []
+    return files
+
+
+# analyzed-plan node names through which file bytes pass UNCHANGED into
+# the index build: leaves that ARE the files, and row-selecting /
+# row-ordering nodes that never rewrite a column value
+_RAW_LEAVES = frozenset(
+    {"LogicalRelation", "DataSourceV2Relation", "DataSourceV2ScanRelation",
+     "HiveTableRelation"}
+)
+_RAW_PASSTHROUGH = frozenset(
+    {"Filter", "SubqueryAlias", "GlobalLimit", "LocalLimit", "Sort", "Sample",
+     "Deduplicate", "Distinct", "Repartition", "RepartitionByExpression"}
+)
+
+
+def _plan_is_raw_files(df: DataFrame) -> bool:
+    """True iff ``df``'s analyzed plan serves the scanned files' bytes
+    verbatim — only scan leaves, row-selecting pass-through nodes, and
+    attribute-only Projects (no Alias, no computed expression). This is
+    the gate for recording ``source_files`` in an index manifest
+    (ADVICE r11): a ``withColumn`` that normalizes the vec column in
+    place preserves the column NAME, so without the plan check the
+    auto-rerank default would 'exactly' re-rank against raw file
+    vectors that were never indexed. Unknown plan shapes fail closed —
+    the build then simply doesn't record a source and the default knn
+    path warns instead of lying."""
+    try:
+        stack = [df._jdf.queryExecution().analyzed()]
+        while stack:
+            node = stack.pop()
+            name = node.getClass().getSimpleName()
+            if name in _RAW_LEAVES:
+                continue
+            if name == "Project":
+                pl = node.projectList()
+                for i in range(pl.size()):
+                    if pl.apply(i).getClass().getSimpleName() != "AttributeReference":
+                        return False
+            elif name not in _RAW_PASSTHROUGH:
+                return False
+            ch = node.children()
+            for i in range(ch.size()):
+                stack.append(ch.apply(i))
+        return True
+    except Exception:  # noqa: BLE001 — py4j surface moved: fail closed
+        return False
+
+
+def _files_fingerprint(files: list[str]) -> dict | None:
+    """Per-file (size, mtime_ns) + total footer row count, recorded at
+    build time and re-validated by ``_fingerprint_ok`` before the files
+    are trusted as a re-rank source. None when any file can't be
+    stat'd locally (remote FS) — then no source is recorded at all,
+    since it could never be validated later."""
+    out: dict[str, list[int]] = {}
+    rows: int | None = 0
+    try:
+        import pyarrow.parquet as papq
+    except Exception:  # noqa: BLE001
+        papq = None
+        rows = None
+    for f in files:
+        p = _local_path(f)
+        try:
+            st = os.stat(p)
+        except OSError:
+            return None
+        out[f] = [int(st.st_size), int(st.st_mtime_ns)]
+        if rows is not None:
+            try:
+                rows += papq.ParquetFile(p).metadata.num_rows
+            except Exception:  # noqa: BLE001 — not parquet
+                rows = None
+    return {"files": out, "num_rows": rows}
+
+
+def _source_manifest_fields(df: DataFrame) -> dict:
+    """The ``source_files`` + ``source_fingerprint`` manifest fields for
+    an index built over ``df`` — empty when the plan transforms the
+    scanned values or the files can't be fingerprinted (ADVICE r11)."""
+    files = _input_files(df)
+    if not files or not _plan_is_raw_files(df):
+        return {"source_files": []}
+    fp = _files_fingerprint(files)
+    if fp is None:
+        return {"source_files": []}
+    return {"source_files": files, "source_fingerprint": fp}
+
+
+def _merge_source_fields(manifest: dict, batch_df: DataFrame, family: str) -> dict:
+    """Source fields after appending ``batch_df``'s rows to an index.
+
+    Extends files + fingerprint when BOTH the existing manifest and the
+    batch are fingerprintable raw file scans; otherwise DROPS the
+    source entirely (with a warning) — an auto-rerank source covering
+    only part of the corpus would silently lose new-batch candidates in
+    the re-rank join, which is worse than the warned ADC-only fallback.
+    The merged list is a set-union by path (a batch filtered from the
+    SAME files as the build — the common incremental pattern — is a
+    no-op on the list; every candidate id still resolves exactly once
+    since each path is listed once). num_rows is recomputed over the
+    union's footers so overlapping files are never double-counted."""
+    old_files = manifest.get("source_files") or []
+    old_fp = manifest.get("source_fingerprint")
+    if old_files and "source_fingerprint" not in manifest:
+        raise LegacyManifestError(
+            f"{family}.add_batch: the manifest records source_files but no "
+            f"source_fingerprint — a pre-r12 legacy artifact; rebuild the "
+            f"index before appending to it."
+        )
+    if old_files and old_fp:
+        # validate the OLD fingerprint BEFORE extending (r12 review): a
+        # source file overwritten in place since the build would have
+        # its stale (size, mtime_ns) silently REFRESHED by the set-union
+        # below — re-arming exactly the silent-wrong-rerank hazard
+        # _fingerprint_ok exists to close. Stale -> drop the source.
+        if not _fingerprint_ok(manifest):
+            warnings.warn(
+                f"{family}.add_batch: dropping the recorded re-rank source — "
+                f"its build-time fingerprint no longer matches (source files "
+                f"changed since the index was built). Default knn calls will "
+                f"be ADC-only with a warning; rebuild the index.",
+                stacklevel=3,
+            )
+            return {"source_files": []}
+        new = _source_manifest_fields(batch_df)
+        nf = new.get("source_files") or []
+        if nf:
+            files = sorted(set(old_files) | set(nf))
+            fp_files = dict(old_fp["files"])
+            fp_files.update(new["source_fingerprint"]["files"])
+            try:
+                import pyarrow.parquet as papq
+
+                num_rows = sum(
+                    papq.ParquetFile(_local_path(f)).metadata.num_rows for f in files
+                )
+            except Exception:  # noqa: BLE001 — footer unreadable
+                num_rows = None
+            return {
+                "source_files": files,
+                "source_fingerprint": {"files": fp_files, "num_rows": num_rows},
+            }
+        warnings.warn(
+            f"{family}.add_batch: dropping the recorded re-rank source — the "
+            f"batch is not a fingerprintable raw file scan. Default knn calls "
+            f"will be ADC-only with a warning; pass source= explicitly or "
+            f"rebuild the index.",
+            stacklevel=3,
+        )
+    return {"source_files": []}
+
+
+# index paths that already warned about serving un-reranked results
+_UNRERANKED_WARNED: set[str] = set()
+
+
+def _resolve_rerank(
+    index, rerank, source, auto_width: int, *, what: str, param: str = "rerank",
+    strict: bool = True,
+):
+    """The one re-rank decision of the quantized knn paths (VERDICT r10
+    #1, the same weak-default class as the IVF nprobe calibration in
+    ivf.py:90). Returns ``(width, source)``: the shortlist width to
+    re-rank exactly against ``source``, or ``(0, None)`` for no re-rank.
+
+    - ``rerank=None`` is AUTO: re-rank ``auto_width`` candidates (PQ and
+      IVFADC 10·k, BQ the calibrated width) whenever the original
+      vectors are reachable — an explicit ``source``, else the
+      fingerprint-validated file source recorded at build time — so
+      recall@10 at the DEFAULT signature is >=0.9 instead of the
+      byte-code ceiling. When none is reachable the call returns the
+      shortlist scores (``what``) and warns ONCE per index.
+    - ``rerank<=0`` opts out explicitly, silently.
+    - ``rerank>0`` re-ranks that many; without reachable vectors a
+      ``strict`` family raises, the others fall back like AUTO.
+
+    Reference contract: approximate-but-useful defaults
+    (duckdb_vss README.md:67)."""
+    if rerank is not None and int(rerank) <= 0:
+        return 0, None
+    if source is None:
+        source = _manifest_source(index.spark, index.manifest)
+    if source is not None:
+        width = int(auto_width if rerank is None else rerank)
+        return (width, source) if width > 0 else (0, None)
+    if rerank is not None and strict:
+        raise ValueError("rerank requires the source DataFrame with original vectors")
+    if index.path not in _UNRERANKED_WARNED:
+        _UNRERANKED_WARNED.add(index.path)
+        warnings.warn(
+            f"{type(index).__name__}: returning {what} results (no exact "
+            f"re-rank) because the original vectors are unreachable — the "
+            f"index was built from a non-file source or its source files "
+            f"changed, and no `source=` was given. Pass `source=<vectors "
+            f"df>` for exact re-rank (recall>=0.9) or `{param}=0` to silence.",
+            stacklevel=4,  # the caller of knn_search/knn_join
+        )
+    return 0, None
+
+
+# --------------------------------------------------------------------------
+# The executor top-k stream behind every quantized knn_join
+# --------------------------------------------------------------------------
+
+
+def _merge_topk(best_d, best_i, d, aid, take):
+    """Tie-safe running top-``take`` merge: fold a (nq, n_slab) distance
+    block into the per-query (nq, take) heaps, breaking distance ties by
+    ascending id exactly like the finalizing ORDER BY dist, id (``aid``
+    must be ascending; same scheme as operators/join._knn_join_broadcast).
+    Returns the updated (best_d, best_i)."""
+    kk = min(take, d.shape[1])
+    idx = np.argpartition(d, kk - 1, axis=1)[:, :kk]
+    dsel = np.take_along_axis(d, idx, axis=1)
+    # one vectorized stable sort over the tied rows (ADVICE r9: the
+    # per-row Python loop degrades on duplicate-heavy corpora where
+    # every row ties at the cut)
+    t = dsel.max(axis=1)
+    flagged = np.flatnonzero((d <= t[:, None]).sum(axis=1) > kk)
+    if len(flagged):
+        sub = d[flagged]
+        sel = np.argsort(sub, axis=1, kind="stable")[:, :kk]
+        idx[flagged] = sel
+        dsel[flagged] = np.take_along_axis(sub, sel, axis=1)
+    cat_d = np.concatenate([best_d, dsel], axis=1)
+    cat_i = np.concatenate([best_i, aid[idx]], axis=1)
+    order = np.lexsort((cat_i, cat_d))[:, :take]
+    return (
+        np.take_along_axis(cat_d, order, axis=1),
+        np.take_along_axis(cat_i, order, axis=1),
+    )
+
+
+def _emit_flush(qids, best_d, best_i, take: int, distinct: bool = False):
+    """Materialize one flush's heaps as the stream's output frame —
+    fixed internal column names (_qid, _id, _dist, _rn; renamed at the
+    Spark layer so user column names can't collide, ADVICE r9), with
+    _rn the 1-indexed (dist, id) rank straight off the sorted heaps.
+    ``distinct`` keeps only each id's best copy per query (an id indexed
+    twice) — the shortlist a re-rank fetches rows by."""
+    import pandas as pd
+
+    valid = best_i >= 0
+    if distinct:
+        order = np.argsort(best_i, axis=1, kind="stable")  # best copy first
+        ids = np.take_along_axis(best_i, order, axis=1)
+        first = np.ones_like(valid)
+        first[:, 1:] = ids[:, 1:] != ids[:, :-1]
+        np.put_along_axis(valid, order, np.take_along_axis(valid, order, axis=1) & first, axis=1)
+    if not valid.any():
+        return None
+    rn = np.broadcast_to(np.arange(1, take + 1, dtype=np.int32), best_i.shape)
+    return pd.DataFrame(
+        {
+            "_qid": np.repeat(qids, valid.sum(axis=1)),
+            "_id": best_i[valid],
+            "_dist": best_d[valid],
+            "_rn": rn[valid],
+        }
+    )
+
+
+def _drop_dead(dead, file, ids, payload):
+    """The one tombstone mask of the numpy paths: drop the rows of
+    ``file`` whose id is dead for it (per-file epoch-bounded kills)."""
+    gone = _tomb.applicable_dead(dead, file)
+    if gone is None:
+        return ids, payload
+    keep = ~np.isin(ids, gone)
+    return ids[keep], [p if p is None else p[keep] for p in payload]
+
+
+def _query_stream(
+    batches, query_vec_col: str, query_id_col: str, metric: str, take: int,
+    chunk: int, *, files: dict, load, prepare, score, route=None,
+    slab: int = 16384, dead=None, distinct: bool = False,
+):
+    """The executor-side multi-query top-k walk of every quantized
+    ``knn_join`` (VERDICT r7 #2 / r8 #1: never ``collect()`` the query
+    set to the driver; the quantized twin of
+    artifact._search_query_stream). NULL query vectors are skipped, and
+    the rest are buffered across Arrow batches into flushes of
+    ≤``chunk`` queries, normalized per ``metric``. Per flush:
+
+    - ``route(qmat)`` groups the flush into ``(list id, query rows)``
+      (IVFADC: each query's ``nprobe`` nearest lists; default: one
+      group of every query over ``files[None]``);
+    - per group, ``prepare(query rows, list id)`` builds the query-side
+      state once (LUT tensors, sign vectors), then each of the group's
+      ``files[list id]`` loads through the family's worker LRU
+      (``load(file) -> (ids ascending, *payload)``; the cached arrays
+      stay unmasked), drops its tombstoned rows, and is scored in
+      ``slab``-row blocks (``score(state, *payload block) -> (nq, n)``)
+      folded into tie-safe running top-``take`` heaps.
+
+    A list no flush query probes is never read. Peak memory is the
+    query state + one (chunk × slab) float64 block, independent of the
+    corpus size. Emits each query's exact top-``take`` by (score, id)
+    with its rank — the no-rerank join needs no shuffle at all — and,
+    when ``distinct``, only the best copy of an id indexed twice."""
+    dead = _tomb.unwrap_dead(dead)  # broadcast mask -> payload, worker-side
+
+    def flush(buf_ids, buf_vecs):
+        qids = np.concatenate(buf_ids)
+        qmat = _norm_rows(np.vstack(buf_vecs), metric)
+        best_d = np.full((len(qids), take), np.inf)
+        best_i = np.full((len(qids), take), -1, dtype=np.int64)
+        for lid, qs in route(qmat) if route else [(None, slice(None))]:
+            if not files.get(lid):
+                continue
+            state = prepare(qmat[qs], lid)
+            for file in files[lid]:
+                ids, *payload = load(file)
+                ids, payload = _drop_dead(dead, file, ids, payload)
+                for lo in range(0, len(ids), slab):
+                    sl = slice(lo, lo + slab)
+                    d = score(state, *[p if p is None else p[sl] for p in payload])
+                    best_d[qs], best_i[qs] = _merge_topk(
+                        best_d[qs], best_i[qs], d, ids[sl], take
+                    )
+        return _emit_flush(qids, best_d, best_i, take, distinct)
+
+    buf_ids, buf_vecs, n_buf = [], [], 0
+    for pdf in batches:
+        vecs = pdf[query_vec_col]
+        mask = vecs.notna().to_numpy()
+        if not mask.any():
+            continue
+        qids = pdf[query_id_col].to_numpy()[mask].astype(np.int64)
+        mat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs[mask]])
+        lo = 0
+        while lo < len(qids):
+            n = min(chunk - n_buf, len(qids) - lo)
+            buf_ids.append(qids[lo : lo + n])
+            buf_vecs.append(mat[lo : lo + n])
+            n_buf += n
+            lo += n
+            if n_buf >= chunk:
+                out = flush(buf_ids, buf_vecs)
+                buf_ids, buf_vecs, n_buf = [], [], 0
+                if out is not None:
+                    yield out
+    if n_buf:
+        out = flush(buf_ids, buf_vecs)
+        if out is not None:
+            yield out
+
+
+def _fits_broadcast(queries: DataFrame, nprobe: int, budget_bytes: int) -> bool:
+    """Whether the exploded (queries·nprobe) side fits a broadcast
+    budget, from Catalyst's logical size estimate — a plan statistic,
+    not a driver job.
+
+    Unknown/FAILED estimates return False (VERDICT r5 #3): the shuffle
+    join is always safe and AQE re-promotes the broadcast at runtime
+    when actual sizes are known, whereas a forced broadcast of a side
+    nothing is known about is the one path that can OOM executors. The
+    decision (estimate vs budget) is logged so a demotion is visible to
+    the caller — Catalyst wildly inflates sizeInBytes for plans without
+    file-backed stats (UDF/join outputs multiply toward Long.MaxValue),
+    and ``broadcast_queries=True`` remains the explicit override."""
+    try:
+        size = int(queries._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception as e:  # noqa: BLE001 — estimate is best-effort
+        _LOG.info("ivf.knn_join broadcast auto-decision: estimate failed (%s) -> shuffle join", e)
+        return False
+    fits = size * nprobe <= budget_bytes
+    _LOG.info(
+        "ivf.knn_join broadcast auto-decision: estimate=%d B x nprobe=%d vs budget=%d B -> %s",
+        size,
+        nprobe,
+        budget_bytes,
+        "broadcast" if fits else "shuffle join",
+    )
+    return fits
+
+
 class QuantizedIndex:
     """Handle over a built quantized artifact: ``manifest.json`` plus one
     data dir of parquet rows (``data_dir``, hive-partitioned by
@@ -346,11 +860,7 @@ class QuantizedIndex:
                 if loaded is None:
                     return None
                 ids, *payload = loaded
-                gone = _tomb.applicable_dead(dead, file)
-                if gone is not None:
-                    keep = ~np.isin(ids, gone)
-                    ids = ids[keep]
-                    payload = [p if p is None else p[keep] for p in payload]
+                ids, payload = _drop_dead(dead, file, ids, payload)
                 if len(ids):
                     ids_parts.append(ids)
                     score_parts.append(score(lid, *payload))
@@ -360,6 +870,105 @@ class QuantizedIndex:
             return []
         ids, sc = np.concatenate(ids_parts), np.concatenate(score_parts)
         return [(int(ids[i]), sc[i].item()) for i in np.lexsort((ids, sc))[: int(take)]]
+
+    def _stream_join(
+        self, queries: DataFrame, query_vec_col: str, query_id_col: str, k: int,
+        take: int, source, dist_col: str, rn_col: str, queries_per_batch: int,
+        codec: dict,
+    ) -> DataFrame:
+        """The one executor-side ``knn_join`` front (PQ, IVFADC, BQ): map
+        over the *queries* DataFrame with ``_query_stream`` over the
+        family's ``codec`` (its files, loader, query prep, block scorer
+        and optional routing). No driver relay — the query set flows
+        executor-to-executor like any DataFrame, and the tombstone mask
+        ships once per executor as a broadcast (VERDICT r13 #3). Without
+        ``source`` the stream's per-query top-``take`` rows (with their
+        rank) are the result, a single mapInPandas stage with no
+        shuffle; with it the shortlist is re-ranked exactly
+        (``_rerank_join``)."""
+        id_col, metric = self.manifest["id_col"], self.metric
+        chunk = max(1, int(queries_per_batch))
+        dead = _tomb.dead_id_broadcast(self)
+        distinct = source is not None  # the re-rank fetches rows by id
+
+        def stream(batches):
+            return _query_stream(
+                batches, query_vec_col, query_id_col, metric, take, chunk,
+                dead=dead, distinct=distinct, **codec,
+            )
+
+        qrows = queries.select(query_id_col, query_vec_col).where(
+            F.col(query_vec_col).isNotNull()
+        )
+        cand = qrows.mapInPandas(
+            stream, schema="_qid long, _id long, _dist double, _rn int"
+        ).select(
+            F.col("_qid").alias(query_id_col),
+            F.col("_id").alias(id_col),
+            F.col("_dist").alias(dist_col),
+            F.col("_rn").alias(rn_col),
+        )
+        if source is None:
+            return cand
+        return self._rerank_join(
+            queries, query_vec_col, query_id_col, cand.select(query_id_col, id_col),
+            source, k, dist_col, rn_col,
+        )
+
+    def _rerank_one(self, source: DataFrame, q, k: int, pairs, short: DataFrame,
+                    dist_col: str) -> DataFrame:
+        """Exact re-rank of a single-query shortlist ``short`` against the
+        original vectors (late materialization, the HNSW rowid-fetch
+        shape). One fetch rule: the DISTINCT shortlist ids become a
+        literal In-filter pushed into the source scan when the driver
+        resolved them (``pairs``) and there are at most
+        ``_MAX_ISIN_CANDIDATES``, else a broadcast left-semi join. Both
+        are id-set semantics, so an id the shortlist holds twice (a
+        re-added row) fetches each source row once — the rows brute
+        force over ``source`` returns. Exact distances use the
+        SQL-visible metric, so the output is hash-comparable to a
+        brute-force oracle."""
+        id_col, vec_col = self.manifest["id_col"], self.manifest["vec_col"]
+        ids = None if pairs is None else sorted({int(i) for i, _d in pairs})
+        if ids is not None and len(ids) <= _MAX_ISIN_CANDIDATES:
+            fetched = source.where(F.col(id_col).isin(ids))
+        else:
+            fetched = source.join(F.broadcast(short.select(id_col)), id_col, "left_semi")
+        dist = distance_for_metric(self.metric)(F.col(vec_col), [float(x) for x in q])
+        return (
+            fetched.withColumn(dist_col, dist)
+            .orderBy(F.col(dist_col).asc_nulls_last(), F.col(id_col))
+            .limit(int(k))
+            .drop(vec_col)
+        )
+
+    def _rerank_join(self, queries: DataFrame, query_vec_col: str, query_id_col: str,
+                     pairs: DataFrame, source: DataFrame, k: int, dist_col: str,
+                     rn_col: str) -> DataFrame:
+        """Exact re-rank of a batched shortlist: the DISTINCT (query, id)
+        ``pairs`` join the source rows (broadcast left to AQE: at 10⁸
+        queries a forced hint on the candidate side would itself OOM)
+        and the query vectors, the SQL-visible metric scores them, and
+        a ``row_number ≤ k`` window per query keeps the top k. Distinct
+        pairs are ``_rerank_one``'s id-set rule per query: each source
+        row comes back once, as brute force over ``source`` returns
+        it."""
+        id_col, vec_col = self.manifest["id_col"], self.manifest["vec_col"]
+        qvecs = queries.select(
+            query_id_col, F.col(query_vec_col).alias("_qvec")
+        ).where(F.col("_qvec").isNotNull())
+        w = Window.partitionBy(query_id_col).orderBy(
+            F.col(dist_col).asc_nulls_last(), F.col(id_col)
+        )
+        dist = distance_for_metric(self.metric)(F.col(vec_col), F.col("_qvec"))
+        return (
+            source.join(pairs, id_col)
+            .join(qvecs, query_id_col)
+            .withColumn(dist_col, dist)
+            .withColumn(rn_col, F.row_number().over(w))
+            .where(F.col(rn_col) <= int(k))
+            .drop(vec_col, "_qvec")
+        )
 
     def delete_batch(
         self, ids, manifest_extra: dict | None = None, epoch_lt: int | None = None
@@ -457,3 +1066,42 @@ class IvfLists(QuantizedIndex):
         nprobe = int(nprobe or self.manifest["default_nprobe"])
         probes = coarse_probe(self._centroids, _norm_rows(q[None, :], self.metric), nprobe)
         return q, [int(i) for i in probes[0]]
+
+    def _probe_join(
+        self, queries: DataFrame, query_vec_col: str, query_id_col: str,
+        nprobe: int | None, take: int, dist_col: str, rn_col: str, score,
+        drop: tuple, broadcast_queries: bool | None, broadcast_budget_bytes: int,
+    ) -> DataFrame:
+        """The batched IVF probe (IVF and IVF×SQ ``knn_join``): each query
+        explodes to its ``nprobe`` probe lists, an equi-join on
+        ``list_id`` routes it to exactly those rows (shuffle ∝
+        queries·nprobe + probed lists, never queries × rows), ``score``
+        (a Column over both sides) becomes ``dist_col``, and a
+        ``row_number ≤ take`` window per query merges; ``drop`` names
+        the columns the result leaves out.
+
+        ``broadcast_queries=None`` auto-decides from the optimizer's
+        size estimate (``_fits_broadcast``): the probed side is forced
+        broadcast only when queries·nprobe fits
+        ``broadcast_budget_bytes``; past it the join degrades to a
+        shuffle on list_id (AQE splits skewed hot lists) rather than a
+        forced broadcast that could OOM executors."""
+        nprobe = int(nprobe or self.manifest["default_nprobe"])
+        probe_lists = probe_lists_udf(self._centroids, self.metric, nprobe)
+        probed = queries.where(F.col(query_vec_col).isNotNull()).withColumn(
+            "list_id", F.explode(probe_lists(F.col(query_vec_col)))
+        )
+        if broadcast_queries is None:
+            broadcast_queries = _fits_broadcast(queries, nprobe, broadcast_budget_bytes)
+        probed_side = F.broadcast(probed) if broadcast_queries else probed
+        w = Window.partitionBy(query_id_col).orderBy(
+            F.col(dist_col).asc_nulls_last(), F.col(self.manifest["id_col"])
+        )
+        return (
+            self._data_df()
+            .join(probed_side, on="list_id", how="inner")
+            .withColumn(dist_col, score)
+            .withColumn(rn_col, F.row_number().over(w))
+            .where(F.col(rn_col) <= int(take))
+            .drop(*drop)
+        )

@@ -48,9 +48,12 @@ from duckdb_vss_spark.index.base import (
     QuantizedIndex,
     _fresh_dir,
     _id_vec,
-    _list_parquet_files,
+    _input_files,
+    _merge_source_fields,
     _now,
+    _resolve_rerank,
     _shortlist_frame,
+    _source_manifest_fields,
     mtime_lru,
 )
 from duckdb_vss_spark.index.manifest import write_manifest
@@ -454,6 +457,18 @@ def _estimate_fraction_asym(
     return float(fr[min(len(fr) - 1, int(np.ceil(target * len(fr))) - 1)])
 
 
+def _query_sig(q: list[float]) -> Column:
+    """The query's packed sign words as a literal ``array<bigint>`` (bit
+    set iff > 0, the ``binary_signature`` packing)."""
+    dims = len(q)
+    return F.array(
+        *[
+            F.lit(sum(1 << (b - w) for b in range(w, min(w + _BITS, dims)) if q[b] > 0)).cast("bigint")
+            for w in range(0, dims, _BITS)
+        ]
+    )
+
+
 def bq_knn(
     df: DataFrame,
     vec_col: str,
@@ -486,11 +501,9 @@ def bq_knn(
     if rescore is not None:
         take = int(rescore)
     else:
-        # pq._input_files, not df.inputFiles(): a .cache()d source
+        # base._input_files, not df.inputFiles(): a .cache()d source
         # blinds inputFiles() (the optimized leaf becomes
         # InMemoryRelation) and would defeat the calibration cache
-        from duckdb_vss_spark.index.pq import _input_files
-
         files = tuple(sorted(_input_files(df)))
         # the key also carries the ANALYZED PLAN's semantic hash
         # (ADVICE r12): two logically different frames over the same
@@ -529,16 +542,8 @@ def bq_knn(
                     f"this data weakly; consider PQ or HNSW.",
                     stacklevel=2,
                 )
-    qsig = [
-        sum(
-            (1 << (b - w)) for b in range(w, min(w + _BITS, dims)) if q[b] > 0
-        )
-        for w in range(0, dims, _BITS)
-    ]
     base = df.where(F.col(vec_col).isNotNull())
-    sig = binary_signature(vec_col, dims)
-    qcol = F.array(*[F.lit(x).cast("bigint") for x in qsig])
-    hd = hamming_distance(sig, qcol)
+    hd = hamming_distance(binary_signature(vec_col, dims), _query_sig(q))
     if take <= 0:
         return (
             base.select(id_col, hd.alias("hamming"))
@@ -586,7 +591,7 @@ class BqIndex(QuantizedIndex):
     shortlist FRACTION (so it keeps scaling the default rescore as
     ``add_batch`` grows the corpus), and the exact-rescore source is
     the same plan-shape-gated, fingerprint-validated machinery as PQ's
-    (pq._source_manifest_fields / pq._manifest_source)."""
+    (base._source_manifest_fields / base._manifest_source)."""
 
     data_dir = "sigs"
     label = "BQ"
@@ -614,13 +619,15 @@ class BqIndex(QuantizedIndex):
         The rescore source resolves like PQ's: explicit ``source=``,
         else the fingerprint-validated build-time files; unreachable →
         ADC-style warned Hamming-only result."""
-        from duckdb_vss_spark.index.pq import _manifest_source
-
         man = self.manifest
         id_col = man["id_col"]
         q = [float(x) for x in self._check_dims(query_vec)]
-        take = self.default_rescore(k) if rescore is None else int(rescore)
-        pairs = None
+        take, source = self._resolve(k, rescore, source)
+        nshort = max(take, int(k))
+        # r16 (guide §1): gate-small artifacts resolve the shortlist ON
+        # the driver (bit-identity with the JVM column pinned by
+        # tests/test_quantized_driver_search); oversized artifacts keep
+        # the distributed scan (the 100 TB path)
         if man.get("scoring", "hamming") == "asym":
             # asymmetric shortlist (r13): full-precision query against
             # the packed sign bits + stored residual norm — no Hamming
@@ -631,79 +638,30 @@ class BqIndex(QuantizedIndex):
                 if self.metric == "l2sq"
                 else q
             )
-            nshort = max(take, int(k)) if take > 0 else int(k)
-            # r16 second session (guide §1): gate-small asym artifacts
-            # resolve the shortlist ON the driver by replaying the SQL
-            # expression tree's exact fold order (bit-identity pinned
-            # by tests/test_quantized_driver_search); oversized keep
-            # the distributed scan below (the 100 TB path)
-            pairs = _driver_asym_shortlist(self, q, xs, nshort)
-            if pairs is not None:
-                short = _shortlist_frame(self.spark, pairs, id_col, "hamming")
-            else:
-                dot = _signed_dot_packed("sig", xs, self.dims)
-                sc = asym_score(dot, F.col("vnc"), q, man, F.col("vfull"))
-                # alias to the shared shortlist-rank name so the rescore
-                # join below is branch-agnostic (rescore=0 callers get
-                # the raw asym score in this column)
-                short = (
-                    self._data_df()
-                    .select(id_col, sc.alias("hamming"))
-                    .orderBy(F.col("hamming").asc_nulls_last(), F.col(id_col))
-                    .limit(nshort)
-                )
-        else:
-            nshort = max(take, int(k)) if take > 0 else int(k)
-            # r16 (guide §1): gate-small plain-hamming artifacts resolve
-            # the shortlist ON the driver — integer scores, so identity
-            # with the JVM column is exact; oversized artifacts keep the
-            # distributed scan below (the 100 TB path)
-            pairs = _driver_hamming_shortlist(self, q, nshort)
-            if pairs is not None:
-                short = _shortlist_frame(self.spark, pairs, id_col, "hamming", "int")
-            else:
-                qsig = [
-                    sum(
-                        (1 << (b - w))
-                        for b in range(w, min(w + _BITS, self.dims))
-                        if q[b] > 0
-                    )
-                    for w in range(0, self.dims, _BITS)
-                ]
-                qcol = F.array(*[F.lit(x).cast("bigint") for x in qsig])
-                hd = hamming_distance(F.col("sig"), qcol)
-                short = (
-                    self._data_df()
-                    .select(id_col, hd.alias("hamming"))
-                    .orderBy(F.col("hamming").asc_nulls_last(), F.col(id_col))
-                    .limit(nshort)
-                )
-        if take <= 0:
-            return short.limit(int(k))
-        if source is None:
-            source = _manifest_source(self.spark, man)
-        if source is None:
-            if self.path not in _WEAK_WARNED:
-                _WEAK_WARNED.add(self.path)
-                warnings.warn(
-                    "BqIndex: returning Hamming-only results because the "
-                    "original vectors are unreachable (non-file build or "
-                    "fingerprint mismatch) — pass source=<vectors df> for "
-                    "exact rescore, or rescore=0 to silence.",
-                    stacklevel=2,
-                )
-            return short.limit(int(k))
-        vec_col = man["vec_col"]
-        dist_fn = distance_for_metric(self.metric)
-        from duckdb_vss_spark.index.pq import _fetch_candidates
+            pairs, rank_type = _driver_asym_shortlist(self, q, xs, nshort), "double"
 
-        return (
-            _fetch_candidates(source, short, pairs, id_col)
-            .withColumn(dist_col, dist_fn(F.col(vec_col), q))
-            .orderBy(F.col(dist_col).asc_nulls_last(), F.col(id_col))
-            .limit(int(k))
-            .drop(vec_col)
-        )
+            def rank():
+                dot = _signed_dot_packed("sig", xs, self.dims)
+                return asym_score(dot, F.col("vnc"), q, man, F.col("vfull"))
+        else:
+            pairs, rank_type = _driver_hamming_shortlist(self, q, nshort), "int"
+
+            def rank():
+                return hamming_distance(F.col("sig"), _query_sig(q))
+        if pairs is not None:
+            short = _shortlist_frame(self.spark, pairs, id_col, "hamming", rank_type)
+        else:
+            # the shortlist rank keeps the name "hamming" for both
+            # scorings (rescore=0 callers get the raw asym score in it)
+            short = (
+                self._data_df()
+                .select(id_col, rank().alias("hamming"))
+                .orderBy(F.col("hamming").asc_nulls_last(), F.col(id_col))
+                .limit(nshort)
+            )
+        if not take:
+            return short
+        return self._rerank_one(source, q, k, pairs, short, dist_col)
 
     def knn_join(
         self,
@@ -718,14 +676,13 @@ class BqIndex(QuantizedIndex):
         queries_per_batch: int = 4096,
     ) -> DataFrame:
         """Batched multi-query BQ search, executor-side (r13 —
-        completes the family's knn_join matrix): map over the
-        *queries* DataFrame; each task scans the signature files off
-        the shared filesystem (worker-LRU ±1 sign matrices, BLAS
-        matmul scoring — the same kernel the calibration uses) and
-        keeps tie-safe running top-``take`` heaps (_bq_query_stream).
-        No driver relay: query cardinality is bounded by the cluster.
-        The no-rescore path is a single mapInPandas stage, zero
-        shuffles.
+        completes the family's knn_join matrix) through the shared
+        stream (``QuantizedIndex._stream_join``): each task scans the
+        signature files off the shared filesystem (worker-LRU ±1 sign
+        matrices, BLAS matmul scoring — the same kernel the calibration
+        uses) and keeps tie-safe running top-``take`` heaps. No driver
+        relay: query cardinality is bounded by the cluster. The
+        no-rescore path is a single mapInPandas stage, zero shuffles.
 
         ``rescore=None`` (default) exact-rescores the manifest-
         calibrated per-query shortlist against the resolved source
@@ -733,66 +690,51 @@ class BqIndex(QuantizedIndex):
         files); ``rescore=0`` returns the raw shortlist scores
         (integer Hamming for ``scoring='hamming'`` artifacts, the
         asymmetric estimator for ``'asym'``)."""
-        from duckdb_vss_spark.index import tombstones as _tomb
-        from duckdb_vss_spark.index.pq import _manifest_source
+        take, source = self._resolve(k, rescore, source)
+        return self._stream_join(
+            queries, query_vec_col, query_id_col, k, max(take, int(k)), source,
+            dist_col, rn_col, queries_per_batch, self._codec(),
+        )
 
+    def _resolve(self, k, rescore, source):
+        """BQ's re-rank decision (base._resolve_rerank): ``rescore=None``
+        means the calibrated width, and an explicit width with no
+        reachable vectors falls back to the warned shortlist."""
+        return _resolve_rerank(
+            self, rescore, source, self.default_rescore(k),
+            what="shortlist-score", param="rescore", strict=False,
+        )
+
+    def _codec(self) -> dict:
+        """The executor stream's view of the signatures
+        (``_query_stream``): one group of every query over every
+        signature file. The scorer is the SAME numpy kernel the
+        calibration uses (``_asym_scores_np``) for asym artifacts; for
+        hamming artifacts the ±1 dot is rank-identical to integer
+        Hamming (dot = dims − 2·hamming) and the emitted value IS the
+        integer Hamming distance, so ties break exactly like
+        knn_search's (hamming, id) ordering."""
         man = self.manifest
-        id_col = man["id_col"]
-        take = self.default_rescore(k) if rescore is None else max(int(rescore), int(k))
-        files = _list_parquet_files(os.path.join(self.path, "sigs"))
-        # one mask ship per EXECUTOR, not per task (VERDICT r13 #3)
-        dead = _tomb.dead_id_broadcast(self)
-        chunk = max(1, int(queries_per_batch))
-        manifest = dict(man)
+        id_col, dims, metric = man["id_col"], self.dims, self.metric
+        asym = man.get("scoring", "hamming") == "asym"
+        center = np.asarray(man["asym_center"], dtype=np.float64) if asym else None
+        rho = float(man.get("asym_rho", 1.0)) if asym else None
 
-        def stream(batches):
-            return _bq_query_stream(
-                batches, query_vec_col, query_id_col, id_col,
-                files, manifest, take, chunk, dead=dead,
-            )
+        def prepare(qmat, _lid):
+            return qmat if asym else np.where(qmat > 0, 1.0, -1.0)
 
-        qrows = queries.select(query_id_col, query_vec_col).where(
-            F.col(query_vec_col).isNotNull()
-        )
-        cand = qrows.mapInPandas(
-            stream, schema="_qid long, _id long, _dist double, _rn int"
-        ).select(
-            F.col("_qid").alias(query_id_col),
-            F.col("_id").alias(id_col),
-            F.col("_dist").alias(dist_col),
-            F.col("_rn").alias(rn_col),
-        )
-        if rescore is not None and int(rescore) <= 0:
-            return cand.where(F.col(rn_col) <= int(k))
-        if source is None:
-            source = _manifest_source(self.spark, man)
-        if source is None:
-            if self.path not in _WEAK_WARNED:
-                _WEAK_WARNED.add(self.path)
-                warnings.warn(
-                    "BqIndex: returning shortlist-score results because the "
-                    "original vectors are unreachable (non-file build or "
-                    "fingerprint mismatch) — pass source=<vectors df> for "
-                    "exact rescore, or rescore=0 to silence.",
-                    stacklevel=2,
-                )
-            return cand.where(F.col(rn_col) <= int(k))
-        from pyspark.sql import Window
+        def score(qs, signs, vn, vf):
+            s = signs.astype(np.float64)
+            if asym:
+                return _asym_scores_np(qs, s, vn, center, rho, metric, vf)
+            return (dims - qs @ s.T) / 2.0  # integer Hamming
 
-        vec_col = man["vec_col"]
-        dist_fn = distance_for_metric(self.metric)
-        qvecs = qrows.withColumnRenamed(query_vec_col, "_qvec")
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.col(dist_col).asc_nulls_last(), F.col(id_col)
-        )
-        return (
-            source.join(cand.select(query_id_col, id_col), id_col)
-            .join(qvecs, query_id_col)
-            .withColumn(dist_col, dist_fn(F.col(vec_col), F.col("_qvec")))
-            .withColumn(rn_col, F.row_number().over(w))
-            .where(F.col(rn_col) <= int(k))
-            .drop(vec_col, "_qvec")
-        )
+        return {
+            "files": {None: [f for f, _lid in self._files()]},
+            "load": lambda f: _load_sigs(f, id_col, dims, asym),
+            "prepare": prepare,
+            "score": score,
+        }
 
     def add_batch(
         self, df: DataFrame, manifest_extra: dict | None = None
@@ -808,7 +750,6 @@ class BqIndex(QuantizedIndex):
         Crash window: commits via staged_append — after a crash inside
         the rename→manifest window, rebuild."""
         from duckdb_vss_spark.index.manifest import staged_append
-        from duckdb_vss_spark.index.pq import _merge_source_fields
 
         src, n = self._batch(df)
         if n == 0:
@@ -918,7 +859,8 @@ def _load_sigs(file: str, id_col: str, dims: int, asym: bool):
     cols = [id_col, "sig"] + (["vnc", "vfull"] if asym else [])
     t = papq.read_table(file, columns=cols)
     ids = np.asarray(t[id_col].to_pylist(), dtype=np.int64)
-    words = np.asarray(t["sig"].to_pylist(), dtype=np.int64)
+    # an empty part file (add_batch of a small frame) still has 2-D words
+    words = np.asarray(t["sig"].to_pylist(), dtype=np.int64).reshape(len(ids), -(-dims // _BITS))
     signs = np.empty((len(ids), dims), dtype=np.int8)
     for b in range(dims):
         w, off = divmod(b, _BITS)
@@ -931,73 +873,6 @@ def _load_sigs(file: str, id_col: str, dims: int, asym: bool):
         signs[order],
         vn[order] if vn is not None else None,
         vf[order] if vf is not None else None,
-    )
-
-
-def _bq_query_stream(
-    batches,
-    query_vec_col: str,
-    query_id_col: str,
-    id_col: str,
-    files: list[str],
-    manifest: dict,
-    take: int,
-    chunk: int,
-    slab: int = 16384,
-    dead=None,
-):
-    """Executor-side multi-query BQ shortlist over a stream of query
-    batches (the 1-bit twin of pq._adc_query_stream; buffering shared
-    via _buffered_query_stream): per flush of ≤``chunk`` queries, scan
-    the signature files off the shared filesystem (worker-LRU, ±1 sign
-    matrices decoded once per file) and fold tie-safe running
-    top-``take`` heaps. The scorer is the SAME numpy kernel the
-    calibration uses (_asym_scores_np) for asym artifacts; for hamming
-    artifacts the ±1 dot is rank-identical to integer Hamming
-    (dot = dims − 2·hamming) and the emitted value IS the integer
-    Hamming distance, so ties break exactly like knn_search's
-    (hamming, id) ordering. No driver relay, no shuffle on the
-    no-rescore path."""
-    from duckdb_vss_spark.index.pq import _buffered_query_stream, _merge_topk
-    from duckdb_vss_spark.index.tombstones import applicable_dead, unwrap_dead
-
-    dead = unwrap_dead(dead)  # broadcast mask -> payload, worker-side
-    dims = int(manifest["dimensions"])
-    metric = manifest["metric"]
-    asym = manifest.get("scoring", "hamming") == "asym"
-    center = (
-        np.asarray(manifest["asym_center"], dtype=np.float64) if asym else None
-    )
-    rho = float(manifest.get("asym_rho", 1.0)) if asym else None
-
-    def score(qids: np.ndarray, qmat: np.ndarray):
-        nq = len(qids)
-        best_d = np.full((nq, take), np.inf)
-        best_i = np.full((nq, take), -1, dtype=np.int64)
-        qsigns = np.where(qmat > 0, 1.0, -1.0) if not asym else None
-        for file in files:
-            ids, signs, vn, vf = _load_sigs(file, id_col, dims, asym)
-            d = applicable_dead(dead, file)  # per-file epoch-bounded kills
-            if d is not None:
-                keep = ~np.isin(ids, d)
-                ids, signs = ids[keep], signs[keep]
-                vn = vn[keep] if vn is not None else None
-                vf = vf[keep] if vf is not None else None
-            for lo in range(0, len(ids), slab):
-                sl = slice(lo, lo + slab)
-                s = signs[sl].astype(np.float64)
-                if asym:
-                    d = _asym_scores_np(
-                        qmat, s, vn[sl], center, rho, metric,
-                        vf[sl] if vf is not None else None,
-                    )
-                else:
-                    d = (dims - qsigns @ s.T) / 2.0  # integer Hamming
-                best_d, best_i = _merge_topk(best_d, best_i, d, ids[sl], take)
-        return best_d, best_i
-
-    return _buffered_query_stream(
-        batches, query_vec_col, query_id_col, metric, take, chunk, score
     )
 
 
@@ -1102,7 +977,6 @@ def create_bq_index(
     - ``"hamming"`` — the r12 layout: raw sign bits, integer Hamming
       shortlist, exactly SQL-replayable (q_bq_index_knn pins
       bit-parity against the portable signature SQL)."""
-    from duckdb_vss_spark.index.pq import _source_manifest_fields
     from duckdb_vss_spark.session import check_persistence_enabled
 
     if metric not in ("l2sq", "cosine", "ip"):

@@ -48,16 +48,16 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from duckdb_vss_spark.functions.distance import distance_for_metric
 from duckdb_vss_spark.index.base import (
     IvfLists,
     _fresh_dir,
     _id_vec,
-    _list_parquet_files,
     _local_or_count,
+    _merge_source_fields,
     _norm_rows,
     _now,
     _shortlist_frame,
+    _source_manifest_fields,
     _training_sample,
     centroid_dists,
     coarse_probe,
@@ -65,15 +65,11 @@ from duckdb_vss_spark.index.base import (
 from duckdb_vss_spark.index.ivf import _calibrate_nprobe, _kmeans
 from duckdb_vss_spark.index.manifest import write_manifest
 from duckdb_vss_spark.index.pq import (
+    PqIndex,
+    _adc_block,
     _adc_scores,
-    _buffered_query_stream,
     _encode_batch,
-    _fetch_candidates,
     _load_codes,
-    _merge_source_fields,
-    _merge_topk,
-    _resolve_rerank,
-    _source_manifest_fields,
     train_pq_codebooks,
 )
 
@@ -112,102 +108,12 @@ def _assign_encode_udf(centroids: np.ndarray, books: np.ndarray, metric: str):
     return pandas_udf(enc, out_t)
 
 
-def _ivfadc_query_stream(
-    batches,
-    query_vec_col: str,
-    query_id_col: str,
-    id_col: str,
-    files_by_list: dict[int, list[str]],
-    cents: np.ndarray,
-    books: np.ndarray,
-    metric: str,
-    nprobe: int,
-    take: int,
-    chunk: int,
-    slab: int = 16384,
-    dead: np.ndarray | None = None,
-):
-    """Executor-side multi-query IVFADC over a stream of query batches
-    (the residual-PQ twin of pq._adc_query_stream; VERDICT r9 #2: the
-    old path ``collect()``ed the query set to the driver; buffering
-    shared via pq._buffered_query_stream — review r10). Per flush of
-    ≤``chunk`` queries: route each query to its ``nprobe`` nearest
-    coarse centroids, then — list by list over the UNION of probed
-    lists — load only that list's code files (worker-LRU), build the
-    residual LUT block for exactly the queries probing it (vectorized
-    over the query subset), score in ``slab``-row blocks, and fold into
-    per-query tie-safe running top-``take`` heaps. Genuine pruning is
-    preserved: a list no flush-query probes is never read. Peak memory
-    is one (|probers|, m, ksub) LUT block + one (|probers| × slab)
-    float64 block, independent of corpus size."""
-    from duckdb_vss_spark.index.tombstones import unwrap_dead
-
-    dead = unwrap_dead(dead)  # broadcast mask -> array, worker-side
-    m, ksub, dsub = books.shape
-
-    def score(qids: np.ndarray, qmat: np.ndarray):
-        nq = len(qids)
-        probes = coarse_probe(cents, qmat, nprobe)  # (nq, nprobe)
-        by_list: dict[int, list[int]] = {}
-        for qi in range(nq):
-            for lid in probes[qi]:
-                by_list.setdefault(int(lid), []).append(qi)
-        best_d = np.full((nq, take), np.inf)
-        best_i = np.full((nq, take), -1, dtype=np.int64)
-        for lid in sorted(by_list):
-            files = files_by_list.get(lid)
-            if not files:
-                continue
-            qs = np.asarray(by_list[lid], dtype=np.int64)
-            resid = qmat[qs] - cents[lid]  # (|qs|, dims)
-            luts = np.empty((len(qs), m, ksub), dtype=np.float64)
-            for j in range(m):
-                rs = resid[:, j * dsub : (j + 1) * dsub]
-                luts[:, j, :] = ((books[j][None, :, :] - rs[:, None, :]) ** 2).sum(
-                    axis=2
-                )
-            for file in files:
-                ids, codes = _load_codes(file, id_col, m)
-                if dead is not None:
-                    # tombstone mask (r13 delete_batch; r14 versioned)
-                    # — after the LRU fetch so the cached arrays stay
-                    # unmasked; resolved per file (epoch-bounded kills)
-                    from duckdb_vss_spark.index.tombstones import mask_dead
-
-                    ids, codes = mask_dead(ids, codes, dead, file)
-                for lo in range(0, len(ids), slab):
-                    arr = codes[lo : lo + slab]
-                    d = np.zeros((len(qs), len(arr)), dtype=np.float64)
-                    for j in range(m):
-                        d += luts[:, j, arr[:, j]]
-                    best_d[qs], best_i[qs] = _merge_topk(
-                        best_d[qs], best_i[qs], d, ids[lo : lo + slab], take
-                    )
-        return best_d, best_i
-
-    return _buffered_query_stream(
-        batches, query_vec_col, query_id_col, metric, take, chunk, score
-    )
-
-
-def _codes_files_by_list(codes_dir: str) -> dict[int, list[str]]:
-    """Map list_id -> its parquet files under the hive-partitioned
-    ``codes/list_id=N/`` layout (driver-side listing; file COUNT is
-    nlist-bounded, not corpus-bounded)."""
-    out: dict[int, list[str]] = {}
-    for entry in os.listdir(codes_dir):
-        if not entry.startswith("list_id="):
-            continue
-        lid = int(entry.split("=", 1)[1])
-        out[lid] = _list_parquet_files(os.path.join(codes_dir, entry))
-    return out
-
-
 class IvfPqIndex(IvfLists):
     """Handle over a built IVFADC artifact."""
 
     data_dir = "codes"
     label = "IVFPQ"
+    adc_recall = "0.73"
 
     def __init__(self, spark: SparkSession, path: str, manifest: dict):
         super().__init__(spark, path, manifest)
@@ -234,13 +140,13 @@ class IvfPqIndex(IvfLists):
         whenever the original vectors are reachable (explicit
         ``source`` or the build-time file-backed source recorded in the
         manifest); ``rerank=0`` forces ADC-only (see
-        pq._resolve_rerank, VERDICT r10 #1)."""
+        base._resolve_rerank, VERDICT r10 #1)."""
         import pandas as pd
         from pyspark.sql.functions import pandas_udf
         from pyspark.sql.types import DoubleType
 
         q, probes = self._probes(query_vec, nprobe)
-        rerank, source = _resolve_rerank(self, k, rerank, source, "IvfPqIndex", "0.73")
+        rerank, source = self._resolve(k, rerank, source)
         qn = _norm_rows(q[None, :], self.metric)[0]
 
         # per-probed-list ADC tables of the query residual; the constant
@@ -294,18 +200,7 @@ class IvfPqIndex(IvfLists):
             )
         if not rerank:
             return cand
-        if source is None:
-            raise ValueError("rerank requires the source DataFrame with original vectors")
-        vec_col = self.manifest["vec_col"]
-        dist_fn = distance_for_metric(self.metric)
-        return (
-            _fetch_candidates(source, cand, pairs, id_col)
-            .withColumn(dist_col, dist_fn(F.col(vec_col), [float(x) for x in q]))
-            .orderBy(F.col(dist_col).asc_nulls_last(), F.col(id_col))
-            .limit(int(k))
-            .drop(vec_col)
-        )
-
+        return self._rerank_one(source, q, k, pairs, cand, dist_col)
 
     def knn_join(
         self,
@@ -320,73 +215,64 @@ class IvfPqIndex(IvfLists):
         rn_col: str = "rn",
         queries_per_batch: int = 1024,
     ) -> DataFrame:
-        """Batched multi-query IVFADC, executor-side (VERDICT r9 #2:
-        the old path ``collect()``ed the query set to the driver): map
-        over the *queries* DataFrame — each task routes its flush of
-        queries to their probed lists, loads ONLY those lists' code
-        files off the shared filesystem (the partition-pruning
-        equivalent, list-granular, worker-LRU-cached), builds residual
-        LUT blocks per (flush, list) and folds tie-safe running top-k
-        heaps (``_ivfadc_query_stream``). Query cardinality is bounded
-        by the cluster, not the driver; the no-rerank path is a single
-        mapInPandas stage with NO shuffle. Optional exact re-rank
-        late-materializes candidates against ``source`` (broadcast
-        left to AQE).
+        """Batched multi-query IVFADC, executor-side (VERDICT r9 #2)
+        through the shared stream (``QuantizedIndex._stream_join``):
+        each task routes its flush of queries to their probed lists,
+        loads ONLY those lists' code files off the shared filesystem
+        (the partition-pruning equivalent, list-granular,
+        worker-LRU-cached), builds residual LUT blocks per (flush, list)
+        and folds tie-safe running top-k heaps. Query cardinality is
+        bounded by the cluster, not the driver; the no-rerank path is a
+        single mapInPandas stage with NO shuffle. Optional exact re-rank
+        late-materializes candidates against ``source``.
 
         ``rerank=None`` (the default) AUTO-reranks a 10·k shortlist
         whenever the original vectors are reachable; ``rerank=0``
-        forces ADC-only (see pq._resolve_rerank, VERDICT r10 #1)."""
-        from pyspark.sql import Window
+        forces ADC-only (see base._resolve_rerank, VERDICT r10 #1)."""
+        rerank, source = self._resolve(k, rerank, source)
+        return self._stream_join(
+            queries, query_vec_col, query_id_col, k, rerank or int(k), source,
+            dist_col, rn_col, queries_per_batch, self._codec(nprobe),
+        )
 
-        rerank, source = _resolve_rerank(self, k, rerank, source, "IvfPqIndex", "0.73")
-        books, metric = self._books, self.metric
-        cents = self._centroids
+    _resolve = PqIndex._resolve
+
+    def _codec(self, nprobe: int | None) -> dict:
+        """The executor stream's view of the residual codes
+        (``_query_stream``): each flush query routes to its ``nprobe``
+        nearest coarse centroids, and each probed list scores its files
+        against the residual LUTs (q − c_list) of exactly the queries
+        probing it."""
+        books, cents, m = self._books, self._centroids, self.m
+        _m, ksub, dsub = books.shape
         nprobe = int(nprobe or self.manifest["default_nprobe"])
         id_col = self.manifest["id_col"]
-        files_by_list = _codes_files_by_list(os.path.join(self.path, "codes"))
-        take = int(rerank) if rerank else int(k)
-        chunk = max(1, int(queries_per_batch))
-        from duckdb_vss_spark.index import tombstones as _tomb
 
-        # one mask ship per EXECUTOR, not per task (VERDICT r13 #3)
-        dead = _tomb.dead_id_broadcast(self)
+        def route(qmat):
+            by_list: dict[int, list[int]] = {}
+            for qi, lids in enumerate(coarse_probe(cents, qmat, nprobe)):
+                for lid in lids:
+                    by_list.setdefault(int(lid), []).append(qi)
+            return [(lid, np.asarray(by_list[lid], dtype=np.int64)) for lid in sorted(by_list)]
 
-        def stream(batches):
-            return _ivfadc_query_stream(
-                batches, query_vec_col, query_id_col, id_col,
-                files_by_list, cents, books, metric, nprobe, take, chunk,
-                dead=dead,
-            )
+        def prepare(qsub, lid):
+            resid = qsub - cents[lid]  # (|qs|, dims)
+            luts = np.empty((len(qsub), m, ksub), dtype=np.float64)
+            for j in range(m):
+                rs = resid[:, j * dsub : (j + 1) * dsub]
+                luts[:, j, :] = ((books[j][None, :, :] - rs[:, None, :]) ** 2).sum(axis=2)
+            return luts
 
-        qrows = queries.select(query_id_col, query_vec_col).where(
-            F.col(query_vec_col).isNotNull()
-        )
-        cand = qrows.mapInPandas(
-            stream, schema="_qid long, _id long, _dist double, _rn int"
-        ).select(
-            F.col("_qid").alias(query_id_col),
-            F.col("_id").alias(id_col),
-            F.col("_dist").alias(dist_col),
-            F.col("_rn").alias(rn_col),
-        )
-        if not rerank:
-            return cand
-        if source is None:
-            raise ValueError("rerank requires the source DataFrame with original vectors")
-        vec_col = self.manifest["vec_col"]
-        dist_fn = distance_for_metric(metric)
-        qvecs = qrows.withColumnRenamed(query_vec_col, "_qvec")
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.col(dist_col).asc_nulls_last(), F.col(id_col)
-        )
-        return (
-            source.join(cand.select(query_id_col, id_col), id_col)
-            .join(qvecs, query_id_col)
-            .withColumn(dist_col, dist_fn(F.col(vec_col), F.col("_qvec")))
-            .withColumn(rn_col, F.row_number().over(w))
-            .where(F.col(rn_col) <= int(k))
-            .drop(vec_col, "_qvec")
-        )
+        files: dict[int, list[str]] = {}  # list id -> its code files
+        for f, lid in self._files(range(self.nlist)):
+            files.setdefault(lid, []).append(f)
+        return {
+            "files": files,
+            "load": lambda f: _load_codes(f, id_col, m),
+            "prepare": prepare,
+            "score": _adc_block,
+            "route": route,
+        }
 
     def add_batch(
         self, df: DataFrame, manifest_extra: dict | None = None
@@ -534,7 +420,7 @@ def create_ivfpq_index(
         "centroids": [[float(x) for x in row] for row in centroids],
         "codebooks": [[[float(x) for x in row] for row in book] for book in books],
         # gated on the USER's plan shape, not the internal projection
-        # (ADVICE r11; see pq._source_manifest_fields)
+        # (ADVICE r11; see base._source_manifest_fields)
         **_source_manifest_fields(df),
         "created_at": _now(),
     }

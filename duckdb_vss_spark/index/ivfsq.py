@@ -43,7 +43,6 @@ from duckdb_vss_spark.index.base import (
     _shortlist_frame,
     _training_sample,
     mtime_lru,
-    probe_lists_udf,
 )
 
 __all__ = ["IvfSqIndex", "create_ivfsq_index", "load_ivfsq_index", "drop_ivfsq_index"]
@@ -108,33 +107,9 @@ class IvfSqIndex(IvfLists):
             )
         if source is None:
             return shortlist.select(id_col, dist_col).limit(int(k))
-        vec_col = self.manifest["vec_col"]
-        if pairs is not None:
-            from duckdb_vss_spark.index.artifact import _MAX_ISIN_CANDIDATES
-
-            uniq = sorted({int(i) for i, _d in pairs})
-            if len(uniq) <= _MAX_ISIN_CANDIDATES:
-                # the semi-join is id-set semantics, so a literal
-                # In-filter pushed into the source scan is exact (the
-                # HNSW r16 fetch shape); wider driver shortlists keep
-                # the broadcast semi-join against the local frame
-                fetched = source.where(F.col(id_col).isin(uniq))
-            else:
-                fetched = source.join(
-                    F.broadcast(shortlist.select(id_col)), id_col, "left_semi"
-                )
-        else:
-            fetched = source.join(
-                F.broadcast(shortlist.select(id_col)), id_col, "left_semi"
-            )
-        return (
-            fetched
-            .withColumn(dist_col, dist_fn(F.col(vec_col).cast("array<double>"), qv))
-            .orderBy(F.col(dist_col).asc_nulls_last(), F.col(id_col))
-            .limit(int(k))
-            .select(id_col, dist_col)
+        return self._rerank_one(source, q, k, pairs, shortlist, dist_col).select(
+            id_col, dist_col
         )
-
 
     def knn_join(
         self,
@@ -161,68 +136,27 @@ class IvfSqIndex(IvfLists):
         merges. Optional exact re-rank late-materializes the top
         ``rerank`` candidates per query against ``source``."""
         from duckdb_vss_spark.functions.distance import distance_for_metric
-        from duckdb_vss_spark.index.ivf import _fits_broadcast
         from duckdb_vss_spark.index.sq import sq_reconstruct
 
-        from pyspark.sql import Window
-
-        nprobe = int(nprobe or self.manifest["default_nprobe"])
-        id_col = self.manifest["id_col"]
-        metric = self.manifest["metric"]
-        probe_lists = probe_lists_udf(self._centroids, metric, nprobe)
-        probed = queries.where(F.col(query_vec_col).isNotNull()).withColumn(
-            "list_id", F.explode(probe_lists(F.col(query_vec_col)))
-        )
-        if broadcast_queries is None:
-            broadcast_queries = _fits_broadcast(
-                queries, nprobe, broadcast_budget_bytes
-            )
-        probed_side = F.broadcast(probed) if broadcast_queries else probed
         recon = sq_reconstruct(F.col("codes"), self._mins, self._maxs)
-        dist_fn = distance_for_metric(metric)
-        scored = (
-            self._data_df()
-            .join(probed_side, on="list_id", how="inner")
-            .withColumn(
-                dist_col,
-                dist_fn(recon, F.col(query_vec_col).cast("array<double>")),
-            )
+        dist = distance_for_metric(self.metric)(
+            recon, F.col(query_vec_col).cast("array<double>")
         )
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.col(dist_col).asc_nulls_last(), F.col(id_col)
-        )
-        take = int(rerank) if rerank else int(k)
-        cand = (
-            scored.withColumn(rn_col, F.row_number().over(w))
-            .where(F.col(rn_col) <= take)
-            .drop("codes", "list_id")
+        cand = self._probe_join(
+            queries, query_vec_col, query_id_col, nprobe, rerank or k, dist_col,
+            rn_col, dist, ("codes", "list_id", query_vec_col), broadcast_queries,
+            broadcast_budget_bytes,
         )
         if not rerank:
-            return cand.drop(query_vec_col)
+            return cand
         if source is None:
             raise ValueError(
                 "rerank requires the source DataFrame with original vectors"
             )
-        vec_col = self.manifest["vec_col"]
-        qvecs = queries.select(
-            query_id_col, F.col(query_vec_col).alias("_qvec")
-        ).where(F.col("_qvec").isNotNull())
-        w2 = Window.partitionBy(query_id_col).orderBy(
-            F.col(dist_col).asc_nulls_last(), F.col(id_col)
-        )
-        return (
-            source.join(cand.select(query_id_col, id_col), id_col)
-            .join(qvecs, query_id_col)
-            .withColumn(
-                dist_col,
-                dist_fn(
-                    F.col(vec_col).cast("array<double>"),
-                    F.col("_qvec").cast("array<double>"),
-                ),
-            )
-            .withColumn(rn_col, F.row_number().over(w2))
-            .where(F.col(rn_col) <= int(k))
-            .drop(vec_col, "_qvec")
+        # cand is hash-partitioned by query already: distinct adds no shuffle
+        pairs = cand.select(query_id_col, self.manifest["id_col"]).distinct()
+        return self._rerank_join(
+            queries, query_vec_col, query_id_col, pairs, source, k, dist_col, rn_col
         )
 
     def add_batch(

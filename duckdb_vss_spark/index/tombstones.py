@@ -120,10 +120,16 @@ def dead_mask_payload(index) -> dict | None:
         return None
     id_col = index.manifest["id_col"]
     rows = t.select(id_col, "__epoch_lt").collect()
-    if not rows:
+    return _payload(index, [r[0] for r in rows], [r[1] for r in rows])
+
+
+def _payload(index, ids, lts) -> dict | None:
+    """The mask payload of (id, epoch bound) tombstone records, or None
+    when there are none."""
+    if not len(ids):
         return None
-    ids = np.fromiter((r[0] for r in rows), dtype=np.int64, count=len(rows))
-    lts = np.fromiter((r[1] for r in rows), dtype=np.int64, count=len(rows))
+    ids = np.asarray(ids, dtype=np.int64)
+    lts = np.asarray(lts, dtype=np.int64)
     order = np.argsort(ids)
     ids, lts = ids[order], lts[order]
     if bool((lts >= FULL_KILL).all()):
@@ -190,19 +196,7 @@ def dead_mask_payload_local(index):
                 )
             else:
                 lts_l.extend(FULL_KILL for _ in range(t.num_rows))
-        if not ids_l:
-            return None
-        ids = np.asarray(ids_l, dtype=np.int64)
-        lts = np.asarray(lts_l, dtype=np.int64)
-        order = np.argsort(ids)
-        ids, lts = ids[order], lts[order]
-        if bool((lts >= FULL_KILL).all()):
-            lts = None  # the common un-versioned case
-        return {
-            "ids": ids,
-            "lts": lts,
-            "file_epochs": dict(index.manifest.get("file_epochs") or {}),
-        }
+        return _payload(index, ids_l, lts_l)
     except Exception:  # noqa: BLE001 — remote FS: let Spark read it
         return UNREADABLE
 
@@ -293,20 +287,6 @@ def filter_dead(index, df: DataFrame, id_col: str | None = None) -> DataFrame:
         "left_anti",
     )
     return out.drop("__fname", "__fepoch")
-
-
-def mask_dead(
-    ids: np.ndarray, rows: np.ndarray, dead, file: str | None = None
-):
-    """Worker-side twin of filter_dead for the mapInPandas query
-    streams: drop the rows whose id is tombstoned for this data file.
-    ``dead`` is a plain sorted id array or a dead_mask_payload dict
-    (versioned kills resolve against the file's append epoch)."""
-    d = applicable_dead(dead, file)
-    if d is None:
-        return ids, rows
-    keep = ~np.isin(ids, d, assume_unique=False)
-    return ids[keep], rows[keep]
 
 
 def live_count(manifest: dict) -> int:

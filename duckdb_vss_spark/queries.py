@@ -1886,11 +1886,11 @@ _KNN_JOIN_ORACLE = """
 @register_extra("q_pq_knn_join", _KNN_JOIN_ORACLE)
 def q_pq_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-query PQ ADC join through the EXECUTOR-SIDE query stream
-    (index/pq._adc_query_stream, wired r10 per VERDICT r9 #2): the
-    query set flows as a DataFrame into mapInPandas — never collected
-    to the driver — each task building its flush's LUT tensors and
-    folding tie-safe running top-k heaps over the worker-cached codes
-    files. FULL-WIDTH exact re-rank makes the result exact by
+    (index/base._query_stream, the one stream every quantized knn_join
+    runs; wired r10 per VERDICT r9 #2): the query set flows as a
+    DataFrame into mapInPandas — never collected to the driver — each
+    task building its flush's LUT tensors and folding tie-safe running
+    top-k heaps over the worker-cached codes files. FULL-WIDTH exact re-rank makes the result exact by
     construction, so the brute-force window SQL is a strict oracle."""
     idx = _get_pq_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1909,11 +1909,11 @@ def q_pq_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register_extra("q_bq_knn_join", _KNN_JOIN_ORACLE)
 def q_bq_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-query BQ join through the executor-side query stream
-    (index/bq._bq_query_stream, r13 — completes the family's knn_join
-    matrix): the query set flows as a DataFrame into mapInPandas,
-    each task scanning the worker-cached ±1 sign matrices with the
-    SAME numpy kernel the calibration uses and folding tie-safe
-    running top-k heaps. FULL-WIDTH exact re-rank makes the result
+    (index/base._query_stream with the BQ codec, r13 — completes the
+    family's knn_join matrix): the query set flows as a DataFrame into
+    mapInPandas, each task scanning the worker-cached ±1 sign matrices
+    with the SAME numpy kernel the calibration uses and folding
+    tie-safe running top-k heaps. FULL-WIDTH exact re-rank makes the result
     exact by construction, so the brute-force window SQL is a strict
     oracle; calibrated default-shortlist recall is pinned in
     tests/test_bq.py and bench."""
@@ -1957,7 +1957,8 @@ def q_ivfsq_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register_extra("q_ivfpq_knn_join", _KNN_JOIN_ORACLE)
 def q_ivfpq_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-query IVFADC join through the executor-side query stream
-    (index/ivfpq._ivfadc_query_stream, wired r10 per VERDICT r9 #2):
+    (index/base._query_stream with the IVFADC codec's list routing,
+    wired r10 per VERDICT r9 #2):
     per-flush coarse routing, list-granular pruned reads of only the
     probed lists' code files, residual LUT blocks vectorized over each
     list's probing queries. Full probe + FULL-WIDTH re-rank keep the

@@ -438,3 +438,27 @@ def test_build_local_and_cluster_paths_bit_identical(spark, emb, tmp_path):
         for r in spark.read.parquet(str(tmp_path / "clu" / "sigs")).collect()
     }
     assert rows_a == rows_b  # exact equality, norms included
+
+
+def test_bq_knn_join_after_add_batch_with_empty_part_file(spark, emb, tmp_path):
+    """add_batch of a one-row in-memory frame leaves an empty signature
+    part file beside the row's; the executor stream must score past it
+    (it raised IndexError on the empty file's 1-D word array)."""
+    import glob
+
+    import pyarrow.parquet as papq
+    from pyspark.sql import functions as F
+
+    from duckdb_vss_spark.index.bq import create_bq_index
+
+    nn = emb.where(F.col("embedding").isNotNull()).select("vec_id", "embedding")
+    ix = create_bq_index(spark, nn, "embedding", "vec_id", str(tmp_path / "e"))
+    v7 = nn.where(F.col("vec_id") == 7).first()["embedding"]
+    ix = ix.add_batch(spark.createDataFrame([(10**6, list(v7))], nn.schema))
+    files = glob.glob(f"{ix.path}/sigs/*.parquet")
+    assert any(papq.ParquetFile(f).metadata.num_rows == 0 for f in files)
+    qs = nn.where(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
+    )
+    rows = ix.knn_join(qs, "qv", 5, "qid", rescore=0).collect()
+    assert len(rows) == 5 * qs.count()

@@ -134,7 +134,7 @@ def test_knn_join_broadcast_guard(spark, emb, ivf):
     """broadcast_queries=None auto-decides from Catalyst's size
     estimate; past the budget the join degrades to a shuffle join with
     identical results (never a forced broadcast that could OOM)."""
-    from duckdb_vss_spark.index.ivf import _fits_broadcast
+    from duckdb_vss_spark.index.base import _fits_broadcast
 
     q = emb.where(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")

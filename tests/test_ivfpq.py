@@ -188,41 +188,33 @@ def test_knn_join_stream_full_probe_matches_single_query(spark, ivfpq, emb):
         )
 
 
-def test_knn_join_stream_prunes_unprobed_lists(ivfpq, emb, monkeypatch):
+def test_knn_join_stream_prunes_unprobed_lists(ivfpq, emb):
     """A list no query probes must never be READ: nprobe=1 with one
     query loads at most 1 list's files (the stream's pruning is
     list-granular file access, the mapInPandas counterpart of the
-    single-query scan's PartitionFilters)."""
-    import duckdb_vss_spark.index.pq as pqmod
-
-    seen = []
-    orig = pqmod._load_codes
-
-    def spy(file, id_col, m):
-        seen.append(file)
-        return orig(file, id_col, m)
-
-    monkeypatch.setattr(pqmod, "_load_codes", spy)
-    import duckdb_vss_spark.index.ivfpq as ivfpqmod
-    monkeypatch.setattr(ivfpqmod, "_load_codes", spy)
-
-    from duckdb_vss_spark.index.ivfpq import _ivfadc_query_stream, _codes_files_by_list
+    single-query scan's PartitionFilters). Driven through the shared
+    executor stream with the IVFADC codec knn_join hands it."""
     import os as _os
+
     import pandas as pd
 
-    files_by_list = _codes_files_by_list(_os.path.join(ivfpq.path, "codes"))
+    from duckdb_vss_spark.index.base import _query_stream
+
+    seen = []
+    codec = ivfpq._codec(1)
+    load = codec["load"]
+
+    def spy(file):
+        seen.append(file)
+        return load(file)
+
+    codec["load"] = spy
     qv = np.asarray(
         emb.where(F.col("vec_id") == 7).first()["embedding"], dtype=np.float64
     )
     batches = [pd.DataFrame({"qid": [7], "qv": [qv]})]
-    list(
-        _ivfadc_query_stream(
-            batches, "qv", "qid", "vec_id", files_by_list,
-            np.asarray(ivfpq.manifest["centroids"], dtype=np.float64),
-            np.asarray(ivfpq.manifest["codebooks"], dtype=np.float64),
-            ivfpq.metric, 1, 5, 64,
-        )
-    )
+    out = list(_query_stream(batches, "qv", "qid", ivfpq.metric, 5, 64, **codec))
+    assert sum(len(o) for o in out) == 5
     probed_dirs = {_os.path.dirname(f) for f in seen}
     assert len(probed_dirs) == 1
 

@@ -3,7 +3,8 @@
 Generated pairs of float32 or float64 vectors of 1–130 dims (crossing
 numpy's 8-way unrolled and 128-element pairwise-summation blocks, where
 a BLAS dot, einsum or ``sum`` drifts from a sequential fold), with NaN,
-±inf, signed-zero and zero-vector elements and NULL rows. Each property
+±inf, signed-zero and zero-vector elements, NULL elements and NULL
+rows. Each property
 compares against the native Column expressions of
 functions/distance.py, collected from Spark:
 
@@ -46,11 +47,19 @@ def _elements(width):
     return st.one_of(plain, plain, plain, wide, special)
 
 
+def _null_element(draw, vec):
+    """``vec`` with one element set to NULL, with probability 1/8."""
+    if vec is None or draw(st.integers(0, 7)):
+        return vec
+    i = draw(st.integers(0, len(vec) - 1))
+    return vec[:i] + [None] + vec[i + 1 :]
+
+
 @st.composite
 def _pairs(draw, mismatch=False):
     """(element type, rows of (a, b)); a side is NULL with probability
-    1/8, and the two vectors of a row share one width unless
-    ``mismatch``."""
+    1/8, a side holds a NULL element with probability 1/8, and the two
+    vectors of a row share one width unless ``mismatch``."""
     width = draw(st.sampled_from([32, 64]))
     el = _elements(width)
     rows = []
@@ -60,6 +69,7 @@ def _pairs(draw, mismatch=False):
         zero = draw(st.integers(0, 7)) == 0
         a = [0.0] * d if zero else draw(st.lists(el, min_size=d, max_size=d))
         b = draw(st.lists(el, min_size=db, max_size=db))
+        a, b = _null_element(draw, a), _null_element(draw, b)
         if not mismatch:
             a = None if draw(st.integers(0, 7)) == 0 else a
             b = None if draw(st.integers(0, 7)) == 0 else b
@@ -110,6 +120,24 @@ def test_kernels_and_sql_functions_equal_native(sql_spark, case):
     for i, want in enumerate(native):
         for j, name in enumerate(NAMES):
             assert _same(sql[i][j], want[j]), (name, i, sql[i][j], want[j])
+
+
+def test_null_element_is_null_on_every_path(sql_spark):
+    """A NULL element makes the row NULL on the native Column path, the
+    kernel and the SQL-registered functions alike (it used to reach the
+    SQL kernel as NaN: array_distance NaN, array_cosine_similarity
+    −1.0). DuckDB raises on a NULL element instead."""
+    rows = [([1.0, None], [1.0, 2.0]), ([1.0, 2.0], [None, 2.0])]
+    df = _frame(sql_spark, "double", rows)
+    assert all(v is None for r in _native(df) for v in r)
+    for name in NAMES:
+        _vals, null = kernels.evaluate_rows(name, [r[0] for r in rows], [r[1] for r in rows])
+        assert null.all(), name
+    df.createOrReplaceTempView("kernel_null_elements")
+    sql = sql_spark.sql(
+        "SELECT " + ", ".join(f"{n}(a, b)" for n in NAMES) + " FROM kernel_null_elements"
+    ).collect()
+    assert all(v is None for r in sql for v in r)
 
 
 @_settings(6)

@@ -327,7 +327,7 @@ def test_fingerprint_invalidated_by_overwrite(spark, tmp_path):
     _manifest_source re-validates before every use."""
     import numpy as np
 
-    from duckdb_vss_spark.index.pq import _manifest_source
+    from duckdb_vss_spark.index.base import _manifest_source
 
     rng = np.random.default_rng(3)
     src_path = str(tmp_path / "vecs")
@@ -451,7 +451,7 @@ def test_legacy_fingerprintless_manifest_refuses(spark, tmp_path):
     import pytest as _pt
 
     from duckdb_vss_spark.index import load_pq_index
-    from duckdb_vss_spark.index.pq import LegacyManifestError, _manifest_source
+    from duckdb_vss_spark.index.base import LegacyManifestError, _manifest_source
 
     rng = np.random.default_rng(11)
     src_path = str(tmp_path / "vecs")

@@ -97,7 +97,8 @@ def test_pq_tombstoned_and_duplicates(spark, emb, qv, tmp_path):
     dead = {r["vec_id"] for r in emb.limit(5).collect()}
     assert not ({i for i, _d in got} & dead), "tombstoned id leaked"
     # duplicate re-added id: BOTH physical copies must reach the
-    # shortlist and the rerank join (the r13 duplicate-id caveat)
+    # shortlist (the r13 duplicate-id caveat); the re-rank fetches the
+    # id's source row once on both routes
     row11 = emb.where(F.col("vec_id") == 11)
     ix = ix.add_batch(row11)
     short = _assert_bit_identical(

@@ -1,13 +1,11 @@
-"""CI gate for the extra (non-driver-declared) query registry.
+"""CI gate for every registered query: the declared rows
+(``queries()``, the 50-row slice an external driver reads) and the
+extra rows (``extra_queries()``).
 
-The driver's CORRECTNESS window holds 50 rows, so queries rotate
-between the declared and extra registries each round (the explicit
-queries._DECLARED list). The driver only verifies the declared half; this gate
-enforces the extra half's oracles in-repo — whatever currently lives in
-``extra_queries()`` must match its DuckDB oracle at sf0.001 with the
-same row-count + columns + order-insensitive exact-value compare the
-driver applies (ADVICE r4: extras' checks must be enforced, not
-best-effort)."""
+Whatever lives in either registry must match its DuckDB oracle at
+sf0.001 with the same row-count + columns + order-insensitive
+exact-value compare the driver applies (ADVICE r4: the checks must be
+enforced, not best-effort)."""
 
 import os
 import sys
@@ -25,12 +23,12 @@ SF = "/root/testdata/sf0.001"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
-def _extra_items():
+def _registered_items():
     from duckdb_vss_spark import queries as qmod
     import duckdb_vss_spark.queries_pipeline  # noqa: F401 — populates registries
 
-    qs = qmod.extra_queries()
-    oracles = qmod.extra_oracle_sql()
+    qs = {**qmod.queries(), **qmod.extra_queries()}
+    oracles = {**qmod.oracle_sql(), **qmod.extra_oracle_sql()}
     return [(name, qs[name], oracles.get(name)) for name in qs]
 
 
@@ -45,7 +43,7 @@ def oracle_con():
     con.close()
 
 
-@pytest.mark.parametrize("name,fn,oracle", _extra_items(), ids=lambda p: p if isinstance(p, str) else "")
+@pytest.mark.parametrize("name,fn,oracle", _registered_items(), ids=lambda p: p if isinstance(p, str) else "")
 def test_extra_query_matches_oracle(spark, oracle_con, name, fn, oracle):
     if name == "q_reference_slt" and slt.missing_reference_scripts():
         pytest.skip(
