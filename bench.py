@@ -1081,177 +1081,7 @@ def main() -> None:
             lambda: embedding_neardup_lsh(emb, "embedding", "vec_id", 0.4).count(),
         )
 
-    # -- ANN recall@10 vs exact brute force (VERDICT r5 #4) ---------------
-    # Speed without a recall number is half a benchmark. Reference
-    # quality anchor: >0.9 recall@10 in the M=16, ef=64-128 regime
-    # (BASELINE.md; usearch defaults). Exact top-10 computed driver-side
-    # (sf0.1 embeddings are driver-sized); indexes searched at DEFAULTS.
-    recall: dict[str, float] = {}
-
-    def _recall_section():
-        import numpy as np
-
-        rows = emb.select("vec_id", "embedding").collect()
-        ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-        mat = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
-        qmask = ids % 40 == 0
-        q_ids = ids[qmask]
-        qm = mat[qmask]
-        d = ((qm[:, None, :] - mat[None, :, :]) ** 2).sum(-1)
-        exact = {
-            int(q): set(ids[np.argsort(dq, kind="stable")[:10]].tolist())
-            for q, dq in zip(q_ids, d)
-        }
-        qdf10 = emb.where(F.col("vec_id") % 40 == 0).select(
-            F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-        )
-
-        def measure(out_df):
-            got: dict[int, set] = {}
-            for r in out_df.select("qid", "vec_id").collect():
-                got.setdefault(r["qid"], set()).add(r["vec_id"])
-            hits = sum(len(got.get(q, set()) & exact[q]) for q in exact)
-            return round(hits / (10 * len(exact)), 4)
-
-        if "i" in idx:
-            recall["hnsw_knn@10"] = measure(
-                idx["i"].knn_join(
-                    qdf10, emb.select("vec_id", "embedding"), "qvec", 10, "qid"
-                )
-            )
-        if "i" in ivf:
-            recall["ivf_knn@10"] = measure(ivf["i"].knn_join(qdf10, "qvec", 10, "qid"))
-            # second operating point: probe half the lists (the knob a
-            # user turns when default recall is too low; latency scales
-            # with probed-list fraction, so this is the honest tradeoff
-            # curve, not a cooked number)
-            recall["ivf_knn@10_probe_3q"] = measure(
-                ivf["i"].knn_join(
-                    qdf10, "qvec", 10, "qid",
-                    nprobe=max(1, 3 * ivf["i"].nlist // 4),
-                )
-            )
-        if "i" in ivfpq:
-            # IVFADC at the DEFAULT signature (r11: auto-rerank over a
-            # 10*k shortlist via the manifest-recorded source — the
-            # shipped recall) plus the honest ADC-only number at
-            # rerank=0 (partial-probe + residual-quantization loss)
-            sub = list(exact)[:16]
-            hits = hits_adc = 0
-            for qq in sub:
-                qvq = [float(x) for x in mat[ids == qq][0]]
-                got = {r["vec_id"] for r in ivfpq["i"].knn_search(qvq, 10).collect()}
-                hits += len(got & exact[qq])
-                got_adc = {
-                    r["vec_id"]
-                    for r in ivfpq["i"].knn_search(qvq, 10, rerank=0).collect()
-                }
-                hits_adc += len(got_adc & exact[qq])
-            recall["ivfpq_knn@10"] = round(hits / (10 * len(sub)), 4)
-            recall["ivfpq_adc@10"] = round(hits_adc / (10 * len(sub)), 4)
-            # with exact re-rank over the ADC shortlist (the production
-            # configuration): compression loss disappears, leaving only
-            # partial-probe loss
-            hits_rr = 0
-            for qq in sub:
-                qvq = [float(x) for x in mat[ids == qq][0]]
-                got = {
-                    r["vec_id"]
-                    for r in ivfpq["i"]
-                    .knn_search(
-                        qvq, 10, nprobe=max(1, 3 * ivfpq["i"].nlist // 4),
-                        rerank=200, source=emb,
-                    )
-                    .collect()
-                }
-                hits_rr += len(got & exact[qq])
-            recall["ivfpq_rerank@10_probe_3q"] = round(hits_rr / (10 * len(sub)), 4)
-        if "i" in pq:
-            # DEFAULT signature (r11: auto-rerank) + honest ADC-only
-            # compression-loss number at explicit rerank=0
-            recall["pq_knn@10"] = measure(pq["i"].knn_join(qdf10, "qvec", 10, "qid"))
-            recall["pq_adc@10"] = measure(
-                pq["i"].knn_join(qdf10, "qvec", 10, "qid", rerank=0)
-            )
-            recall["pq_rerank@10"] = measure(
-                pq["i"].knn_join(
-                    qdf10, "qvec", 10, "qid",
-                    rerank=max(250, emb.count() // 4), source=emb,
-                )
-            )
-        # SQ8: per-dim uint8 quantization (r7) — ADC-only recall, no
-        # rerank; completes the quantizer recall table
-        from duckdb_vss_spark.index import sq_knn, train_sq
-
-        mins, maxs = train_sq(emb, "embedding")
-        sub = list(exact)[:16]
-        hits = 0
-        for qq in sub:
-            qvq = [float(x) for x in mat[ids == qq][0]]
-            got = {
-                r["vec_id"]
-                for r in sq_knn(
-                    emb, "embedding", "vec_id", qvq, 10, mins=mins, maxs=maxs
-                ).collect()
-            }
-            hits += len(got & exact[qq])
-        recall["sq_knn@10"] = round(hits / (10 * len(sub)), 4)
-        # BQ: 1-bit sign signatures + exact rescore (r11) — completes
-        # the compression-recall curve. bq_knn@10 is the DEFAULT call
-        # signature (r12: sample-calibrated shortlist, VERDICT r11 #1);
-        # bq_r100@10 keeps the honest fixed-100-shortlist number.
-        from duckdb_vss_spark.index import bq_knn
-
-        sub = list(exact)[:16]
-        hits = hits_r100 = 0
-        for qq in sub:
-            qvq = [float(x) for x in mat[ids == qq][0]]
-            got = {
-                r["vec_id"]
-                for r in bq_knn(
-                    emb.select("vec_id", "embedding"), "embedding", "vec_id",
-                    qvq, 10,
-                ).collect()
-            }
-            got_r100 = {
-                r["vec_id"]
-                for r in bq_knn(
-                    emb.select("vec_id", "embedding"), "embedding", "vec_id",
-                    qvq, 10, rescore=100,
-                ).collect()
-            }
-            hits += len(got & exact[qq])
-            hits_r100 += len(got_r100 & exact[qq])
-        recall["bq_knn@10"] = round(hits / (10 * len(sub)), 4)
-        recall["bq_r100@10"] = round(hits_r100 / (10 * len(sub)), 4)
-        # BQ asym artifact (r13, VERDICT r12 #7): same 1-bit storage,
-        # asymmetric full-precision-query estimator — the calibrated
-        # shortlist is the headline (≥2× smaller than hamming at the
-        # same target), recorded next to its recall at the DEFAULT
-        # signature. Reuses the bench build when present.
-        import os as _os
-
-        from duckdb_vss_spark.index import create_bq_index, load_bq_index
-
-        bqa_path = "/tmp/bench_bq_idx"
-        if _os.path.exists(_os.path.join(bqa_path, "manifest.json")):
-            bqa = load_bq_index(spark, bqa_path)
-        else:
-            bqa = create_bq_index(
-                spark, emb.select("vec_id", "embedding"), "embedding",
-                "vec_id", bqa_path, overwrite=True,
-            )
-        if bqa.manifest.get("scoring") == "asym":
-            hits_a = 0
-            for qq in sub:
-                qvq = [float(x) for x in mat[ids == qq][0]]
-                got_a = {r["vec_id"] for r in bqa.knn_search(qvq, 10).collect()}
-                hits_a += len(got_a & exact[qq])
-            recall["bq_asym@10"] = round(hits_a / (10 * len(sub)), 4)
-            recall["bq_asym_rescore"] = bqa.default_rescore(10)
-
-    if emb is not None:
-        section("recall", _recall_section)
+    # the quantized recall@10 table lives in tests/test_quantized_recall.py
 
     # -- multi-row-group scale point (VERDICT r16 #3) ----------------------
     # Every sf0.1 base table is ONE parquet file with ONE row group, so
@@ -1401,8 +1231,6 @@ def main() -> None:
         "job_floor": round(floor, 3),
         "sf": sf,
     }
-    if recall:
-        out["recall"] = recall
     if mrg:
         out["scale_mrg"] = mrg
     if scale8:
@@ -1479,7 +1307,7 @@ def main() -> None:
     compact["queries"] = {k: timings[k] for k in headline if k in timings}
     while len(json.dumps(compact)) > budget and compact["queries"]:
         compact["queries"].popitem()
-    for key, extra in (("recall", recall), ("scale_mrg", mrg), ("scale8", scale8)):
+    for key, extra in (("scale_mrg", mrg), ("scale8", scale8)):
         if not extra:
             continue
         if len(json.dumps({**compact, key: extra})) <= budget:

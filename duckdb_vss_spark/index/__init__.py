@@ -47,6 +47,18 @@ from duckdb_vss_spark.index.bq import (  # noqa: F401
     load_bq_index,
 )
 
+# the one family table: CREATE INDEX ... USING <family> (plans/rewrite.py,
+# IVFADC aliasing IVFPQ) and streaming_index_add's ``index_kind`` read
+# each class's ``create``/``load``, ``ddl_options`` and ``data_dir``
+INDEX_FAMILIES = {
+    "hnsw": HnswIndex,
+    "ivf": IvfIndex,
+    "pq": PqIndex,
+    "ivfpq": IvfPqIndex,
+    "ivfsq": IvfSqIndex,
+    "bq": BqIndex,
+}
+
 
 def load_any_index(spark, path: str, allow_pending: bool = False):
     """Load an artifact of ANY family by sniffing its manifest (r13):

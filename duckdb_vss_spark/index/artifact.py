@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from duckdb_vss_spark.functions.distance import distance_for_metric
+from duckdb_vss_spark.index import base as _base
 from duckdb_vss_spark.index.base import _MAX_ISIN_CANDIDATES, _driver_probe_budget, mtime_lru
 from duckdb_vss_spark.index.manifest import write_manifest
 from duckdb_vss_spark.index.tombstones import tombstones_df
@@ -415,10 +416,25 @@ def _validate_options(metric: str, ef_construction: int, ef_search: int, m: int,
 class HnswIndex:
     """Handle over a built index artifact."""
 
+    # the family table's view (index/__init__.py): CREATE INDEX options
+    # and their types; no quantized data dir (add_batch carries its own
+    # shard-count compaction trigger)
+    ddl_options = {"m": int, "m0": int, "ef_construction": int}
+    data_dir = None
+
     def __init__(self, spark: SparkSession, path: str, manifest: dict):
         self.spark = spark
         self.path = path
         self.manifest = manifest
+
+    @classmethod
+    def load(cls, spark: SparkSession, path: str) -> "HnswIndex":
+        with open(os.path.join(path, "manifest.json")) as f:
+            return cls(spark, path, json.load(f))
+
+    @staticmethod
+    def create(*args, **kwargs) -> "HnswIndex":
+        return create_hnsw_index(*args, **kwargs)
 
     # convenience accessors
     @property
@@ -915,7 +931,6 @@ class HnswIndex:
         self,
         df: DataFrame,
         num_partitions: int | None = None,
-        driver_build_max_bytes: int = 4 << 20,
         manifest_extra: dict | None = None,
         auto_compact_shards: int | None = None,
     ) -> "HnswIndex":
@@ -969,10 +984,10 @@ class HnswIndex:
 
         from duckdb_vss_spark.sources.layout import collect_gate_bytes
 
-        est = collect_gate_bytes(src, bound=driver_build_max_bytes)
+        bound = _base.DRIVER_BUILD_MAX_BYTES
         local_rows = None
         total = None
-        if 0 <= est <= driver_build_max_bytes:
+        if 0 <= collect_gate_bytes(src, bound=bound) <= bound:
             local_rows = src.collect()
             total = len(local_rows)
         elif num_partitions is None:
@@ -1402,13 +1417,12 @@ def create_hnsw_index(
     ef_search: int = DEFAULT_EF_SEARCH,
     num_partitions: int | None = None,
     overwrite: bool = False,
-    driver_build_max_bytes: int = 4 << 20,
 ) -> HnswIndex:
     """CREATE INDEX ... USING HNSW (vec_col) WITH (metric, m, m0,
     ef_construction) — as a bulk Spark job (SURVEY §3-A Spark shape).
 
-    Sources whose file scan is at most ``driver_build_max_bytes``
-    (default 4 MiB ≈ 16k 64-d float vectors) build IN-PROCESS on the
+    Sources whose file scan is at most ``base.DRIVER_BUILD_MAX_BYTES``
+    (4 MiB ≈ 16k 64-d float vectors) build IN-PROCESS on the
     driver instead: one bounded collect, the same partition sizing and
     graph seeds, no scheduler/codegen round-trips — a cluster job over
     half a megabyte of vectors pays ~2 s of fixed cost for ~0.1 s of
@@ -1434,10 +1448,10 @@ def create_hnsw_index(
 
     # gate on max(compressed, footer-uncompressed) size: RLE-heavy
     # columns can decompress far past their on-disk bytes (ADVICE r10)
-    est = collect_gate_bytes(src, bound=driver_build_max_bytes)
+    bound = _base.DRIVER_BUILD_MAX_BYTES
     local_rows = None
     total = None
-    if 0 <= est <= driver_build_max_bytes:
+    if 0 <= collect_gate_bytes(src, bound=bound) <= bound:
         local_rows = src.collect()  # bounded by the gate
         total = len(local_rows)
         if dims is None:
@@ -1525,9 +1539,7 @@ def _commit_manifest(
     return HnswIndex(spark, path, manifest)
 
 
-def load_index(spark: SparkSession, path: str) -> HnswIndex:
-    with open(os.path.join(path, "manifest.json")) as f:
-        return HnswIndex(spark, path, json.load(f))
+load_index = HnswIndex.load
 
 
 def drop_index(path: str) -> None:

@@ -18,8 +18,13 @@ and gets the rest from here.
   list assignment at build, single-query probes and the knn_join probe
   UDF all rank centroids with the same arithmetic.
 - **One handle base** (``QuantizedIndex``): manifest fields, the
-  tombstone-filtered data frame, ``delete_batch``, ``compact``, the
-  add_batch commit, ``load`` and ``drop``.
+  tombstone-filtered data frame, ``delete_batch``, ``compact``,
+  ``load`` and ``drop``.
+- **One build path**: one ``create`` skeleton (``_create``: the
+  local-or-count gate, the codec's training, one driver-local pyarrow
+  writer or the cluster write, footer row counts, one manifest
+  header), one ``add_batch`` and one ``rebuild`` replaying ``create``
+  from the manifest.
 - **One query path**: the re-rank source decision
   (``_resolve_rerank`` over the fingerprinted build-time source), one
   executor top-k stream (``_query_stream``) behind every quantized
@@ -33,6 +38,7 @@ from __future__ import annotations
 import functools
 import json
 import logging
+import math
 import os
 import shutil
 import time
@@ -135,6 +141,34 @@ def mtime_lru(maxsize: int):
     return wrap
 
 
+# mtime-keyed LRU of decoded list files for repeated single-query
+# searches on gate-small IVF and IVF×SQ artifacts (their face of
+# bq._load_sigs)
+@mtime_lru(32)
+def _load_matrix(file: str, id_col: str, col: str, dims: int, dtype):
+    """(ids, ``dtype`` (n, dims) matrix of ``col``) for one inverted-list
+    data file — the IVF vectors as float64, the IVF×SQ codes as uint8 —
+    or None when the stored shape cannot take the driver fold: NULL
+    elements, ragged rows, or non-float vectors keep Spark's
+    NULL/size-mismatch semantics on the distributed scan."""
+    import pyarrow.parquet as papq
+
+    t = papq.read_table(file, columns=[id_col, col])
+    ids = np.asarray(t[id_col].to_pylist(), dtype=np.int64)
+    arr = t[col].combine_chunks()
+    if arr.null_count:
+        return None
+    flat = arr.flatten()
+    if flat.null_count or len(flat) != len(ids) * dims:
+        return None
+    vals = flat.to_numpy(zero_copy_only=False)
+    if dtype is np.float64 and vals.dtype.kind != "f":
+        return None
+    if len(ids) and not bool((np.diff(np.asarray(arr.offsets)) == dims).all()):
+        return None  # uniform total length but ragged rows
+    return ids, vals.astype(dtype, copy=False).reshape(len(ids), dims)
+
+
 def _norm_rows(mat: np.ndarray, metric: str) -> np.ndarray:
     """For the cosine metric, centroid geometry lives on the unit sphere
     (spherical k-means): L2-normalize rows so L2-argmin ≡ cosine-argmax.
@@ -164,19 +198,29 @@ def coarse_probe(centroids: np.ndarray, mat: np.ndarray, nprobe: int) -> np.ndar
     return np.argsort(d, axis=1, kind="stable")[:, : int(nprobe)]
 
 
+def _batch_udf(fn, schema: str):
+    """A pandas UDF over a vector column: ``fn`` maps each Arrow batch's
+    float64 row matrix to one output column, or to several (a dict, for
+    a struct ``schema``) — the cluster twin of a family's numpy encoder
+    or probe, so both paths run one kernel and agree bit for bit."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    def run(v):
+        out = fn(np.stack([np.asarray(x, dtype=np.float64) for x in v]))
+        return pd.DataFrame(out) if isinstance(out, dict) else pd.Series(out)
+
+    return pandas_udf(run, schema)
+
+
 def probe_lists_udf(centroids: np.ndarray, metric: str, nprobe: int):
     """The knn_join probe: a pandas UDF mapping each query vector to its
     ``nprobe`` nearest lists (``array<int>``), for an explode + equi-join
     on ``list_id``."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    def probe(v):
-        mat = _norm_rows(np.stack([np.asarray(x, dtype=np.float64) for x in v]), metric)
-        return pd.Series(list(coarse_probe(centroids, mat, nprobe).astype(np.int32)))
-
-    return pandas_udf(probe, ArrayType(IntegerType()))
+    return _batch_udf(
+        lambda mat: list(coarse_probe(centroids, _norm_rows(mat, metric), nprobe).astype(np.int32)),
+        "array<int>",
+    )
 
 
 def _id_vec(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -185,47 +229,6 @@ def _id_vec(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     return df.select(
         F.col(id_col).cast("long").alias(id_col), F.col(vec_col).alias(vec_col)
     ).where(F.col(vec_col).isNotNull())
-
-
-def _count_and_dims(src: DataFrame, vec_col: str, what: str) -> tuple[int, int]:
-    """Row count and vector width of a NULL-filtered source in ONE
-    aggregate job (the separate count()/first() probes each cost a
-    driver round-trip — ~0.2 s of a small build's wall, r10). Shared
-    by every quantizer build in index/."""
-    n, dims = _batch_count_and_dims(src, vec_col)
-    if n == 0:
-        raise ValueError(f"cannot build {what} over an empty vector column")
-    return n, dims
-
-
-def _batch_count_and_dims(src: DataFrame, vec_col: str) -> tuple[int, int | None]:
-    """add_batch variant of ``_count_and_dims``: an empty (or all-NULL)
-    batch returns ``(0, None)`` so every family's add_batch can no-op —
-    a drained upstream (``corpus_diff`` finding zero new docs) must not
-    throw on some index types while IvfIndex.add_batch treats the same
-    input as a no-op (ADVICE r12)."""
-    row = src.agg(
-        F.count(F.lit(1)).alias("n"), F.first(F.size(vec_col)).alias("d")
-    ).first()
-    n = int(row["n"])
-    return (n, int(row["d"])) if n else (0, None)
-
-
-def _local_or_count(src: DataFrame, vec_col: str, what: str, bound: int):
-    """``(local_rows, total, dims)`` for a build: small sources (scan ≤
-    ``bound`` bytes by ``collect_gate_bytes``, which gates on max(compressed,
-    footer-uncompressed) size — RLE-heavy columns can decompress far past
-    their on-disk bytes, ADVICE r10) are collected once so the build can
-    run in-process; larger ones are counted (local_rows None)."""
-    from duckdb_vss_spark.sources.layout import collect_gate_bytes
-
-    est = collect_gate_bytes(src, bound=bound)
-    if 0 <= est <= bound:
-        rows = src.collect()  # bounded by the gate
-        if not rows:
-            raise ValueError(f"cannot build {what} over an empty vector column")
-        return rows, len(rows), len(rows[0][1])
-    return (None, *_count_and_dims(src, vec_col, what))
 
 
 def _training_sample(src: DataFrame, vec_col: str, local_rows, total: int, want: int, seed: int):
@@ -253,6 +256,67 @@ def _fresh_dir(path: str, overwrite: bool) -> None:
             raise ValueError(f"index path {path!r} already exists (use overwrite=True)")
         shutil.rmtree(path)
     os.makedirs(path)
+
+
+# scan bytes (``collect_gate_bytes``) up to which a build runs
+# in-process from one bounded collect — ~16k 64-d float vectors: a
+# cluster job over half a megabyte pays ~2 s of fixed cost for ~0.1 s
+# of work (r10). Shared with the HNSW build and add_batch, and read at
+# call time, so a test can patch it to force or probe either path.
+DRIVER_BUILD_MAX_BYTES = 4 << 20
+
+_NP_ELEM = {"float": np.float32, "double": np.float64}
+
+
+def _local_dtype(vec_type):
+    """The numpy element type of a float/double array column, else None
+    — the only element types the driver-local encoders replay
+    exactly."""
+    elem = getattr(vec_type, "elementType", None)
+    return None if elem is None else _NP_ELEM.get(elem.simpleString())
+
+
+def _data_files(d: str) -> list[str]:
+    """Every parquet data file under ``d``, hive list dirs included."""
+    return sorted(
+        os.path.join(root, f)
+        for root, _dirs, names in os.walk(d)
+        for f in names
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+
+
+def _file_rows(files) -> dict:
+    """Footer row counts of written data files, keyed by the list id of
+    their ``list_id=N`` dir (None in a flat layout) — exactly what a
+    build or an append committed, read without a Spark job."""
+    import pyarrow.parquet as papq
+
+    out: dict = {}
+    for f in files:
+        part = os.path.basename(os.path.dirname(f))
+        lid = int(part.split("=", 1)[1]) if "=" in part else None
+        out[lid] = out.get(lid, 0) + int(papq.ParquetFile(f).metadata.num_rows)
+    return out
+
+
+def _write_local(data_dir: str, partition_by: str | None, table, lists) -> None:
+    """The driver-side twin of the cluster write: one parquet file, or —
+    given each row's list id — one file per non-empty list under the
+    hive-style ``list_id=N/`` dirs Spark's reader discovers."""
+    import pyarrow.parquet as papq
+
+    if lists is None:
+        parts = [(data_dir, table)]
+    else:
+        parts = [
+            (os.path.join(data_dir, f"{partition_by}={int(lid)}"),
+             table.take(np.flatnonzero(lists == lid)))
+            for lid in np.unique(lists)
+        ]
+    for d, part in parts:
+        os.makedirs(d)
+        papq.write_table(part, os.path.join(d, "part-00000.parquet"))
 
 
 def _now() -> str:
@@ -433,13 +497,10 @@ def _files_fingerprint(files: list[str]) -> dict | None:
     are trusted as a re-rank source. None when any file can't be
     stat'd locally (remote FS) — then no source is recorded at all,
     since it could never be validated later."""
+    import pyarrow.parquet as papq
+
     out: dict[str, list[int]] = {}
     rows: int | None = 0
-    try:
-        import pyarrow.parquet as papq
-    except Exception:  # noqa: BLE001
-        papq = None
-        rows = None
     for f in files:
         p = _local_path(f)
         try:
@@ -760,7 +821,18 @@ def _fits_broadcast(queries: DataFrame, nprobe: int, budget_bytes: int) -> bool:
 class QuantizedIndex:
     """Handle over a built quantized artifact: ``manifest.json`` plus one
     data dir of parquet rows (``data_dir``, hive-partitioned by
-    ``partition_by`` for the IVF layouts). Families add their codec."""
+    ``partition_by`` for the IVF layouts). Families add their codec:
+
+    - ``metrics``, ``ddl_options`` (CREATE INDEX options and their
+      types) and ``recorded`` (the create keywords ``rebuild`` replays,
+      mapped to their manifest keys);
+    - ``train(src, vec_col, rows, total, metric, params)`` →
+      ``(codec manifest fields, rows)``;
+    - ``_encode_local(rows, mat, man, elem)`` → ``(pyarrow columns, list
+      ids or None)`` replaying the cluster encoder in numpy bit for bit,
+      or None (no driver-local build);
+    - ``_encode(src, man)``, the Column/UDF encoder of the cluster build
+      and ``add_batch``, list ids included for the IVF layouts."""
 
     # the upsert hook may version-kill (id, epoch<bound) instead of
     # delete+compact+re-append (r14, VERDICT r13 #4)
@@ -769,6 +841,16 @@ class QuantizedIndex:
     partition_by: str | None = None
     # the family's name in error messages ("PQ index keys must be ...")
     label = "quantized"
+    metrics: tuple = ("cosine", "ip", "l2sq")
+    ddl_options: dict = {}
+    recorded: dict = {}
+    # the build counts the source up front (BQ reads its width off its
+    # calibration sample instead)
+    counts_source = True
+    # the auto-rerank families record the fingerprinted build source
+    records_source = False
+    # no numpy encoder: the family always builds on the cluster (ivfsq)
+    _encode_local = None
 
     def __init__(self, spark: SparkSession, path: str, manifest: dict):
         self.spark = spark
@@ -992,28 +1074,180 @@ class QuantizedIndex:
         the reference's compaction-after-DML contract,
         hnsw_index_pragmas.cpp:154-190. Self-contained: the data dir
         holds everything the family serves from; the auto-rerank source
-        fields are untouched."""
-        out = _tomb.compact_data(self, self.data_dir, partition_by=self.partition_by)
-        if out is None:
+        fields are untouched. The count (and IVF's per-list counts) come
+        from the rewritten files' footers."""
+        data = _tomb.compact_data(self, self.data_dir, partition_by=self.partition_by)
+        if data is None:
             return self  # nothing to reclaim or coalesce (review r13)
-        self._finish_compact(out)
+        counts = _file_rows(_data_files(data))
+        _tomb.finish_compact(
+            self, new_count=sum(counts.values()),
+            extra=self._count_fields(self.manifest, counts, add=False),
+        )
         return self
 
-    def _finish_compact(self, out: DataFrame) -> None:
-        _tomb.finish_compact(self, new_count=out.count())
+    # -- the one build path ----------------------------------------------
 
-    def _batch(self, df: DataFrame) -> tuple[DataFrame, int]:
-        """add_batch input: the (id, vec) projection and its row count;
-        a batch of another width is rejected."""
+    @classmethod
+    def _create(
+        cls, spark: SparkSession, df: DataFrame, vec_col: str, id_col: str,
+        path: str, name: str, metric: str, overwrite: bool, **params,
+    ):
+        """Build the artifact: train the family codec on a driver-sized
+        sample, encode and write the data dir, and commit one manifest
+        (the shared header, the codec fields, the row counts read off
+        the written footers and, for the auto-rerank families, the
+        build source). Small float/double sources of a family with a
+        numpy encoder build in-process from ONE bounded collect (scan ≤
+        ``DRIVER_BUILD_MAX_BYTES``, and the training sample is the whole
+        table): no Spark job writes, and the artifact is bit-identical to
+        the cluster build's (DuckDB's CREATE INDEX is in-process
+        always)."""
+        from duckdb_vss_spark.session import check_persistence_enabled
+
+        if metric not in cls.metrics:
+            raise ValueError(
+                f"{cls.label} index 'metric' must be one of: "
+                + ", ".join(repr(m) for m in sorted(cls.metrics))
+            )
+        check_persistence_enabled(spark)
+        src = _id_vec(df, id_col, vec_col)
+        elem = _local_dtype(src.schema[vec_col].dataType)
+        rows, total, dims = cls._gather(src, vec_col, elem)
+        fields, rows = cls.train(src, vec_col, rows, total, metric, params)
+        _fresh_dir(path, overwrite)
+        man = {"index_name": name, "vec_col": vec_col, "id_col": id_col,
+               "metric": metric, "dimensions": dims, **fields}
+        data = os.path.join(path, cls.data_dir)
+        enc = None
+        if rows is not None:
+            try:
+                mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
+            except ValueError:  # ragged rows: the cluster write decides
+                mat = None
+            if mat is not None:
+                enc = cls._encode_local(rows, mat, man, elem)
+        if enc is None:
+            w = cls._encode(src, man).write
+            (w.partitionBy(cls.partition_by) if cls.partition_by else w).parquet(data)
+        else:
+            import pyarrow as pa
+
+            ids = np.fromiter((r[0] for r in rows), dtype=np.int64, count=len(rows))
+            cols, lists = enc
+            _write_local(data, cls.partition_by, pa.table({id_col: pa.array(ids), **cols}), lists)
+        counts = _file_rows(_data_files(data))
+        man["count"] = sum(counts.values())
+        man.update(cls._count_fields(man, counts))
+        if cls.records_source:
+            # gated on the USER's plan shape, not the internal projection
+            # (the id cast is reapplied by _manifest_source)
+            man.update(_source_manifest_fields(df))
+        man["created_at"] = _now()
+        write_manifest(path, man)
+        return cls(spark, path, man)
+
+    @classmethod
+    def _gather(cls, src: DataFrame, vec_col: str, elem):
+        """``(local rows, total, dims)`` for a build. Small float/double
+        sources of a family with a local encoder are collected once
+        (``collect_gate_bytes`` gates on max(compressed,
+        footer-uncompressed) size — RLE-heavy columns can decompress far
+        past their on-disk bytes, ADVICE r10); others are counted in one
+        aggregate job (rows None), or not at all when the family probes
+        its source itself (``counts_source`` False: all None)."""
+        from duckdb_vss_spark.sources.layout import collect_gate_bytes
+
+        rows = None
+        if cls._encode_local is not None and elem is not None:
+            bound = DRIVER_BUILD_MAX_BYTES
+            if 0 <= collect_gate_bytes(src, bound=bound) <= bound:
+                rows = src.collect()  # bounded by the gate
+        if rows is not None:
+            n, dims = len(rows), len(rows[0][1]) if rows else None
+        elif cls.counts_source:
+            # count and width in ONE aggregate job (separate count() and
+            # first() probes each cost a driver round-trip, r10)
+            row = src.agg(
+                F.count(F.lit(1)).alias("n"), F.first(F.size(vec_col)).alias("d")
+            ).first()
+            n, dims = int(row["n"]), row["d"]
+        else:
+            return None, None, None
+        if n == 0:
+            raise ValueError(f"cannot build the {cls.label} index over an empty vector column")
+        return rows, n, dims
+
+    @classmethod
+    def _count_fields(cls, man: dict, counts: dict, add: bool = True) -> dict:
+        """Family manifest fields derived from the written rows per list
+        (``counts``, from the footers; ``add``: on top of ``man``'s) on
+        create, add_batch and compact — IVF's per-list counts; none by
+        default."""
+        return {}
+
+    def add_batch(self, df: DataFrame, manifest_extra: dict | None = None):
+        """Offline incremental maintenance (r12 — the quantized face of
+        the HNSW ``add_batch``, VERDICT r11 #3): encode the batch with
+        the FROZEN codec (codebooks, centroids, SQ bounds, BQ center and
+        calibration fraction — a distribution shift is a ``rebuild``;
+        SQ values outside the trained range clamp to its edge) in one
+        map-only stage, append it next to the existing data through a
+        staging dir, and commit the manifest atomically: the count (and
+        IVF's per-list counts) from the appended files' footers — exact
+        even for a non-deterministic batch source — the append epoch,
+        revived tombstones and, for the auto-rerank families, the
+        re-rank source, which EXTENDS when the batch is a fingerprintable
+        raw file scan and is DROPPED with a warning otherwise (a source
+        covering only part of the corpus would silently lose new-batch
+        candidates in the re-rank join). Appended ids are not
+        deduplicated (the reference's Insert appends too). An empty or
+        all-NULL batch is a no-op (ADVICE r12). Crash window: the part
+        files are renamed into place right before the manifest write
+        (index/manifest.staged_append); after a crash inside that
+        window, ``rebuild()``."""
+        from duckdb_vss_spark.index.manifest import staged_append
+
         man = self.manifest
         src = _id_vec(df, man["id_col"], man["vec_col"])
-        n, dims = _batch_count_and_dims(src, man["vec_col"])
-        if n and dims != man["dimensions"]:
+        # one limit-1 probe for emptiness and width; the count comes from
+        # the appended files' footers
+        probe = src.select(F.size(man["vec_col"]).alias("d")).first()
+        if probe is None:
+            return self
+        if int(probe["d"]) != man["dimensions"]:
             raise ValueError(
                 f"{self.label} index keys must be of type FLOAT[{man['dimensions']}] "
-                f"(batch has FLOAT[{dims}])"
+                f"(batch has FLOAT[{probe['d']}])"
             )
-        return src, n
+        moved = staged_append(
+            self._encode(src, man), os.path.join(self.path, self.data_dir),
+            partition_by=self.partition_by,
+        )
+        counts = _file_rows(moved)
+        source = (
+            _merge_source_fields(man, df, type(self).__name__) if self.records_source else None
+        )
+        return self._commit_append(
+            src, moved, sum(counts.values()), manifest_extra, source_fields=source,
+            extra=self._count_fields(man, counts),
+        )
+
+    def rebuild(self, df: DataFrame):
+        """Bulk rebuild from the current table snapshot ``df``: replay
+        ``create`` at this path with the manifest's recorded build
+        parameters (name, metric and the family's ``recorded`` codec
+        keywords; sampling keywords take their defaults). Tombstones,
+        appended files and any ``pending_dml`` record go with the old
+        artifact. The handle is refreshed in place and returned."""
+        m = self.manifest
+        out = type(self).create(
+            self.spark, df, m["vec_col"], m["id_col"], self.path,
+            name=m["index_name"], metric=m["metric"], overwrite=True,
+            **{kw: m[key] for kw, key in self.recorded.items()},
+        )
+        self.__init__(self.spark, self.path, out.manifest)
+        return self
 
     def _commit_append(
         self, src: DataFrame, moved, n: int, manifest_extra: dict | None,
@@ -1058,6 +1292,44 @@ class IvfLists(QuantizedIndex):
     @property
     def nlist(self) -> int:
         return self.manifest["nlist"]
+
+    @classmethod
+    def _train_coarse(
+        cls, src: DataFrame, vec_col: str, rows, total: int, metric: str,
+        params: dict, want: int = 0, target: float = 0.9,
+    ):
+        """The IVF layouts' shared training step: ``nlist`` (default
+        ~√count, the standard IVF rule of thumb, never above the row
+        count), seeded k-means over a driver-sized sample of at least
+        ``want`` rows, and — unless given — the smallest
+        ``default_nprobe`` whose estimated routing recall@10 on the
+        sample meets ``target`` (``ivf._calibrate_nprobe``:
+        data-dependent, not a fixed fraction of nlist). Returns
+        ``(fields, rows, normalized sample, centroids)``."""
+        from duckdb_vss_spark.index.ivf import _calibrate_nprobe, _kmeans
+
+        nlist, seed = params["nlist"], params["seed"]
+        if nlist is None:
+            nlist = max(2, min(4096, int(math.isqrt(total))))
+        nlist = int(min(nlist, total))
+        sample, rows = _training_sample(
+            src, vec_col, rows, total, max(nlist * params["sample_per_list"], want), seed
+        )
+        sample = _norm_rows(sample, metric)
+        centroids = _kmeans(sample, nlist, params["kmeans_iters"], seed)
+        nprobe = params["default_nprobe"]
+        if nprobe is None:
+            nprobe = _calibrate_nprobe(sample, centroids, metric, target=target)
+            _LOG.info(
+                "%s: calibrated default_nprobe=%d/%d (routing recall>=%s on the "
+                "training sample)", cls.label, nprobe, nlist, target,
+            )
+        fields = {
+            "nlist": nlist,
+            "default_nprobe": nprobe,
+            "centroids": [[float(x) for x in row] for row in centroids],
+        }
+        return fields, rows, sample, centroids
 
     def _probes(self, query_vec, nprobe: int | None) -> tuple[np.ndarray, list[int]]:
         """(the dims-checked query, its ``nprobe`` nearest lists —

@@ -36,7 +36,6 @@ Composes with IVF partitioning like PQ does.
 from __future__ import annotations
 
 import logging
-import os
 import warnings
 
 import numpy as np
@@ -46,17 +45,11 @@ from pyspark.sql import functions as F
 from duckdb_vss_spark.functions.distance import distance_for_metric
 from duckdb_vss_spark.index.base import (
     QuantizedIndex,
-    _fresh_dir,
-    _id_vec,
     _input_files,
-    _merge_source_fields,
-    _now,
     _resolve_rerank,
     _shortlist_frame,
-    _source_manifest_fields,
     mtime_lru,
 )
-from duckdb_vss_spark.index.manifest import write_manifest
 
 __all__ = [
     "binary_signature",
@@ -127,13 +120,16 @@ def _estimate_fraction(
     target: float = 0.9,
     nq: int = 64,
     seed: int = 0,
+    asym: tuple | None = None,
 ) -> float:
     """Shortlist FRACTION needed for ``target`` recall@k, estimated on
     a sample matrix: for ``nq`` seeded sample queries, each true top-k
-    neighbor's Hamming-rank fraction within the sample estimates its
+    neighbor's shortlist-rank fraction within the sample estimates its
     rank fraction in the full corpus (scale-invariant for exchangeable
     rows; within-sample k-NN are farther than full-corpus k-NN, so the
-    estimate errs conservative). The SINGLE implementation behind both
+    estimate errs conservative). The rank basis is Hamming distance, or
+    — given ``asym=(center, ρ)`` — the asymmetric score (exact distances
+    stay the truth either way). The SINGLE implementation behind both
     the per-call default (``calibrate_rescore``) and the build-time
     manifest field (``create_bq_index``). Returns 1.0 (exact — the
     whole corpus) when the sample is too small to estimate (< 2
@@ -144,15 +140,25 @@ def _estimate_fraction(
     rng = np.random.RandomState(seed)
     qidx = rng.choice(s, size=min(nq, s), replace=False)
     dists = _exact_dists(mat[qidx], mat, metric)
-    bits = mat > 0
-    ham = (bits[qidx][:, None, :] != bits[None, :, :]).sum(-1)
+    if asym is None:
+        bits = mat > 0
+        rank = (bits[qidx][:, None, :] != bits[None, :, :]).sum(-1)
+    else:
+        c = np.asarray(asym[0], dtype=np.float64)
+        V = mat - c
+        vfull = np.linalg.norm(mat, axis=1)
+        vfull[vfull == 0] = 1.0
+        rank = _asym_scores_np(
+            mat[qidx], np.where(V > 0, 1.0, -1.0), np.linalg.norm(V, axis=1), c,
+            asym[1], metric, vfull,
+        )
     kk = min(int(k), s - 1)
     fracs: list[float] = []
     for i in range(len(qidx)):
         true = np.argsort(dists[i], kind="stable")[: kk + 1]
         true = true[true != qidx[i]][:kk]
-        hrank = np.argsort(np.argsort(ham[i], kind="stable"), kind="stable")
-        fracs.extend(((hrank[true] + 1) / s).tolist())
+        srank = np.argsort(np.argsort(rank[i], kind="stable"), kind="stable")
+        fracs.extend(((srank[true] + 1) / s).tolist())
     if not fracs:
         return 1.0
     fr = np.sort(np.asarray(fracs))
@@ -419,44 +425,6 @@ def _asym_scores_np(
     return -est_ip / vfull[None, :]
 
 
-def _estimate_fraction_asym(
-    mat: np.ndarray,
-    metric: str,
-    center: list[float],
-    rho: float,
-    k: int = 10,
-    target: float = 0.9,
-    nq: int = 64,
-    seed: int = 0,
-) -> float:
-    """``_estimate_fraction`` with the asymmetric score as the rank
-    basis (exact distances stay the truth)."""
-    s = len(mat)
-    if s < 2:
-        return 1.0
-    rng = np.random.RandomState(seed)
-    qidx = rng.choice(s, size=min(nq, s), replace=False)
-    dists = _exact_dists(mat[qidx], mat, metric)
-    c = np.asarray(center, dtype=np.float64)
-    V = mat - c
-    signs = np.where(V > 0, 1.0, -1.0)
-    vn = np.linalg.norm(V, axis=1)
-    vfull = np.linalg.norm(mat, axis=1)
-    vfull[vfull == 0] = 1.0
-    scores = _asym_scores_np(mat[qidx], signs, vn, c, rho, metric, vfull)
-    kk = min(int(k), s - 1)
-    fracs: list[float] = []
-    for i in range(len(qidx)):
-        true = np.argsort(dists[i], kind="stable")[: kk + 1]
-        true = true[true != qidx[i]][:kk]
-        srank = np.argsort(np.argsort(scores[i], kind="stable"), kind="stable")
-        fracs.extend(((srank[true] + 1) / s).tolist())
-    if not fracs:
-        return 1.0
-    fr = np.sort(np.asarray(fracs))
-    return float(fr[min(len(fr) - 1, int(np.ceil(target * len(fr))) - 1)])
-
-
 def _query_sig(q: list[float]) -> Column:
     """The query's packed sign words as a literal ``array<bigint>`` (bit
     set iff > 0, the ``binary_signature`` packing)."""
@@ -595,6 +563,159 @@ class BqIndex(QuantizedIndex):
 
     data_dir = "sigs"
     label = "BQ"
+    ddl_options = {"scoring": str, "target_recall": float}
+    recorded = {
+        "scoring": "scoring",
+        "target_recall": "cal_target_recall",
+        "cal_margin": "cal_margin",
+    }
+    counts_source = False
+    records_source = True
+
+    # -- build: the codec of base.QuantizedIndex._create ------------------
+
+    @classmethod
+    def create(
+        cls,
+        spark,
+        df: DataFrame,
+        vec_col: str,
+        id_col: str,
+        path: str,
+        name: str = "bq_idx",
+        metric: str = "l2sq",
+        target_recall: float = 0.9,
+        cal_margin: float = 1.3,
+        cal_rows: int = 1024,
+        scoring: str = "asym",
+        overwrite: bool = False,
+    ) -> "BqIndex":
+        """Persist 63-bit sign-pack signatures as a parquet artifact + a
+        manifest holding the recall calibration as a FRACTION (see
+        ``calibrate_rescore`` — the per-call estimator this build-time
+        form replaces) and the fingerprinted exact-rescore source (same
+        ADVICE r11 machinery as PQ). One map-only Column-expression
+        write — the signature is codegen, no UDF, no training; a
+        gate-small source writes it in-process (``_encode_local``).
+
+        ``scoring`` (r13, VERDICT r12 #7):
+
+        - ``"asym"`` (default) — signatures pack the signs of the
+          CENTERED vector and each row stores its residual norm (one
+          double; plus the full norm for cosine). The shortlist ranks by
+          the asymmetric 1-bit estimator (full-precision query vs sign
+          bits — see the module section above), which on the bench
+          corpus needs a ~2.7× smaller calibrated shortlist than
+          symmetric Hamming at the same ≥0.9 recall target. Center and ρ
+          come from the deterministic build sample and are FROZEN like
+          PQ codebooks (distribution shift → rebuild).
+        - ``"hamming"`` — the r12 layout: raw sign bits, integer Hamming
+          shortlist, exactly SQL-replayable (q_bq_index_knn pins
+          bit-parity against the portable signature SQL)."""
+        if scoring not in ("asym", "hamming"):
+            raise ValueError("BQ index 'scoring' must be 'asym' or 'hamming'")
+        return cls._create(
+            spark, df, vec_col, id_col, path, name, metric, overwrite,
+            target_recall=target_recall, cal_margin=cal_margin, cal_rows=cal_rows,
+            scoring=scoring,
+        )
+
+    @classmethod
+    def train(cls, src, vec_col, rows, total, metric, p):
+        """The calibration: the SAME estimator as calibrate_rescore
+        (``_estimate_fraction``), persisted as a fraction instead of
+        re-estimated per session; < 2 sample rows → 1.0 (exact
+        shortlist). The sample is also the width/emptiness probe (r16,
+        guide §1): no up-front count job — the corpus count comes from
+        the signature files' footers after the write."""
+        cal_rows, target = p["cal_rows"], p["target_recall"]
+        mat = _sample_matrix(src, vec_col, max(int(cal_rows), 1), 1 << 62)
+        if mat.size == 0:
+            raise ValueError("cannot build a BQ index over an empty vector column")
+        dims = int(mat.shape[1])
+        if cal_rows < 1:
+            mat = mat[:0]  # explicit no-calibration request: keep the
+            # degenerate-sample semantics (asym falls back to hamming)
+        scoring, extra = p["scoring"], {}
+        if scoring == "asym" and mat.size:
+            center, rho = _center_rho_from_sample(mat)
+            frac = _estimate_fraction(mat, metric, k=10, target=target, asym=(center, rho))
+            extra = {"asym_center": center, "asym_rho": rho}
+        elif scoring == "asym":
+            scoring = "hamming"  # degenerate corpus: no sample to center on
+            frac = 1.0
+        else:
+            frac = _estimate_fraction(mat, metric, k=10, target=target)
+        return {
+            "dimensions": dims,
+            "bits_per_word": _BITS,
+            "scoring": scoring,
+            "cal_fraction": frac,
+            "cal_margin": float(p["cal_margin"]),
+            "cal_target_recall": float(target),
+            **extra,
+        }, rows
+
+    @classmethod
+    def _encode_local(cls, rows, v, man, elem):
+        """The signature/norm Column expressions replayed in numpy,
+        bit-for-bit:
+
+        - word w = Σ_b shiftleft(bit_b, b−w): an integer sum of distinct
+          powers of two — any evaluation order is exact, and bits 0..62
+          stay within int64;
+        - norms fold LEFT-TO-RIGHT like the generated ``(d0·d0) + (d1·d1)
+          + …`` expression: the accumulator loop adds one squared term
+          per step in the same association order (the leading ``0.0 +
+          x`` is IEEE-exact), so the doubles match the cluster write to
+          the bit."""
+        import pyarrow as pa
+
+        dims, asym = man["dimensions"], man["scoring"] == "asym"
+        if v.shape[1] != dims:
+            return None
+        d = v - np.asarray(man["asym_center"], dtype=np.float64) if asym else v
+        bits = d > 0
+        nwords = -(-dims // _BITS)
+        words = np.zeros((len(v), nwords), dtype=np.int64)
+        for w_idx, w in enumerate(range(0, dims, _BITS)):
+            for b in range(w, min(w + _BITS, dims)):
+                words[:, w_idx] += bits[:, b].astype(np.int64) << np.int64(b - w)
+        offsets = pa.array(np.arange(len(v) + 1, dtype=np.int32) * nwords)
+        cols = {"sig": pa.ListArray.from_arrays(offsets, pa.array(words.reshape(-1), pa.int64()))}
+        if asym:
+
+            def _fold_norm(m, acc_dtype):
+                # the generated SQL's arithmetic runs at the expression's
+                # own type: vnc terms are (vec[b] − center_literal)² — the
+                # double literal promotes the whole chain to float64 — but
+                # vfull is vec[b]·vec[b] with NO literal, so a float32
+                # column accumulates its entire sum in SINGLE precision
+                # (measured: replaying vfull in float64 misses the cluster
+                # value; the float32 fold matches it to the bit)
+                acc = np.zeros(len(m), dtype=acc_dtype)
+                m = m.astype(acc_dtype)
+                for b in range(dims):
+                    t = m[:, b]
+                    acc = acc + t * t
+                return np.sqrt(acc.astype(np.float64))
+
+            cols["vnc"] = pa.array(_fold_norm(d, np.float64), pa.float64())
+            cols["vfull"] = pa.array(_fold_norm(v, elem), pa.float64())
+        return cols, None
+
+    @classmethod
+    def _encode(cls, src, man):
+        id_col, vec_col, dims = man["id_col"], man["vec_col"], man["dimensions"]
+        if man.get("scoring", "hamming") != "asym":
+            return src.select(id_col, binary_signature(vec_col, dims).alias("sig"))
+        center = man["asym_center"]
+        return src.select(
+            F.col(id_col),
+            centered_signature(vec_col, dims, center).alias("sig"),
+            centered_norm(vec_col, dims, center).alias("vnc"),
+            full_norm(vec_col, dims).alias("vfull"),
+        )
 
     def default_rescore(self, k: int) -> int:
         """margin · calibrated-fraction · CURRENT count, clamped to
@@ -736,47 +857,6 @@ class BqIndex(QuantizedIndex):
             "score": score,
         }
 
-    def add_batch(
-        self, df: DataFrame, manifest_extra: dict | None = None
-    ) -> "BqIndex":
-        """Offline incremental maintenance (the BQ face of the r12
-        add_batch family): sign-pack the new batch with the SAME pure
-        Column expression (signatures are training-free, so there is no
-        frozen-codebook caveat here), append the (id, sig) parquet, and
-        atomically bump the manifest count — the calibrated default
-        rescore rescales automatically because it is stored as a
-        fraction. The rescore source extends/drops by PQ's set-union
-        rule. Empty batch: no-op (ADVICE r12, family-consistent).
-        Crash window: commits via staged_append — after a crash inside
-        the rename→manifest window, rebuild."""
-        from duckdb_vss_spark.index.manifest import staged_append
-
-        src, n = self._batch(df)
-        if n == 0:
-            return self
-        man = self.manifest
-        id_col, vec_col, dims = man["id_col"], man["vec_col"], self.dims
-        if man.get("scoring", "hamming") == "asym":
-            # frozen center/ρ, like PQ's frozen codebooks — a batch from
-            # a shifted distribution degrades the estimator gradually;
-            # rebuild when the distribution moves
-            center = man["asym_center"]
-            batch_cols = src.select(
-                F.col(id_col),
-                centered_signature(vec_col, dims, center).alias("sig"),
-                centered_norm(vec_col, dims, center).alias("vnc"),
-                full_norm(vec_col, dims).alias("vfull"),
-            )
-        else:
-            batch_cols = src.select(
-                id_col, binary_signature(vec_col, dims).alias("sig")
-            )
-        moved = staged_append(batch_cols, os.path.join(self.path, "sigs"))
-        return self._commit_append(
-            src, moved, n, manifest_extra,
-            source_fields=_merge_source_fields(man, df, "BqIndex"),
-        )
-
 
 def _driver_hamming_shortlist(index, q, take: int):
     """(id, hamming) top-``take`` on the driver for gate-small
@@ -804,7 +884,7 @@ def _driver_asym_shortlist(index, q, xs, take: int):
     asym-scored artifacts (r16, second session; the walk in
     ``QuantizedIndex._driver_shortlist``), or None for the distributed
     scan. Unlike the hamming path this replays FLOAT arithmetic, so it
-    follows the `_write_sigs_local` discipline: every operation
+    follows ``BqIndex._encode_local``'s discipline: every operation
     reproduces the generated SQL expression tree's exact shape —
 
     - the signed dot is the SQL's left-associated 64-term ``+`` fold of
@@ -876,212 +956,6 @@ def _load_sigs(file: str, id_col: str, dims: int, asym: bool):
     )
 
 
-def _write_sigs_local(
-    rows, dims: int, scoring: str, center, sigs_dir: str, id_col: str,
-    elem_np=None,
-) -> bool:
-    """Driver-side signature write for gate-small builds: replays the
-    SQL signature/norm expressions in numpy, bit-for-bit.
-
-    - word w = Σ_b shiftleft(bit_b, b−w): an integer sum of distinct
-      powers of two — any evaluation order is exact, and bits 0..62
-      stay within int64.
-    - norms fold LEFT-TO-RIGHT like the generated `(d0·d0) + (d1·d1) +
-      …` expression: the accumulator loop below adds one squared term
-      per step in the same association order (the leading `0.0 + x`
-      is IEEE-exact), so the doubles match the cluster write to the
-      bit.
-
-    Returns False when the rows don't look like numeric vectors (the
-    caller then falls back to the cluster write)."""
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    try:
-        ids = np.asarray([r[0] for r in rows], dtype=np.int64)
-        v = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-    except (TypeError, ValueError):
-        return False
-    if v.ndim != 2 or v.shape[1] != dims:
-        return False
-    d = v - np.asarray(center, dtype=np.float64) if scoring == "asym" else v
-    bits = d > 0
-    nwords = -(-dims // _BITS)
-    words = np.zeros((len(rows), nwords), dtype=np.int64)
-    for w_idx, w in enumerate(range(0, dims, _BITS)):
-        for b in range(w, min(w + _BITS, dims)):
-            words[:, w_idx] += bits[:, b].astype(np.int64) << np.int64(b - w)
-    flat = pa.array(words.reshape(-1), pa.int64())
-    offsets = pa.array(np.arange(len(rows) + 1, dtype=np.int32) * nwords)
-    cols = {id_col: pa.array(ids, pa.int64())}
-    cols["sig"] = pa.ListArray.from_arrays(offsets, flat)
-    if scoring == "asym":
-
-        def _fold_norm(m, acc_dtype):
-            # the generated SQL's arithmetic runs at the expression's
-            # own type: vnc terms are (vec[b] − center_literal)² — the
-            # double literal promotes the whole chain to float64 — but
-            # vfull is vec[b]·vec[b] with NO literal, so a float32
-            # column accumulates its entire sum in SINGLE precision
-            # (measured: replaying vfull in float64 misses the cluster
-            # value; the float32 fold matches it to the bit)
-            acc = np.zeros(len(m), dtype=acc_dtype)
-            m = m.astype(acc_dtype)
-            for b in range(dims):
-                t = m[:, b]
-                acc = acc + t * t
-            return np.sqrt(acc.astype(np.float64))
-
-        cols["vnc"] = pa.array(_fold_norm(d, np.float64), pa.float64())
-        cols["vfull"] = pa.array(
-            _fold_norm(v, elem_np or np.float64), pa.float64()
-        )
-    os.makedirs(sigs_dir, exist_ok=True)
-    papq.write_table(pa.table(cols), os.path.join(sigs_dir, "part-00000.parquet"))
-    return True
-
-
-def create_bq_index(
-    spark,
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    path: str,
-    name: str = "bq_idx",
-    metric: str = "l2sq",
-    target_recall: float = 0.9,
-    cal_margin: float = 1.3,
-    cal_rows: int = 1024,
-    scoring: str = "asym",
-    overwrite: bool = False,
-    driver_build_max_bytes: int = 4 << 20,
-) -> BqIndex:
-    """Persist 63-bit sign-pack signatures as a parquet artifact + a
-    manifest holding the recall calibration as a FRACTION (see
-    ``calibrate_rescore`` — the per-call estimator this build-time form
-    replaces) and the fingerprinted exact-rescore source (same ADVICE
-    r11 machinery as PQ). One map-only Column-expression write — the
-    signature is codegen, no UDF, no training.
-
-    ``scoring`` (r13, VERDICT r12 #7):
-
-    - ``"asym"`` (default) — signatures pack the signs of the CENTERED
-      vector and each row stores its residual norm (one double; plus
-      the full norm for cosine). The shortlist ranks by the asymmetric
-      1-bit estimator (full-precision query vs sign bits — see the
-      module section above), which on the bench corpus needs a ~2.7×
-      smaller calibrated shortlist than symmetric Hamming at the same
-      ≥0.9 recall target. Center and ρ come from the deterministic
-      build sample and are FROZEN like PQ codebooks (distribution
-      shift → rebuild).
-    - ``"hamming"`` — the r12 layout: raw sign bits, integer Hamming
-      shortlist, exactly SQL-replayable (q_bq_index_knn pins
-      bit-parity against the portable signature SQL)."""
-    from duckdb_vss_spark.session import check_persistence_enabled
-
-    if metric not in ("l2sq", "cosine", "ip"):
-        raise ValueError("BQ index 'metric' must be one of: 'cosine', 'ip', 'l2sq'")
-    if scoring not in ("asym", "hamming"):
-        raise ValueError("BQ index 'scoring' must be 'asym' or 'hamming'")
-    check_persistence_enabled(spark)
-    src = _id_vec(df, id_col, vec_col)
-
-    # calibration sample: the SAME estimator as calibrate_rescore
-    # (_estimate_fraction), but the fraction is persisted instead of
-    # re-estimated per session; < 2 sample rows → 1.0 (exact shortlist).
-    # r16 (guide §1): the sample is also the dims/emptiness probe — the
-    # up-front _count_and_dims full-scan aggregate is gone; the corpus
-    # count comes from the signature parquet's own footers after the
-    # write (the writer just produced exactly the filtered rows).
-    mat = _sample_matrix(src, vec_col, max(int(cal_rows), 1), 1 << 62)
-    if mat.size == 0:
-        raise ValueError("cannot build a BQ index over an empty vector column")
-    dims = int(mat.shape[1])
-    if cal_rows < 1:
-        mat = mat[:0]  # explicit no-calibration request: keep the
-        # degenerate-sample semantics (asym falls back to hamming)
-    extra: dict = {}
-    if scoring == "asym" and mat.size:
-        center, rho = _center_rho_from_sample(mat)
-        frac = _estimate_fraction_asym(
-            mat, metric, center, rho, k=10, target=target_recall
-        )
-        extra = {"asym_center": center, "asym_rho": rho}
-    elif scoring == "asym":
-        scoring = "hamming"  # degenerate corpus: no sample to center on
-        frac = 1.0
-    else:
-        frac = _estimate_fraction(mat, metric, k=10, target=target_recall)
-
-    _fresh_dir(path, overwrite)
-    sigs_dir = os.path.join(path, "sigs")
-
-    # small file-backed sources build the signature table on the driver
-    # from ONE bounded collect (r16 — the twin of the ivf/pq/hnsw local
-    # paths): numpy replays the Column expressions bit-for-bit (the
-    # word packs are exact integer sums of distinct powers of two; the
-    # norm folds accumulate left-to-right exactly like the generated
-    # SQL), skipping the cluster write job AND the codegen of the
-    # dims-unrolled signature expressions (the bulk of a small build's
-    # cold wall). Measured at sf0.1 (2k rows): 2.4 s → ~0.6 s.
-    from duckdb_vss_spark.sources.layout import collect_gate_bytes, parquet_dir_rows
-
-    n = -1
-    est = collect_gate_bytes(src, bound=driver_build_max_bytes)
-    if 0 <= est <= driver_build_max_bytes:
-        from pyspark.sql.types import ArrayType, DoubleType, FloatType
-
-        et = src.schema[vec_col].dataType
-        elem_np = None
-        if isinstance(et, ArrayType) and isinstance(et.elementType, FloatType):
-            elem_np = np.float32
-        elif isinstance(et, ArrayType) and isinstance(et.elementType, DoubleType):
-            elem_np = np.float64
-        else:
-            et = None  # unsupported element type: cluster path
-        if et is not None:
-            local_rows = src.collect()  # bounded by the gate
-            if _write_sigs_local(
-                local_rows, dims, scoring, extra.get("asym_center"),
-                sigs_dir, id_col, elem_np=elem_np,
-            ):
-                n = len(local_rows)
-    if n < 0:
-        if scoring == "asym":
-            center = extra["asym_center"]
-            cols = [
-                F.col(id_col),
-                centered_signature(vec_col, dims, center).alias("sig"),
-                centered_norm(vec_col, dims, center).alias("vnc"),
-                full_norm(vec_col, dims).alias("vfull"),
-            ]
-            src.select(*cols).write.parquet(sigs_dir)
-        else:
-            src.select(
-                id_col, binary_signature(vec_col, dims).alias("sig")
-            ).write.parquet(sigs_dir)
-        n = parquet_dir_rows(sigs_dir)
-        if n < 0:
-            n = spark.read.parquet(sigs_dir).count()
-    manifest = {
-        "index_name": name,
-        "vec_col": vec_col,
-        "id_col": id_col,
-        "metric": metric,
-        "dimensions": dims,
-        "count": int(n),
-        "bits_per_word": _BITS,
-        "scoring": scoring,
-        "cal_fraction": frac,
-        "cal_margin": float(cal_margin),
-        "cal_target_recall": float(target_recall),
-        **extra,
-        **_source_manifest_fields(df),
-        "created_at": _now(),
-    }
-    write_manifest(path, manifest)
-    return BqIndex(spark, path, manifest)
-
-
+create_bq_index = BqIndex.create
 load_bq_index = BqIndex.load
 drop_bq_index = BqIndex.drop

@@ -25,34 +25,22 @@ the write is the only shuffle.
 
 from __future__ import annotations
 
-import logging
-import math
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType
 
 from duckdb_vss_spark.functions import kernels
 from duckdb_vss_spark.functions.distance import distance_for_metric
 from duckdb_vss_spark.index.base import (
     _MAX_ISIN_CANDIDATES,
     IvfLists,
-    _fresh_dir,
-    _id_vec,
-    _local_or_count,
+    _batch_udf,
+    _load_matrix,
     _norm_rows,
-    _now,
-    _training_sample,
     centroid_dists,
-    mtime_lru,
 )
-from duckdb_vss_spark.index.manifest import write_manifest
 
 __all__ = ["create_ivf_index", "load_ivf_index", "drop_ivf_index", "IvfIndex"]
-
-_LOG = logging.getLogger(__name__)
 
 
 def _kmeans(sample: np.ndarray, nlist: int, iters: int, seed: int) -> np.ndarray:
@@ -143,21 +131,84 @@ def _assign_rows(mat: np.ndarray, centroids: np.ndarray, metric: str) -> np.ndar
 
 def _assign_udf(centroids: np.ndarray, metric: str):
     """Vectorized nearest-centroid assignment: one Arrow batch → one
-    matrix multiply (the map-only build/probe stage)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def assign(v):
-        mat = np.stack([np.asarray(x, dtype=np.float64) for x in v])
-        return pd.Series(_assign_rows(mat, centroids, metric))
-
-    return pandas_udf(assign, IntegerType())
+    matrix multiply (the map-only build stage)."""
+    return _batch_udf(lambda mat: _assign_rows(mat, centroids, metric), "int")
 
 
 class IvfIndex(IvfLists):
     """Handle over a built IVF artifact."""
 
     label = "IVF"
+    ddl_options = {"nlist": int, "default_nprobe": int}
+    recorded = {"nlist": "nlist", "default_nprobe": "default_nprobe"}
+
+    # -- build: the codec of base.QuantizedIndex._create ------------------
+
+    @classmethod
+    def create(
+        cls,
+        spark: SparkSession,
+        df: DataFrame,
+        vec_col: str,
+        id_col: str,
+        path: str,
+        name: str = "ivf_idx",
+        metric: str = "l2sq",
+        nlist: int | None = None,
+        default_nprobe: int | None = None,
+        sample_per_list: int = 256,
+        kmeans_iters: int = 10,
+        seed: int = 42,
+        overwrite: bool = False,
+    ) -> "IvfIndex":
+        """CREATE INDEX ... USING IVF (vec_col) WITH (metric, nlist) as a
+        bulk Spark job: seeded k-means on a driver-sized sample, one
+        map-only assignment stage and one ``partitionBy(list_id)`` write
+        of the (id, vec) rows. nlist defaults to ~sqrt(count); nprobe to
+        the smallest value whose estimated routing recall@10 on the
+        training sample meets 0.9. A gate-small source builds
+        in-process, assigning with the same ``_assign_rows`` kernel as
+        the Arrow UDF, so list membership is bit-identical."""
+        return cls._create(
+            spark, df, vec_col, id_col, path, name, metric, overwrite, nlist=nlist,
+            default_nprobe=default_nprobe, sample_per_list=sample_per_list,
+            kmeans_iters=kmeans_iters, seed=seed,
+        )
+
+    @classmethod
+    def train(cls, src, vec_col, rows, total, metric, p):
+        fields, rows, _sample, _cents = cls._train_coarse(src, vec_col, rows, total, metric, p)
+        return {"table_name": "", **fields}, rows
+
+    @classmethod
+    def _encode_local(cls, rows, mat, man, elem):
+        """The rows keep their stored element type; lists from
+        ``_assign_rows``."""
+        import pyarrow as pa
+
+        vecs = pa.array([r[1] for r in rows], type=pa.list_(pa.from_numpy_dtype(elem)))
+        cents = np.asarray(man["centroids"], dtype=np.float64)
+        return {man["vec_col"]: vecs}, _assign_rows(mat, cents, man["metric"])
+
+    @classmethod
+    def _encode(cls, src, man):
+        assign = _assign_udf(np.asarray(man["centroids"], dtype=np.float64), man["metric"])
+        return src.withColumn("list_id", assign(F.col(man["vec_col"])))
+
+    @classmethod
+    def _count_fields(cls, man: dict, counts: dict, add: bool = True) -> dict:
+        """Per-list counts: the written rows of each list plus, on
+        add_batch, the manifest's. They stay RAW between deletes (the
+        tombstone set is not list-attributed — that would cost the
+        assign join delete's O(|ids|) path avoids); compaction recounts
+        them from the rewritten files."""
+        old = {int(p["list_id"]): int(p["count"]) for p in man.get("lists", [])} if add else {}
+        return {
+            "lists": [
+                {"list_id": lid, "count": old.get(lid, 0) + counts.get(lid, 0)}
+                for lid in range(man["nlist"])
+            ]
+        }
 
     # -- single-query top-k (entry point B shape) -------------------------
 
@@ -194,7 +245,7 @@ class IvfIndex(IvfLists):
         # artifacts keep the full probed scan (the 100 TB path).
         dims, metric = self.dims, self.metric
         pairs = self._driver_shortlist(
-            int(k), dims * 8, lambda f: _load_vecs(f, id_col, vec_col, dims),
+            int(k), dims * 8, lambda f: _load_matrix(f, id_col, vec_col, dims, np.float64),
             lambda _lid, xv: kernels.metric_distance(metric, xv, qv), probes,
         )
         if pairs is not None:
@@ -247,109 +298,6 @@ class IvfIndex(IvfLists):
             broadcast_budget_bytes,
         )
 
-    # -- maintenance ------------------------------------------------------
-
-    def add_batch(
-        self, df: DataFrame, manifest_extra: dict | None = None
-    ) -> "IvfIndex":
-        """Offline incremental maintenance (r12 — the IVF face of the
-        HNSW ``add_batch``, VERDICT r11 #3): assign the new batch to the
-        EXISTING centroids (frozen — the standard IVF append; centroid
-        drift is a rebuild) in one map-only Arrow stage, append into the
-        hive-partitioned ``lists/`` layout, and atomically update the
-        manifest's total + per-list counts. O(|batch|) work; probes
-        read the appended files through the same partition filter.
-        Appended ids are not deduplicated against existing lists (the
-        reference's Insert appends too); deletes go through rebuild().
-
-        The per-list count update reads the JUST-WRITTEN files' parquet
-        footers (new paths = exactly what ``staged_append`` moved into
-        place) — no second pass over the batch, and the counts are
-        exactly what was written even if the batch source is
-        non-deterministic (an unordered limit or a sample would make a
-        recomputed histogram silently diverge from the written rows).
-        Falls back to recomputing the assign projection when pyarrow
-        is unavailable. Crash window: commits via staged_append —
-        after a crash inside the rename→manifest window, rebuild."""
-        from duckdb_vss_spark.index.manifest import staged_append
-
-        man = self.manifest
-        id_col, vec_col = man["id_col"], man["vec_col"]
-        src = _id_vec(df, id_col, vec_col)
-        probe = src.select(F.size(vec_col).alias("d")).first()
-        if probe is not None and int(probe["d"]) != int(man["dimensions"]):
-            raise ValueError(
-                f"IVF index keys must be of type FLOAT[{man['dimensions']}] "
-                f"(batch has FLOAT[{probe['d']}])"
-            )
-        lists_dir = os.path.join(self.path, "lists")
-        assigned = src.withColumn(
-            "list_id", _assign_udf(self._centroids, self.metric)(F.col(vec_col))
-        )
-        new_files = staged_append(assigned, lists_dir, partition_by="list_id")
-        hist: dict[int, int] = {}
-        try:
-            import pyarrow.parquet as papq
-
-            for f in new_files:
-                part = os.path.basename(os.path.dirname(f))
-                lid = int(part.split("=", 1)[1])
-                hist[lid] = hist.get(lid, 0) + int(papq.ParquetFile(f).metadata.num_rows)
-        except Exception:  # noqa: BLE001 — pyarrow unavailable: recompute
-            hist = {
-                int(r["list_id"]): int(r["n"])
-                for r in assigned.groupBy("list_id")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-        bad = [lid for lid in hist if lid < 0 or lid >= man["nlist"]]
-        if bad:  # pragma: no cover — assign argmins over nlist by design
-            raise ValueError(f"assignment produced out-of-range list ids: {bad}")
-        lists = [
-            {
-                "list_id": p["list_id"],
-                "count": int(p["count"] + hist.get(int(p["list_id"]), 0)),
-            }
-            for p in man["lists"]
-        ]
-        return self._commit_append(
-            src, new_files, sum(hist.values()), manifest_extra, extra={"lists": lists}
-        )
-
-    def _finish_compact(self, out: DataFrame) -> None:
-        """Per-list stats stay RAW between deletes (the tombstone set is
-        not list-attributed — that would cost the assign join delete's
-        O(|ids|) path avoids); compaction recounts them from the
-        rewritten files."""
-        from duckdb_vss_spark.index import tombstones as _tomb
-
-        counts = {
-            int(r["list_id"]): int(r["n"])
-            for r in out.groupBy("list_id").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        lists = [
-            {"list_id": int(p["list_id"]), "count": counts.get(int(p["list_id"]), 0)}
-            for p in self.manifest["lists"]
-        ]
-        _tomb.finish_compact(
-            self, new_count=sum(counts.values()), extra={"lists": lists}
-        )
-
-    def rebuild(self, df: DataFrame) -> "IvfIndex":
-        m = self.manifest
-        return create_ivf_index(
-            self.spark,
-            df,
-            vec_col=m["vec_col"],
-            id_col=m["id_col"],
-            path=self.path,
-            name=m["index_name"],
-            metric=m["metric"],
-            nlist=m["nlist"],
-            default_nprobe=m["default_nprobe"],
-            overwrite=True,
-        )
-
     def info(self) -> DataFrame:
         m = self.manifest
         row = (
@@ -372,168 +320,6 @@ class IvfIndex(IvfLists):
         return self.spark.createDataFrame([row], schema)
 
 
-# mtime-keyed LRU of decoded list files for repeated single-query
-# searches on gate-small artifacts (the IVF face of bq._load_sigs)
-@mtime_lru(32)
-def _load_vecs(file: str, id_col: str, vec_col: str, dims: int):
-    """(ids, float64 (n, dims) matrix) for one inverted-list data file,
-    or None when the stored shape cannot take the driver fold — NULL
-    elements, ragged rows, or a non-float element type keep Spark's
-    NULL/size-mismatch semantics on the distributed scan."""
-    import pyarrow.parquet as papq
-
-    t = papq.read_table(file, columns=[id_col, vec_col])
-    ids = np.asarray(t[id_col].to_pylist(), dtype=np.int64)
-    col = t[vec_col].combine_chunks()
-    if col.null_count:
-        return None
-    flat = col.flatten()
-    if flat.null_count or len(flat) != len(ids) * dims:
-        return None
-    vals = flat.to_numpy(zero_copy_only=False)
-    if vals.dtype.kind != "f":
-        return None
-    off = np.asarray(col.offsets)
-    if len(ids) and not bool((np.diff(off) == dims).all()):
-        return None  # uniform total length but ragged rows
-    return ids, vals.astype(np.float64, copy=False).reshape(len(ids), dims)
-
-
-def _write_lists_local(
-    rows, vec_type, id_col: str, vec_col: str,
-    centroids: np.ndarray, metric: str, lists_dir: str,
-) -> dict | None:
-    """Driver-side twin of the partitionBy(list_id) write: assign the
-    collected (id, vec) rows with the SAME numpy kernel as the Arrow
-    UDF and write one parquet file per non-empty list under the
-    hive-style ``list_id=N/`` layout Spark's reader discovers. Returns
-    {list_id: count}, or None (nothing written) when the vector element
-    type isn't one this writer preserves exactly."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    elem = getattr(getattr(vec_type, "elementType", None), "simpleString", lambda: "")()
-    pa_elem = {"float": pa.float32(), "double": pa.float64()}.get(elem)
-    if pa_elem is None:
-        return None
-    total = len(rows)
-    ids = np.fromiter((r[0] for r in rows), dtype=np.int64, count=total)
-    mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-    assign = _assign_rows(mat, centroids, metric)
-    counts: dict[int, int] = {}
-    for lid in np.unique(assign):
-        sel = np.flatnonzero(assign == lid)
-        tbl = pa.table(
-            {
-                id_col: pa.array(ids[sel]),
-                vec_col: pa.array(
-                    [rows[i][1] for i in sel], type=pa.list_(pa_elem)
-                ),
-            }
-        )
-        d = os.path.join(lists_dir, f"list_id={int(lid)}")
-        os.makedirs(d)
-        pq.write_table(tbl, os.path.join(d, "part-00000.parquet"))
-        counts[int(lid)] = int(sel.size)
-    return counts
-
-
-def create_ivf_index(
-    spark: SparkSession,
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    path: str,
-    name: str = "ivf_idx",
-    metric: str = "l2sq",
-    nlist: int | None = None,
-    default_nprobe: int | None = None,
-    sample_per_list: int = 256,
-    kmeans_iters: int = 10,
-    seed: int = 42,
-    overwrite: bool = False,
-    driver_build_max_bytes: int = 4 << 20,
-) -> IvfIndex:
-    """CREATE INDEX ... USING IVF (vec_col) WITH (metric, nlist) as a
-    bulk Spark job. nlist defaults to ~sqrt(count) (the standard IVF
-    rule of thumb); nprobe defaults to the smallest value whose
-    estimated routing recall@10 on the training sample meets 0.9
-    (``_calibrate_nprobe`` — data-dependent, not a fixed formula).
-
-    Small FILE-BACKED sources (scan ≤ ``driver_build_max_bytes``, and
-    small enough that the training sample is the whole table) build
-    in-process from ONE bounded collect: k-means, assignment (the same
-    ``_assign_rows`` kernel as the Arrow UDF — list membership is
-    bit-identical) and the hive-partitioned list write all happen on
-    the driver, skipping three Spark jobs' fixed costs (~1.5 s for a
-    half-megabyte build, r10; see create_hnsw_index's twin note)."""
-    if metric not in ("l2sq", "cosine", "ip"):
-        raise ValueError("IVF index 'metric' must be one of: 'cosine', 'ip', 'l2sq'")
-    from duckdb_vss_spark.session import check_persistence_enabled
-
-    check_persistence_enabled(spark)
-    src = _id_vec(df, id_col, vec_col)
-    local_rows, total, dims = _local_or_count(
-        src, vec_col, "an IVF index", driver_build_max_bytes
-    )
-    if nlist is None:
-        nlist = max(2, min(4096, int(math.isqrt(total))))
-    nlist = int(min(nlist, total))
-    # driver-sized seeded sample for centroid training
-    sample, local_rows = _training_sample(
-        src, vec_col, local_rows, total, nlist * sample_per_list, seed
-    )
-    sample = _norm_rows(sample, metric)
-    centroids = _kmeans(sample, nlist, kmeans_iters, seed)
-    if default_nprobe is None:
-        default_nprobe = _calibrate_nprobe(sample, centroids, metric)
-        _LOG.info(
-            "ivf: calibrated default_nprobe=%d/%d (routing recall>=0.9 "
-            "on the training sample)", default_nprobe, nlist,
-        )
-
-    _fresh_dir(path, overwrite)
-    lists_dir = os.path.join(path, "lists")
-
-    if local_rows is not None:
-        counts = _write_lists_local(
-            local_rows, src.schema[vec_col].dataType, id_col, vec_col,
-            centroids, metric, lists_dir,
-        )
-        if counts is None:
-            local_rows = None  # unsupported element type: cluster path
-    if local_rows is None:
-        assigned = src.withColumn(
-            "list_id", _assign_udf(centroids, metric)(F.col(vec_col))
-        )
-        assigned.write.partitionBy("list_id").parquet(lists_dir)
-        counts = {
-            r["list_id"]: r["n"]
-            for r in spark.read.parquet(lists_dir)
-            .groupBy("list_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-    manifest = {
-        "index_name": name,
-        "table_name": "",
-        "vec_col": vec_col,
-        "id_col": id_col,
-        "metric": metric,
-        "dimensions": dims,
-        "nlist": nlist,
-        "default_nprobe": default_nprobe,
-        "count": int(sum(counts.values())),
-        "centroids": [[float(x) for x in row] for row in centroids],
-        "created_at": _now(),
-        "lists": [
-            {"list_id": int(lid), "count": int(counts.get(lid, 0))}
-            for lid in range(nlist)
-        ],
-    }
-    write_manifest(path, manifest)
-    return IvfIndex(spark, path, manifest)
-
-
+create_ivf_index = IvfIndex.create
 load_ivf_index = IvfIndex.load
 drop_ivf_index = IvfIndex.drop

@@ -34,40 +34,23 @@ augmentation changes the geometry; out of scope as in ivf.py's note).
 
 from __future__ import annotations
 
-import logging
-import math
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    StructField,
-    StructType,
-)
 
 from duckdb_vss_spark.index.base import (
     IvfLists,
-    _fresh_dir,
-    _id_vec,
-    _local_or_count,
-    _merge_source_fields,
+    _batch_udf,
     _norm_rows,
-    _now,
     _shortlist_frame,
-    _source_manifest_fields,
-    _training_sample,
     centroid_dists,
     coarse_probe,
 )
-from duckdb_vss_spark.index.ivf import _calibrate_nprobe, _kmeans
-from duckdb_vss_spark.index.manifest import write_manifest
 from duckdb_vss_spark.index.pq import (
     PqIndex,
     _adc_block,
     _adc_scores,
+    _books_field,
     _encode_batch,
     _load_codes,
     train_pq_codebooks,
@@ -75,37 +58,15 @@ from duckdb_vss_spark.index.pq import (
 
 __all__ = ["create_ivfpq_index", "load_ivfpq_index", "drop_ivfpq_index", "IvfPqIndex"]
 
-_LOG = logging.getLogger(__name__)
 
-
-def _assign_encode_udf(centroids: np.ndarray, books: np.ndarray, metric: str):
-    """One Arrow pass: nearest-centroid assignment + residual PQ encode.
-    Returns struct(list_id int, pq_code binary)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    c = centroids.astype(np.float64)
-    out_t = StructType(
-        [
-            StructField("list_id", IntegerType()),
-            StructField("pq_code", BinaryType()),
-        ]
-    )
-
-    def enc(v):
-        mat = np.stack([np.asarray(x, dtype=np.float64) for x in v])
-        mat = _norm_rows(mat, metric)
-        assign = centroid_dists(mat, c).argmin(axis=1)
-        resid = mat - c[assign]
-        codes = _encode_batch(resid, books)
-        return pd.DataFrame(
-            {
-                "list_id": assign.astype(np.int32),
-                "pq_code": [x.tobytes() for x in codes],
-            }
-        )
-
-    return pandas_udf(enc, out_t)
+def _ivfadc_codes(mat: np.ndarray, cents: np.ndarray, books: np.ndarray, metric: str) -> dict:
+    """(n, dims) float64 rows → their nearest-centroid ``list_id`` and
+    residual ``pq_code``: the one IVFADC encoder of both build paths
+    (``base._batch_udf``)."""
+    mat = _norm_rows(mat, metric)
+    assign = centroid_dists(mat, cents).argmin(axis=1)
+    codes = _encode_batch(mat - cents[assign], books)
+    return {"list_id": assign.astype(np.int32), "pq_code": [c.tobytes() for c in codes]}
 
 
 class IvfPqIndex(IvfLists):
@@ -114,6 +75,10 @@ class IvfPqIndex(IvfLists):
     data_dir = "codes"
     label = "IVFPQ"
     adc_recall = "0.73"
+    metrics = ("cosine", "l2sq")  # no 'ip' residuals (module docstring)
+    ddl_options = {"m": int, "nlist": int, "ksub": int, "default_nprobe": int}
+    recorded = {k: k for k in ("nlist", "default_nprobe", "m", "ksub")}
+    records_source = True
 
     def __init__(self, spark: SparkSession, path: str, manifest: dict):
         super().__init__(spark, path, manifest)
@@ -122,6 +87,82 @@ class IvfPqIndex(IvfLists):
     @property
     def m(self) -> int:
         return self.manifest["m"]
+
+    # -- build: the codec of base.QuantizedIndex._create ------------------
+
+    @classmethod
+    def create(
+        cls,
+        spark: SparkSession,
+        df: DataFrame,
+        vec_col: str,
+        id_col: str,
+        path: str,
+        name: str = "ivfpq_idx",
+        metric: str = "l2sq",
+        nlist: int | None = None,
+        default_nprobe: int | None = None,
+        m: int = 8,
+        ksub: int = 16,
+        sample_per_list: int = 256,
+        kmeans_iters: int = 10,
+        seed: int = 42,
+        overwrite: bool = False,
+    ) -> "IvfPqIndex":
+        """Train coarse centroids + residual codebooks on one driver-sized
+        sample, then ONE map-only assign-and-encode stage and one
+        ``partitionBy(list_id)`` write (in-process, with the same numpy
+        kernels, for a gate-small source)."""
+        if ksub > 256:
+            raise ValueError("ksub must be <= 256 (codes are one byte per subspace)")
+        return cls._create(
+            spark, df, vec_col, id_col, path, name, metric, overwrite, nlist=nlist,
+            default_nprobe=default_nprobe, m=m, ksub=ksub,
+            sample_per_list=sample_per_list, kmeans_iters=kmeans_iters, seed=seed,
+        )
+
+    @classmethod
+    def train(cls, src, vec_col, rows, total, metric, p):
+        # nprobe target 0.95 (not the IVF family's 0.9): since r11 the
+        # default knn path auto-reranks, which removes the residual-
+        # quantization loss entirely — routing is then the ONLY loss
+        # term, so shipped end-to-end recall@10 ≈ routing recall. 0.9
+        # routing shipped 0.8875 end-to-end (BENCH r11); 0.95 clears
+        # the ≥0.9 contract.
+        fields, rows, sample, cents = cls._train_coarse(
+            src, vec_col, rows, total, metric, p, want=p["ksub"] * 4, target=0.95
+        )
+        # residual codebooks: quantize what the coarse quantizer leaves over
+        assign = centroid_dists(sample, cents).argmin(axis=1)
+        books = train_pq_codebooks(
+            sample - cents[assign], p["m"], p["ksub"], p["kmeans_iters"], p["seed"]
+        )
+        return {**fields, "m": p["m"], "ksub": p["ksub"], "codebooks": _books_field(books)}, rows
+
+    @staticmethod
+    def _codec_arrays(man: dict) -> tuple:
+        return (
+            np.asarray(man["centroids"], dtype=np.float64),
+            np.asarray(man["codebooks"], dtype=np.float64),
+            man["metric"],
+        )
+
+    @classmethod
+    def _encode_local(cls, rows, mat, man, elem):
+        import pyarrow as pa
+
+        out = _ivfadc_codes(mat, *cls._codec_arrays(man))
+        return {"pq_code": pa.array(out["pq_code"], pa.binary())}, out["list_id"]
+
+    @classmethod
+    def _encode(cls, src, man):
+        arrays = cls._codec_arrays(man)
+        enc = _batch_udf(lambda mat: _ivfadc_codes(mat, *arrays), "list_id int, pq_code binary")
+        return src.withColumn("_e", enc(F.col(man["vec_col"]))).select(
+            man["id_col"],
+            F.col("_e.list_id").alias("list_id"),
+            F.col("_e.pq_code").alias("pq_code"),
+        )
 
     def knn_search(
         self,
@@ -274,159 +315,7 @@ class IvfPqIndex(IvfLists):
             "route": route,
         }
 
-    def add_batch(
-        self, df: DataFrame, manifest_extra: dict | None = None
-    ) -> "IvfPqIndex":
-        """Offline incremental maintenance (r12 — the IVFADC face of the
-        HNSW ``add_batch``, VERDICT r11 #3): assign + residual-encode
-        the new batch with the EXISTING centroids and codebooks (frozen;
-        drift is a rebuild) in one map-only Arrow stage, append into the
-        hive-partitioned ``codes/list_id=N/`` layout, and atomically
-        update the manifest count. Probes and the executor-side query
-        stream re-list the per-list files per call, so they pick the
-        appended codes up immediately. The auto-rerank source extends /
-        drops by the same rule as PqIndex.add_batch (a partial source
-        would silently lose new-batch candidates in the re-rank join).
-        Empty batch: no-op (ADVICE r12, family-consistent). Crash
-        window: commits via staged_append — after a crash inside the
-        rename→manifest window, rebuild."""
-        from duckdb_vss_spark.index.manifest import staged_append
 
-        src, n = self._batch(df)
-        if n == 0:
-            return self
-        enc = _assign_encode_udf(self._centroids, self._books, self.metric)(
-            F.col(self.manifest["vec_col"])
-        )
-        moved = staged_append(
-            src.withColumn("_e", enc).select(
-                self.manifest["id_col"],
-                F.col("_e.list_id").alias("list_id"),
-                F.col("_e.pq_code").alias("pq_code"),
-            ),
-            os.path.join(self.path, "codes"),
-            partition_by="list_id",
-        )
-        return self._commit_append(
-            src, moved, n, manifest_extra,
-            source_fields=_merge_source_fields(self.manifest, df, "IvfPqIndex"),
-        )
-
-
-def create_ivfpq_index(
-    spark: SparkSession,
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    path: str,
-    name: str = "ivfpq_idx",
-    metric: str = "l2sq",
-    nlist: int | None = None,
-    default_nprobe: int | None = None,
-    m: int = 8,
-    ksub: int = 16,
-    sample_per_list: int = 256,
-    kmeans_iters: int = 10,
-    seed: int = 42,
-    driver_build_max_bytes: int = 4 << 20,
-    overwrite: bool = False,
-) -> IvfPqIndex:
-    """Train coarse centroids + residual codebooks on one driver-sized
-    sample, then ONE map-only assign-and-encode stage and one
-    ``partitionBy(list_id)`` write."""
-    if metric not in ("l2sq", "cosine"):
-        raise ValueError("IVFPQ 'metric' must be 'l2sq' or 'cosine' (no 'ip' residuals)")
-    if ksub > 256:
-        raise ValueError("ksub must be <= 256 (codes are one byte per subspace)")
-    from duckdb_vss_spark.session import check_persistence_enabled
-
-    check_persistence_enabled(spark)
-    src = _id_vec(df, id_col, vec_col)
-    # driver-local fast path (r10, see create_hnsw_index's twin note):
-    # small file-backed source + whole-table training sample → ONE
-    # bounded collect serves training, assign+encode (same numpy
-    # kernels as the Arrow UDF) and the partitioned codes write
-    local_rows, total, dims = _local_or_count(
-        src, vec_col, "an IVFPQ index", driver_build_max_bytes
-    )
-    if nlist is None:
-        nlist = max(2, min(4096, int(math.isqrt(total))))
-    nlist = int(min(nlist, total))
-    sample_mat, local_rows = _training_sample(
-        src, vec_col, local_rows, total, max(nlist * sample_per_list, ksub * 4), seed
-    )
-    sample = _norm_rows(sample_mat, metric)
-    centroids = _kmeans(sample, nlist, kmeans_iters, seed)
-    if default_nprobe is None:
-        # target 0.95 (not the IVF family's 0.9): since r11 the default
-        # knn path auto-reranks, which removes the residual-quantization
-        # loss entirely — routing is then the ONLY loss term, so shipped
-        # end-to-end recall@10 ≈ routing recall. 0.9 routing shipped
-        # 0.8875 end-to-end (BENCH r11); 0.95 clears the ≥0.9 contract.
-        default_nprobe = _calibrate_nprobe(sample, centroids, metric, target=0.95)
-        _LOG.info(
-            "ivfpq: calibrated default_nprobe=%d/%d (routing recall>=0.95 "
-            "on the training sample)", default_nprobe, nlist,
-        )
-    # residual codebooks: quantize what the coarse quantizer leaves over
-    assign = centroid_dists(sample, centroids).argmin(axis=1).astype(np.int32)
-    books = train_pq_codebooks(sample - centroids[assign], m, ksub, kmeans_iters, seed)
-    _fresh_dir(path, overwrite)
-
-    codes_dir = os.path.join(path, "codes")
-    if local_rows is not None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq_
-
-        # sample IS the normed corpus in collected order; replicate the
-        # UDF's assign -> residual -> encode exactly
-        codes = _encode_batch(sample - centroids[assign], books)
-        ids = np.fromiter((r[0] for r in local_rows), dtype=np.int64, count=total)
-        for lid in np.unique(assign):
-            sel = np.flatnonzero(assign == lid)
-            part = os.path.join(codes_dir, f"list_id={int(lid)}")
-            os.makedirs(part)
-            pq_.write_table(
-                pa.table(
-                    {
-                        id_col: pa.array(ids[sel]),
-                        "pq_code": pa.array(
-                            [codes[i].tobytes() for i in sel], type=pa.binary()
-                        ),
-                    }
-                ),
-                os.path.join(part, "part-00000.parquet"),
-            )
-    else:
-        enc = _assign_encode_udf(centroids, books, metric)(F.col(vec_col))
-        (
-            src.withColumn("_e", enc)
-            .select(id_col, F.col("_e.list_id").alias("list_id"), F.col("_e.pq_code").alias("pq_code"))
-            .write.partitionBy("list_id")
-            .parquet(codes_dir)
-        )
-
-    manifest = {
-        "index_name": name,
-        "vec_col": vec_col,
-        "id_col": id_col,
-        "metric": metric,
-        "dimensions": dims,
-        "nlist": nlist,
-        "default_nprobe": default_nprobe,
-        "m": m,
-        "ksub": ksub,
-        "count": int(total),
-        "centroids": [[float(x) for x in row] for row in centroids],
-        "codebooks": [[[float(x) for x in row] for row in book] for book in books],
-        # gated on the USER's plan shape, not the internal projection
-        # (ADVICE r11; see base._source_manifest_fields)
-        **_source_manifest_fields(df),
-        "created_at": _now(),
-    }
-    write_manifest(path, manifest)
-    return IvfPqIndex(spark, path, manifest)
-
-
+create_ivfpq_index = IvfPqIndex.create
 load_ivfpq_index = IvfPqIndex.load
 drop_ivfpq_index = IvfPqIndex.drop

@@ -27,38 +27,80 @@ map-only, ``partitionBy(list_id)`` write (the only shuffle).
 
 from __future__ import annotations
 
-import logging
-import math
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duckdb_vss_spark.index.base import (
-    IvfLists,
-    _count_and_dims,
-    _fresh_dir,
-    _id_vec,
-    _shortlist_frame,
-    _training_sample,
-    mtime_lru,
-)
+from duckdb_vss_spark.index.base import IvfLists, _load_matrix, _shortlist_frame
 
 __all__ = ["IvfSqIndex", "create_ivfsq_index", "load_ivfsq_index", "drop_ivfsq_index"]
-
-_LOG = logging.getLogger(__name__)
 
 
 class IvfSqIndex(IvfLists):
     """Handle over a built IVF×SQ artifact."""
 
     label = "IVF-SQ"
+    metrics = ("l2sq",)  # v1
+    ddl_options = {"nlist": int, "default_nprobe": int}
+    recorded = {"nlist": "nlist", "default_nprobe": "default_nprobe"}
 
     def __init__(self, spark: SparkSession, path: str, manifest: dict):
         super().__init__(spark, path, manifest)
         self._mins = np.asarray(manifest["sq_mins"], dtype=np.float64)
         self._maxs = np.asarray(manifest["sq_maxs"], dtype=np.float64)
+
+    # -- build: the codec of base.QuantizedIndex._create ------------------
+
+    @classmethod
+    def create(
+        cls,
+        spark: SparkSession,
+        df: DataFrame,
+        vec_col: str,
+        id_col: str,
+        path: str,
+        name: str = "ivfsq_idx",
+        metric: str = "l2sq",
+        nlist: int | None = None,
+        default_nprobe: int | None = None,
+        sample_per_list: int = 256,
+        kmeans_iters: int = 10,
+        seed: int = 42,
+        overwrite: bool = False,
+    ) -> "IvfSqIndex":
+        """Bulk build: sampled-k-means routing (ivf.py machinery) + exact
+        SQ bounds + map-only encode + partitioned write of (id, codes).
+        No driver-local build: the SQ codec is a JVM expression."""
+        return cls._create(
+            spark, df, vec_col, id_col, path, name, metric, overwrite, nlist=nlist,
+            default_nprobe=default_nprobe, sample_per_list=sample_per_list,
+            kmeans_iters=kmeans_iters, seed=seed,
+        )
+
+    @classmethod
+    def train(cls, src, vec_col, rows, total, metric, p):
+        from duckdb_vss_spark.index.sq import train_sq
+
+        fields, rows, _sample, _cents = cls._train_coarse(src, vec_col, rows, total, metric, p)
+        mins, maxs = train_sq(src, vec_col)
+        return {
+            **fields,
+            "sq_mins": [float(x) for x in mins],
+            "sq_maxs": [float(x) for x in maxs],
+        }, rows
+
+    @classmethod
+    def _encode(cls, src, man):
+        from duckdb_vss_spark.index.ivf import _assign_udf
+        from duckdb_vss_spark.index.sq import sq_encode
+
+        vec_col = man["vec_col"]
+        assign = _assign_udf(np.asarray(man["centroids"], dtype=np.float64), man["metric"])
+        return (
+            sq_encode(src, vec_col, np.asarray(man["sq_mins"]), np.asarray(man["sq_maxs"]))
+            .withColumn("list_id", assign(F.col(vec_col)))
+            .select(man["id_col"], "codes", "list_id")
+        )
 
     def knn_search(
         self,
@@ -159,40 +201,6 @@ class IvfSqIndex(IvfLists):
             queries, query_vec_col, query_id_col, pairs, source, k, dist_col, rn_col
         )
 
-    def add_batch(
-        self, df: DataFrame, manifest_extra: dict | None = None
-    ) -> "IvfSqIndex":
-        """Offline incremental maintenance (r12 — the IVF×SQ face of the
-        add_batch family): assign to the FROZEN centroids and SQ-encode
-        with the FROZEN per-dim bounds in one map-only stage, hive-append
-        into ``lists/``, atomically bump the manifest count. Frozen-codec
-        caveat specific to SQ: batch values OUTSIDE the trained min/max
-        range clamp to the range edge (larger reconstruction error for
-        those dims) — fine for appends from the same distribution;
-        rebuild when the distribution shifts. Appended ids are not
-        deduplicated (the reference's Insert appends too). Empty batch:
-        no-op (ADVICE r12, family-consistent). Crash window: commits
-        via staged_append — after a crash inside the rename→manifest
-        window, rebuild."""
-        from duckdb_vss_spark.index.ivf import _assign_udf
-        from duckdb_vss_spark.index.manifest import staged_append
-        from duckdb_vss_spark.index.sq import sq_encode
-
-        src, n = self._batch(df)
-        if n == 0:
-            return self
-        man = self.manifest
-        assign = _assign_udf(self._centroids, man["metric"])
-        encoded = sq_encode(src, man["vec_col"], self._mins, self._maxs).withColumn(
-            "list_id", assign(F.col(man["vec_col"]))
-        )
-        moved = staged_append(
-            encoded.select(man["id_col"], "codes", "list_id"),
-            os.path.join(self.path, "lists"),
-            partition_by="list_id",
-        )
-        return self._commit_append(src, moved, n, manifest_extra)
-
     def _driver_sq_shortlist(self, qv: np.ndarray, probes, take: int):
         """(id, dist) SQ-ADC top-``take`` over the PROBED lists, on the
         driver (the walk in ``QuantizedIndex._driver_shortlist``), or
@@ -215,100 +223,10 @@ class IvfSqIndex(IvfLists):
             )
 
         return self._driver_shortlist(
-            take, dims * 8, lambda f: _load_sq_codes(f, id_col, dims), score, probes
+            take, dims * 8, lambda f: _load_matrix(f, id_col, "codes", dims, np.uint8), score, probes
         )
 
 
-# mtime-keyed LRU of decoded SQ code files for repeated single-query
-# searches on gate-small artifacts (the IVF×SQ face of bq._load_sigs)
-@mtime_lru(32)
-def _load_sq_codes(file: str, id_col: str, dims: int):
-    """(ids, uint8 (n, dims) code matrix) for one inverted-list data
-    file, or None when the stored shape cannot take the driver fold —
-    NULL elements or ragged rows keep Spark's NULL/size-mismatch
-    semantics on the distributed scan."""
-    import pyarrow.parquet as papq
-
-    t = papq.read_table(file, columns=[id_col, "codes"])
-    ids = np.asarray(t[id_col].to_pylist(), dtype=np.int64)
-    col = t["codes"].combine_chunks()
-    if col.null_count:
-        return None
-    flat = col.flatten()
-    if flat.null_count or len(flat) != len(ids) * dims:
-        return None
-    off = np.asarray(col.offsets)
-    if len(ids) and not bool((np.diff(off) == dims).all()):
-        return None  # uniform total length but ragged rows
-    codes = flat.to_numpy(zero_copy_only=False).astype(np.uint8)
-    return ids, codes.reshape(len(ids), dims)
-
-
-def create_ivfsq_index(
-    spark: SparkSession,
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    path: str,
-    name: str = "ivfsq_idx",
-    metric: str = "l2sq",
-    nlist: int | None = None,
-    default_nprobe: int | None = None,
-    sample_per_list: int = 256,
-    kmeans_iters: int = 10,
-    seed: int = 42,
-    overwrite: bool = False,
-) -> IvfSqIndex:
-    """Bulk build: sampled-k-means routing (ivf.py machinery) + exact
-    SQ bounds + map-only encode + partitioned write of (id, codes)."""
-    if metric != "l2sq":
-        raise ValueError("IVF-SQ v1 supports metric='l2sq' only")
-    from duckdb_vss_spark.index.ivf import _assign_udf, _calibrate_nprobe, _kmeans
-    from duckdb_vss_spark.index.sq import sq_encode, train_sq
-    from duckdb_vss_spark.session import check_persistence_enabled
-
-    check_persistence_enabled(spark)
-    src = _id_vec(df, id_col, vec_col)
-    total, dims = _count_and_dims(src, vec_col, "an IVF-SQ index")
-    if nlist is None:
-        nlist = max(2, min(4096, int(math.isqrt(total))))
-    nlist = int(min(nlist, total))
-    sample, _ = _training_sample(src, vec_col, None, total, nlist * sample_per_list, seed)
-    centroids = _kmeans(sample, nlist, kmeans_iters, seed)
-    if default_nprobe is None:
-        default_nprobe = _calibrate_nprobe(sample, centroids, "l2sq")
-        _LOG.info(
-            "ivfsq: calibrated default_nprobe=%d/%d (routing recall>=0.9 "
-            "on the training sample)", default_nprobe, nlist,
-        )
-
-    mins, maxs = train_sq(src, vec_col)
-    _fresh_dir(path, overwrite)
-    assign = _assign_udf(centroids, "l2sq")
-    encoded = sq_encode(src, vec_col, mins, maxs).withColumn(
-        "list_id", assign(F.col(vec_col))
-    )
-    encoded.select(id_col, "codes", "list_id").write.partitionBy("list_id").parquet(
-        os.path.join(path, "lists")
-    )
-    manifest = {
-        "name": name,
-        "metric": metric,
-        "dimensions": dims,
-        "nlist": nlist,
-        "default_nprobe": default_nprobe,
-        "count": total,
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "centroids": [[float(x) for x in c] for c in centroids],
-        "sq_mins": [float(x) for x in mins],
-        "sq_maxs": [float(x) for x in maxs],
-    }
-    from duckdb_vss_spark.index.manifest import write_manifest
-
-    write_manifest(path, manifest)
-    return IvfSqIndex(spark, path, manifest)
-
-
+create_ivfsq_index = IvfSqIndex.create
 load_ivfsq_index = IvfSqIndex.load
 drop_ivfsq_index = IvfSqIndex.drop

@@ -42,30 +42,22 @@ recomputes the exact SQL-visible metric via functions/distance.py.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, DoubleType
+from pyspark.sql.types import DoubleType
 
 from duckdb_vss_spark.index.base import (
     QuantizedIndex,
-    _fresh_dir,
-    _id_vec,
-    _local_or_count,
-    _merge_source_fields,
+    _batch_udf,
     _norm_rows,
-    _now,
     _resolve_rerank,
     _shortlist_frame,
-    _source_manifest_fields,
     _training_sample,
     centroid_dists,
     mtime_lru,
 )
 from duckdb_vss_spark.index.ivf import _kmeans
-from duckdb_vss_spark.index.manifest import write_manifest
 
 __all__ = ["train_pq_codebooks", "create_pq_index", "load_pq_index", "drop_pq_index", "PqIndex"]
 
@@ -101,16 +93,14 @@ def _encode_batch(mat: np.ndarray, books: np.ndarray) -> np.ndarray:
     return codes
 
 
-def _encode_udf(books: np.ndarray, metric: str):
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+def _pq_codes(mat: np.ndarray, books: np.ndarray, metric: str) -> list:
+    """(n, dims) float64 rows → their ``pq_code`` values (m bytes each):
+    the one PQ encoder of both build paths (``base._batch_udf``)."""
+    return [c.tobytes() for c in _encode_batch(_norm_rows(mat, metric), books)]
 
-    def enc(v):
-        mat = np.stack([np.asarray(x, dtype=np.float64) for x in v])
-        mat = _norm_rows(mat, metric)
-        return pd.Series([c.tobytes() for c in _encode_batch(mat, books)])
 
-    return pandas_udf(enc, BinaryType())
+def _books_field(books: np.ndarray) -> list:
+    return [[[float(x) for x in row] for row in book] for book in books]
 
 
 def _adc_lut(query: np.ndarray, books: np.ndarray, metric: str) -> np.ndarray:
@@ -183,6 +173,9 @@ class PqIndex(QuantizedIndex):
 
     label = "PQ"
     adc_recall = "0.74"
+    ddl_options = {"m": int, "ksub": int}
+    recorded = {"m": "m", "ksub": "ksub"}
+    records_source = True
 
     def __init__(self, spark: SparkSession, path: str, manifest: dict):
         super().__init__(spark, path, manifest)
@@ -202,43 +195,58 @@ class PqIndex(QuantizedIndex):
             [self._books[j][codes[:, j]] for j in range(m)], axis=1
         )
 
-    def add_batch(
-        self, df: DataFrame, manifest_extra: dict | None = None
+    # -- build: the codec of base.QuantizedIndex._create ------------------
+
+    @classmethod
+    def create(
+        cls,
+        spark: SparkSession,
+        df: DataFrame,
+        vec_col: str,
+        id_col: str,
+        path: str,
+        name: str = "pq_idx",
+        metric: str = "l2sq",
+        m: int = 8,
+        ksub: int = 16,
+        sample_rows: int = 65536,
+        kmeans_iters: int = 10,
+        seed: int = 42,
+        overwrite: bool = False,
     ) -> "PqIndex":
-        """Offline incremental maintenance (r12 — the PQ face of the
-        HNSW ``add_batch``, VERDICT r11 #3): encode the new batch with
-        the EXISTING codebooks (frozen — the standard PQ append recipe;
-        codebook drift is a rebuild) in one map-only Arrow stage,
-        append the (id, pq_code) parquet next to the existing codes,
-        and atomically update the manifest count. O(|batch|) work; the
-        ADC scan and the executor-side query stream pick the new files
-        up on their next driver-side listing.
-
-        The recorded auto-rerank source EXTENDS when the batch is a
-        fingerprintable raw file scan over new files, and is DROPPED
-        (with a warning) otherwise — a source covering only part of
-        the corpus would silently lose new-batch candidates in the
-        re-rank join. Appended ids are not deduplicated against the
-        existing codes (the reference's Insert appends too). An empty
-        batch is a no-op (ADVICE r12, family-consistent). Crash
-        window: the batch commits via a staging dir renamed into place
-        right before the manifest write (index/manifest.staged_append)
-        — after a crash INSIDE that microsecond window, rebuild()."""
-        from duckdb_vss_spark.index.manifest import staged_append
-
-        src, n = self._batch(df)
-        if n == 0:
-            return self
-        id_col, vec_col = self.manifest["id_col"], self.manifest["vec_col"]
-        moved = staged_append(
-            src.withColumn(
-                "pq_code", _encode_udf(self._books, self.metric)(F.col(vec_col))
-            ).select(id_col, "pq_code"),
-            os.path.join(self.path, "codes"),
+        """Train codebooks on a driver-sized seeded sample, encode the
+        full corpus in one map-only Arrow stage (or in-process, the same
+        ``_encode_batch`` kernel, for a gate-small source), write (id,
+        pq_code) parquet. ``ksub`` defaults low for test-scale corpora;
+        production PQ uses ksub=256 (one byte per subspace exactly)."""
+        if ksub > 256:
+            raise ValueError("ksub must be <= 256 (codes are one byte per subspace)")
+        return cls._create(
+            spark, df, vec_col, id_col, path, name, metric, overwrite, m=m,
+            ksub=ksub, sample_rows=sample_rows, kmeans_iters=kmeans_iters, seed=seed,
         )
-        return self._commit_append(
-            src, moved, n, manifest_extra,
-            source_fields=_merge_source_fields(self.manifest, df, "PqIndex"),
+
+    @classmethod
+    def train(cls, src, vec_col, rows, total, metric, p):
+        sample, rows = _training_sample(src, vec_col, rows, total, p["sample_rows"], p["seed"])
+        books = train_pq_codebooks(
+            _norm_rows(sample, metric), p["m"], p["ksub"], p["kmeans_iters"], p["seed"]
+        )
+        return {"m": p["m"], "ksub": p["ksub"], "codebooks": _books_field(books)}, rows
+
+    @classmethod
+    def _encode_local(cls, rows, mat, man, elem):
+        import pyarrow as pa
+
+        books = np.asarray(man["codebooks"], dtype=np.float64)
+        return {"pq_code": pa.array(_pq_codes(mat, books, man["metric"]), pa.binary())}, None
+
+    @classmethod
+    def _encode(cls, src, man):
+        books, metric = np.asarray(man["codebooks"], dtype=np.float64), man["metric"]
+        enc = _batch_udf(lambda mat: _pq_codes(mat, books, metric), "binary")
+        return src.withColumn("pq_code", enc(F.col(man["vec_col"]))).select(
+            man["id_col"], "pq_code"
         )
 
     # -- single-query ADC top-k ------------------------------------------
@@ -348,89 +356,6 @@ class PqIndex(QuantizedIndex):
         }
 
 
-def create_pq_index(
-    spark: SparkSession,
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    path: str,
-    name: str = "pq_idx",
-    metric: str = "l2sq",
-    m: int = 8,
-    ksub: int = 16,
-    sample_rows: int = 65536,
-    kmeans_iters: int = 10,
-    seed: int = 42,
-    overwrite: bool = False,
-    driver_build_max_bytes: int = 4 << 20,
-) -> PqIndex:
-    """Train codebooks on a driver-sized seeded sample, encode the full
-    corpus in one map-only Arrow stage, write (id, pq_code) parquet.
-    ``ksub`` defaults low for test-scale corpora; production PQ uses
-    ksub=256 (one byte per subspace exactly)."""
-    if metric not in ("l2sq", "cosine", "ip"):
-        raise ValueError("PQ index 'metric' must be one of: 'cosine', 'ip', 'l2sq'")
-    if ksub > 256:
-        raise ValueError("ksub must be <= 256 (codes are one byte per subspace)")
-    from duckdb_vss_spark.session import check_persistence_enabled
-
-    check_persistence_enabled(spark)
-    src = _id_vec(df, id_col, vec_col)
-    # driver-local fast path (r10, see create_hnsw_index's twin note):
-    # a small file-backed source whose training sample is the whole
-    # table builds from ONE bounded collect — training, encode (same
-    # _encode_batch kernel as the Arrow UDF) and the codes write all
-    # in-process, no Spark jobs at all
-    local_rows, total, dims = _local_or_count(
-        src, vec_col, "a PQ index", driver_build_max_bytes
-    )
-    sample_mat, local_rows = _training_sample(
-        src, vec_col, local_rows, total, sample_rows, seed
-    )
-    sample = _norm_rows(sample_mat, metric)
-    books = train_pq_codebooks(sample, m, ksub, kmeans_iters, seed)
-    _fresh_dir(path, overwrite)
-
-    codes_dir = os.path.join(path, "codes")
-    if local_rows is not None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq_
-
-        codes = _encode_batch(sample, books)  # sample IS the normed corpus
-        ids = np.fromiter((r[0] for r in local_rows), dtype=np.int64, count=total)
-        os.makedirs(codes_dir)
-        pq_.write_table(
-            pa.table(
-                {
-                    id_col: pa.array(ids),
-                    "pq_code": pa.array([c.tobytes() for c in codes], type=pa.binary()),
-                }
-            ),
-            os.path.join(codes_dir, "part-00000.parquet"),
-        )
-    else:
-        src.withColumn("pq_code", _encode_udf(books, metric)(F.col(vec_col))).select(
-            id_col, "pq_code"
-        ).write.parquet(codes_dir)
-
-    manifest = {
-        "index_name": name,
-        "vec_col": vec_col,
-        "id_col": id_col,
-        "metric": metric,
-        "dimensions": dims,
-        "m": m,
-        "ksub": ksub,
-        "count": int(total),
-        "codebooks": [[[float(x) for x in row] for row in book] for book in books],
-        # gated on the USER's plan shape, not the internal projection
-        # (the id cast we add is reapplied by _manifest_source)
-        **_source_manifest_fields(df),
-        "created_at": _now(),
-    }
-    write_manifest(path, manifest)
-    return PqIndex(spark, path, manifest)
-
-
+create_pq_index = PqIndex.create
 load_pq_index = PqIndex.load
 drop_pq_index = PqIndex.drop

@@ -454,14 +454,14 @@ def compact_data(
     subdir: str,
     partition_by: str | None = None,
     rows_per_file: int = 65_536,
-) -> DataFrame | None:
+) -> str | None:
     """Physically reclaim an artifact's data dir: read it back, drop
     tombstoned rows, re-pack the accumulated add_batch part files
     (right-sized for flat layouts; one file per list for hive layouts
     so probes read one file instead of one-per-epoch), and swap the
-    rewritten dir into place. Returns the compacted rows as a
-    DataFrame over the NEW files (for per-list recounts), or None when
-    there was nothing to do (no tombstones and nothing to coalesce).
+    rewritten dir into place. Returns the rewritten data dir (its
+    footers are the new counts), or None when there was nothing to do
+    (no tombstones and nothing to coalesce).
 
     The caller owns the manifest commit (count := live, tombstone
     fields cleared) — call ``finish_compact`` right after. Crash
@@ -519,7 +519,7 @@ def compact_data(
     os.rename(data_dir, parked)
     os.rename(stage, data_dir)
     shutil.rmtree(parked, ignore_errors=True)
-    return index.spark.read.parquet(data_dir)
+    return data_dir
 
 
 def finish_compact(

@@ -846,7 +846,9 @@ class VssPlanner:
         the routed table IS the source the query's distance call reads,
         so the rescore needs no manifest source resolution — ADC-only
         ~0.74-recall results are unreachable via SQL regardless of
-        whether the build-time fingerprint still validates. The
+        whether the build-time fingerprint still validates. The fetch is
+        a left-semi join on the shortlist's ids, so a re-added id
+        (indexed twice) returns its table row once. The
         shortlist sizes are the direct API's default signatures
         (10·k for PQ/IVFADC/IVFSQ, the calibrated fraction for BQ), so
         routed results ≡ ``knn_search`` with default rerank."""
@@ -883,8 +885,11 @@ class VssPlanner:
 
         dist_fn = distance_for_metric(idx.metric)
         q = [float(x) for x in query_vec]
+        # fetch by id SET (base._rerank_one's rule): a left-semi join
+        # returns each table row once even when the index holds its id
+        # twice (a re-added row), and keeps every table column
         out = (
-            base.join(F.broadcast(short.select(id_col)), id_col)
+            base.join(F.broadcast(short.select(id_col)), id_col, "left_semi")
             .withColumn("dist", dist_fn(F.col(vcol), q))
             .orderBy(F.col("dist").asc_nulls_last(), F.col(id_col))
             .limit(int(k))
@@ -1839,14 +1844,10 @@ class VssPlanner:
                     return self._empty_result()
                 raise ValueError(f"an index with the name {name!r} already exists")
             opts = self._parse_with_options(raw_opts)
-            allowed = {"metric", "id", "id_col", "ef_search"} | {
-                "HNSW": {"m", "m0", "ef_construction"},
-                "IVF": {"nlist", "default_nprobe"},
-                "PQ": {"m", "ksub"},
-                "IVFPQ": {"m", "nlist", "ksub", "default_nprobe"},
-                "IVFSQ": {"nlist", "default_nprobe"},
-                "BQ": {"scoring", "target_recall"},
-            }[family]
+            from duckdb_vss_spark.index import INDEX_FAMILIES
+
+            cls = INDEX_FAMILIES[family.lower()]
+            allowed = {"metric", "id", "id_col", "ef_search"} | set(cls.ddl_options)
             unknown = sorted(set(opts) - allowed)
             if unknown:
                 # the reference's Binder wording
@@ -1864,13 +1865,10 @@ class VssPlanner:
             import os as _os
 
             path = _os.path.join(self._ddl_dir, name)
-            kwargs = {k: opts[k] for k in ("metric",) if k in opts}
+            kwargs = {k: typ(opts[k]) for k, typ in cls.ddl_options.items() if k in opts}
+            if "metric" in opts:
+                kwargs["metric"] = opts["metric"]
             if family == "HNSW":
-                from duckdb_vss_spark.index import create_hnsw_index as _create
-
-                for k in ("m", "m0", "ef_construction"):
-                    if k in opts:
-                        kwargs[k] = opts[k]
                 # a CREATE TABLE-declared FLOAT[n] length lets the index
                 # build over an EMPTY table (hnsw_insert_wal.test:26-28)
                 declared = (self._tables.get(table.lower()) or {}).get(
@@ -1878,45 +1876,7 @@ class VssPlanner:
                 ).get(vec_col)
                 if declared:
                     kwargs["dims"] = int(declared)
-            elif family == "IVF":
-                from duckdb_vss_spark.index.ivf import create_ivf_index as _create
-
-                for k in ("nlist", "default_nprobe"):
-                    if k in opts:
-                        kwargs[k] = int(opts[k])
-            elif family == "PQ":
-                from duckdb_vss_spark.index.pq import create_pq_index as _create
-
-                if "m" in opts:
-                    kwargs["m"] = opts["m"]
-                if "ksub" in opts:
-                    kwargs["ksub"] = int(opts["ksub"])
-            elif family == "IVFPQ":
-                from duckdb_vss_spark.index.ivfpq import (
-                    create_ivfpq_index as _create,
-                )
-
-                if "m" in opts:
-                    kwargs["m"] = opts["m"]
-                for k in ("nlist", "ksub", "default_nprobe"):
-                    if k in opts:
-                        kwargs[k] = int(opts[k])
-            elif family == "IVFSQ":
-                from duckdb_vss_spark.index.ivfsq import (
-                    create_ivfsq_index as _create,
-                )
-
-                for k in ("nlist", "default_nprobe"):
-                    if k in opts:
-                        kwargs[k] = int(opts[k])
-            else:  # BQ
-                from duckdb_vss_spark.index.bq import create_bq_index as _create
-
-                if "scoring" in opts:
-                    kwargs["scoring"] = opts["scoring"]
-                if "target_recall" in opts:
-                    kwargs["target_recall"] = float(opts["target_recall"])
-            idx = _create(
+            idx = cls.create(
                 self.spark, df, vec_col, id_col, path,
                 name=name, overwrite=True, **kwargs,
             )

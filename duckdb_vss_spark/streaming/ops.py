@@ -321,28 +321,14 @@ def streaming_index_refresh(
     )
 
 
-_INDEX_KINDS: dict[str, tuple[str, str, str | None]] = {
-    # kind -> (create fn, load fn, data subdir for the file-count
-    # compaction trigger; None = HNSW, which carries its own
-    # shard-count trigger inside add_batch)
-    "hnsw": ("create_hnsw_index", "load_index", None),
-    "pq": ("create_pq_index", "load_pq_index", "codes"),
-    "ivf": ("create_ivf_index", "load_ivf_index", "lists"),
-    "ivfpq": ("create_ivfpq_index", "load_ivfpq_index", "codes"),
-    "ivfsq": ("create_ivfsq_index", "load_ivfsq_index", "lists"),
-    "bq": ("create_bq_index", "load_bq_index", "sigs"),
-}
-
-
 def _index_fns(kind: str):
-    import duckdb_vss_spark.index as ixmod
-    from duckdb_vss_spark.index import bq, ivf, ivfpq, ivfsq, pq
+    """(create, load, data subdir for the file-count compaction trigger;
+    None = HNSW, whose add_batch carries its own shard-count trigger)
+    of an index family (index.INDEX_FAMILIES)."""
+    from duckdb_vss_spark.index import INDEX_FAMILIES
 
-    create_name, load_name, subdir = _INDEX_KINDS[kind]
-    mods = [ixmod, pq, ivf, ivfpq, ivfsq, bq]
-    create = next(getattr(m, create_name) for m in mods if hasattr(m, create_name))
-    load = next(getattr(m, load_name) for m in mods if hasattr(m, load_name))
-    return create, load, subdir
+    cls = INDEX_FAMILIES[kind]
+    return cls.create, cls.load, cls.data_dir
 
 
 def _data_file_count(path: str, subdir: str) -> int:

@@ -410,22 +410,23 @@ def test_bq_knn_join_exact_and_tombstones(spark, emb, tmp_path):
     assert dead_id not in ids3
 
 
-def test_build_local_and_cluster_paths_bit_identical(spark, emb, tmp_path):
+def test_build_local_and_cluster_paths_bit_identical(spark, emb, tmp_path, monkeypatch):
     """r16: gate-small builds write the signature table driver-side
     (numpy replay of the Column expressions). The artifact must be
     value-IDENTICAL to the cluster write — same ids, same packed words,
     and the asym norms to the BIT (the numpy fold replays the generated
     SQL's left-to-right association), so search behavior cannot depend
     on which path built the index."""
+    from duckdb_vss_spark.index import base
     from duckdb_vss_spark.index.bq import create_bq_index
 
     src = emb.select("vec_id", "embedding")
     a = create_bq_index(
         spark, src, "embedding", "vec_id", str(tmp_path / "loc"), overwrite=True
     )
+    monkeypatch.setattr(base, "DRIVER_BUILD_MAX_BYTES", 0)  # force the cluster write
     b = create_bq_index(
-        spark, src, "embedding", "vec_id", str(tmp_path / "clu"),
-        overwrite=True, driver_build_max_bytes=0,  # force the cluster write
+        spark, src, "embedding", "vec_id", str(tmp_path / "clu"), overwrite=True,
     )
     assert a.manifest["count"] == b.manifest["count"] > 0
     assert a.manifest["cal_fraction"] == b.manifest["cal_fraction"]

@@ -402,14 +402,14 @@ def test_search_stream_loads_each_graph_once_across_batches(monkeypatch):
     assert len(loads) == 3 * len(files)  # ceil(1200/500)=3 flushes
 
 
-def test_driver_local_build_matches_distributed(spark, tmp_path):
+def test_driver_local_build_matches_distributed(spark, tmp_path, monkeypatch):
     """A small FILE-BACKED source builds in-process (the
-    driver_build_max_bytes gate); the artifact must be interchangeable
+    base.DRIVER_BUILD_MAX_BYTES gate); the artifact must be interchangeable
     with the distributed build: same manifest shape, same row count,
     same partition sizing, identical knn_search results. In-memory
     frames (input_bytes unknown) always take the distributed path, so
     only the parquet round-trip exercises the gate."""
-    from duckdb_vss_spark.index import create_hnsw_index
+    from duckdb_vss_spark.index import base, create_hnsw_index
 
     rng = np.random.default_rng(7)
     rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(1200)]
@@ -420,9 +420,9 @@ def test_driver_local_build_matches_distributed(spark, tmp_path):
     local = create_hnsw_index(
         spark, src, "v", "vid", str(tmp_path / "ix_local"), overwrite=True
     )
+    monkeypatch.setattr(base, "DRIVER_BUILD_MAX_BYTES", 0)  # force the cluster path
     dist = create_hnsw_index(
         spark, src, "v", "vid", str(tmp_path / "ix_dist"), overwrite=True,
-        driver_build_max_bytes=0,  # force the cluster path
     )
     assert local.manifest["count"] == dist.manifest["count"] == 1200
     assert local.manifest["num_partitions"] == dist.manifest["num_partitions"]

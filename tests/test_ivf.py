@@ -252,7 +252,7 @@ def test_calibration_metric_aware_ip():
     assert p_ip > p_l2
 
 
-def test_driver_local_build_matches_distributed(spark, tmp_path):
+def test_driver_local_build_matches_distributed(spark, tmp_path, monkeypatch):
     """Small file-backed source: the driver-local build (one collect +
     pyarrow list writes) must be indistinguishable from the cluster
     build — identical centroids (same frac==1.0 sample), identical
@@ -261,7 +261,7 @@ def test_driver_local_build_matches_distributed(spark, tmp_path):
     partition pruning intact."""
     import numpy as np
 
-    from duckdb_vss_spark.index import create_ivf_index
+    from duckdb_vss_spark.index import base, create_ivf_index
 
     rng = np.random.default_rng(3)
     rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(1500)]
@@ -273,9 +273,9 @@ def test_driver_local_build_matches_distributed(spark, tmp_path):
         spark, src, "v", "vid", str(tmp_path / "ix_local"),
         nlist=8, overwrite=True,
     )
+    monkeypatch.setattr(base, "DRIVER_BUILD_MAX_BYTES", 0)  # force the cluster path
     dist = create_ivf_index(
-        spark, src, "v", "vid", str(tmp_path / "ix_dist"),
-        nlist=8, overwrite=True, driver_build_max_bytes=0,
+        spark, src, "v", "vid", str(tmp_path / "ix_dist"), nlist=8, overwrite=True,
     )
     assert local.manifest["centroids"] == dist.manifest["centroids"]
     assert local.manifest["lists"] == dist.manifest["lists"]

@@ -219,13 +219,13 @@ def test_knn_join_stream_prunes_unprobed_lists(ivfpq, emb):
     assert len(probed_dirs) == 1
 
 
-def test_driver_local_build_matches_distributed(spark, tmp_path):
+def test_driver_local_build_matches_distributed(spark, tmp_path, monkeypatch):
     """Small file-backed source: the in-process IVFADC build must match
     the cluster build exactly — centroids, codebooks, per-list code
     bytes, and default-probe search results."""
     import numpy as np
 
-    from duckdb_vss_spark.index import create_ivfpq_index
+    from duckdb_vss_spark.index import base, create_ivfpq_index
 
     rng = np.random.default_rng(9)
     rows = [(i, [float(x) for x in rng.normal(size=16)]) for i in range(900)]
@@ -237,9 +237,10 @@ def test_driver_local_build_matches_distributed(spark, tmp_path):
         spark, src, "v", "vid", str(tmp_path / "ix_local"),
         nlist=6, m=4, ksub=8, overwrite=True,
     )
+    monkeypatch.setattr(base, "DRIVER_BUILD_MAX_BYTES", 0)  # force the cluster path
     dist = create_ivfpq_index(
         spark, src, "v", "vid", str(tmp_path / "ix_dist"),
-        nlist=6, m=4, ksub=8, overwrite=True, driver_build_max_bytes=0,
+        nlist=6, m=4, ksub=8, overwrite=True,
     )
     assert local.manifest["centroids"] == dist.manifest["centroids"]
     assert local.manifest["codebooks"] == dist.manifest["codebooks"]

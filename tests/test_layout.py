@@ -259,13 +259,13 @@ class TestCollectGateBytes:
         finally:
             cached.unpersist()
 
-    def test_rle_heavy_build_takes_distributed_path(self, spark, tmp_path):
+    def test_rle_heavy_build_takes_distributed_path(self, spark, tmp_path, monkeypatch):
         """End-to-end: a PQ build over a small-on-disk but
         large-decompressed file must NOT take the driver-local collect
         fast path when the uncompressed estimate exceeds the cap."""
         from pyspark.sql import functions as F
 
-        from duckdb_vss_spark.index import create_pq_index
+        from duckdb_vss_spark.index import base, create_pq_index
         from duckdb_vss_spark.sources.layout import (
             input_bytes,
             input_uncompressed_bytes,
@@ -282,9 +282,9 @@ class TestCollectGateBytes:
         # cap between the two sizes: the old gate (disk only) would have
         # collected; the new gate must go distributed. The build result
         # itself must still be valid either way.
+        monkeypatch.setattr(base, "DRIVER_BUILD_MAX_BYTES", (disk + unc) // 2)
         idx = create_pq_index(
-            spark, df, "v", "vid", str(tmp_path / "ix"),
-            m=8, ksub=4, overwrite=True, driver_build_max_bytes=(disk + unc) // 2,
+            spark, df, "v", "vid", str(tmp_path / "ix"), m=8, ksub=4, overwrite=True,
         )
         assert idx.manifest["count"] == 4000
 

@@ -200,13 +200,13 @@ def test_knn_join_null_and_empty_queries(spark, pq_idx, emb):
     assert pq_idx.knn_join(withnull, "qv", 3, "qid").count() == 0
 
 
-def test_driver_local_build_matches_distributed(spark, tmp_path):
+def test_driver_local_build_matches_distributed(spark, tmp_path, monkeypatch):
     """Small file-backed source: the in-process build (one collect +
     pyarrow codes write) must produce byte-identical codes and
     identical ADC search results to the cluster build."""
     import numpy as np
 
-    from duckdb_vss_spark.index import create_pq_index
+    from duckdb_vss_spark.index import base, create_pq_index
 
     rng = np.random.default_rng(5)
     rows = [(i, [float(x) for x in rng.normal(size=16)]) for i in range(800)]
@@ -218,9 +218,9 @@ def test_driver_local_build_matches_distributed(spark, tmp_path):
         spark, src, "v", "vid", str(tmp_path / "ix_local"),
         m=4, ksub=8, overwrite=True,
     )
+    monkeypatch.setattr(base, "DRIVER_BUILD_MAX_BYTES", 0)  # force the cluster path
     dist = create_pq_index(
-        spark, src, "v", "vid", str(tmp_path / "ix_dist"),
-        m=4, ksub=8, overwrite=True, driver_build_max_bytes=0,
+        spark, src, "v", "vid", str(tmp_path / "ix_dist"), m=4, ksub=8, overwrite=True,
     )
     assert local.manifest["codebooks"] == dist.manifest["codebooks"]
     lc = {r["vid"]: bytes(r["pq_code"]) for r in spark.read.parquet(local.path + "/codes").collect()}

@@ -9,7 +9,11 @@ once or twice. Full-width re-rank and full probes make every family's
 result exact, so the id multiset must equal brute force. The single
 query path is checked on the driver-resolved shortlist (literal
 In-filter fetch) and on the forced distributed scan (broadcast
-left-semi fetch)."""
+left-semi fetch). The SQL route over each index (``VssPlanner``'s
+``ORDER BY array_distance(...) LIMIT k``) re-ranks the default shortlist
+against the table it reads, whose rows hold each id once: it must return
+each row once, the rows of ``knn_search`` with the same vector and
+shortlist."""
 
 from collections import Counter
 
@@ -21,6 +25,7 @@ from duckdb_vss_spark.index.bq import create_bq_index
 from duckdb_vss_spark.index.ivfpq import create_ivfpq_index
 from duckdb_vss_spark.index.ivfsq import create_ivfsq_index
 from duckdb_vss_spark.index.pq import create_pq_index
+from duckdb_vss_spark.plans import VssPlanner
 
 K = 10
 QIDS = (0, 7)
@@ -100,3 +105,28 @@ def test_rerank_returns_brute_force_rows(spark, corpus, indexes, fam, route, cop
             spark.conf.unset(GATE)
         else:
             spark.conf.set(GATE, old)
+
+
+@pytest.mark.parametrize("fam", list(BUILD))
+def test_sql_route_returns_each_row_once(spark, corpus, indexes, fam):
+    mat, df = corpus
+    ix = indexes[fam]
+    view = f"dup_items_{fam}"
+    df.createOrReplaceTempView(view)
+    p = VssPlanner(spark)
+    p.register_index(view, "v", ix)
+    for q in QIDS:
+        # the routed FLOAT[16] literal is float32-rounded, like DuckDB's
+        qv = [float(np.float32(x)) for x in mat[q]]
+        lit = ", ".join(repr(x) for x in qv)
+        rows = p.sql(
+            f"SELECT vid FROM {view} ORDER BY array_distance(v, [{lit}]::FLOAT[16]) LIMIT {K}"
+        ).collect()
+        assert p.last_plan.endswith("INDEX_SCAN"), p.last_plan
+        got = [r["vid"] for r in rows]
+        assert len(got) == len(set(got)) == K, (fam, q, got)
+        if fam == "bq":
+            want = ix.knn_search(qv, K, source=df)
+        else:  # the route's 10·k shortlist, like the default re-rank
+            want = ix.knn_search(qv, K, rerank=10 * K, source=df)
+        assert got == [r["vid"] for r in want.collect()], (fam, q)
